@@ -439,9 +439,9 @@ final case class ModelConfig(
   *    tables only — the operator refuses otherwise).
   *  - `zone_maps`: rebuild the per-file min/max manifest
   *    ([[graft.io.ZoneMaps.writeManifest]]) over `columns`.
-  *  - `vacuum_staging`: delete the transient `__*_stage` roots under
-  *    the warehouse ([[graft.io.Maintenance.vacuumStaging]]); takes no
-  *    table.
+  *  - `vacuum_staging`: delete the staging directories left under the
+  *    warehouse by commits that died
+  *    ([[graft.io.Maintenance.vacuumStaging]]); takes no table.
   *  - `prune_store`: epoch-horizon retention for the standing dedup
   *    stores ([[graft.io.Maintenance.pruneStore]] — rows whose
   *    `_epoch` fell more than `keep_epochs` run-date days behind the

@@ -457,15 +457,19 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   private def elemType: DataType =
     left.dataType.asInstanceOf[ArrayType].elementType
 
+  // a null long element would read as 0 and count as a member, so long
+  // arrays must be declared non-null; a null string element fails
+  // loudly on compare instead of miscounting
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
         TypeCheckResult.TypeCheckSuccess
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         "sorted_intersect_size needs two array<string> or two array<long> " +
-          s"inputs, got ${l.simpleString} and ${r.simpleString}")
+          "inputs, the longs declared containsNull = false, got " +
+          s"${l.simpleString} and ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
@@ -541,13 +545,14 @@ case class SortedLongIntersect(left: Expression, right: Expression)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
+  // a null element would read as 0 and could surface as a member
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case (l, r) => TypeCheckResult.TypeCheckFailure(
-        "sorted_long_intersect needs two array<long> inputs, got " +
-          s"${l.simpleString} and ${r.simpleString}")
+        "sorted_long_intersect needs two array<long> inputs declared " +
+          s"containsNull = false, got ${l.simpleString} and ${r.simpleString}")
     }
 
   override def nullSafeEval(a: Any, b: Any): Any = {

@@ -279,6 +279,7 @@ object DedupStore {
       else s"qualityCol is only used by keeper max_quality (got '$keeper')")
     for (q <- qualityCol) require(batch.columns.contains(q),
       s"qualityCol '$q' not in the batch")
+    Commit.recover(spark, table)
     // every frame this fold persists (including the CC funnel's
     // checkpoints) drains when the fold's writes are done — the store
     // is a long-lived session's gold path, not a one-query session
@@ -408,8 +409,8 @@ object DedupStore {
       // refuses; an EAGER localCheckpoint materializes the survivors
       // (memory-and-disk blocks) and swaps the plan for the
       // checkpointed RDD, so the append no longer references the table
-      // — the same barrier the __maint_stage parquet round-trip
-      // provided, minus one parquet encode + write + read + fs delete
+      // — the same barrier a staged parquet round-trip
+      // provides, minus one parquet encode + write + read + fs delete
       // per fold. Crash posture unchanged: a failure mid-append commits
       // nothing under the writer's commit protocol either way, and the
       // retry re-runs the whole fold behind the identity guard. Blocks

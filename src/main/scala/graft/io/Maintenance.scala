@@ -17,9 +17,9 @@ object Maintenance {
     * the classic streaming/incremental-append pathology — thousands of
     * kilobyte files turn every scan into a file-listing and task-
     * scheduling storm; nightly compaction restores scan-sized files.
-    * Staged rewrite (a table cannot feed its own overwrite), atomic at
-    * the catalog-pointer level like [[Upsert.upsertTable]]; a real
-    * table format makes the swap transactional. `repartition` (not
+    * Committed through [[Commit.replace]] (a table cannot feed its own
+    * overwrite), which keeps the partition spec, the bucket spec and
+    * the `graft.*` properties. `repartition` (not
     * `coalesce`) so the rewrite redistributes evenly — coalesce would
     * glue existing small files into uneven unions and keep skew.
     *
@@ -29,17 +29,14 @@ object Maintenance {
       targetRowsPerFile: Long = 1000000L,
       clusterBy: Seq[String] = Nil): (Int, Int) = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
+    Commit.recover(spark, table)
     val before = spark.table(table).inputFiles.length
     val n = spark.table(table).count()
     val parts = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
-    // a compaction must preserve the table's layout spec — a plain
-    // saveAsTable would silently drop the partition spec (and with it
-    // partition pruning for every later scan — round-10 advice) AND the
-    // bucket spec (and with it shuffle-free bucketed joins, the same
-    // bug one shelf over); read both from the catalog and re-apply
-    val specs = captureSpecs(spark, table)
-    val partCols = specs.partCols
-    val bucketSpec = specs.bucketSpec
+    val tableMeta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val partCols = tableMeta.partitionColumnNames
+    val bucketSpec = tableMeta.bucketSpec
     // a partition spec clusters the rewrite by ITS columns and a bucket
     // spec prescribes its own placement — a caller-requested range
     // clustering would silently fight either; refuse, never reorder
@@ -47,8 +44,6 @@ object Maintenance {
       s"clusterBy is only for unpartitioned, unbucketed tables; " +
         s"'$table' has partition=[${partCols.mkString(",")}] " +
         s"bucket=${bucketSpec.isDefined}")
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__compact_stage/" +
-      table.replace('.', '_')
     // partitioned tables cluster the rewrite BY the partition columns so
     // each partition value lands in FEW tasks (a round-robin repartition
     // would make every task write a sliver of every value — parts ×
@@ -78,7 +73,7 @@ object Maintenance {
         // class of silent row loss/duplication under a repartition —
         // fatal in an op that must never lose data (round-11 advice).
         // Identical duplicate rows co-locate in one salt group; the
-        // writer's maxRecordsPerFile below still bounds file size then.
+        // commit's maxRecordsPerFile below still bounds file size then.
         t0.join(broadcast(cAliased),
             partCols.map(c => t0(c) <=> cAliased(s"_pc_$c")).reduce(_ && _))
           .withColumn("_salt",
@@ -98,114 +93,34 @@ object Maintenance {
           .repartitionByRange(parts, clusterBy.map(col): _*)
           .sortWithinPartitions(clusterBy.map(col): _*)
       else spark.table(table).repartition(parts)
-    clustered.write.mode(SaveMode.Overwrite).parquet(scratch)
     // the salt gives the hot value TASK parallelism; hash collisions can
     // still co-locate salt groups in one task, so the FILE-size contract
-    // is enforced directly by the writer — a task holding k·target rows
-    // of one value rolls k files
-    val reread = spark.read.parquet(scratch)
-    // the scratch read may PACK several small files into one task
-    // (maxPartitionBytes), which would mix ranges back together in the
-    // final files — re-apply the range placement on the final write so
-    // the on-disk layout, not just the scratch, is clustered
-    val finalFrame =
-      if (clusterBy.nonEmpty)
-        reread.repartitionByRange(parts, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      else reread
-    specPreservingWrite(spark, table, finalFrame, specs,
-      _.option("maxRecordsPerFile", targetRowsPerFile))
+    // is enforced on the table write — a task holding k·target rows of
+    // one value rolls k files. The staged read may PACK several small
+    // files into one task (maxPartitionBytes), which would mix ranges
+    // back together in the final files — re-apply the range placement
+    // on the table write so the on-disk layout, not just the stage, is
+    // clustered
+    Commit.replace(spark, table, clustered, targetRowsPerFile,
+      relayout = staged =>
+        if (clusterBy.isEmpty) staged
+        else staged.repartitionByRange(parts, clusterBy.map(col): _*)
+          .sortWithinPartitions(clusterBy.map(col): _*))
     (before, spark.table(table).inputFiles.length)
   }
 
-  /** Catalog layout captured before a destructive rewrite: the
-    * partition columns, bucket spec, and `graft.*` table properties a
-    * plain `saveAsTable(Overwrite)` silently drops (the graft
-    * namespace carries load-bearing state — the dedup stores' O(1)
-    * epoch fence rides `graft.dedupstore.epoch`).
-    */
-  private[io] final case class TableSpecs(
-      partCols: Seq[String],
-      bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec],
-      graftProps: Map[String, String])
-
-  private[io] def captureSpecs(spark: SparkSession, table: String): TableSpecs = {
-    val partCols = spark.catalog.listColumns(table).collect()
-      .filter(_.isPartition).map(_.name).toSeq
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    TableSpecs(partCols, tableMeta.bucketSpec,
-      tableMeta.properties.filter { case (k, _) => k.startsWith("graft.") })
-  }
-
-  /** The spec-preserving rewrite tail SHARED by [[compact]] and
-    * [[pruneStore]] (one copy, so the contract cannot diverge —
-    * round-16 review): overwrite `table` with `frame`, re-applying the
-    * captured partition/bucket specs, re-stamping the `graft.*`
-    * properties, and refreshing the caller session's file index.
-    */
-  private[io] def specPreservingWrite(spark: SparkSession, table: String,
-      frame: DataFrame, specs: TableSpecs,
-      tweak: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-        identity): Unit = {
-    val w0 = tweak(frame.write.mode(SaveMode.Overwrite).format("parquet"))
-    val w1 =
-      if (specs.partCols.nonEmpty) w0.partitionBy(specs.partCols: _*) else w0
-    val w = specs.bucketSpec.fold(w1) { bs =>
-      val bucketed = w1.bucketBy(bs.numBuckets,
-        bs.bucketColumnNames.head, bs.bucketColumnNames.tail: _*)
-      if (bs.sortColumnNames.nonEmpty)
-        bucketed.sortBy(bs.sortColumnNames.head, bs.sortColumnNames.tail: _*)
-      else bucketed
-    }
-    w.saveAsTable(table)
-    for ((k, v) <- specs.graftProps)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('${sqlLit(k)}' = '${sqlLit(v)}')")
-    spark.catalog.refreshTable(table)
-  }
-
-  /** Escapes a string for interpolation into a single-quoted SQL
-    * literal — the re-stamped `graft.*` property values are
-    * user-extensible (any string survives a compaction round-trip), so
-    * a value carrying a quote OR a backslash (the parser's escape
-    * character: an unescaped trailing backslash swallows the closing
-    * quote) must not break the ALTER TABLE statement.
-    */
-  def sqlLit(s: String): String =
-    s.replace("\\", "\\\\").replace("'", "''")
-
-  /** VACUUM for the staging plane: the merge/CDC/compaction sinks
-    * stage through scratch directories under the warehouse
-    * (`__upsert_stage`, `__cdc_stage`, `__compact_stage`,
-    * `__evolve_stage`, `__maint_stage`); each is transient by contract
-    * (the NEXT run of the same table overwrites it) but a crashed or
-    * final run leaves the last copy on disk forever. This deletes the
-    * staging roots — safe by construction because no table ever
-    * references staged files (every sink reads the stage back and
-    * writes a fresh catalog copy; the Delta-VACUUM orphan-detection
-    * problem doesn't arise when staging is namespaced). ORDERING
+  /** VACUUM for the staging plane: deletes every staging directory
+    * [[Commit]] keeps under the warehouse. A successful commit leaves
+    * none, so whatever is there is the recovery copy of a commit that
+    * died — until that table's next rewrite rolls it forward. ORDERING
     * contract for the declarative plane: schedule this AFTER the
-    * rewrite tasks (compact / prune_store) in the same config —
-    * `__prune_stage`/`__compact_stage` are the crash copies of
-    * destructive rewrites, and a vacuum declared before them would
-    * delete the only complete copy on the run following a mid-rewrite
-    * crash. Returns the number of staging roots removed.
+    * rewrite tasks (compact / prune_store / retrain_store) in the same
+    * config, and never after a failed one (the maintenance layer
+    * refuses): a vacuum that runs first would delete the only complete
+    * copy of a table whose rewrite died mid-write. Returns the number
+    * of staging directories removed.
     */
-  def vacuumStaging(spark: SparkSession): Int = {
-    val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:"))
-    val stages = Option(wh.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__") &&
-        f.getName.endsWith("_stage"))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    stages.foreach(rm)
-    stages.length
-  }
+  def vacuumStaging(spark: SparkSession): Int = Commit.sweep(spark)
 
   /** Epoch-horizon retention for the standing dedup stores (and any
     * `_epoch`-stamped append-only table): DELETE rows whose `_epoch`
@@ -232,14 +147,14 @@ object Maintenance {
     * `_epoch` filter, touching no codes/bands/cells, and the vector
     * store's frozen `<table>_model` sibling is never touched.
     *
-    * Staged spec-preserving rewrite (the compact machinery's
-    * contract): partition spec, bucket spec, and `graft.*` table
-    * properties — including the epoch fence — all survive. Returns
-    * (rows deleted, rows kept).
+    * Committed through [[Commit.replace]]: partition spec, bucket
+    * spec, and `graft.*` table properties — including the epoch fence
+    * — all survive. Returns (rows deleted, rows kept).
     */
   def pruneStore(spark: SparkSession, table: String,
       keepEpochs: Long): (Long, Long) = {
     require(keepEpochs > 0, s"keepEpochs must be positive, got $keepEpochs")
+    Commit.recover(spark, table)
     val t0 = spark.table(table)
     require(t0.columns.contains("_epoch"),
       s"prune_store: '$table' has no _epoch column — retention is only " +
@@ -251,18 +166,7 @@ object Maintenance {
           "never folded) — nothing to anchor the retention window"))
     val cutoff = committed - keepEpochs // survivors: _epoch > cutoff
     val total = t0.count()
-    val specs = captureSpecs(spark, table)
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__prune_stage/" +
-      table.replace('.', '_')
-    t0.filter(col("_epoch") > cutoff)
-      .write.mode(SaveMode.Overwrite).parquet(scratch)
-    // the staged survivors are deliberately LEFT ON DISK (the
-    // vacuum_staging contract, same as compact's stage): the overwrite
-    // below is destructive, and if it dies midway the stage is the
-    // only complete copy of the surviving rows — an eager delete here
-    // was a review-caught data-loss window. The next prune of the same
-    // table overwrites it; vacuum_staging sweeps the rest.
-    specPreservingWrite(spark, table, spark.read.parquet(scratch), specs)
+    Commit.replace(spark, table, t0.filter(col("_epoch") > cutoff))
     val kept = spark.table(table).count()
     (total - kept, kept)
   }
@@ -286,7 +190,7 @@ object Maintenance {
     * @param epochId when set (the streaming sink's batchId), the fold
     *        becomes REPLAY-IDEMPOTENT: the id is written as a
     *        `_last_epoch` column in the SAME table commit as the folded
-    *        data (one saveAsTable — data and marker can never diverge),
+    *        data (one table write — data and marker can never diverge),
     *        and a batch whose id EQUALS the standing `_last_epoch` is
     *        skipped, while an OLDER id throws (a late backfill is not a
     *        replay — dropping it silently would be data loss recorded
@@ -310,6 +214,7 @@ object Maintenance {
       .agg(aggExprs.head, aggExprs.tail: _*)
     val batchAgg = epochId.fold(batchAgg0)(id =>
       batchAgg0.withColumn("_last_epoch", lit(id)))
+    Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       batchAgg.write.saveAsTable(table)
       return true
@@ -335,10 +240,7 @@ object Maintenance {
           "additively without double-count risk; recompute the table or " +
           "re-stamp the batch with a current epoch")
     }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    batchAgg.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val b = spark.read.parquet(s"$scratch/batch").alias("b")
+    val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
     val t = spark.table(table).alias("t")
     // NULL-SAFE key match (<=>): groupBy emits a null-key group per
     // batch, and a plain USING full_outer never matches null keys —
@@ -359,10 +261,7 @@ object Maintenance {
           (coalesce(t(c), lit(0)) + coalesce(b(c), lit(0))).as(c)
         } ++
         keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq: _*)
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Commit.replace(spark, table, merged)
     true
   }
 
@@ -400,6 +299,7 @@ object Maintenance {
       .agg(aggExprs.head, aggExprs.tail: _*)
     val batchAgg = epochId.fold(batchAgg0)(id =>
       batchAgg0.withColumn("_last_epoch", lit(id)))
+    Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       batchAgg.write.saveAsTable(table)
       return true
@@ -420,10 +320,7 @@ object Maintenance {
           "without double-counting n_rows; recompute the table or " +
           "re-stamp the batch with a current epoch")
     }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    batchAgg.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val b = spark.read.parquet(s"$scratch/batch").alias("b")
+    val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
     val t = spark.table(table).alias("t")
     val joined = t.join(b,
       keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
@@ -437,10 +334,7 @@ object Maintenance {
         ((coalesce(t("n_rows"), lit(0)) + coalesce(b("n_rows"), lit(0)))
           .as("n_rows") +:
           keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq): _*)
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Commit.replace(spark, table, merged)
     true
   }
 
@@ -500,6 +394,7 @@ object Maintenance {
       epochId: Option[Long] = None,
       basesIncludeBatches: Boolean = false): Boolean = {
     require(joinKeys.nonEmpty, "need at least one join key")
+    Commit.recover(spark, table)
     require(leftBatch.nonEmpty || rightBatch.nonEmpty ||
       !spark.catalog.tableExists(table),
       "need a batch on at least one side to maintain an existing view")
@@ -604,6 +499,7 @@ object Maintenance {
     val regs = graft.operators.Sketches.hllRegistersBy(
         batch, keys, col(itemCol), m)
       .withColumn("_m", lit(m.toLong))
+    Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       regs.write.saveAsTable(table)
       return true
@@ -618,17 +514,11 @@ object Maintenance {
       s"distinct view '$table' was built with m=$standingM but this " +
         s"fold uses m=$m — different register spaces cannot merge; " +
         "recreate the view or restore the original hll_m")
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    regs.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val staged = spark.read.parquet(s"$scratch/batch")
-    t.select(regCols.map(col): _*).unionByName(staged)
-      .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("rho"))
-      .withColumn("_m", lit(m.toLong))
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val staged = Commit.stage(spark, table, "batch", regs)
+    Commit.replace(spark, table,
+      t.select(regCols.map(col): _*).unionByName(staged)
+        .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("rho"))
+        .withColumn("_m", lit(m.toLong)))
     true
   }
 
@@ -675,6 +565,7 @@ object Maintenance {
     val regs0 = graft.operators.Sketches.hdrSketchBy(batch, keys, col(centsCol))
     val regs = epochId.fold(regs0)(id =>
       regs0.withColumn("_last_epoch", lit(id)))
+    Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       regs.write.saveAsTable(table)
       return true
@@ -698,19 +589,13 @@ object Maintenance {
           "backfill cannot fold without double-count risk; recompute " +
           "the table or re-stamp the batch with a current epoch")
     }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    regs0.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val staged = spark.read.parquet(s"$scratch/batch")
+    val staged = Commit.stage(spark, table, "batch", regs0)
     val keepEpoch = epochId.orElse(standingEpoch)
     val merged0 = t.select(regCols.map(col): _*).unionByName(staged)
       .groupBy((keys :+ "bkey").map(col): _*).agg(sum("cnt").as("cnt"))
     val merged = keepEpoch.fold(merged0)(id =>
       merged0.withColumn("_last_epoch", lit(id)))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Commit.replace(spark, table, merged)
     true
   }
 

@@ -120,6 +120,7 @@ object MediaDedupStore {
       else s"qualityCol is only used by keeper max_quality (got '$keeper')")
     for (q <- qualityCol) require(batch.columns.contains(q),
       s"qualityCol '$q' not in the batch")
+    Commit.recover(spark, table)
     val cacheMark = graft.operators.FrameCaches.mark(spark)
     try maintainImpl(spark, table, batch, idCol, hashCol, bands,
       maxHamming, maxBucketSize, storeBuckets, epochId, keeper, qualityCol)
@@ -231,7 +232,7 @@ object MediaDedupStore {
     }
     // append folds sever the read-own-table cycle with an EAGER
     // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier the __maint_stage parquet round-trip provided, minus a
+    // barrier a staged parquet round-trip provides, minus a
     // parquet encode + write + read + fs delete per fold; blocks are
     // tracked and drain with the fold's cache mark
     if (!exists) writeTo(survivors)

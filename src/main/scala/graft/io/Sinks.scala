@@ -9,10 +9,13 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object Sinks {
 
-  def append(df: DataFrame, table: String): Unit =
+  def append(df: DataFrame, table: String): Unit = {
+    Commit.recover(df.sparkSession, table)
     df.write.mode(SaveMode.Append).saveAsTable(table)
+  }
 
   def overwrite(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit = {
+    Commit.recover(df.sparkSession, table)
     val w = df.write.mode(SaveMode.Overwrite)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .saveAsTable(table)
@@ -343,17 +346,18 @@ object Sinks {
   * whole-row-replace semantics of the reference's merge
   * (db_utils.py:96-100, gold_layer.py:184-213).
   *
-  * The deduped source batch is staged to a scratch path FIRST (with an
+  * The deduped source batch is staged FIRST ([[Commit.stage]], with an
   * `Observation` counting its rows during that one write), then the
   * merge reads the staged copy: the anti-join and the union both
   * consume the source, so merging against the raw plan would compute an
-  * arbitrarily expensive model query twice. The merged remainder is
-  * likewise staged before the overwrite because Spark cannot overwrite
-  * a table that feeds the plan being written. Not concurrent-safe —
-  * matching the single-driver reference. At real scale this becomes:
-  * write a new version directory + atomic catalog pointer swap (what
-  * table formats do for you), and a keyed MERGE shuffles both sides on
-  * the key columns — source side is broadcast when small.
+  * arbitrarily expensive model query twice. The merged table is
+  * committed through [[Commit.replace]]: staged, then written over the
+  * table, with the stage kept as the recovery copy until that write
+  * succeeds — a crash mid-write leaves the table empty and the next
+  * upsert rolls the staged version forward before merging (the merge
+  * is idempotent, so the retry converges). Not concurrent-safe —
+  * matching the single-driver reference. A keyed MERGE shuffles both
+  * sides on the key columns — source side is broadcast when small.
   *
   * @return the number of RAW source-batch rows (pre-dedup) — the
   *         "records processed" of the merge, NOT the post-merge target
@@ -396,13 +400,10 @@ object Upsert {
     require(changes.columns.contains(opCol), s"changelog needs '$opCol'")
     require(changes.columns.contains(seqCol), s"changelog needs '$seqCol'")
     val dataCols = changes.columns.filter(c => c != opCol && c != seqCol)
-    val scratchRoot =
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/__cdc_stage/" +
-        table.replace('.', '_')
+    Commit.recover(spark, table)
     // the RAW changelog stages first (one evaluation of the source
     // plan), and validation + dedup both read the staged copy
-    changes.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/raw")
-    val raw = spark.read.parquet(s"$scratchRoot/raw")
+    val raw = Commit.stage(spark, table, "raw", changes)
     // op values are validated EAGERLY and on the RAW feed: a NULL (or
     // unknown) op would be excluded from upserts (=!= 'D' is
     // null-false) AND from the delete count, yet its key still lands in
@@ -425,31 +426,27 @@ object Upsert {
     // the deduped survivors stage too: four consumers below (upserts,
     // delete count, changed keys, the records count) would otherwise
     // re-run the window per action
-    raw.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/latest")
-    val staged = spark.read.parquet(s"$scratchRoot/latest")
+    val staged = Commit.stage(spark, table, "latest",
+      raw.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn"))
     val upserts = staged.filter(col(opCol) =!= "D")
       .select(dataCols.map(col).toSeq: _*)
     val deletes = staged.filter(col(opCol) === "D").count()
-    if (!spark.catalog.tableExists(table)) {
-      upserts.write.saveAsTable(table)
-      return (upserts.count(), deletes)
+    // counted before the commit, which clears the stages
+    val upserted = upserts.count()
+    val merged = if (!spark.catalog.tableExists(table)) upserts else {
+      val target = spark.table(table)
+      val changedKeys = staged.select(keys.map(col).toSeq: _*)
+      // <=> so a NULL-keyed change MATCHES a null-keyed target row: with
+      // ===, a null-keyed upsert appended a duplicate instead of
+      // replacing, and a null-keyed delete was a counted no-op
+      // (round-10 advice)
+      val cond = keys.map(k => target(k) <=> changedKeys(k)).reduce(_ && _)
+      target.join(changedKeys, cond, "left_anti")
+        .unionByName(upserts.select(target.columns.map(col).toSeq: _*))
     }
-    val target = spark.table(table)
-    val changedKeys = staged.select(keys.map(col).toSeq: _*)
-    // <=> so a NULL-keyed change MATCHES a null-keyed target row: with
-    // ===, a null-keyed upsert appended a duplicate instead of
-    // replacing, and a null-keyed delete was a counted no-op
-    // (round-10 advice)
-    val cond = keys.map(k => target(k) <=> changedKeys(k)).reduce(_ && _)
-    val merged = target.join(changedKeys, cond, "left_anti")
-      .unionByName(upserts.select(target.columns.map(col).toSeq: _*))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/merged")
-    spark.read.parquet(s"$scratchRoot/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
-    (staged.filter(col(opCol) =!= "D").count(), deletes)
+    Commit.replace(spark, table, merged)
+    (upserted, deletes)
   }
 
   /** [[upsertTable]] with SCHEMA EVOLUTION: a source batch carrying
@@ -463,12 +460,15 @@ object Upsert {
     * evolution). This is the
     * metadata-driven-ETL lifecycle case the strict upsert rejects: the
     * upstream added a field, tomorrow's batches carry it, and the
-    * pipeline must not stop. Implementation: pad EACH side to the
-    * UNION of the two schemas with typed NULL columns, then run the
-    * standard staged anti-join + union merge.
+    * pipeline must not stop. Implementation: widen the table with
+    * `ALTER TABLE … ADD COLUMNS` (a catalog-only change: existing files
+    * read the new columns as NULL, and the table keeps its layout spec
+    * and properties), pad the batch with typed NULLs for the columns it
+    * lacks, then run the standard upsert.
     */
   def upsertTableEvolving(spark: SparkSession, table: String,
       source: DataFrame, keys: Seq[String]): Long = {
+    Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table))
       return upsertTable(spark, table, source, keys)
     val target = spark.table(table)
@@ -488,26 +488,17 @@ object Upsert {
           s"vs batch ${source.schema(c).dataType.simpleString}").mkString("; "))
     val newCols = sCols.filterNot(tCols.contains)
     val missingCols = tCols.filterNot(sCols.contains)
-    val widened =
-      if (newCols.isEmpty) target
-      else newCols.foldLeft(target) { (df, c) =>
-        df.withColumn(c, lit(null).cast(source.schema(c).dataType))
-      }
     val padded =
       if (missingCols.isEmpty) source
       else missingCols.foldLeft(source) { (df, c) =>
         df.withColumn(c, lit(null).cast(target.schema(c).dataType))
       }
     if (newCols.nonEmpty) {
-      // rewrite the catalog entry to the widened schema FIRST (staged —
-      // a table cannot feed its own overwrite), then the plain upsert
-      // sees schema-identical sides
-      val scratch =
-        s"${spark.conf.get("spark.sql.warehouse.dir")}/__evolve_stage/" +
-          table.replace('.', '_')
-      widened.write.mode(SaveMode.Overwrite).parquet(scratch)
-      spark.read.parquet(scratch).write.mode(SaveMode.Overwrite)
-        .saveAsTable(table)
+      // widen the table FIRST, so the plain upsert sees
+      // schema-identical sides
+      spark.sql(s"ALTER TABLE $table ADD COLUMNS (" + newCols.map(c =>
+        s"`${c.replace("`", "``")}` ${source.schema(c).dataType.sql}")
+        .mkString(", ") + ")")
       spark.catalog.refreshTable(table)
     }
     upsertTable(spark, table, padded.select(
@@ -516,6 +507,7 @@ object Upsert {
 
   def upsertTable(spark: SparkSession, table: String, source0: DataFrame,
       keys: Seq[String]): Long = {
+    Commit.recover(spark, table)
     // the raw-count observation sits UNDER the dedup window, so the one
     // staged write both dedupes and counts the pre-dedup batch
     val obs = new org.apache.spark.sql.Observation()
@@ -535,8 +527,6 @@ object Upsert {
       source.write.saveAsTable(table)
       return obs.get("rows").asInstanceOf[Long]
     }
-    val scratchRoot = s"${spark.conf.get("spark.sql.warehouse.dir")}/__upsert_stage/" +
-      table.replace('.', '_')
     // driver-local sources (literal rows — e.g. the 1-row control-table
     // updates) are free to evaluate twice; skip the staging write that
     // exists to keep an EXPENSIVE model plan from computing once per
@@ -546,8 +536,8 @@ object Upsert {
     val (staged, batch) =
       if (isDriverLocal) (source, source0.count())
       else {
-        source.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/src")
-        (spark.read.parquet(s"$scratchRoot/src"), obs.get("rows").asInstanceOf[Long])
+        (Commit.stage(spark, table, "src", source),
+          obs.get("rows").asInstanceOf[Long])
       }
     val target = spark.table(table)
     // <=> (null-safe): a null-keyed source row must REPLACE a null-keyed
@@ -555,14 +545,8 @@ object Upsert {
     // anti-join (and the dedup window above already groups null keys
     // together, so the two stages agree on what "same key" means)
     val cond = keys.map(k => target(k) <=> staged(k)).reduce(_ && _)
-    val merged = target.join(staged, cond, "left_anti")
-      .unionByName(staged.select(target.columns.map(col).toSeq: _*))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/merged")
-    spark.read.parquet(s"$scratchRoot/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    // the overwrite leaves a stale cached file index behind the catalog
-    // entry — readers would hit FILE_NOT_EXIST without this
-    spark.catalog.refreshTable(table)
+    Commit.replace(spark, table, target.join(staged, cond, "left_anti")
+      .unionByName(staged.select(target.columns.map(col).toSeq: _*)))
     batch
   }
 }

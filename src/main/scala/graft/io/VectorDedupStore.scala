@@ -172,6 +172,8 @@ object VectorDedupStore {
       s"maxCellSize must be positive when set, got ${maxCellSize.get}")
     require(Keepers(keeper),
       s"keeper must be one of [${Keepers.mkString(", ")}], got '$keeper'")
+    Commit.recover(spark, modelTable(table))
+    Commit.recover(spark, table)
     val cacheMark = graft.operators.FrameCaches.mark(spark)
     try maintainImpl(spark, table, batch, idCol, vecCol, minScore,
       numCentroids, nprobe, trainIters, maxCellSize, epochId, keeper)
@@ -333,7 +335,7 @@ object VectorDedupStore {
     // DedupStore's r19 note)
     // append folds sever the read-own-table cycle with an EAGER
     // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier the __maint_stage parquet round-trip provided, minus a
+    // barrier a staged parquet round-trip provides, minus a
     // parquet encode + write + read + fs delete per fold; blocks are
     // tracked and drain with the fold's cache mark
     if (!exists)
@@ -429,22 +431,20 @@ object VectorDedupStore {
     * the store that would exist had the new model been frozen at
     * creation (spec-pinned).
     *
-    * Crash contract (two catalog writes, no transaction): both writes
-    * are INSERT OVERWRITE into the EXISTING tables — never
-    * drop-and-recreate — so the job-commit protocol keeps the old rows
-    * until commit and neither table ever disappears (a vanished store
-    * would send the next fold down its founding branch and silently
-    * re-found the store from one day's batch). The model installs
-    * FIRST, so a crash between the writes leaves stored cells assigned
-    * by the old model while probes rank the new one — RECALL-DEGRADED,
-    * never corrupt (a missed near-dup appends a duplicate; nothing is
-    * lost or mis-scored). Training is deterministic (lowest-id seeds,
-    * lowest-id tie-breaks), so re-running the task converges: same
-    * codes → same model → the store rewrite completes. Each applied
-    * half stages under `__retrain_stage` first (the survivor plans
-    * read the tables they overwrite); the table's specs and `graft.*`
-    * properties — including the epoch fence — survive untouched
-    * because the table definition is never dropped. CONVERGED retrains
+    * Crash contract (two catalog writes, no transaction): each half
+    * commits through [[Commit.replace]], whose stage is the recovery
+    * copy until the table write succeeds — a write that dies leaves
+    * the table empty, and the next retrain (or any rewrite of that
+    * table) rolls the staged version forward before reading it. The
+    * model installs FIRST, so a crash between the writes leaves stored
+    * cells assigned by the old model while probes rank the new one —
+    * RECALL-DEGRADED, never corrupt (a missed near-dup appends a
+    * duplicate; nothing is lost or mis-scored). Training is
+    * deterministic (lowest-id seeds, lowest-id tie-breaks), so
+    * re-running the task converges: same codes → same model → the
+    * store rewrite completes. The store's specs and `graft.*`
+    * properties — including the epoch fence — survive the commit.
+    * CONVERGED retrains
     * skip the rewrites entirely: when the k-means reproduces the
     * installed model and no row's home cell moves, neither table is
     * touched (a nightly-scheduled retrain must not pay a full-store
@@ -473,29 +473,13 @@ object VectorDedupStore {
     DedupStore.requireStoreSchema(spark, table,
       Seq("vec_id", "qv", "cell", "_epoch"), "retrain_store",
       "vector dedup store"): Unit
-    // crash recovery for the one drop-and-recreate window retrain keeps
-    // (the legacy-cv schema migration): a store whose model table is
-    // missing but whose staged __retrain_stage/model survives is that
-    // crash's debris — reinstall the staged model AUTOMATICALLY, so the
-    // documented re-run-to-convergence contract covers the migration
-    // path too instead of demanding a manual parquet restore
-    // (advice-caught)
-    if (!spark.catalog.tableExists(modelTable(table))) {
-      val stage = new org.apache.hadoop.fs.Path(
-        s"${spark.conf.get("spark.sql.warehouse.dir")}/__retrain_stage/" +
-          table.replace('.', '_') + "/model")
-      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(stage)) {
-        spark.read.parquet(stage.toString)
-          .write.mode(SaveMode.ErrorIfExists).format("parquet")
-          .saveAsTable(modelTable(table))
-        spark.catalog.refreshTable(modelTable(table))
-      }
-    }
+    // a retrain that died mid-write left its staged version behind —
+    // roll it forward before anything reads either table
+    Commit.recover(spark, modelTable(table))
+    Commit.recover(spark, table)
     require(spark.catalog.tableExists(modelTable(table)),
       s"retrain_store: vector dedup store '$table' has no model table " +
-        s"'${modelTable(table)}' (and no staged __retrain_stage/model to " +
-        "recover it from) — restore it or rebuild the store")
+        s"'${modelTable(table)}' — restore it or rebuild the store")
     // drift gate: a nightly-scheduled retrain must not pay trainIters
     // store-linear k-means jobs while the store is still balanced. The
     // occupancy spread is ONE cheap cell-column aggregate; below the
@@ -565,54 +549,14 @@ object VectorDedupStore {
     if (!modelChanged && moved == 0L)
       return RetrainResult(model0.count(), rows, 0L)
 
-    // stage BOTH halves before touching the catalog (the reassignment
-    // plan reads the store table the rewrite overwrites), then apply
-    // model-first per the crash contract above. Both catalog writes
-    // are INSERT OVERWRITE (insertInto), never drop-and-recreate:
-    // saveAsTable(Overwrite) drops the table first, so a crash
-    // mid-write would leave NO store — and the next gold fold's
-    // exists=false branch would silently RE-FOUND it from one day's
-    // batch, losing every accumulated near-dup (review-caught). With
-    // insertInto the job-commit protocol keeps the OLD rows until
-    // commit, the table (with its specs and the epoch-fence property)
-    // always exists, and a crashed retrain re-runs to convergence.
-    // The one exception: migrating a LEGACY cv model changes the model
-    // table's schema, which insertInto cannot do — that path keeps the
-    // drop-and-recreate window, documented, paid once per migration.
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__retrain_stage/" +
-      table.replace('.', '_')
-    if (modelChanged) {
-      newModel.write.mode(SaveMode.Overwrite).parquet(s"$scratch/model")
-      val stagedModel = spark.read.parquet(s"$scratch/model")
-      if (legacyCv)
-        stagedModel.write.mode(SaveMode.Overwrite).format("parquet")
-          .saveAsTable(modelTable(table))
-      else
-        stagedModel
-          .select(spark.table(modelTable(table)).columns.map(col): _*)
-          .write.mode(SaveMode.Overwrite).insertInto(modelTable(table))
-      spark.catalog.refreshTable(modelTable(table))
-    }
+    // model first, per the crash contract above; a legacy cv model
+    // changes the model table's schema, which the commit handles by
+    // re-creating the table
+    if (modelChanged) Commit.replace(spark, modelTable(table), newModel)
     // the store rewrite is gated on moved > 0: with no home cell
     // changing, the rewrite would byte-replace the table with itself —
     // pure crash-window exposure for zero information
-    if (moved > 0L) {
-      reassigned.drop("_old_cell")
-        .write.mode(SaveMode.Overwrite).parquet(s"$scratch/store")
-      spark.read.parquet(s"$scratch/store")
-        .select(spark.table(table).columns.map(col): _*)
-        .write.mode(SaveMode.Overwrite).insertInto(table)
-      spark.catalog.refreshTable(table)
-    }
-    // SUCCESSFUL retrain: sweep the stage dir NOW instead of waiting
-    // for vacuum_staging — a staged model that outlives its apply can
-    // be silently resurrected by the crash-recovery reinstall above
-    // when an operator INTENTIONALLY drops the model table to force a
-    // rebuild (advice-caught). Crashed retrains never reach this line,
-    // so the recovery copy survives exactly as long as it is needed
-    val scratchPath = new org.apache.hadoop.fs.Path(scratch)
-    scratchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(scratchPath, true)
+    if (moved > 0L) Commit.replace(spark, table, reassigned.drop("_old_cell"))
     RetrainResult(spark.table(modelTable(table)).count(), rows, moved)
   }
 

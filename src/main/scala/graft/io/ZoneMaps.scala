@@ -109,6 +109,7 @@ object ZoneMaps {
   def writeManifest(spark: SparkSession, table: String,
       cols: Seq[String]): (String, Long) = {
     val mt = s"${table}__zonemap"
+    Commit.recover(spark, mt)
     // scoped drain: manifestFor persists the zones frame (it feeds the
     // invariant check and the manifest join); the write below is its
     // last consumer
@@ -134,8 +135,8 @@ object ZoneMaps {
     *
     * Falls back to the full build when no manifest exists or its zone
     * columns differ from `cols` (a changed column set invalidates
-    * every row). The overwrite stages through parquet first — the
-    * kept-rows plan reads the manifest table it replaces.
+    * every row). The kept-rows plan reads the manifest table it
+    * replaces, so the rewrite commits through [[Commit.replace]].
     *
     * @return (manifest table name, files scanned, manifest rows).
     */
@@ -144,6 +145,7 @@ object ZoneMaps {
     require(cols.nonEmpty, "need at least one zone column")
     requireUnpartitioned(spark, table, "a zone-map manifest")
     val mt = s"${table}__zonemap"
+    Commit.recover(spark, mt)
     val expect = Seq("file", "n_rows") ++
       cols.flatMap(c => Seq(s"min_$c", s"max_$c"))
     if (!spark.catalog.tableExists(mt) ||
@@ -167,14 +169,8 @@ object ZoneMaps {
       if (newFiles.isEmpty) None
       else Some(manifestFor(spark,
         spark.read.schema(schema).parquet(newFiles: _*), newFiles, cols))
-    val merged = fresh.fold(kept)(kept.unionByName(_))
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__zonemap_stage/" +
-      mt.replace('.', '_')
-    try merged.write.mode(SaveMode.Overwrite).parquet(scratch)
+    try Commit.replace(spark, mt, fresh.fold(kept)(kept.unionByName(_)))
     finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
-    spark.read.parquet(scratch)
-      .write.mode(SaveMode.Overwrite).saveAsTable(mt)
-    spark.catalog.refreshTable(mt)
     (mt, newFiles.size.toLong, spark.table(mt).count())
   }
 

@@ -455,11 +455,13 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
           // batch's raw rows, the upsert family's contract.
           graft.io.Scd2.merge(spark, m.targetTable, df, m.primaryKeys,
             m.trackedColumns, m.effectiveColumn.get).rawRows
-        } else if (m.refreshType == "incremental" && m.primaryKeys.nonEmpty
-          && spark.catalog.tableExists(m.targetTable)) {
-          // records_processed = this batch's deduped source rows (counted
+        } else if (m.refreshType == "incremental" && m.primaryKeys.nonEmpty) {
+          // records_processed = this batch's raw source rows (counted
           // by an Observation riding the staging write inside the upsert),
-          // NOT post-merge target cardinality — no target re-scan
+          // NOT post-merge target cardinality — no target re-scan. The
+          // upsert also creates the table, so every run writes the same
+          // layout: unpartitioned (the merge rewrites the whole table, and
+          // partition_by would cost a file per value)
           Upsert.upsertTable(spark, m.targetTable, df, m.primaryKeys)
         } else {
           writeCounted(df, Sinks.overwrite(_, m.targetTable, m.partitionBy))
@@ -501,11 +503,13 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "maintenance"
 
   /** Set when any earlier task in THIS run failed. vacuum_staging is
-    * gated on it: the `__*_stage` roots it sweeps are the crash copies
-    * of the staged rewrites (prune_store/retrain_store/compact), and
-    * per-item isolation CATCHES a failed rewrite — so without the gate
-    * a vacuum declared after a failed prune would delete the only
-    * complete copy of a store whose destructive rewrite died half-way.
+    * gated on it: a staging directory survives only when a commit died
+    * (prune_store/retrain_store/compact, or any other rewrite), and it
+    * then holds the only complete copy of that table until the table's
+    * next rewrite rolls it forward. Per-item isolation CATCHES a failed
+    * rewrite — so without the gate a vacuum declared after a failed
+    * prune would delete the only complete copy of a store whose write
+    * died half-way.
     * The run-order contract ("sweep only after this run's rewrites
     * succeeded") must therefore hold against caught failures, not just
     * whole-process crashes (advice-caught).
@@ -545,7 +549,7 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
           // half-applied rewrite
           if (priorFailure) throw new IllegalStateException(
             "vacuum_staging refused: an earlier maintenance task in this " +
-              "run failed, and the __*_stage roots may hold the only " +
+              "run failed, and its staging directory may hold the only " +
               "complete copy of its staged rewrite — resolve the failure " +
               "and re-run before sweeping staging")
           graft.io.Maintenance.vacuumStaging(spark).toLong

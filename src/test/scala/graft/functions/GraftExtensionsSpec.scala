@@ -117,6 +117,28 @@ class GraftExtensionsSpec extends SparkSpec {
       VectorExpressions.hexSliceToLong(md5(col("id").cast("string")), 1, 14))
   }
 
+  test("sorted intersects reject long arrays that may hold nulls") {
+    // a null element would read as 0 inside the merge: an array<long>
+    // input must be declared containsNull = false
+    val nullable = Seq((Seq(Option(0L), None), Seq(Option(0L))))
+      .toDF("a", "b")
+    for (c <- Seq(
+        TextExpressions.sortedLongIntersect(col("a"), col("b")),
+        TextExpressions.sortedIntersectSize(col("a"), col("b")))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        nullable.select(c).collect())
+      assert(e.getMessage.contains("containsNull = false"), e.getMessage)
+    }
+    // the production shape (Triangles' adjacency) is declared non-null
+    val adj = spark.range(6).select((col("id") % 2).as("g"), col("id"))
+      .groupBy("g").agg(sort_array(collect_list(col("id"))).as("s"))
+    val both = adj.as("x").crossJoin(adj.as("y")).filter(col("x.g") === col("y.g"))
+      .select(TextExpressions.sortedLongIntersect(col("x.s"), col("y.s")).as("i"),
+        TextExpressions.sortedIntersectSize(col("x.s"), col("y.s")).as("n"))
+      .as[(Seq[Long], Int)].collect().toSet
+    assert(both == Set((Seq(0L, 2L, 4L), 3), (Seq(1L, 3L, 5L), 3)), both)
+  }
+
   test("scalar parameters must be foldable literals") {
     installed
     val e = intercept[Exception] {

@@ -229,17 +229,15 @@ class DedupStoreSpec extends SparkSpec {
 
   test("no staging scratch survives a fold (founding or append)") {
     // r20: append folds sever the read-own-table cycle with an eager
-    // localCheckpoint instead of the __maint_stage parquet round-trip —
-    // no fold may leave survivor band rows duplicated next to the store
+    // localCheckpoint instead of a staged parquet round-trip — no fold
+    // may leave survivor band rows duplicated next to the store
     val t = table("t_scratch")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
       epochId = Some(1L))
     DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
       epochId = Some(2L))
-    val scratch = new org.apache.hadoop.fs.Path(
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-        t.replace('.', '_'))
+    val scratch = Commit.dir(spark, t)
     val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(scratch),
       "survivor band rows must not stay duplicated next to the store")

@@ -51,18 +51,28 @@ class MaintenanceSpec extends SparkSpec {
 
   test("vacuumStaging removes staging debris; tables survive") {
     val t = table("t_vacuum")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    // leave real staging debris the way a final upsert run does
+    val d = table("t_vacuum_debris")
+    Seq(t, d).foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
     Upsert.upsertTable(spark, t, Seq((1, "a")).toDF("k", "v"), Seq("k"))
     Upsert.upsertTable(spark, t, Seq((2, "b")).toDF("k", "v"), Seq("k"))
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    assert(wh.listFiles().exists(_.getName == "__upsert_stage"),
-      "setup: the staged merge must have left its scratch root")
+    val fs = Commit.root(spark).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(Commit.dir(spark, t)),
+      "a successful upsert leaves no stage behind")
+    // real staging debris: a commit that died while writing the table
+    Upsert.upsertTable(spark, d, Seq((1, "a")).toDF("k", "v"), Seq("k"))
+    Commit.failAt = Some(d -> "table")
+    spark.sparkContext.setLogLevel("OFF") // the injected task failure's trace
+    try intercept[Exception](
+      Upsert.upsertTable(spark, d, Seq((2, "b")).toDF("k", "v"), Seq("k")))
+    finally {
+      Commit.failAt = None
+      spark.sparkContext.setLogLevel("WARN")
+    }
+    assert(fs.exists(Commit.dir(spark, d)),
+      "setup: the died commit must have left its stage")
     val removed = Maintenance.vacuumStaging(spark)
-    assert(removed >= 1, "must remove at least the upsert stage")
-    assert(!wh.listFiles().exists(f => f.getName.startsWith("__") &&
-      f.getName.endsWith("_stage")), "all staging roots gone")
+    assert(removed >= 1, "must remove at least the died commit's stage")
+    assert(!fs.exists(Commit.root(spark)), "all staging gone")
     assert(spark.table(t).count() == 2, "the table itself must be untouched")
   }
 

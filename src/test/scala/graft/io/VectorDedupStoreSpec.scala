@@ -567,10 +567,8 @@ class VectorDedupStoreSpec extends SparkSpec {
     val model = spark.table(s"${t}_model").orderBy("centroid_id")
       .collect().toSeq
     // the legacy-cv migration's drop-and-recreate crash shape: the
-    // staged model survives under __retrain_stage, the catalog table
-    // is gone
-    val stage = spark.conf.get("spark.sql.warehouse.dir") +
-      "/__retrain_stage/" + t.replace('.', '_') + "/model"
+    // model's staged commit survives, the catalog table is gone
+    val stage = Commit.versionPath(spark, s"${t}_model").toString
     spark.table(s"${t}_model").write.mode("overwrite").parquet(stage)
     spark.sql(s"DROP TABLE ${t}_model")
     // recovery is automatic: retrain reinstalls the staged model, then
@@ -700,11 +698,9 @@ class VectorDedupStoreSpec extends SparkSpec {
     // a k-resize forces a real (modelChanged) retrain through the
     // staged path
     VectorDedupStore.retrain(spark, t, numCentroids = Some(3))
-    val stage = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + "/__retrain_stage/" +
-        t.replace('.', '_'))
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(stage),
+    val stages = Seq(t, s"${t}_model").map(Commit.dir(spark, _))
+    val fs = stages.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!stages.exists(fs.exists),
       "a SUCCESSFUL retrain must sweep its stage dir — a surviving " +
         "staged model would resurrect an intentionally dropped model table")
     // the intentional drop now refuses instead of silently reinstalling

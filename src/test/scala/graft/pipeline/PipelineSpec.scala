@@ -1859,16 +1859,16 @@ class PipelineSpec extends SparkSpec {
       .write.saveAsTable("bronze_e2e.maint_facts")
     assert(spark.table("bronze_e2e.maint_facts").inputFiles.length == 8)
     // plant a stale staging root for the vacuum to sweep
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val stale = new java.io.File(s"$wh/__upsert_stage/leftover")
+    val stale = new java.io.File(
+      graft.io.Commit.dir(spark, "leftover").toUri.getPath)
     stale.mkdirs()
     val p = new Pipeline(spark, "2024-09-01", new FixedClock(1804000000000L))
     val reports = p.run(Map("maintenance" -> EtlConfig.fromYaml(maintYaml)),
       Seq("maintenance"))
     // per-item isolation: the bogus table fails alone, data siblings
     // run — but vacuum_staging REFUSES after any failed sibling (the
-    // __*_stage roots may be the failed task's only complete rewrite
-    // copy), recorded as its own failure, never a silent skip
+    // staging directories may hold the failed task's only complete
+    // rewrite copy), recorded as its own failure, never a silent skip
     assert(reports.head.failed.map(_._1) == Seq("broken_compact", "sweep"),
       reports.toString)
     assert(reports.head.failed.find(_._1 == "sweep").get._2
