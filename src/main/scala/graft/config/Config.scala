@@ -2,6 +2,9 @@ package graft.config
 
 import java.{util => ju}
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{PropertyNamingStrategies, SerializationFeature}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.yaml.snakeyaml.Yaml
 
 /** Case-class model of the three YAML config shapes the engine
@@ -490,186 +493,20 @@ final case class EtlConfig(
     models: Seq[ModelConfig],
     maintenance: Seq[MaintenanceTaskConfig] = Nil)
 
-/** Minimal JSON rendering of config items for the control table's
-  * `config_snapshot` column (reference metadata_manager.py:115-117
-  * stores `json.dumps(config)` per run) — hand-rolled so the engine
-  * stays dependency-free.
-  */
-object ConfigJson {
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-  private def js(s: String): String = "\"" + esc(s) + "\""
-  private def jarr(xs: Seq[String]): String = xs.map(js).mkString("[", ",", "]")
-  private def jobj(fields: (String, String)*): String =
-    fields.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
-
-  def apply(t: MaintenanceTaskConfig): String = jobj(
-    "task_id" -> js(t.taskId), "task_type" -> js(t.taskType),
-    "table" -> t.table.map(js).getOrElse("null"),
-    "target_rows_per_file" -> t.targetRowsPerFile.toString,
-    "cluster_by" -> jarr(t.clusterBy), "columns" -> jarr(t.columns),
-    "keep_epochs" -> t.keepEpochs.toString,
-    "train_iters" -> t.trainIters.toString,
-    "num_centroids" -> t.numCentroids.toString,
-    "spread_threshold_permille" -> t.spreadThresholdPermille.toString,
-    "max_cell_size" -> t.maxCellSize.map(_.toString).getOrElse("0"),
-    "spread_trend_pct" -> t.spreadTrendPct.toString,
-    "enabled" -> t.enabled.toString)
-
-  def apply(s: SourceConfig): String = jobj(
-    "source_id" -> js(s.sourceId), "source_type" -> js(s.sourceType),
-    "source_path" -> js(s.sourcePath), "file_format" -> js(s.fileFormat),
-    "options" -> s.options.toSeq.sortBy(_._1)
-      .map { case (k, v) => js(k) + ":" + js(v) }.mkString("{", ",", "}"),
-    "target_table" -> js(s.targetTable),
-    "extract_strategy" -> js(s.extractStrategy),
-    "incremental_column" -> s.incrementalColumn.map(js).getOrElse("null"),
-    "enabled" -> s.enabled.toString)
-
-  def apply(t: TransformConfig): String = jobj(
-    (Seq(
-      "transform_id" -> js(t.transformId), "source_table" -> js(t.sourceTable),
-      "target_table" -> js(t.targetTable),
-      "transform_type" -> js(t.transformType),
-      "sql_query" -> js(t.sqlQuery),
-      "partition_by" -> jarr(t.partitionBy),
-      "data_quality" -> t.dataQuality.map(r => jobj(
-        "rule_name" -> js(r.ruleName), "rule_type" -> js(r.ruleType),
-        "columns" -> jarr(r.columns),
-        "action_on_failure" -> js(r.actionOnFailure))).mkString("[", ",", "]")) ++
-      t.dedup.toSeq.map(d => "dedup" -> jobj(
-        "method" -> js(d.method), "id_column" -> js(d.idColumn),
-        "text_column" -> js(d.textColumn),
-        "shingle_size" -> d.shingleSize.toString,
-        "num_hashes" -> d.numHashes.toString, "bands" -> d.bands.toString,
-        "min_span_tokens" -> d.minSpanTokens.toString)) ++
-      t.curation.toSeq.map(c => "curation" -> jobj(
-        "id_column" -> js(c.idColumn), "text_column" -> js(c.textColumn),
-        "languages" -> jarr(c.languages),
-        "min_quality" -> c.minQuality.map(_.toString).getOrElse("null"),
-        "redact_pii" -> c.redactPii.toString,
-        "stratum_column" -> c.stratumColumn.map(js).getOrElse("null"),
-        "sample_rates" -> c.sampleRates.toSeq.sortBy(_._1)
-          .map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}"),
-        "default_sample_rate" -> c.defaultSampleRate.toString)) ++
-      t.chunk.toSeq.map(c => "chunk" -> jobj(
-        "id_column" -> js(c.idColumn), "text_column" -> js(c.textColumn),
-        "chunk_tokens" -> c.chunkTokens.toString,
-        "stride" -> c.stride.toString,
-        "carry_columns" -> jarr(c.carryColumns))) ++
-      t.quota.toSeq.map(q => "quota" -> jobj(
-        "id_column" -> js(q.idColumn),
-        "stratum_column" -> js(q.stratumColumn),
-        "max_per_stratum" -> q.maxPerStratum.toString)) ++
-      t.mix.toSeq.map(x => "mix" -> jobj(
-        "id_column" -> js(x.idColumn), "source_column" -> js(x.sourceColumn),
-        "epochs" -> x.epochs.toSeq.sortBy(_._1)
-          .map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}"),
-        "default_epochs" -> x.defaultEpochs.toString)) ++
-      t.split.toSeq.map(x => "split" -> jobj(
-        "id_column" -> js(x.idColumn), "text_column" -> js(x.textColumn),
-        "chunk_tokens" -> x.chunkTokens.toString,
-        "stride" -> x.stride.toString,
-        "train_pct" -> x.trainPct.toString, "val_pct" -> x.valPct.toString,
-        "max_posting" -> x.maxPosting.toString)) ++
-      t.decontaminate.toSeq.map(x => "decontaminate" -> jobj(
-        "id_column" -> js(x.idColumn), "text_column" -> js(x.textColumn),
-        "probe_table" -> js(x.probeTable), "ngram" -> x.ngram.toString)) ++
-      t.weightedSample.toSeq.map(x => "weighted_sample" -> jobj(
-        "id_column" -> js(x.idColumn),
-        "stratum_column" -> js(x.stratumColumn),
-        "weight_column" -> js(x.weightColumn),
-        "samples_per_stratum" -> x.samplesPerStratum.toString)) ++
-      t.relevanceFilter.toSeq.map(x => "relevance_filter" -> jobj(
-        "id_column" -> js(x.idColumn), "text_column" -> js(x.textColumn),
-        "terms" -> jarr(x.terms),
-        "min_score_micro" -> x.minScoreMicro.toString)) ++
-      t.asof.toSeq.map(x => "asof" -> jobj("as_of" -> js(x.asOf))) ++
-      t.storeProbe.toSeq.map(x => "store_probe" -> jobj(
-        "store_table" -> js(x.storeTable), "store_type" -> js(x.storeType),
-        "id_column" -> js(x.idColumn),
-        "content_column" -> js(x.contentColumn),
-        "flag_column" -> js(x.flagColumn),
-        // every tuning knob lands in the snapshot — two runs with
-        // different thresholds must be distinguishable from the
-        // audit trail alone (review-caught)
-        "shingle_size" -> x.shingleSize.toString,
-        "num_hashes" -> x.numHashes.toString,
-        "bands" -> x.bands.toString,
-        "jaccard_pct" -> x.jaccardPct.toString,
-        "min_score" -> x.minScore.toString,
-        "nprobe" -> x.nprobe.toString,
-        "max_hamming" -> x.maxHamming.toString,
-        "max_bucket_size" -> x.maxBucketSize.map(_.toString)
-          .getOrElse("0"))) ++
-      t.viewEstimate.toSeq.map(x => "view_estimate" -> jobj(
-        "view_type" -> js(x.viewType),
-        "key_columns" -> jarr(x.keyColumns),
-        "q_permille" -> x.qPermille.mkString("[", ",", "]"))) ++
-      Seq("enabled" -> t.enabled.toString)): _*)
-
-  def apply(m: ModelConfig): String = jobj(
-    "model_id" -> js(m.modelId), "sql_query" -> js(m.sqlQuery),
-    "target_table" -> js(m.targetTable), "partition_by" -> jarr(m.partitionBy),
-    "refresh_type" -> js(m.refreshType), "primary_keys" -> jarr(m.primaryKeys),
-    "mode" -> js(m.mode),
-    "stream_source" -> m.streamSource.map(s => jobj(
-      "path" -> js(s.path), "format" -> js(s.format),
-      "schema_table" -> s.schemaTable.map(js).getOrElse("null"),
-      "options" -> s.options.toSeq.sortBy(_._1)
-        .map { case (k, v) => js(k) + ":" + js(v) }.mkString("{", ",", "}"),
-      "select" -> jarr(s.select)))
-      .getOrElse("{}"),
-    "checkpoint" -> m.checkpoint.map(js).getOrElse("null"),
-    "op_column" -> js(m.opColumn), "seq_column" -> js(m.seqColumn),
-    "sum_columns" -> jarr(m.sumColumns),
-    "min_columns" -> jarr(m.minColumns), "max_columns" -> jarr(m.maxColumns),
-    "left_table" -> js(m.leftTable.getOrElse("")),
-    "right_table" -> js(m.rightTable.getOrElse("")),
-    "join_keys" -> jarr(m.joinKeys),
-    "tracked_columns" -> jarr(m.trackedColumns),
-    "effective_column" -> js(m.effectiveColumn.getOrElse("")),
-    "distinct_column" -> js(m.distinctColumn.getOrElse("")),
-    "hll_m" -> m.hllM.toString,
-    "quantile_column" -> js(m.quantileColumn.getOrElse("")),
-    "volume_guard_pct" -> m.volumeGuardPct.toString,
-    "enabled" -> m.enabled.toString,
-    "dedup_store" -> m.dedupStore.map(d => jobj(
-      "id_column" -> js(d.idColumn), "text_column" -> js(d.textColumn),
-      "shingle_size" -> d.shingleSize.toString,
-      "num_hashes" -> d.numHashes.toString, "bands" -> d.bands.toString,
-      "jaccard_pct" -> d.jaccardPct.toString,
-      "max_bucket_size" -> d.maxBucketSize.map(_.toString).getOrElse("0"),
-      "store_buckets" -> d.storeBuckets.toString,
-      "keeper" -> js(d.keeper),
-      "quality_column" -> js(d.qualityColumn.getOrElse("")))).getOrElse("{}"),
-    "vector_dedup_store" -> m.vectorDedupStore.map(v => jobj(
-      "id_column" -> js(v.idColumn), "vector_column" -> js(v.vectorColumn),
-      "min_score" -> v.minScore.toString,
-      "num_centroids" -> v.numCentroids.toString,
-      "nprobe" -> v.nprobe.toString,
-      "train_iters" -> v.trainIters.toString,
-      "max_cell_size" -> v.maxCellSize.map(_.toString).getOrElse("0"),
-      "keeper" -> js(v.keeper)))
-      .getOrElse("{}"),
-    "media_dedup_store" -> m.mediaDedupStore.map(d => jobj(
-      "id_column" -> js(d.idColumn), "hash_column" -> js(d.hashColumn),
-      "bands" -> d.bands.toString,
-      "max_hamming" -> d.maxHamming.toString,
-      "max_bucket_size" -> d.maxBucketSize.map(_.toString).getOrElse("0"),
-      "store_buckets" -> d.storeBuckets.toString,
-      "keeper" -> js(d.keeper),
-      "quality_column" -> js(d.qualityColumn.getOrElse("")))).getOrElse("{}"))
-}
-
 object EtlConfig {
+
+  private val snapshotMapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+    .build()
+
+  /** JSON of one parsed config item for the audit log's
+    * `config_snapshot` (reference metadata_manager.py:115-117 stores
+    * `json.dumps(config)` per run): the case class itself, snake_case
+    * keys, every field, map entries sorted by key.
+    */
+  def snapshot(item: Product): String = snapshotMapper.writeValueAsString(item)
 
   /** `${PROCESSING_DATE}` / `${EXTRACT_DATE}` / `${ENV:NAME}` template
     * substitution (reference: silver_layer.py:118, bronze_layer.py:168-171)

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * signature (an upstream filter gone wrong, an empty partition, a
   * truncated extract) that no per-row rule can see. History comes from
   * the audit log's SUCCESS rows ([[graft.meta.AuditLogger]] — the
-  * per-run ledger; the control table is a watermark and keeps only the
-  * latest run), so the guard needs no new bookkeeping.
+  * per-run ledger; the control table is a view of each item's latest
+  * SUCCESS row only), so the guard needs no new bookkeeping.
   *
   * Robustness choices: the baseline is the MEDIAN of the trailing
   * window (one historic outlier must not poison the expectation), the

@@ -527,8 +527,8 @@ object Upsert {
       source.write.saveAsTable(table)
       return obs.get("rows").asInstanceOf[Long]
     }
-    // driver-local sources (literal rows — e.g. the 1-row control-table
-    // updates) are free to evaluate twice; skip the staging write that
+    // driver-local sources (literal rows — e.g. the data dictionary's
+    // per-column rows) are free to evaluate twice; skip the staging write that
     // exists to keep an EXPENSIVE model plan from computing once per
     // merge consumer
     val isDriverLocal = source.queryExecution.optimizedPlan.collectLeaves()

@@ -9,11 +9,14 @@ import graft.meta.{AuditLogger, MetadataManager}
 
 /** The three medallion layer processors (reference F1–F6 loop
   * semantics: `enabled` gating, per-item error isolation, audit
-  * bracketing, control-table watermarking) — re-expressed so each unit
-  * of work reads its input ONCE: row counts come from `Observation`
-  * metrics attached to the very write that materializes the table,
-  * never from a second count() pass (the reference recomputed every
-  * plan 2+2·rules times, SURVEY.md §3.2).
+  * bracketing, control-table watermarking — an item's terminal audit
+  * row, carrying its run date and config, is its control row, keyed
+  * `<layer>.<item_id>` so two items writing one table keep separate
+  * watermarks) — re-expressed so each unit of work reads its input
+  * ONCE: row counts come from `Observation` metrics attached to the
+  * very write that materializes the table, never from a second count()
+  * pass (the reference recomputed every plan 2+2·rules times, SURVEY.md
+  * §3.2).
   */
 final case class LayerReport(layer: String, succeeded: Seq[String],
     failed: Seq[(String, String)])
@@ -56,39 +59,29 @@ class BronzeLayer(spark: SparkSession, config: EtlConfig,
 
   def ingest(src0: SourceConfig): Unit = {
     // incremental watermark: substitute ${EXTRACT_DATE} with the last
-    // successful run date (F5); full loads use the pipeline run date
-    // control rows key on (table_name, layer) — qualify the layer with
-    // the source id (the maintenance plane's task-qualified precedent)
-    // so two sources feeding ONE bronze table keep independent rows and
-    // watermarks: a disabled source's incremental fence must not be
-    // advanced by its table-mates
-    val controlKey = s"$layerName.${src0.sourceId}"
+    // successful run date (F5); full loads use the pipeline run date.
+    // Control rows key on (table_name, `bronze.<source_id>`), so two
+    // sources feeding ONE bronze table keep independent watermarks: a
+    // disabled source's incremental fence must not be advanced by its
+    // table-mates
     val extractDate =
       if (src0.extractStrategy == "incremental")
-        meta.lastRunDate(src0.targetTable, controlKey)
-          // pre-round-16 control rows keyed (table, "bronze"): read the
-          // legacy key as a fallback, or an upgrade silently resets
-          // every incremental watermark to 1970 and re-APPENDS all of
-          // history (review-caught). The first success under the new
-          // key takes over; the stale legacy row then never matches
-          .orElse(meta.lastRunDate(src0.targetTable, layerName))
+        meta.lastRunDate(src0.targetTable, s"$layerName.${src0.sourceId}")
           .getOrElse("1970-01-01")
       else runDate
     val vars = Map("EXTRACT_DATE" -> extractDate, "PROCESSING_DATE" -> runDate)
     val src = src0.copy(
       sourcePath = EtlConfig.substitute(src0.sourcePath, vars),
       options = src0.options.map { case (k, v) => k -> EtlConfig.substitute(v, vars) })
-    audit.bracket(layerName, "ingest", "BronzeLayer", src.sourceId, src.targetTable) {
+    audit.bracket(layerName, "ingest", "BronzeLayer", src.sourceId,
+        src.targetTable, runDate, src0) {
       var df = Sources.read(spark, src)
         .withColumn("ingestion_timestamp", current_timestamp())
         .withColumn("source_id", lit(src.sourceId))
       for (c <- src.incrementalColumn if src.extractStrategy == "incremental")
         df = df.filter(col(c) > lit(extractDate))
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${db(src.targetTable)}")
-      val rows = writeCounted(df, Sinks.append(_, src.targetTable))
-      meta.updateControl(src.targetTable, controlKey, runDate, rows, "SUCCESS",
-        ConfigJson(src0))
-      ((), rows)
+      ((), writeCounted(df, Sinks.append(_, src.targetTable)))
     }
   }
 
@@ -106,7 +99,8 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
     runAll[TransformConfig](config.transformations, _.transformId, _.enabled)(transform)
 
   def transform(t: TransformConfig): Unit =
-    audit.bracket(layerName, "transform", "SilverLayer", t.transformId, t.targetTable) {
+    audit.bracket(layerName, "transform", "SilverLayer", t.transformId,
+        t.targetTable, runDate, t) {
       // snapshot BEFORE this step tracks anything: the drain below must
       // free only frames THIS transform created — a blanket release
       // would free localCheckpoint blocks owned by other in-flight
@@ -172,10 +166,6 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
         graft.meta.DqMetricRow(t.targetTable, t.transformId, m.rule,
           m.ruleType, m.action, m.validCount, m.invalidCount, runDate,
           new java.sql.Timestamp(0)))) // stamped by the manager's clock
-      // item-qualified control key: two transforms writing the same
-      // target keep separate rows instead of clobbering each other
-      meta.updateControl(t.targetTable, s"$layerName.${t.transformId}",
-        runDate, rows, "SUCCESS", ConfigJson(t))
       ((), rows)
     }
 }
@@ -206,7 +196,8 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     * progress counters, summed over the run's micro-batches).
     */
   def buildStreaming(m: ModelConfig): Unit =
-    audit.bracket(layerName, "stream", "GoldLayer", m.modelId, m.targetTable) {
+    audit.bracket(layerName, "stream", "GoldLayer", m.modelId,
+        m.targetTable, runDate, m) {
       // same template substitution as bronze source paths (${ENV:…},
       // ${PROCESSING_DATE}) — corpus configs resolve their data root
       // this way
@@ -311,8 +302,6 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
       if (m.volumeGuardPct > 0)
         graft.dq.VolumeGuard.enforce(spark, meta.auditTable, m.targetTable,
           rows, m.volumeGuardPct)
-      meta.updateControl(m.targetTable, s"$layerName.${m.modelId}",
-        runDate, rows, "SUCCESS", ConfigJson(m))
       // a zero-batch first run may not have created the table yet
       if (spark.catalog.tableExists(m.targetTable))
         meta.updateDictionary(m.targetTable, m.modelId)
@@ -320,14 +309,15 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     }
 
   def buildBatch(m: ModelConfig): Unit =
-    audit.bracket(layerName, "model", "GoldLayer", m.modelId, m.targetTable) {
+    audit.bracket(layerName, "model", "GoldLayer", m.modelId,
+        m.targetTable, runDate, m) {
       // lazy: a join_view model has no sql_query — its view derives
       // from the base tables, never from a model query
       lazy val sql = EtlConfig.substitute(m.sqlQuery, Map("PROCESSING_DATE" -> runDate))
       lazy val df0 = spark.sql(sql)
       // additive/extremes models skip the audit timestamp: the standing
       // table's schema is (keys, folds, n_rows) and the fold would try
-      // to fold timestamps; the control table carries the run bookkeeping
+      // to fold timestamps; the audit log carries the run bookkeeping
       // (scd2 likewise: its table shape is keys ++ tracked ++ interval
       // columns — an audit timestamp would version itself)
       lazy val df =
@@ -468,7 +458,9 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         }
       // trend gate BEFORE this run's SUCCESS lands anywhere: a breach
       // throws here, so per-item isolation records an ERROR audit row
-      // and neither the control watermark nor the history advances.
+      // and neither the control watermark nor the history advances
+      // (both advance only with the bracket's SUCCESS row, which also
+      // waits for the dictionary write below).
       // DETECTION, not rollback — the model's write has already
       // happened (rows is its Observation); the failed run stops the
       // watermark and downstream trust, and a same-date retry re-runs
@@ -476,11 +468,6 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
       if (m.volumeGuardPct > 0)
         graft.dq.VolumeGuard.enforce(spark, meta.auditTable, m.targetTable,
           rows, m.volumeGuardPct)
-      // control key is model-qualified: two gold models writing the
-      // SAME table (a full view + a fold over it, say) each keep their
-      // own watermark row — (table_name, "gold") alone clobbers
-      meta.updateControl(m.targetTable, s"$layerName.${m.modelId}",
-        runDate, rows, "SUCCESS", ConfigJson(m))
       meta.updateDictionary(m.targetTable, m.modelId)
       ((), rows)
     }
@@ -529,7 +516,8 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
 
   def exec(t: MaintenanceTaskConfig): Unit = {
     val target = t.table.getOrElse("(warehouse staging)")
-    audit.bracket(layerName, t.taskType, "MaintenanceLayer", t.taskId, target) {
+    audit.bracket(layerName, t.taskType, "MaintenanceLayer", t.taskId,
+        target, runDate, t) {
       val n: Long = t.taskType match {
         case "compact" =>
           val (_, after) = graft.io.Maintenance.compact(spark, t.table.get,
@@ -609,11 +597,6 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
               t.spreadTrendPct)
           spread
       }
-      // control rows upsert on (table_name, layer): task-qualify the
-      // layer so two tasks on the SAME table (compact + zone_maps is
-      // the normal pairing) keep their own rows instead of clobbering
-      meta.updateControl(target, s"$layerName.${t.taskId}", runDate, n,
-        "SUCCESS", ConfigJson(t))
       ((), n)
     }
   }

@@ -1,25 +1,30 @@
 package graft.meta
 
 import java.sql.Timestamp
+import scala.util.DynamicVariable
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.config.EtlConfig
 import graft.io.Upsert
 
-/** Metadata plane: control table (per-target watermark + run state) and
-  * audit log (event per unit of work) — the reference's
+/** Metadata plane: one append-only ledger, the audit log (an event per
+  * unit of work), and the control table (per-target watermark + run
+  * state) derived from it as a catalog view — the reference's
   * metadata_manager.py / audit_logger.py re-expressed as typed Datasets
   * on parquet catalog tables.
+  *
+  * An item's terminal audit row carries its run date and config
+  * snapshot, so its SUCCESS row IS its control row: `etl_control_table`
+  * is the latest SUCCESS per (target table, `<layer>.<source_id>`), in
+  * the (event_timestamp, log_id) order every audit reader uses. A
+  * control row therefore never claims a success the audit log records
+  * as an error, and finishing an item costs one append, not a rewrite.
   *
   * Deliberate fixes vs the reference (SURVEY.md §2.12 latent bugs):
   * create-if-absent instead of drop-and-recreate (which wiped history
   * mid-pipeline and made incremental watermarks unreachable), and
-  * DataFrame upserts instead of f-string SQL interpolation.
+  * DataFrame writes instead of f-string SQL interpolation.
   */
-final case class ControlRow(
-    table_name: String, layer: String, last_run_date: String,
-    records_processed: Long, status: String, config_snapshot: String,
-    updated_timestamp: Timestamp)
-
 /** Per-rule DQ outcome row (reference declares this schema in
   * silver_schemas.py:72-85 but never populates it — we do).
   */
@@ -41,7 +46,8 @@ final case class AuditEvent(
     operation: String, component: String, source_id: String,
     target_table: String, status: String, rows_processed: Long,
     error_message: String, execution_time_seconds: Double,
-    run_id: String, spark_user: String)
+    run_id: String, spark_user: String, run_date: String,
+    config_snapshot: String)
 
 /** Injectable clock/id source so tests are deterministic. */
 trait IdClock {
@@ -64,15 +70,35 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
 
   def init(): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    if (!spark.catalog.tableExists(controlTable))
-      spark.emptyDataset[ControlRow].write.saveAsTable(controlTable)
     if (!spark.catalog.tableExists(auditTable))
       spark.emptyDataset[AuditEvent].write.saveAsTable(auditTable)
     if (!spark.catalog.tableExists(dqMetricsTable))
       spark.emptyDataset[DqMetricRow].write.saveAsTable(dqMetricsTable)
     if (!spark.catalog.tableExists(dictionaryTable))
       spark.emptyDataset[DataDictRow].write.saveAsTable(dictionaryTable)
+    // only terminal rows that carry a run date are control rows (a bare
+    // `AuditLogger.event` or an undated bracket records no watermark)
+    spark.sql(s"""CREATE VIEW IF NOT EXISTS $controlTable AS
+      |SELECT table_name, layer, last_run_date, records_processed, status,
+      |       config_snapshot, updated_timestamp
+      |FROM (SELECT *, row_number() OVER (PARTITION BY table_name, layer
+      |               ORDER BY updated_timestamp DESC, log_id DESC) AS rn
+      |      FROM (SELECT target_table AS table_name,
+      |                   concat_ws('.', layer, source_id) AS layer,
+      |                   run_date AS last_run_date,
+      |                   rows_processed AS records_processed, status,
+      |                   config_snapshot, event_timestamp AS updated_timestamp,
+      |                   log_id
+      |            FROM $auditTable
+      |            WHERE status = 'SUCCESS' AND run_date IS NOT NULL))
+      |WHERE rn = 1""".stripMargin)
   }
+
+  /** The one ledger write: every audit event and control row is a
+    * single-row append to the audit log.
+    */
+  private[meta] def append(e: AuditEvent): Unit =
+    Seq(e).toDS().write.mode(SaveMode.Append).saveAsTable(auditTable)
 
   /** Refresh the data dictionary for one table from its live catalog
     * schema, keyed upsert on (table_name, column_name) so re-runs
@@ -97,25 +123,28 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       rows.map(_.copy(recorded_at = clock.now())).toDS()
         .write.mode(SaveMode.Append).saveAsTable(dqMetricsTable)
 
-  /** Upsert one control row keyed on (table_name, layer). The layer
-    * plane passes ITEM-QUALIFIED keys (`bronze.<source_id>`,
-    * `silver.<transform_id>`, `gold.<model_id>`,
-    * `maintenance.<task_id>`) so two config items targeting one table
-    * never clobber each other's watermark; `controlReport` prefix-
-    * matches, so layer-level reads see every item.
+  /** Record one control row keyed on (table_name, layer) as a terminal
+    * ledger row outside any bracket: the key's first segment lands in
+    * the audit `layer` column and the rest (if any) in `source_id`, so
+    * the view reads the key back unchanged. The layer plane writes its
+    * ITEM-QUALIFIED keys (`bronze.<source_id>`, `silver.<transform_id>`,
+    * `gold.<model_id>`, `maintenance.<task_id>`) through
+    * `AuditLogger.bracket` instead; `controlReport` prefix-matches, so
+    * layer-level reads see every item.
     */
   def updateControl(tableName: String, layer: String, runDate: String,
       records: Long, status: String, configSnapshot: String = "{}"): Unit = {
-    val row = Seq(ControlRow(tableName, layer, runDate, records, status,
-      configSnapshot, clock.now())).toDS().toDF()
-    Upsert.upsertTable(spark, controlTable, row, Seq("table_name", "layer"))
+    val (plane, item) = layer.span(_ != '.')
+    append(AuditEvent(clock.uuid(), clock.now(), plane, "control",
+      "MetadataManager", if (item.isEmpty) null else item.tail, tableName,
+      status, records, "", 0.0, null, spark.sparkContext.sparkUser,
+      runDate, configSnapshot))
   }
 
   /** Incremental watermark: last successful run date for a target. */
   def lastRunDate(tableName: String, layer: String): Option[String] =
     spark.table(controlTable)
-      .filter(col("table_name") === tableName && col("layer") === layer
-        && col("status") === "SUCCESS")
+      .filter(col("table_name") === tableName && col("layer") === layer)
       .select("last_run_date")
       .collect().headOption.map(_.getString(0))
 
@@ -134,33 +163,43 @@ class AuditLogger(spark: SparkSession, meta: MetadataManager,
 
   val runId: String = clock.uuid()
 
-  private def emit(e: AuditEvent): Unit =
-    Seq(e).toDS().write.mode(SaveMode.Append).saveAsTable(meta.auditTable)
+  /** (run_date, config_snapshot) of the terminal row being written:
+    * `bracket` binds them around its terminal `event`, so every audit
+    * row still goes through the one overridable `event`.
+    */
+  private val terminal = new DynamicVariable[(String, String)]((null, null))
 
   def event(layer: String, operation: String, component: String,
       sourceId: String, targetTable: String, status: String,
-      rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit =
-    emit(AuditEvent(clock.uuid(), clock.now(), layer, operation, component,
-      sourceId, targetTable, status, rows, error, seconds, runId,
-      spark.sparkContext.sparkUser))
+      rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit = {
+    val (runDate, snapshot) = terminal.value
+    meta.append(AuditEvent(clock.uuid(), clock.now(), layer, operation,
+      component, sourceId, targetTable, status, rows, error, seconds, runId,
+      spark.sparkContext.sparkUser, runDate, snapshot))
+  }
 
   /** STARTED/SUCCESS/ERROR bracketing around a unit of work (reference
-    * F4), returning the body's result.
+    * F4), returning the body's result. With a `runDate`, the terminal
+    * row also carries it and `config`'s snapshot, and a SUCCESS becomes
+    * the item's control row (`<layer>.<sourceId>` on `targetTable`).
     */
   def bracket[T](layer: String, operation: String, component: String,
-      sourceId: String, targetTable: String)(body: => (T, Long)): T = {
+      sourceId: String, targetTable: String, runDate: String = null,
+      config: Product = null)(body: => (T, Long)): T = {
     val t0 = System.nanoTime()
     event(layer, operation, component, sourceId, targetTable, "STARTED")
+    def end(status: String, rows: Long, error: String): Unit =
+      terminal.withValue((runDate, Option(config).map(EtlConfig.snapshot).orNull)) {
+        event(layer, operation, component, sourceId, targetTable, status,
+          rows, error, (System.nanoTime() - t0) / 1e9)
+      }
     try {
       val (result, rows) = body
-      event(layer, operation, component, sourceId, targetTable, "SUCCESS",
-        rows, seconds = (System.nanoTime() - t0) / 1e9)
+      end("SUCCESS", rows, "")
       result
     } catch {
       case e: Throwable =>
-        event(layer, operation, component, sourceId, targetTable, "ERROR",
-          error = String.valueOf(e.getMessage),
-          seconds = (System.nanoTime() - t0) / 1e9)
+        end("ERROR", 0L, String.valueOf(e.getMessage))
         throw e
     }
   }

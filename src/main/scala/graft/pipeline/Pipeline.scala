@@ -40,12 +40,12 @@ class Pipeline(spark: SparkSession, runDate: String,
 
   /** End-of-run summary (reference F6: run_etl_pipeline.py:246-276):
     * per-layer target tables with rows processed and status, straight
-    * from the control table.
+    * from the control view over the audit log.
     */
   def summary(): Seq[(String, String, Long, String)] = {
     import org.apache.spark.sql.functions.col
     spark.table(meta.controlTable)
-      // the control table spans all runs; scope to THIS run's date so
+      // the control view spans all runs; scope to THIS run's date so
       // stale targets from earlier runs don't appear in the summary
       .filter(col("last_run_date") === runDate)
       .select(col("layer"), col("table_name"),

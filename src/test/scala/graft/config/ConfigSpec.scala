@@ -125,4 +125,72 @@ class ConfigSpec extends AnyFunSuite {
       env = _ => None) == "")
     assert(EtlConfig.substitute("${UNKNOWN}", Map.empty) == "${UNKNOWN}")
   }
+
+  test("config_snapshot carries every field of every checked-in config item") {
+    import scala.jdk.CollectionConverters._
+    import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+    val json = new ObjectMapper()
+    def snake(name: String): String =
+      name.flatMap(c => if (c.isUpper) "_" + c.toLower else c.toString)
+    // the snapshot node mirrors the value: a case class's keys are its
+    // snake_cased fields, recursively; leaves render their own value
+    def mirror(v: Any, node: JsonNode, path: String): Unit = v match {
+      case None => assert(node.isNull, path)
+      case Some(x) => mirror(x, node, path)
+      case m: Map[_, _] =>
+        val keys = m.keys.map(_.toString).toSeq.sorted
+        assert(node.fieldNames.asScala.toSeq == keys, path)
+        m.foreach { case (k, x) => mirror(x, node.get(k.toString), s"$path.$k") }
+      case xs: Seq[_] =>
+        assert(node.isArray && node.size == xs.size, path)
+        xs.zipWithIndex.foreach { case (x, i) => mirror(x, node.get(i), s"$path[$i]") }
+      case p: Product =>
+        val names = p.productElementNames.map(snake).toSeq
+        assert(node.isObject && node.fieldNames.asScala.toSet == names.toSet,
+          s"$path: ${node.fieldNames.asScala.toSeq} vs $names")
+        names.zip(p.productIterator).foreach { case (n, x) =>
+          mirror(x, node.get(n), s"$path.$n") }
+      case leaf => assert(node.isValueNode && node.asText == leaf.toString, path)
+    }
+    val root = graft.TestSpark.repoRoot
+    val files = Seq("configs", "configs/demo", "configs/corpus").flatMap { d =>
+      new java.io.File(s"$root/$d").listFiles().toSeq
+        .filter(_.getName.endsWith(".yaml")).map(_.getPath)
+    } :+ s"$root/perfbench/conf/demo_maintenance_config.yaml"
+    val items: Seq[Product] = files.map(EtlConfig.load).flatMap(c =>
+      c.sources ++ c.transformations ++ c.models ++ c.maintenance)
+    assert(files.size == 11 && items.size > 40, s"${files.size} files, ${items.size} items")
+    items.foreach(i => mirror(i, json.readTree(EtlConfig.snapshot(i)), i.productPrefix))
+
+    // the fields the hand-written serializer used to drop
+    val tpch = EtlConfig.load(s"$root/configs/silver_config.yaml").transformations
+    def rules(id: String) = json.readTree(EtlConfig.snapshot(
+      tpch.find(_.transformId == id).get)).get("data_quality").asScala.toSeq
+    val cust = rules("customer_silver")
+    assert(cust.map(_.get("pattern").asText).contains("^[A-Z ]+$"))
+    assert(cust.map(_.get("ref_table").asText).contains("bronze.nation"))
+    assert(cust.map(_.get("ref_column").asText).contains("n_nationkey"))
+    assert(rules("orders_silver").map(_.get("expression").asText)
+      .contains("o_totalprice > 0"))
+    val curation = EtlConfig.load(s"$root/configs/corpus/silver_config.yaml")
+      .transformations.flatMap(_.curation).head
+    assert(json.readTree(EtlConfig.snapshot(curation))
+      .get("pii_replacement").asText == "[REDACTED]")
+    val joinView = EtlConfig.fromYaml(
+      """models:
+        |  - model_id: jv
+        |    target_table: gold.jv
+        |    refresh_type: join_view
+        |    left_table: bronze.l
+        |    right_table: bronze.r
+        |    join_keys: [k]
+        |    left_batch_sql: SELECT * FROM bronze.l WHERE d = '${PROCESSING_DATE}'
+        |    right_batch_sql: SELECT * FROM bronze.r WHERE d = '${PROCESSING_DATE}'
+        |""".stripMargin).models.head
+    val jv = json.readTree(EtlConfig.snapshot(joinView))
+    assert(jv.get("left_batch_sql").asText ==
+      "SELECT * FROM bronze.l WHERE d = '${PROCESSING_DATE}'")
+    assert(jv.get("right_batch_sql").asText ==
+      "SELECT * FROM bronze.r WHERE d = '${PROCESSING_DATE}'")
+  }
 }

@@ -144,7 +144,7 @@ class CommitSpec extends SparkSpec {
          |    task_type: compact
          |    table: $t
          |    target_rows_per_file: 4
-         |  - task_id: sweep
+         |  - task_id: plane_sweep
          |    task_type: vacuum_staging
          |""".stripMargin
     def run(date: String, clock: Long) =
@@ -152,7 +152,7 @@ class CommitSpec extends SparkSpec {
         .run(Map("maintenance" -> EtlConfig.fromYaml(yaml)), Seq("maintenance"))
         .head
     val r1 = injecting(t, "table")(run("2024-10-01", 1805000000000L))
-    assert(r1.failed.map(_._1) == Seq("compact_facts", "sweep"), r1.toString)
+    assert(r1.failed.map(_._1) == Seq("compact_facts", "plane_sweep"), r1.toString)
     assert(staged(t), "the refused vacuum must leave the died commit's stage")
     val r2 = run("2024-10-02", 1805100000000L)
     assert(r2.failed.isEmpty, r2.toString)
@@ -181,8 +181,7 @@ class CommitSpec extends SparkSpec {
     val r = new Pipeline(spark, "2024-10-03", new FixedClock(1805200000000L))
       .run(Map("maintenance" -> EtlConfig.fromYaml(yaml)), Seq("maintenance"))
     assert(r.head.failed.isEmpty && r.head.succeeded.size == 2, r.toString)
-    // compact, the zone-map refresh and every control-table upsert
-    // committed through the primitive
+    // compact and the zone-map refresh committed through the primitive
     val after = if (fs.exists(Commit.root(spark)))
       fs.listStatus(Commit.root(spark)).map(_.getPath.getName).toSet
     else Set.empty[String]

@@ -115,4 +115,49 @@ class MetadataSpec extends SparkSpec {
       Set(a1.runId, a2.runId))
     assert(rows.forall(_.getAs[String]("target_table") == "bronze.shared"))
   }
+
+  test("the control table is a view of each item's latest SUCCESS audit row") {
+    import spark.implicits._
+    val clock = new FixedClock(2400000000000L)
+    val m = new MetadataManager(spark, db = "metadata_ledger", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    def cfg(item: String) =
+      graft.config.MaintenanceTaskConfig(item, "compact", Some("gold.shared"))
+    def run(item: String, date: String, rows: Long, fail: Boolean = false): Unit =
+      try audit.bracket("gold", "model", "Test", item, "gold.shared", date,
+          cfg(item)) {
+        if (fail) throw new RuntimeException("boom")
+        ((), rows)
+      } catch { case _: RuntimeException if fail => () }
+    run("m1", "2024-01-01", 5L)
+    run("m2", "2024-01-01", 7L) // a second item on the same table
+    run("m1", "2024-01-02", 9L)
+    run("m1", "2024-01-02", 0L) // same-date retry that folded nothing
+    run("m2", "2024-01-02", 3L, fail = true) // ERROR after a SUCCESS
+    val control = spark.table(m.controlTable)
+    assert(control.select("layer", "last_run_date", "records_processed", "status")
+      .as[(String, String, Long, String)].collect().toSet == Set(
+        ("gold.m1", "2024-01-02", 0L, "SUCCESS"),
+        ("gold.m2", "2024-01-01", 7L, "SUCCESS")))
+    assert(m.lastRunDate("gold.shared", "gold.m2").contains("2024-01-01"))
+    assert(m.controlReport("gold").count() == 2)
+    assert(control.filter($"layer" === "gold.m1")
+      .select("config_snapshot").as[String].head() ==
+      graft.config.EtlConfig.snapshot(cfg("m1")))
+    // the seven control columns: names, types and order
+    assert(control.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "table_name" -> "string", "layer" -> "string",
+      "last_run_date" -> "string", "records_processed" -> "bigint",
+      "status" -> "string", "config_snapshot" -> "string",
+      "updated_timestamp" -> "timestamp"))
+    // a catalog VIEW: nothing is ever written under its name
+    assert(spark.catalog.getTable(m.controlTable).tableType == "VIEW")
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val root = java.nio.file.Paths.get(
+      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(wh).toUri)
+    val walk = java.nio.file.Files.walk(root)
+    try assert(!walk.anyMatch(_.getFileName.toString == "etl_control_table"))
+    finally walk.close()
+  }
 }

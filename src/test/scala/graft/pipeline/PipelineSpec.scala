@@ -1218,6 +1218,35 @@ class PipelineSpec extends SparkSpec {
     assert(ctl == "2024-04-03", s"watermark must not advance past a breach: $ctl")
   }
 
+  test("a failed dictionary write leaves the model's watermark where it was") {
+    val yaml =
+      """models:
+        |  - model_id: dict_fail
+        |    sql_query: SELECT 1L AS k, 'a' AS v
+        |    target_table: gold_e2e.dict_fail
+        |    refresh_type: full
+        |""".stripMargin
+    spark.sql("DROP TABLE IF EXISTS gold_e2e.dict_fail")
+    val cfg = EtlConfig.fromYaml(yaml)
+    val p1 = new Pipeline(spark, "2024-10-01", new FixedClock(1806000000000L))
+    val r1 = p1.run(Map("gold" -> cfg))
+    assert(r1.forall(_.failed.isEmpty), r1.flatMap(_.failed).toString)
+    val clock = new FixedClock(1806100000000L)
+    val meta = new graft.meta.MetadataManager(spark, clock = clock) {
+      override def updateDictionary(tableName: String, modelId: String,
+          description: String): Unit =
+        throw new IllegalStateException("dictionary unavailable")
+    }
+    val report = new graft.layers.GoldLayer(spark, cfg, meta,
+      new graft.meta.AuditLogger(spark, meta, clock), "2024-10-02").run()
+    assert(report.failed.map(_._1) == Seq("dict_fail"), report.toString)
+    assert(meta.lastRunDate("gold_e2e.dict_fail", "gold.dict_fail")
+      .contains("2024-10-01"))
+    assert(spark.table(meta.controlTable)
+      .filter($"table_name" === "gold_e2e.dict_fail" &&
+        $"last_run_date" === "2024-10-02").count() == 0)
+  }
+
   test("two gold models writing one table keep separate control rows") {
     // (table_name, layer) alone clobbers — the round-16 fix qualifies
     // the key per model (`gold.<model_id>`), maintenance-plane style
