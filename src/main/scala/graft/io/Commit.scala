@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions.{col, udf}
   * operation failed between [[stage]] and its commit). [[recover]] —
   * which every `graft.io` write path calls before it touches its table,
   * appends included — rolls a died commit forward, so the table's next
-  * write never builds on the empty table. Not concurrent-safe,
-  * matching the single-driver pipeline.
+  * write never builds on the empty table. Commits of different tables
+  * may run concurrently; two concurrent commits of one table may not
+  * (the layer scheduler never overlaps two items with one target).
   */
 private[graft] object Commit {
 
@@ -65,6 +66,7 @@ private[graft] object Commit {
     */
   def stage(spark: SparkSession, table: String, name: String,
       frame: DataFrame): DataFrame = {
+    open(spark, table)
     val p = new Path(dir(spark, table), name).toString
     frame.write.mode(SaveMode.Overwrite).parquet(p)
     spark.read.parquet(p)
@@ -82,6 +84,7 @@ private[graft] object Commit {
       relayout: DataFrame => DataFrame = identity): Unit = {
     if (!spark.catalog.tableExists(table)) frame.write.saveAsTable(table)
     else {
+      open(spark, table)
       val v = versionPath(spark, table).toString
       injected(table, "stage", frame).write.mode(SaveMode.Overwrite).parquet(v)
       install(spark, table, relayout(spark.read.parquet(v)), maxRecordsPerFile)
@@ -112,12 +115,20 @@ private[graft] object Commit {
     n
   }
 
+  /** Creates the table's staging directory under the lock [[clear]]
+    * drops the empty root with, so a concurrent commit of another table
+    * cannot remove the root between the two.
+    */
+  private def open(spark: SparkSession, table: String): Unit =
+    synchronized { fs(spark).mkdirs(dir(spark, table)): Unit }
+
   private def clear(spark: SparkSession, table: String): Unit = {
     fs(spark).delete(dir(spark, table), true)
-    // drop the root once empty; a non-recursive delete cannot take a
-    // directory another commit has just staged into
+    // drop the root once empty
     val r = root(spark)
-    scala.util.Try(if (fs(spark).listStatus(r).isEmpty) fs(spark).delete(r, false))
+    synchronized {
+      scala.util.Try(if (fs(spark).listStatus(r).isEmpty) fs(spark).delete(r, false))
+    }
   }
 
   /** Writes `staged` into `table`. Same columns and types: INSERT

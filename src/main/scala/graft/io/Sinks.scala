@@ -346,18 +346,16 @@ object Sinks {
   * whole-row-replace semantics of the reference's merge
   * (db_utils.py:96-100, gold_layer.py:184-213).
   *
-  * The deduped source batch is staged FIRST ([[Commit.stage]], with an
-  * `Observation` counting its rows during that one write), then the
-  * merge reads the staged copy: the anti-join and the union both
-  * consume the source, so merging against the raw plan would compute an
-  * arbitrarily expensive model query twice. The merged table is
-  * committed through [[Commit.replace]]: staged, then written over the
-  * table, with the stage kept as the recovery copy until that write
-  * succeeds — a crash mid-write leaves the table empty and the next
-  * upsert rolls the staged version forward before merging (the merge
-  * is idempotent, so the retry converges). Not concurrent-safe —
-  * matching the single-driver reference. A keyed MERGE shuffles both
-  * sides on the key columns — source side is broadcast when small.
+  * The merge is one window over target ∪ batch, partitioned by the
+  * keys ([[upsertTable]]), so the model query is computed once without
+  * a staged copy of the batch, and the batch's `Observation` counts its
+  * rows during the commit's own write. The merged table is committed
+  * through [[Commit.replace]]: staged, then written over the table,
+  * with the stage kept as the recovery copy until that write succeeds —
+  * a crash mid-write leaves the table empty and the next upsert rolls
+  * the staged version forward before merging (the merge is idempotent,
+  * so the retry converges). Two concurrent upserts of ONE table are not
+  * safe; the layer scheduler never overlaps two items with one target.
   *
   * @return the number of RAW source-batch rows (pre-dedup) — the
   *         "records processed" of the merge, NOT the post-merge target
@@ -505,48 +503,46 @@ object Upsert {
       spark.table(table).columns.map(col).toSeq: _*), keys)
   }
 
+  /** Keyed upsert: the batch's first row per key, in a total order over
+    * its columns, replaces every target row of that key (keys match
+    * null-safely: the window groups nulls together), and target rows of
+    * keys the batch does not touch are kept as they are, duplicates
+    * included. One window over target ∪ batch decides both.
+    */
   def upsertTable(spark: SparkSession, table: String, source0: DataFrame,
       keys: Seq[String]): Long = {
     Commit.recover(spark, table)
-    // the raw-count observation sits UNDER the dedup window, so the one
-    // staged write both dedupes and counts the pre-dedup batch
     val obs = new org.apache.spark.sql.Observation()
-    val observed0 = source0.observe(obs,
+    val batch = source0.observe(obs,
       org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("rows"))
     // Delta MERGE rejects duplicate source keys; we instead keep one
     // deterministic row per key (first over a total row order) so the
-    // operation stays idempotent
+    // operation stays idempotent. Target rows sort after every batch
+    // row of their key, so a key's first row is a batch row iff the
+    // batch touches it.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
-      .orderBy(source0.columns.map(col).toSeq: _*)
-    val source = observed0
+      .orderBy(col("_src") +: source0.columns.map(col).toSeq: _*)
+    def merge(rows: DataFrame) = rows
       .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    if (!spark.catalog.tableExists(table)) {
-      source.write.saveAsTable(table)
-      return obs.get("rows").asInstanceOf[Long]
+      .withColumn("_hit", org.apache.spark.sql.functions.first("_src").over(w))
+      .filter((col("_src") === 0 && col("_rn") === 1) ||
+        (col("_src") === 1 && col("_hit") === 1))
+    val tagged = batch.withColumn("_src", lit(0))
+    if (!spark.catalog.tableExists(table))
+      Commit.replace(spark, table, merge(tagged).drop("_src", "_rn", "_hit"))
+    else {
+      val target = spark.table(table)
+      val cols = target.columns.map(col).toSeq
+      // a batch missing a target column is refused (analysis only);
+      // columns only the batch has still break its ties, then drop
+      batch.select(cols: _*)
+      Commit.replace(spark, table, merge(tagged.unionByName(
+        target.withColumn("_src", lit(1)), allowMissingColumns = true))
+        .select(cols: _*))
     }
-    // driver-local sources (literal rows — e.g. the data dictionary's
-    // per-column rows) are free to evaluate twice; skip the staging write that
-    // exists to keep an EXPENSIVE model plan from computing once per
-    // merge consumer
-    val isDriverLocal = source.queryExecution.optimizedPlan.collectLeaves()
-      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    val (staged, batch) =
-      if (isDriverLocal) (source, source0.count())
-      else {
-        (Commit.stage(spark, table, "src", source),
-          obs.get("rows").asInstanceOf[Long])
-      }
-    val target = spark.table(table)
-    // <=> (null-safe): a null-keyed source row must REPLACE a null-keyed
-    // target row, not append a duplicate — same fix as applyChangeLog's
-    // anti-join (and the dedup window above already groups null keys
-    // together, so the two stages agree on what "same key" means)
-    val cond = keys.map(k => target(k) <=> staged(k)).reduce(_ && _)
-    Commit.replace(spark, table, target.join(staged, cond, "left_anti")
-      .unionByName(staged.select(target.columns.map(col).toSeq: _*)))
-    batch
+    // the optimizer prunes a batch it proves empty, and the metric with it
+    obs.get.get("rows").fold(0L)(_.asInstanceOf[Long])
   }
 }

@@ -1,5 +1,8 @@
 package graft.layers
 
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config._
@@ -21,22 +24,118 @@ import graft.meta.{AuditLogger, MetadataManager}
 final case class LayerReport(layer: String, succeeded: Seq[String],
     failed: Seq[(String, String)])
 
+/** The catalog tables an item reads and the one table it writes, both
+  * lower-case `db.table`: what [[Layer.runAll]] schedules on.
+  */
+final case class Footprint(reads: Set[String], target: String)
+
 abstract class Layer(spark: SparkSession, meta: MetadataManager,
     audit: AuditLogger) {
 
   def layerName: String
   def run(): LayerReport
 
-  /** Run every enabled item, isolating failures per item (F1). */
+  /** Run every enabled item, isolating failures per item (F1), and
+    * start each as soon as the earlier items it depends on have
+    * finished. Item j waits for an earlier item i when i's target is
+    * among j's reads, when the two share a target, or when j's target
+    * is among i's reads; an item without a footprint is a barrier — it
+    * starts after every earlier item and every later item waits for
+    * it. A failed item still lets its dependents run, and the report
+    * keeps config order.
+    *
+    * Only items known to need no more than their footprint get one
+    * (bronze ingests, silver SQL transforms, gold full/incremental
+    * batch models), because three invariants of the rest assume
+    * nothing else runs beside them:
+    *   - maintenance `vacuum_staging` is gated on the failure of an
+    *     EARLIER task in the run, so that task must have finished;
+    *   - `FrameCaches.releaseSince` (the silver verbs' cache drain)
+    *     frees every frame tracked since its mark, whichever thread
+    *     tracked it;
+    *   - `Commit.withMaxRecordsPerFile` (compaction) bounds a write
+    *     through the shared session conf.
+    *
+    * Dependencies are composed futures, so no pool thread ever waits
+    * on another item; the daemon pool ends with the layer.
+    */
   protected def runAll[C](items: Seq[C], id: C => String,
-      enabled: C => Boolean)(work: C => Unit): LayerReport = {
-    val results = items.filter(enabled).map { item =>
-      try { work(item); Right(id(item)) }
-      catch { case e: Throwable => Left(id(item) -> String.valueOf(e.getMessage)) }
+      enabled: C => Boolean, footprint: C => Option[Footprint])(
+      work: C => Unit): LayerReport = {
+    val todo = items.filter(enabled).toVector
+    val prints = todo.map(footprint)
+    def waits(i: Int, j: Int): Boolean = (prints(i), prints(j)) match {
+      case (Some(a), Some(b)) =>
+        b.reads(a.target) || a.target == b.target || a.reads(b.target)
+      case _ => true
     }
-    LayerReport(layerName,
-      results.collect { case Right(i) => i },
-      results.collect { case Left(f) => f })
+    // one worker per item: an item's worker idles until it may start
+    val n = math.max(1, todo.size)
+    val pool = new ThreadPoolExecutor(n, n, 0L, TimeUnit.MILLISECONDS,
+      new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, s"graft-$layerName")
+        t.setDaemon(true)
+        t
+      })
+    // started here, so the workers inherit this thread's (not an item's)
+    // thread-locals: the active session, Spark's local properties
+    pool.prestartAllCoreThreads()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val done = todo.indices.foldLeft(Vector.empty[Future[Either[(String, String), String]]]) {
+        (started, j) => started :+ Future.sequence(started.indices.filter(waits(_, j))
+          .map(started)).map { _ =>
+            val item = todo(j)
+            try { work(item); Right(id(item)) }
+            catch { case e: Throwable => Left(id(item) -> String.valueOf(e.getMessage)) }
+          }
+      }
+      val results = Await.result(Future.sequence(done), Duration.Inf)
+      LayerReport(layerName,
+        results.collect { case Right(i) => i },
+        results.collect { case Left(f) => f })
+    } finally pool.shutdown()
+  }
+
+  /** The catalog tables `sql` (plus the named `tables`) reads, or None
+    * when that is not known: the SQL does not parse, or a name is not a
+    * qualified catalog table (an unqualified name, a temp view, a view,
+    * a path, an IDENTIFIER clause). CTE bodies count, the query's own
+    * CTE names do not.
+    */
+  protected def reads(sql: => String, tables: Seq[String] = Nil): Option[Set[String]] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedInlineTable,
+      UnresolvedRelation, UnresolvedTableValuedFunction}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val parser = spark.sessionState.sqlParser
+    // Left = a CTE name, Right = a relation's name parts (Nil: a leaf
+    // that reads something other than a named relation)
+    def scan(p: LogicalPlan): Seq[Either[String, Seq[String]]] =
+      p.collectWithSubqueries {
+        case r: UnresolvedRelation => Seq(Right(r.multipartIdentifier))
+        case w: UnresolvedWith =>
+          w.cteRelations.flatMap { case (name, q, _) => Left(name) +: scan(q) }
+        case _: OneRowRelation | _: UnresolvedInlineTable | _: LocalRelation |
+            _: UnresolvedTableValuedFunction => Nil
+        case _: LeafNode => Seq(Right(Nil))
+      }.flatten
+    def table(parts: Seq[String]): Option[String] = parts.map(_.toLowerCase) match {
+      case Seq("spark_catalog", db, t) => table(Seq(db, t))
+      case Seq(db, t) if spark.catalog.databaseExists(db) &&
+          (!spark.catalog.tableExists(s"$db.$t") ||
+            Set("MANAGED", "EXTERNAL")(spark.catalog.getTable(s"$db.$t").tableType)) =>
+        Some(s"$db.$t")
+      case _ => None
+    }
+    scala.util.Try {
+      val found = scan(parser.parsePlan(sql))
+      val ctes = found.collect { case Left(n) => n.toLowerCase }.toSet
+      val names = found.collect { case Right(n) => n }
+        .filterNot(n => n.size == 1 && ctes(n.head.toLowerCase)) ++
+        tables.map(parser.parseMultipartIdentifier)
+      val resolved = names.map(table)
+      if (resolved.forall(_.isDefined)) Some(resolved.flatten.toSet) else None
+    }.toOption.flatten
   }
 
   /** Write with an observed row count (single pass). */
@@ -55,7 +154,8 @@ class BronzeLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "bronze"
 
   def run(): LayerReport =
-    runAll[SourceConfig](config.sources, _.sourceId, _.enabled)(ingest)
+    runAll[SourceConfig](config.sources, _.sourceId, _.enabled,
+      src => Some(Footprint(Set.empty, src.targetTable.toLowerCase)))(ingest)
 
   def ingest(src0: SourceConfig): Unit = {
     // incremental watermark: substitute ${EXTRACT_DATE} with the last
@@ -96,7 +196,10 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "silver"
 
   def run(): LayerReport =
-    runAll[TransformConfig](config.transformations, _.transformId, _.enabled)(transform)
+    runAll[TransformConfig](config.transformations, _.transformId, _.enabled,
+      t => if (t.transformType != "sql") None
+        else reads(EtlConfig.substitute(t.sqlQuery, Map("PROCESSING_DATE" -> runDate)),
+          t.dataQuality.flatMap(_.refTable)).map(Footprint(_, t.targetTable.toLowerCase)))(transform)
 
   def transform(t: TransformConfig): Unit =
     audit.bracket(layerName, "transform", "SilverLayer", t.transformId,
@@ -178,7 +281,10 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "gold"
 
   def run(): LayerReport =
-    runAll[ModelConfig](config.models, _.modelId, _.enabled)(build)
+    runAll[ModelConfig](config.models, _.modelId, _.enabled,
+      m => if (m.mode == "streaming" || !Set("full", "incremental")(m.refreshType)) None
+        else reads(EtlConfig.substitute(m.sqlQuery, Map("PROCESSING_DATE" -> runDate)))
+          .map(Footprint(_, m.targetTable.toLowerCase)))(build)
 
   def build(m: ModelConfig): Unit =
     if (m.mode == "streaming") buildStreaming(m) else buildBatch(m)
@@ -447,7 +553,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
             m.trackedColumns, m.effectiveColumn.get).rawRows
         } else if (m.refreshType == "incremental" && m.primaryKeys.nonEmpty) {
           // records_processed = this batch's raw source rows (counted
-          // by an Observation riding the staging write inside the upsert),
+          // by an Observation riding the upsert's commit write),
           // NOT post-merge target cardinality — no target re-scan. The
           // upsert also creates the table, so every run writes the same
           // layout: unpartitioned (the merge rewrites the whole table, and
@@ -508,7 +614,7 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
 
   def run(): LayerReport = {
     priorFailure = false
-    runAll[MaintenanceTaskConfig](config.maintenance, _.taskId, _.enabled) { t =>
+    runAll[MaintenanceTaskConfig](config.maintenance, _.taskId, _.enabled, _ => None) { t =>
       try exec(t)
       catch { case e: Throwable => priorFailure = true; throw e }
     }

@@ -5,20 +5,27 @@ import scala.util.DynamicVariable
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.EtlConfig
-import graft.io.Upsert
 
 /** Metadata plane: one append-only ledger, the audit log (an event per
-  * unit of work), and the control table (per-target watermark + run
-  * state) derived from it as a catalog view — the reference's
-  * metadata_manager.py / audit_logger.py re-expressed as typed Datasets
-  * on parquet catalog tables.
+  * unit of work), the catalog views derived from it, and the per-rule
+  * DQ table — the reference's metadata_manager.py / audit_logger.py
+  * re-expressed as typed Datasets on parquet catalog tables:
   *
-  * An item's terminal audit row carries its run date and config
-  * snapshot, so its SUCCESS row IS its control row: `etl_control_table`
-  * is the latest SUCCESS per (target table, `<layer>.<source_id>`), in
-  * the (event_timestamp, log_id) order every audit reader uses. A
-  * control row therefore never claims a success the audit log records
-  * as an error, and finishing an item costs one append, not a rewrite.
+  *   - `etl_audit_log` (table): the ledger. An item's terminal row
+  *     carries its run date, config snapshot and, on SUCCESS, the
+  *     dictionary entries `updateDictionary` handed its bracket.
+  *   - `etl_control_table` (view): the latest SUCCESS per (target
+  *     table, `<layer>.<source_id>`), so an item's SUCCESS row IS its
+  *     control row and never claims a success the audit log records as
+  *     an error.
+  *   - `data_dictionary` (view): the latest entry per (table, column).
+  *   - `data_quality_metrics` (table): one row per DQ rule and run.
+  *
+  * Every view orders by (event_timestamp, log_id), the order every audit
+  * reader uses. Finishing an item costs one append, never a rewrite, and
+  * every metadata write holds one lock, so the layer scheduler may run
+  * items concurrently (two concurrent appends to one parquet table would
+  * share its `_temporary/0`).
   *
   * Deliberate fixes vs the reference (SURVEY.md §2.12 latent bugs):
   * create-if-absent instead of drop-and-recreate (which wiped history
@@ -33,13 +40,21 @@ final case class DqMetricRow(
     rule_type: String, action: String, valid_count: Long,
     invalid_count: Long, run_date: String, recorded_at: Timestamp)
 
-/** One column's documentation row (reference gold_schemas.py:63-72;
-  * created by init_metadata_tables.py:95-114, population intended by
+/** One column's documentation row, the `data_dictionary` view's schema
+  * (reference gold_schemas.py:63-72; created by
+  * init_metadata_tables.py:95-114, population intended by
   * gold_layer.py:215-245 but disabled there — we do both).
   */
 final case class DataDictRow(
     table_name: String, column_name: String, data_type: String,
     description: String, model_id: String, updated_timestamp: Timestamp)
+
+/** One column of a target's catalog schema, as a terminal audit row
+  * carries it; the row's `event_timestamp` is its `updated_timestamp`.
+  */
+final case class DictEntry(
+    table_name: String, column_name: String, data_type: String,
+    description: String, model_id: String)
 
 final case class AuditEvent(
     log_id: String, event_timestamp: Timestamp, layer: String,
@@ -47,7 +62,7 @@ final case class AuditEvent(
     target_table: String, status: String, rows_processed: Long,
     error_message: String, execution_time_seconds: Double,
     run_id: String, spark_user: String, run_date: String,
-    config_snapshot: String)
+    config_snapshot: String, dictionary: Seq[DictEntry] = Nil)
 
 /** Injectable clock/id source so tests are deterministic. */
 trait IdClock {
@@ -74,8 +89,6 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       spark.emptyDataset[AuditEvent].write.saveAsTable(auditTable)
     if (!spark.catalog.tableExists(dqMetricsTable))
       spark.emptyDataset[DqMetricRow].write.saveAsTable(dqMetricsTable)
-    if (!spark.catalog.tableExists(dictionaryTable))
-      spark.emptyDataset[DataDictRow].write.saveAsTable(dictionaryTable)
     // only terminal rows that carry a run date are control rows (a bare
     // `AuditLogger.event` or an undated bracket records no watermark)
     spark.sql(s"""CREATE VIEW IF NOT EXISTS $controlTable AS
@@ -92,36 +105,50 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       |            FROM $auditTable
       |            WHERE status = 'SUCCESS' AND run_date IS NOT NULL))
       |WHERE rn = 1""".stripMargin)
+    spark.sql(s"""CREATE VIEW IF NOT EXISTS $dictionaryTable AS
+      |SELECT table_name, column_name, data_type, description, model_id,
+      |       updated_timestamp
+      |FROM (SELECT e.*, event_timestamp AS updated_timestamp,
+      |             row_number() OVER (PARTITION BY e.table_name, e.column_name
+      |               ORDER BY event_timestamp DESC, log_id DESC) AS rn
+      |      FROM $auditTable LATERAL VIEW explode(dictionary) x AS e)
+      |WHERE rn = 1""".stripMargin)
   }
 
-  /** The one ledger write: every audit event and control row is a
-    * single-row append to the audit log.
+  /** The one ledger write: every audit event, control row and
+    * dictionary entry rides a single-row append to the audit log.
     */
-  private[meta] def append(e: AuditEvent): Unit =
+  private[meta] def append(e: AuditEvent): Unit = MetadataManager.writeLock.synchronized {
     Seq(e).toDS().write.mode(SaveMode.Append).saveAsTable(auditTable)
+  }
 
-  /** Refresh the data dictionary for one table from its live catalog
-    * schema, keyed upsert on (table_name, column_name) so re-runs
-    * update rather than duplicate.
+  /** Documents one table from its live catalog schema (a catalog read,
+    * no Spark job). Inside a bracket the entries ride that bracket's
+    * SUCCESS row; outside one they land as a standalone ledger row with
+    * no run date. The `data_dictionary` view keeps the latest entry per
+    * (table_name, column_name), so re-runs update rather than duplicate.
     */
   def updateDictionary(tableName: String, modelId: String,
       description: String = ""): Unit = {
-    val now = clock.now()
-    val rows = spark.catalog.listColumns(tableName).collect().toSeq
-      .map(c => DataDictRow(tableName, c.name, c.dataType, description,
-        modelId, now))
-    if (rows.nonEmpty)
-      Upsert.upsertTable(spark, dictionaryTable, rows.toDS().toDF(),
-        Seq("table_name", "column_name"))
+    val entries = spark.catalog.listColumns(tableName).collect().toSeq
+      .map(c => DictEntry(tableName, c.name, c.dataType, description, modelId))
+    Option(AuditLogger.open.value) match {
+      case Some(bracket) => bracket.dictionary ++= entries
+      case None =>
+        append(AuditEvent(clock.uuid(), clock.now(), "meta", "dictionary",
+          "MetadataManager", modelId, tableName, "SUCCESS", 0L, "", 0.0, null,
+          spark.sparkContext.sparkUser, null, null, entries))
+    }
   }
 
   /** Stamps `recorded_at` here with the manager's (injectable) clock so
     * callers don't reach for wall-clock time.
     */
   def recordDqMetrics(rows: Seq[DqMetricRow]): Unit =
-    if (rows.nonEmpty)
+    if (rows.nonEmpty) MetadataManager.writeLock.synchronized {
       rows.map(_.copy(recorded_at = clock.now())).toDS()
         .write.mode(SaveMode.Append).saveAsTable(dqMetricsTable)
+    }
 
   /** Record one control row keyed on (table_name, layer) as a terminal
     * ledger row outside any bracket: the key's first segment lands in
@@ -157,50 +184,75 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       .orderBy("table_name", "layer")
 }
 
+object MetadataManager {
+  /** Held by every metadata write, across managers: items of one layer
+    * run concurrently and share the ledger.
+    */
+  private val writeLock = new Object
+}
+
+object AuditLogger {
+  /** The bracket open on a thread. [[AuditLogger.bracket]] binds one
+    * around its body and terminal row: `updateDictionary` adds entries
+    * to it, and `event` writes `terminal` (run date, config snapshot,
+    * entries) only while the terminal row is being written.
+    */
+  private[meta] final class Open {
+    val dictionary = scala.collection.mutable.ArrayBuffer.empty[DictEntry]
+    var terminal: Option[(String, String, Seq[DictEntry])] = None
+  }
+  private[meta] val open = new DynamicVariable[Open](null)
+}
+
 class AuditLogger(spark: SparkSession, meta: MetadataManager,
     clock: IdClock = SystemIdClock) {
   import spark.implicits._
 
   val runId: String = clock.uuid()
 
-  /** (run_date, config_snapshot) of the terminal row being written:
-    * `bracket` binds them around its terminal `event`, so every audit
-    * row still goes through the one overridable `event`.
+  /** Every audit row goes through this one overridable write; inside a
+    * bracket's terminal row it also carries that row's run date, config
+    * snapshot and dictionary entries.
     */
-  private val terminal = new DynamicVariable[(String, String)]((null, null))
-
   def event(layer: String, operation: String, component: String,
       sourceId: String, targetTable: String, status: String,
       rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit = {
-    val (runDate, snapshot) = terminal.value
+    val (runDate, snapshot, dictionary) = Option(AuditLogger.open.value)
+      .flatMap(_.terminal).getOrElse((null, null, Nil))
     meta.append(AuditEvent(clock.uuid(), clock.now(), layer, operation,
       component, sourceId, targetTable, status, rows, error, seconds, runId,
-      spark.sparkContext.sparkUser, runDate, snapshot))
+      spark.sparkContext.sparkUser, runDate, snapshot, dictionary))
   }
 
   /** STARTED/SUCCESS/ERROR bracketing around a unit of work (reference
     * F4), returning the body's result. With a `runDate`, the terminal
     * row also carries it and `config`'s snapshot, and a SUCCESS becomes
     * the item's control row (`<layer>.<sourceId>` on `targetTable`).
+    * Only the SUCCESS row carries the dictionary entries the body
+    * handed `updateDictionary`.
     */
   def bracket[T](layer: String, operation: String, component: String,
       sourceId: String, targetTable: String, runDate: String = null,
       config: Product = null)(body: => (T, Long)): T = {
     val t0 = System.nanoTime()
     event(layer, operation, component, sourceId, targetTable, "STARTED")
-    def end(status: String, rows: Long, error: String): Unit =
-      terminal.withValue((runDate, Option(config).map(EtlConfig.snapshot).orNull)) {
-        event(layer, operation, component, sourceId, targetTable, status,
-          rows, error, (System.nanoTime() - t0) / 1e9)
+    val open = new AuditLogger.Open
+    def end(status: String, rows: Long, error: String): Unit = {
+      open.terminal = Some((runDate, Option(config).map(EtlConfig.snapshot).orNull,
+        if (status == "SUCCESS") open.dictionary.toSeq else Nil))
+      event(layer, operation, component, sourceId, targetTable, status,
+        rows, error, (System.nanoTime() - t0) / 1e9)
+    }
+    AuditLogger.open.withValue(open) {
+      try {
+        val (result, rows) = body
+        end("SUCCESS", rows, "")
+        result
+      } catch {
+        case e: Throwable =>
+          end("ERROR", 0L, String.valueOf(e.getMessage))
+          throw e
       }
-    try {
-      val (result, rows) = body
-      end("SUCCESS", rows, "")
-      result
-    } catch {
-      case e: Throwable =>
-        end("ERROR", 0L, String.valueOf(e.getMessage))
-        throw e
     }
   }
 

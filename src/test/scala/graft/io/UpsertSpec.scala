@@ -47,14 +47,36 @@ class UpsertSpec extends SparkSpec {
     assert(spark.table(t).as[(Int, String)].collect().toMap ==
       Map(1 -> "a1", 2 -> "b"))
     // merge path (table now exists) reports the raw count too — through
-    // a parquet-backed source, so the staged write + Observation path
-    // (not the driver-local shortcut) produces the count
+    // a parquet-backed source, so the Observation on the commit's write
+    // produces the count
     val p = java.nio.file.Files.createTempDirectory("upsert-dup").toString
     Seq((2, "B2"), (2, "B9"), (3, "c")).toDF("k", "v")
       .write.mode("overwrite").parquet(p)
     assert(Upsert.upsertTable(spark, t, spark.read.parquet(p), Seq("k")) == 3)
     assert(spark.table(t).as[(Int, String)].collect().toMap ==
       Map(1 -> "a1", 2 -> "B2", 3 -> "c"))
+  }
+
+  test("target duplicate keys the batch does not touch survive unchanged") {
+    val t = table("t_targetdups")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Seq((1, "a1"), (1, "a2"), (2, "b1"), (2, "b2"), (3, "c"))
+      .toDF("k", "v").write.saveAsTable(t)
+    assert(Upsert.upsertTable(spark, t,
+      Seq((2, "B9"), (2, "B1"), (4, "d")).toDF("k", "v"), Seq("k")) == 3)
+    assert(spark.table(t).as[(Int, String)].collect().sorted.toSeq ==
+      Seq((1, "a1"), (1, "a2"), (2, "B1"), (3, "c"), (4, "d")))
+  }
+
+  test("an empty batch counts 0 rows and leaves the table as it is") {
+    val t = table("t_empty")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val empty = Seq.empty[(Int, String)].toDF("k", "v")
+    assert(Upsert.upsertTable(spark, t, empty, Seq("k")) == 0L)
+    assert(spark.table(t).count() == 0L)
+    Upsert.upsertTable(spark, t, Seq((1, "a")).toDF("k", "v"), Seq("k"))
+    assert(Upsert.upsertTable(spark, t, empty, Seq("k")) == 0L)
+    assert(spark.table(t).as[(Int, String)].collect().toSeq == Seq((1, "a")))
   }
 
   test("applyChangeLog: inserts, updates, deletes; latest-seq wins; replay converges") {

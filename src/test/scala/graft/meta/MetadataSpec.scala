@@ -2,6 +2,7 @@ package graft.meta
 
 import java.sql.Timestamp
 import graft.SparkSpec
+import org.apache.spark.sql.functions.size
 
 /** Deterministic clock for reproducible metadata rows. The uuid embeds
   * `start` so two FixedClock instances with different epochs never
@@ -10,8 +11,8 @@ import graft.SparkSpec
 class FixedClock(start: Long = 1700000000000L) extends IdClock {
   private var t = start
   private var n = 0
-  def now(): Timestamp = { t += 1000; new Timestamp(t) }
-  def uuid(): String =
+  def now(): Timestamp = synchronized { t += 1000; new Timestamp(t) }
+  def uuid(): String = synchronized
     { n += 1; f"00000000-0000-0000-${(start / 100000000L) % 10000}%04d-${n}%012d" }
 }
 
@@ -158,6 +159,60 @@ class MetadataSpec extends SparkSpec {
       wh.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(wh).toUri)
     val walk = java.nio.file.Files.walk(root)
     try assert(!walk.anyMatch(_.getFileName.toString == "etl_control_table"))
+    finally walk.close()
+  }
+
+  test("the data dictionary is a view of the entries on SUCCESS audit rows") {
+    import spark.implicits._
+    val clock = new FixedClock(2500000000000L)
+    val m = new MetadataManager(spark, db = "metadata_dict", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    spark.sql("CREATE DATABASE IF NOT EXISTS dict_test")
+    spark.sql("DROP TABLE IF EXISTS dict_test.t")
+    Seq((1L, "a")).toDF("k", "v").write.saveAsTable("dict_test.t")
+    def documented(model: String, fail: Boolean = false): Unit =
+      try audit.bracket("gold", "model", "Test", model, "dict_test.t",
+          "2024-01-01") {
+        m.updateDictionary("dict_test.t", model, s"by $model")
+        if (fail) throw new RuntimeException("boom")
+        ((), 1L)
+      } catch { case _: RuntimeException if fail => () }
+    documented("m1")
+    documented("m2") // a later bracket wins per (table, column)
+    documented("m3", fail = true) // an ERROR row carries no entries
+    val dict = spark.table(m.dictionaryTable)
+    def entries() = dict.select("column_name", "data_type", "description", "model_id")
+      .as[(String, String, String, String)].collect().toSet
+    assert(entries() == Set(("k", "bigint", "by m2", "m2"), ("v", "string", "by m2", "m2")))
+    val ledger = spark.table(m.auditTable)
+    assert(ledger.filter($"source_id" === "m3" && $"status" === "ERROR")
+      .select(size($"dictionary")).as[Int].collect().toSeq == Seq(0))
+    assert(ledger.filter($"status" === "STARTED").select(size($"dictionary"))
+      .as[Int].collect().forall(_ == 0))
+    // each entry is stamped with its SUCCESS row's event time
+    val m2Success = ledger.filter($"source_id" === "m2" && $"status" === "SUCCESS")
+      .select("event_timestamp").as[java.sql.Timestamp].head()
+    assert(dict.select("updated_timestamp").as[java.sql.Timestamp].collect()
+      .toSet == Set(m2Success))
+    // outside a bracket the entries land on a standalone row without a
+    // run date, so the control view does not change
+    spark.sql("ALTER TABLE dict_test.t ADD COLUMNS (w DOUBLE)")
+    m.updateDictionary("dict_test.t", "adhoc", "by hand")
+    assert(entries() == Set(("k", "bigint", "by hand", "adhoc"),
+      ("v", "string", "by hand", "adhoc"), ("w", "double", "by hand", "adhoc")))
+    assert(m.controlReport("gold").select("layer").as[String].collect().toSet ==
+      Set("gold.m1", "gold.m2"))
+    // DataDictRow's six columns: names, types and order
+    assert(dict.schema.map(f => f.name -> f.dataType) ==
+      org.apache.spark.sql.Encoders.product[DataDictRow].schema.map(f => f.name -> f.dataType))
+    // a catalog VIEW: nothing is ever written under its name
+    assert(spark.catalog.getTable(m.dictionaryTable).tableType == "VIEW")
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val root = java.nio.file.Paths.get(
+      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(wh).toUri)
+    val walk = java.nio.file.Files.walk(root)
+    try assert(!walk.anyMatch(_.getFileName.toString == "data_dictionary"))
     finally walk.close()
   }
 }

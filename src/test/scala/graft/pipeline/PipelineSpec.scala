@@ -1279,6 +1279,152 @@ class PipelineSpec extends SparkSpec {
     assert(p.summary().count(_._2 == "gold_e2e.shared_target") == 2)
   }
 
+  /** Records every audit row's (item, status) in write order. An item
+    * in `held` (item -> (other item, seconds)) writes its STARTED row
+    * only once the other item's STARTED row was written or the seconds
+    * passed; `released` names the items whose hold the other item ended.
+    */
+  private class Recorder(meta: graft.meta.MetadataManager, clock: FixedClock,
+      held: Map[String, (String, Long)])
+      extends graft.meta.AuditLogger(spark, meta, clock) {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    private val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    private val started = new ConcurrentHashMap[String, CountDownLatch]()
+    val released = ConcurrentHashMap.newKeySet[String]()
+    private def latch(id: String) = started.computeIfAbsent(id, _ => new CountDownLatch(1))
+    override def event(layer: String, operation: String, component: String,
+        sourceId: String, targetTable: String, status: String, rows: Long,
+        error: String, seconds: Double): Unit = {
+      if (status == "STARTED") held.get(sourceId).foreach { case (other, secs) =>
+        if (latch(other).await(secs, TimeUnit.SECONDS)) released.add(sourceId)
+      }
+      super.event(layer, operation, component, sourceId, targetTable, status,
+        rows, error, seconds)
+      log.add(sourceId -> status)
+      if (status == "STARTED") latch(sourceId).countDown()
+    }
+    /** Position of an item's row in write order (-1: never written). */
+    def at(id: String, status: String): Int = {
+      import scala.jdk.CollectionConverters._
+      log.asScala.toSeq.indexOf(id -> status)
+    }
+  }
+
+  private def schedDb(): Unit = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS sched")
+    Seq("src", "a", "b", "c", "f", "g", "h", "i", "ga", "gb")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS sched.$t"))
+  }
+
+  test("independent gold models run concurrently") {
+    schedDb()
+    val yaml =
+      """models:
+        |  - model_id: model_a
+        |    sql_query: SELECT 1L AS k, 'a' AS v
+        |    target_table: sched.ga
+        |    refresh_type: full
+        |  - model_id: model_b
+        |    sql_query: SELECT 2L AS k, 'b' AS v
+        |    target_table: sched.gb
+        |    refresh_type: incremental
+        |    primary_keys: [k]
+        |""".stripMargin
+    val clock = new FixedClock(1807000000000L)
+    val meta = new graft.meta.MetadataManager(spark, clock = clock)
+    meta.init()
+    // run one at a time, model_a would wait out the full minute
+    val audit = new Recorder(meta, clock, Map("model_a" -> ("model_b", 60L)))
+    val report = new graft.layers.GoldLayer(spark, EtlConfig.fromYaml(yaml), meta,
+      audit, "2024-11-01").run()
+    assert(report.failed.isEmpty, report.toString)
+    assert(report.succeeded == Seq("model_a", "model_b"))
+    assert(audit.released.contains("model_a"), "model_b never started beside model_a")
+    assert(audit.at("model_b", "STARTED") < audit.at("model_a", "STARTED"))
+    assert(spark.table("sched.ga").select("k", "v").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a")))
+    assert(spark.table("sched.gb").select("k").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("an item that reads an earlier target, or shares it, waits for it") {
+    schedDb()
+    Seq((1L, "x")).toDF("k", "v").write.saveAsTable("sched.src")
+    val yaml =
+      """transformations:
+        |  - transform_id: chain_a
+        |    source_table: sched.src
+        |    target_table: sched.a
+        |    sql_query: SELECT k, v FROM sched.src
+        |  - transform_id: chain_b
+        |    source_table: sched.a
+        |    target_table: sched.b
+        |    sql_query: WITH a AS (SELECT k, upper(v) AS v FROM sched.a) SELECT * FROM a
+        |  - transform_id: shared_1
+        |    source_table: sched.src
+        |    target_table: sched.c
+        |    sql_query: SELECT 1L AS k
+        |  - transform_id: shared_2
+        |    source_table: sched.src
+        |    target_table: sched.c
+        |    sql_query: SELECT 2L AS k
+        |""".stripMargin
+    val clock = new FixedClock(1807100000000L)
+    val meta = new graft.meta.MetadataManager(spark, clock = clock)
+    meta.init()
+    // a dependent that started early would end these holds
+    val audit = new Recorder(meta, clock,
+      Map("chain_a" -> ("chain_b", 3L), "shared_1" -> ("shared_2", 3L)))
+    val report = new graft.layers.SilverLayer(spark, EtlConfig.fromYaml(yaml), meta,
+      audit, "2024-11-02").run()
+    assert(report.failed.isEmpty, report.toString)
+    assert(report.succeeded == Seq("chain_a", "chain_b", "shared_1", "shared_2"))
+    assert(audit.released.isEmpty, audit.released.toString)
+    assert(audit.at("chain_b", "STARTED") > audit.at("chain_a", "SUCCESS"))
+    assert(audit.at("shared_2", "STARTED") > audit.at("shared_1", "SUCCESS"))
+    assert(spark.table("sched.b").as[(Long, String)].collect().toSeq == Seq((1L, "X")))
+    assert(spark.table("sched.c").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("a failed item still lets its dependents run; a barrier runs alone") {
+    schedDb()
+    Seq((7L, "f")).toDF("k", "v").write.saveAsTable("sched.f")
+    Seq(1L).toDF("k").createOrReplaceTempView("sched_view")
+    val yaml =
+      """transformations:
+        |  - transform_id: fails
+        |    source_table: sched.missing
+        |    target_table: sched.f
+        |    sql_query: SELECT * FROM sched.missing
+        |  - transform_id: after_failure
+        |    source_table: sched.f
+        |    target_table: sched.g
+        |    sql_query: SELECT * FROM sched.f
+        |  - transform_id: barrier
+        |    source_table: sched_view
+        |    target_table: sched.h
+        |    sql_query: SELECT * FROM sched_view
+        |  - transform_id: after_barrier
+        |    source_table: sched.src
+        |    target_table: sched.i
+        |    sql_query: SELECT 3L AS k
+        |""".stripMargin
+    val clock = new FixedClock(1807200000000L)
+    val meta = new graft.meta.MetadataManager(spark, clock = clock)
+    meta.init()
+    val audit = new Recorder(meta, clock,
+      Map("fails" -> ("after_failure", 3L), "barrier" -> ("after_barrier", 3L)))
+    val report = new graft.layers.SilverLayer(spark, EtlConfig.fromYaml(yaml), meta,
+      audit, "2024-11-03").run()
+    assert(report.failed.map(_._1) == Seq("fails"), report.toString)
+    assert(report.succeeded == Seq("after_failure", "barrier", "after_barrier"))
+    assert(audit.released.isEmpty, audit.released.toString)
+    assert(audit.at("after_failure", "STARTED") > audit.at("fails", "ERROR"))
+    assert(audit.at("barrier", "STARTED") > audit.at("after_failure", "SUCCESS"))
+    assert(audit.at("after_barrier", "STARTED") > audit.at("barrier", "SUCCESS"))
+    assert(spark.table("sched.g").as[(Long, String)].collect().toSeq == Seq((7L, "f")))
+    assert(spark.table("sched.i").as[Long].collect().toSeq == Seq(3L))
+  }
+
   test("streaming gold model folds only newly-landed files per pipeline run") {
     val landing = s"$stage/stream-landing"
     val chk = s"$stage/stream-chk"
