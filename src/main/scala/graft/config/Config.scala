@@ -321,14 +321,14 @@ final case class MediaDedupStoreConfig(
     qualityColumn: Option[String] = None)
 
 /** Declarative streaming source (`mode: streaming` models): the file
-  * stream a gold entry's foreachBatch sink twin consumes. `path` is
+  * stream whose micro-batches a gold entry's fold consumes. `path` is
   * the landing directory (new files are the micro-batches), `format`
   * is csv/json/parquet/orc, and the stream's schema comes from
   * `schema_table` (an existing catalog table as the schema donor —
   * the robust choice) or, absent that, a one-off batch read of the
   * path at attach time (requires files to already be present).
   * `select` optionally projects the stream to the named columns —
-  * column pruning at the source, and REQUIRED by sinks whose batch
+  * column pruning at the source, and REQUIRED by folds whose batch
   * contract is exact (scd2 refuses undeclared columns loudly rather
   * than silently dropping them).
   */
@@ -344,29 +344,30 @@ final case class ModelConfig(
     sqlQuery: String,
     targetTable: String,
     partitionBy: Seq[String],
-    refreshType: String, // full | incremental | additive | extremes
+    // full | incremental | additive | extremes | join_view | scd2 |
+    // distinct_view | quantile_view | dedup_store | vector_dedup_store |
+    // media_dedup_store | changelog — one fold each (GoldLayer.fold)
+    refreshType: String,
     primaryKeys: Seq[String],
     enabled: Boolean,
-    // `batch` (default) or `streaming`: a streaming model wires a
-    // declared file-stream source (stream_source) to the refresh
-    // type's foreachBatch sink twin (Sinks.stream*) instead of
-    // running a sql_query. The declarative plane runs the stream with
-    // the AvailableNow trigger — process everything that has landed,
-    // then stop — so a pipeline run keeps its run-to-completion
-    // contract; the checkpoint carries source offsets ACROSS runs, so
-    // each run folds only the files that arrived since the last one
-    // (the streaming analog of the batch epoch fence; an always-on
-    // deployment calls the Sinks.stream* API directly). Supported
-    // refresh types are exactly the sink-twin family: incremental,
-    // changelog, additive, extremes, distinct_view, quantile_view,
-    // dedup_store, vector_dedup_store, media_dedup_store, scd2 —
-    // full/join_view have no streaming semantics and refuse at parse.
+    // `batch` (default) or `streaming`: a streaming model reads a
+    // declared file-stream source (stream_source) instead of running a
+    // sql_query, and hands each micro-batch to the same fold a batch
+    // model runs (Sinks.foreachBatch, with the batchId as the fold's
+    // epoch). The stream runs with the AvailableNow trigger — process
+    // everything that has landed, then stop — so a pipeline run keeps
+    // its run-to-completion contract; the checkpoint carries source
+    // offsets ACROSS runs, so each run folds only the files that
+    // arrived since the last one (the streaming analog of the batch
+    // epoch fence). Every refresh type streams except full/join_view,
+    // which have no streaming semantics and refuse at parse; changelog
+    // is streaming-only.
     mode: String = "batch",
     streamSource: Option[StreamSourceConfig] = None,
-    // offsets + sink epochs live here; defaults to
+    // source offsets + batch ids (the folds' epochs) live here; defaults to
     // <warehouse>/_graft_checkpoints/<model_id>. Deleting it replays
-    // the whole landing path — safe exactly when the sink's replay
-    // contract says so (see each Sinks.stream* scaladoc).
+    // the whole landing path — safe exactly when the fold's replay
+    // contract says so (see each fold's scaladoc).
     checkpoint: Option[String] = None,
     // changelog only: the op (I/U/D) and sequence columns of the feed
     opColumn: String = "op",
@@ -1177,6 +1178,11 @@ object EtlConfig {
     require(mc.mode != "streaming" || mc.partitionBy.isEmpty,
       s"model '${mc.modelId}': partition_by is not used by the " +
         "streaming sinks (the standing tables own their layout)")
+    require(mc.partitionBy.isEmpty || mc.refreshType == "full" ||
+      (mc.refreshType == "incremental" && mc.primaryKeys.isEmpty),
+      s"model '${mc.modelId}': partition_by is only used by refresh_type " +
+        "full or an incremental model without primary_keys (the keyed " +
+        "upsert and the folds rewrite one unpartitioned standing table)")
     require(mc.mode != "streaming" || mc.refreshType != "incremental" ||
       mc.primaryKeys.nonEmpty,
       s"model '${mc.modelId}': streaming incremental needs primary_keys " +

@@ -283,7 +283,9 @@ object Maintenance {
     * `epochId` carries the additive fold's replay-idempotence contract
     * (the min/max values are replay-idempotent on their own, but
     * `n_rows` is NOT): same epoch → skip (returns false), older epoch
-    * → throw, batch path preserves a standing marker.
+    * → throw, batch path preserves a standing marker. A streaming feed
+    * is insert-only by nature, so fed from a stream the insert-only
+    * contract holds by construction.
     */
   def maintainInsertOnlyExtremes(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], minCols: Seq[String],

@@ -88,7 +88,11 @@ object MediaDedupStore {
     * call). Returns the shared [[DedupStore.FoldResult]] contract: the
     * fold reports its OWN batch count (it persists the banded batch
     * frame — the Spark 4.1 cache/observe interaction documented at
-    * [[DedupStore.FoldResult]] applies here too).
+    * [[DedupStore.FoldResult]] applies here too). Fed from a stream,
+    * `epochId` is the batchId: a replayed batch the store already
+    * committed no-ops through the fence, and the identity guard keeps
+    * a re-delivered media_id from appending twice inside the crash
+    * window between the append and the epoch stamp.
     */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, hashCol: String,

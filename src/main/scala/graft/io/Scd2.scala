@@ -80,6 +80,14 @@ object Scd2 {
   /** Fold one batch of (keys, tracked attributes, effective date/time)
     * observations into the SCD2 history table. See object doc for
     * semantics; returns the per-run [[Scd2Stats]].
+    *
+    * Replay converges by the merge's own algebra (re-merging the latest
+    * batch is a bit-identical no-op), which covers the only replay a
+    * checkpointed stream produces — its last uncommitted batch — so a
+    * streaming caller needs no epoch fence. A stream owes the merge
+    * per-key event-time ORDER across batches (within a batch, any
+    * order); a violation fails loudly rather than splicing closed
+    * history.
     */
   def merge(spark: SparkSession, table: String, batch: DataFrame,
       keys: Seq[String], tracked: Seq[String],

@@ -2,10 +2,12 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Sink modes (reference operators K1–K6) on parquet catalog tables:
-  * append, overwrite (optional partitionBy), and keyed upsert (the
-  * no-Delta MERGE emulation, SURVEY.md §7.4).
+  * append, overwrite (optional partitionBy), keyed upsert (the no-Delta
+  * MERGE emulation, SURVEY.md §7.4), and the streaming bridge that
+  * hands each micro-batch to a batch fold.
   */
 object Sinks {
 
@@ -21,324 +23,38 @@ object Sinks {
       .saveAsTable(table)
   }
 
-  /** Structured-Streaming → keyed-upsert bridge: `foreachBatch` hands
-    * each micro-batch to [[Upsert.upsertTable]] — the production
-    * pattern for a streaming MERGE sink when the table format has no
-    * native streaming upsert. Within a batch the upsert keeps one
-    * deterministic row per key; across batches the later batch's row
-    * replaces the earlier one (last-writer-wins at batch grain).
+  /** The one Structured-Streaming bridge: each micro-batch and its
+    * `batchId` go to `fold`, and the query runs with the AvailableNow
+    * trigger — process everything that has landed, then stop.
     *
-    * Exactly-once story: checkpointed source offsets give at-least-once
-    * batch delivery, and the upsert is IDEMPOTENT per key (PropertySpec
-    * pins f(f(x)) = f(x)), so a micro-batch replayed after a failure
-    * re-merges the same rows and the table converges — idempotent sink
-    * + checkpointed offsets is the standard streaming exactly-once
-    * contract, the same reason foreachBatch+MERGE is the documented
-    * Delta pattern. At 100 TB the per-batch cost is the upsert's: a
-    * keyed shuffle of batch ∪ matched-target partitions; the unmatched
-    * target remainder is rewritten only because parquet has no
-    * row-level update — a real table format turns that into a
-    * version-pointer swap.
+    * Exactly-once contract: the checkpoint's source offsets give
+    * at-least-once batch delivery (a crash between the fold's commit
+    * and the offset commit re-runs that batch), so `fold` must
+    * converge on a replay — either by being idempotent (upsert,
+    * changelog, SCD2 merge, HLL max-merge) or by committing `batchId`
+    * as an epoch fence in the same table write and skipping an epoch
+    * it already committed (the additive, extremes and quantile folds,
+    * the dedup stores). Each fold's scaladoc says which.
     *
-    * @param availableNow true → process everything available, then
-    *        stop (the catch-up / batch-parity trigger); false → the
-    *        default micro-batch trigger for an always-on query.
+    * `fold` runs in a micro-batch CLONE of the session: its rewrite
+    * refreshes the clone's file index of `table`, but the owning
+    * session, the one callers read the table from, still holds the
+    * pre-rewrite index and would fail with FILE_NOT_EXIST — so the
+    * bridge refreshes `table` there after every batch.
+    *
     * @return the started query; the caller owns awaitTermination/stop.
     */
-  def streamUpsert(stream: DataFrame, table: String, keys: Seq[String],
-      checkpoint: String, availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.upsertTable(batch.sparkSession, table, batch, keys)
-        // foreachBatch runs in a micro-batch CLONE of the session;
-        // upsertTable refreshed the clone's file-index cache, but the
-        // owning session (the one the user reads the table from) still
-        // holds the pre-overwrite index and would FILE_NOT_EXIST
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming CDC sink: [[streamUpsert]]'s changelog twin — each
-    * micro-batch of (data…, op, seq) rows goes through
-    * [[Upsert.applyChangeLog]], so a streamed changelog (a Debezium/
-    * binlog-shaped feed) maintains the table INCLUDING deletes, which
-    * the plain upsert sink cannot express. Same exactly-once contract:
-    * checkpointed offsets + a replay-convergent apply (latest-seq-wins
-    * per key, idempotent deletes) — re-delivered batches re-apply to
-    * the same state.
-    */
-  def streamChangeLog(stream: DataFrame, table: String, keys: Seq[String],
-      checkpoint: String, opCol: String = "op", seqCol: String = "seq",
-      availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Upsert.applyChangeLog(batch.sparkSession, table, batch, keys,
-          opCol, seqCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming incremental gold: each micro-batch folds into a standing
-    * additive-aggregate table via
-    * [[Maintenance.maintainAdditiveAggregate]] — the streaming twin of
-    * the batch maintenance path, and the third member of the
-    * foreachBatch sink family (upsert / changelog / additive). The
-    * exactly-once story is DIFFERENT from the other two and worth
-    * stating: the additive fold is NOT naturally idempotent (replaying
-    * a batch would add it twice), and foreachBatch delivery is
-    * AT-LEAST-ONCE (a crash between the fold's commit and the
-    * checkpoint's offset commit re-runs the epoch) — which is exactly
-    * why Spark hands the sink a batchId. The sink therefore commits
-    * the epoch id as a `_last_epoch` column in the SAME table write as
-    * the folded data and skips any epoch ≤ the committed one
-    * ([[Maintenance.maintainAdditiveAggregate]]'s `epochId`) — the
-    * parquet analog of the Delta `txnAppId`/`txnVersion` pattern, so
-    * replays converge like the sibling sinks'. Per-batch cost
-    * rides the BATCH (one map-side-combined aggregate + one keyed join
-    * against the standing table), never the stream's history — the
-    * whole point vs. aggregating the stream wholesale.
-    */
-  def streamAdditiveAggregate(stream: DataFrame, table: String,
-      keys: Seq[String], sumCols: Seq[String], checkpoint: String,
-      availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
+  def foreachBatch(stream: DataFrame, table: String, checkpoint: String)(
+      fold: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Maintenance.maintainAdditiveAggregate(
-          batch.sparkSession, table, batch, keys, sumCols,
-          epochId = Some(batchId))
+        fold(batch, batchId)
         stream.sparkSession.catalog.refreshTable(table)
-        ()
       }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[Maintenance.maintainInsertOnlyExtremes]] —
-    * per-key MIN/MAX envelopes maintained from a stream under the same
-    * epoch-fenced foreachBatch contract as the additive sink: the
-    * batchId is committed WITH the fold, so a crash-replayed epoch
-    * no-ops (the extremes VALUES are replay-idempotent on their own,
-    * but `n_rows` is not — the fence is what keeps the count honest
-    * under at-least-once delivery). A streaming feed is insert-only by
-    * nature, so the operator's insert-only contract holds by
-    * construction here — the one place it needs no caveat.
-    */
-  def streamInsertOnlyExtremes(stream: DataFrame, table: String,
-      keys: Seq[String], minCols: Seq[String], maxCols: Seq[String],
-      checkpoint: String, availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Maintenance.maintainInsertOnlyExtremes(
-          batch.sparkSession, table, batch, keys, minCols, maxCols,
-          epochId = Some(batchId))
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[Maintenance.maintainDistinctView]]: per-key
-    * HLL registers maintained from a stream. The exactly-once story is
-    * the SIMPLEST of the sink family and worth stating as the
-    * contrast: max-merge is idempotent, so a crash-replayed micro-batch
-    * converges with NO epoch column, no fence, no bookkeeping — the
-    * at-least-once hazard the additive/extremes sinks must fence
-    * against simply does not exist for a sketch whose merge is a
-    * semilattice join. Per-batch cost rides the batch (one
-    * map-side-combined register build) plus a keys·m-bounded merge.
-    */
-  def streamDistinctView(stream: DataFrame, table: String,
-      keys: Seq[String], itemCol: String, checkpoint: String,
-      m: Int = 64, availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Maintenance.maintainDistinctView(
-          batch.sparkSession, table, batch, keys, itemCol, m)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[Maintenance.maintainQuantileView]]: per-key
-    * HDR bucket counts maintained from a stream. Bucket counts ADD
-    * (unlike the distinct view's idempotent max), so this sink carries
-    * the additive family's epoch fence — the batchId commits with the
-    * fold and a crash-replayed epoch no-ops.
-    */
-  def streamQuantileView(stream: DataFrame, table: String,
-      keys: Seq[String], centsCol: String, checkpoint: String,
-      availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Maintenance.maintainQuantileView(
-          batch.sparkSession, table, batch, keys, centsCol,
-          epochId = Some(batchId))
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[DedupStore.maintain]] — the standing
-    * cross-corpus dedup store maintained from a DOCUMENT stream: each
-    * micro-batch near-dup-probes the accumulated store, keeps one doc
-    * per within-batch cluster, and appends the survivors' band rows.
-    * The batchId commits with the fold as the store's epoch property,
-    * so a crash-replayed micro-batch no-ops — the append-only store's
-    * appends are non-idempotent, which is exactly why this sink (like
-    * additive/extremes/quantile) carries the fence while the
-    * sketch-algebra sinks need none. Completes the streaming-sink
-    * family: every declarative refresh_type now has a stream twin.
-    */
-  def streamDedupStore(stream: DataFrame, table: String, idCol: String,
-      textCol: String, checkpoint: String,
-      shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      jaccardThreshold: Double = 0.0,
-      maxBucketSize: Option[Long] = None, storeBuckets: Int = 0,
-      availableNow: Boolean = true, keeper: String = "min_id",
-      qualityCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        DedupStore.maintain(batch.sparkSession, table, batch, idCol,
-          textCol, shingleN, numHashes, bands, jaccardThreshold,
-          maxBucketSize = maxBucketSize, storeBuckets = storeBuckets,
-          epochId = Some(batchId), keeper = keeper, qualityCol = qualityCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[MediaDedupStore.maintain]] — the perceptual-
-    * hash image store maintained from a (media_id, dhash) stream. The
-    * stream carries HASHES, not payloads (dHash is scan-fused map work
-    * upstream of the landing path), so the sink moves 8 bytes per
-    * image. Same batchId epoch fence and replay contract as the text
-    * store sink: a replayed uncommitted epoch no-ops through the
-    * fence, and the identity guard keeps a re-delivered media_id from
-    * appending twice inside the crash window.
-    */
-  def streamMediaDedupStore(stream: DataFrame, table: String,
-      idCol: String, hashCol: String, checkpoint: String,
-      bands: Int = 4, maxHamming: Long = 16L,
-      maxBucketSize: Option[Long] = None, storeBuckets: Int = 0,
-      availableNow: Boolean = true, keeper: String = "min_id",
-      qualityCol: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        MediaDedupStore.maintain(batch.sparkSession, table, batch,
-          idCol, hashCol, bands, maxHamming,
-          maxBucketSize = maxBucketSize, storeBuckets = storeBuckets,
-          epochId = Some(batchId), keeper = keeper, qualityCol = qualityCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming twin of [[VectorDedupStore.maintain]] — the embedding
-    * store maintained from a vector stream. The FIRST micro-batch is
-    * the founding batch: it freezes the calibration model (amax + the
-    * centroids), so a deployment should seed the store from a
-    * representative corpus before attaching the stream (or accept the
-    * first batch as calibration). Same batchId epoch fence as the
-    * text-store sink.
-    */
-  def streamVectorDedupStore(stream: DataFrame, table: String,
-      idCol: String, vecCol: String, minScore: Long, checkpoint: String,
-      numCentroids: Int = 8, nprobe: Int = 2, trainIters: Int = 2,
-      maxCellSize: Option[Long] = None,
-      availableNow: Boolean = true, keeper: String = "min_id")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        VectorDedupStore.maintain(batch.sparkSession, table, batch,
-          idCol, vecCol, minScore, numCentroids, nprobe, trainIters,
-          maxCellSize, epochId = Some(batchId), keeper = keeper)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
-
-  /** Streaming SCD2 sink: each micro-batch of (keys, tracked,
-    * effective) observations folds through [[Scd2.merge]], so an
-    * attribute-change feed maintains the versioned dimension
-    * continuously. Replay convergence holds by the merge's own
-    * algebra (re-merging the latest batch is a bit-identical no-op —
-    * Scd2Spec), which covers the only replay a checkpointed stream
-    * produces (the last uncommitted epoch). The stream owes the merge
-    * per-key event-time ORDER ACROSS batches — the same
-    * in-order-across-batches contract as the stateful transition
-    * derivation (within a batch, any order: versions chain by
-    * effective date) — and a violation fails loudly inside the merge
-    * rather than splicing closed history.
-    */
-  def streamScd2(stream: DataFrame, table: String, keys: Seq[String],
-      tracked: Seq[String], effectiveCol: String, checkpoint: String,
-      availableNow: Boolean = true)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Scd2.merge(batch.sparkSession, table, batch, keys, tracked,
-          effectiveCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
-  }
+      .trigger(Trigger.AvailableNow())
+      .start()
 }
 
 /** MERGE INTO emulation without Delta: `WHEN MATCHED UPDATE SET * WHEN
@@ -380,8 +96,9 @@ object Upsert {
     *     both are "make the row look like this") whole-row-replaces,
     *     exactly like [[upsertTable]].
     * Replaying a changelog (or any suffix of it) converges to the same
-    * table — the idempotence that makes this the correct foreachBatch
-    * target for a CDC stream, same contract as [[Sinks.streamUpsert]].
+    * table — the idempotence that makes this the correct
+    * [[Sinks.foreachBatch]] fold for a CDC stream, same contract as
+    * [[upsertTable]].
     *
     * Scale shape: the changelog dedup is one window over the key
     * columns; the apply is one anti-join (target minus all changed
@@ -507,7 +224,12 @@ object Upsert {
     * its columns, replaces every target row of that key (keys match
     * null-safely: the window groups nulls together), and target rows of
     * keys the batch does not touch are kept as they are, duplicates
-    * included. One window over target ∪ batch decides both.
+    * included. One window over target ∪ batch decides both. Across
+    * batches the later batch's row wins. The upsert is idempotent
+    * (PropertySpec pins f(f(x)) = f(x)), so a replayed batch — a
+    * streaming micro-batch re-delivered after a crash — re-merges the
+    * same rows and the table converges without an epoch fence: the
+    * same reason foreachBatch + MERGE is the documented Delta pattern.
     */
   def upsertTable(spark: SparkSession, table: String, source0: DataFrame,
       keys: Seq[String]): Long = {

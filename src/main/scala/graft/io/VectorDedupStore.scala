@@ -139,12 +139,6 @@ object VectorDedupStore {
         (col("_p") + 1).as("_crank"))
   }
 
-  /** Folds `batch` into the standing store at `table` (created, with
-    * its frozen trained model, on first call). Same [[DedupStore
-    * .FoldResult]] contract: the fold reports its OWN batch count (the
-    * Spark 4.1 cache/observe interaction documented there applies here
-    * too — this fold persists the batch's code frame).
-    */
   /** Within-batch keeper policies: `min_id` (the d8/d10 curation
     * default — each cluster keeps its smallest id, the store's
     * founding behavior) and `centroid_farthest` (SemDeDup, Abbas et
@@ -157,6 +151,16 @@ object VectorDedupStore {
     */
   val Keepers: Set[String] = Set("min_id", "centroid_farthest")
 
+  /** Folds `batch` into the standing store at `table` (created, with
+    * its frozen trained model, on first call). Same [[DedupStore
+    * .FoldResult]] contract: the fold reports its OWN batch count (the
+    * Spark 4.1 cache/observe interaction documented there applies here
+    * too — this fold persists the batch's code frame). The first fold
+    * is the founding batch that freezes the calibration, so a stream
+    * attached to an empty store calibrates on its first micro-batch:
+    * seed the store from a representative corpus first, or accept
+    * that. Same epoch fence as the text store.
+    */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, vecCol: String, minScore: Long,
       numCentroids: Int = 8, nprobe: Int = 2,

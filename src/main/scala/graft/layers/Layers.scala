@@ -273,7 +273,10 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
     }
 }
 
-/** Gold: aggregate model + full overwrite or keyed incremental upsert. */
+/** Gold: each model folds a batch into its target — the model query
+  * once per run date, or each micro-batch of a declared stream — through
+  * the one refresh-type dispatch, [[GoldLayer.fold]].
+  */
 class GoldLayer(spark: SparkSession, config: EtlConfig,
     meta: MetadataManager, audit: AuditLogger, runDate: String)
   extends Layer(spark, meta, audit) {
@@ -289,15 +292,16 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
   def build(m: ModelConfig): Unit =
     if (m.mode == "streaming") buildStreaming(m) else buildBatch(m)
 
-  /** Declarative streaming model: wire the declared file-stream source
-    * to the refresh type's foreachBatch sink twin ([[Sinks]].stream*),
-    * run it with the AvailableNow trigger (process everything that has
-    * landed, then stop — the pipeline keeps its run-to-completion
-    * contract), and give it the SAME audit/control treatment as a
-    * batch step. The checkpoint persists source offsets ACROSS
-    * pipeline runs, so each run folds only the files that arrived
-    * since the last one — the streaming analog of the batch epoch
-    * fence; a re-run with nothing new is a zero-batch no-op.
+  /** Declarative streaming model: attach the declared file-stream
+    * source to [[Sinks.foreachBatch]], which hands each micro-batch and
+    * its batchId to [[fold]] — the same fold a batch model runs — and
+    * stops once everything that has landed is processed, so the
+    * pipeline keeps its run-to-completion contract. The model gets the
+    * SAME audit/control treatment as a batch step. The checkpoint
+    * persists source offsets ACROSS pipeline runs, so each run folds
+    * only the files that arrived since the last one — the streaming
+    * analog of the batch epoch fence; a re-run with nothing new is a
+    * zero-batch no-op.
     * records_processed = this run's stream input rows (the sink
     * progress counters, summed over the run's micro-batches).
     */
@@ -324,7 +328,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
       val stream0 = spark.readStream.format(ss.format).schema(schema)
         .options(ss.options).load(ss.path)
       // declared projection: source-side column pruning, and required
-      // by exact-contract sinks (scd2 refuses undeclared columns)
+      // by exact-contract folds (scd2 refuses undeclared columns)
       val stream =
         if (ss.select.isEmpty) stream0
         else stream0.select(ss.select.map(col): _*)
@@ -356,44 +360,10 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
           if (e.id == queryId) done.countDown()
       }
       spark.streams.addListener(listener)
-      val q = m.refreshType match {
-        case "incremental" =>
-          Sinks.streamUpsert(stream, m.targetTable, m.primaryKeys, checkpoint)
-        case "changelog" =>
-          Sinks.streamChangeLog(stream, m.targetTable, m.primaryKeys,
-            checkpoint, m.opColumn, m.seqColumn)
-        case "additive" =>
-          Sinks.streamAdditiveAggregate(stream, m.targetTable,
-            m.primaryKeys, m.sumColumns, checkpoint)
-        case "extremes" =>
-          Sinks.streamInsertOnlyExtremes(stream, m.targetTable,
-            m.primaryKeys, m.minColumns, m.maxColumns, checkpoint)
-        case "distinct_view" =>
-          Sinks.streamDistinctView(stream, m.targetTable, m.primaryKeys,
-            m.distinctColumn.get, checkpoint, m.hllM)
-        case "quantile_view" =>
-          Sinks.streamQuantileView(stream, m.targetTable, m.primaryKeys,
-            m.quantileColumn.get, checkpoint)
-        case "dedup_store" =>
-          val d = m.dedupStore.get
-          Sinks.streamDedupStore(stream, m.targetTable, d.idColumn,
-            d.textColumn, checkpoint, d.shingleSize, d.numHashes, d.bands,
-            d.jaccardPct / 100.0, d.maxBucketSize, d.storeBuckets,
-            keeper = d.keeper, qualityCol = d.qualityColumn)
-        case "vector_dedup_store" =>
-          val v = m.vectorDedupStore.get
-          Sinks.streamVectorDedupStore(stream, m.targetTable, v.idColumn,
-            v.vectorColumn, v.minScore, checkpoint, v.numCentroids,
-            v.nprobe, v.trainIters, v.maxCellSize, keeper = v.keeper)
-        case "media_dedup_store" =>
-          val d = m.mediaDedupStore.get
-          Sinks.streamMediaDedupStore(stream, m.targetTable, d.idColumn,
-            d.hashColumn, checkpoint, d.bands, d.maxHamming,
-            d.maxBucketSize, d.storeBuckets,
-            keeper = d.keeper, qualityCol = d.qualityColumn)
-        case "scd2" =>
-          Sinks.streamScd2(stream, m.targetTable, m.primaryKeys,
-            m.trackedColumns, m.effectiveColumn.get, checkpoint)
+      // the batchId is the fold's epoch; the fold's own count is
+      // dropped, because records_processed is the listener's input rows
+      val q = Sinks.foreachBatch(stream, m.targetTable, checkpoint) {
+        (batch, batchId) => fold(m, batch, batchId): Unit
       }
       queryId = q.id
       val rows =
@@ -417,151 +387,27 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
   def buildBatch(m: ModelConfig): Unit =
     audit.bracket(layerName, "model", "GoldLayer", m.modelId,
         m.targetTable, runDate, m) {
-      // lazy: a join_view model has no sql_query — its view derives
-      // from the base tables, never from a model query
-      lazy val sql = EtlConfig.substitute(m.sqlQuery, Map("PROCESSING_DATE" -> runDate))
-      lazy val df0 = spark.sql(sql)
-      // additive/extremes models skip the audit timestamp: the standing
-      // table's schema is (keys, folds, n_rows) and the fold would try
-      // to fold timestamps; the audit log carries the run bookkeeping
-      // (scd2 likewise: its table shape is keys ++ tracked ++ interval
-      // columns — an audit timestamp would version itself)
-      lazy val df =
-        if (m.refreshType == "additive" || m.refreshType == "extremes" ||
-          m.refreshType == "scd2" || m.refreshType == "distinct_view" ||
-          m.refreshType == "quantile_view" || m.refreshType == "dedup_store" ||
-          m.refreshType == "vector_dedup_store" ||
-          m.refreshType == "media_dedup_store") df0
-        else df0.withColumn("gold_insert_timestamp", current_timestamp())
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${m.targetTable.split('.').head}")
-      // incremental-view-maintenance refreshes: fold THIS RUN's batch
-      // frame into the standing table per key — cost rides the batch,
-      // never history (the 100 TB gold path). The run DATE is the
-      // fold's epoch id, so re-running a date (a retry after a failure,
-      // an operator re-trigger) is a NO-OP instead of a double-count —
-      // neither fold is idempotent by itself (additive sums; extremes'
-      // n_rows). Across DATES the config owes the fold DELTA batches; a
-      // full-recompute sql_query fed here double-counts by declaration
-      // (documented at the model in configs/). records_processed = the
-      // batch frame's rows via an Observation riding the fold's single
-      // pass — 0 when the epoch guard skipped (the Observation never
-      // ran then and must not be read: it would block forever). One
-      // shared helper so the epoch/Observation contract can never
-      // diverge between the two fold families (second-review finding).
-      def foldCounted(fold: DataFrame => Boolean): Long = {
-        val obs = new Observation()
-        val folded = fold(df.observe(obs, count(lit(1)).as("rows")))
-        if (folded) obs.get("rows").asInstanceOf[Long] else 0L
-      }
-      lazy val epoch = java.time.LocalDate.parse(runDate).toEpochDay
-      val rows =
-        if (m.refreshType == "join_view") {
-          // incremental JOIN view: fold this run's base-table deltas
-          // through the delta rule instead of re-joining full bases.
-          // The gold layer runs AFTER silver appended today's rows, so
-          // this is the POST-APPEND sequencing (basesIncludeBatches) —
-          // the batch queries re-select exactly the rows this run added
-          val obsL = new Observation()
-          val obsR = new Observation()
-          def batch(q: String, obs: Observation) =
-            spark.sql(EtlConfig.substitute(q, Map("PROCESSING_DATE" -> runDate)))
-              .observe(obs, count(lit(1)).as("rows"))
-          val lb = m.leftBatchSql.map(batch(_, obsL))
-          val rb = m.rightBatchSql.map(batch(_, obsR))
-          val existed = spark.catalog.tableExists(m.targetTable)
-          val folded = graft.io.Maintenance.maintainJoinView(spark,
-            m.targetTable, m.leftTable.get, m.rightTable.get, m.joinKeys,
-            lb, rb, epochId = Some(epoch), basesIncludeBatches = true)
-          // creation joins the bases wholesale — the batch frames were
-          // never consumed, so their Observations must not be read
-          if (!folded || !existed) 0L
-          else lb.map(_ => obsL.get("rows").asInstanceOf[Long]).getOrElse(0L) +
-            rb.map(_ => obsR.get("rows").asInstanceOf[Long]).getOrElse(0L)
-        } else if (m.refreshType == "additive") {
-          foldCounted(batch => graft.io.Maintenance.maintainAdditiveAggregate(
-            spark, m.targetTable, batch, m.primaryKeys, m.sumColumns,
-            epochId = Some(epoch)))
-        } else if (m.refreshType == "extremes") {
-          // insert-only MIN/MAX fold (least/greatest per key). The
-          // INSERT-ONLY feed contract is declared at the config
-          // (parseModel) — a retraction can strand a stale extreme,
-          // which is exactly the wholesale recompute this path avoids
-          foldCounted(batch => graft.io.Maintenance.maintainInsertOnlyExtremes(
-            spark, m.targetTable, batch, m.primaryKeys, m.minColumns,
-            m.maxColumns, epochId = Some(epoch)))
-        } else if (m.refreshType == "quantile_view") {
-          // per-key HDR bucket counts; counts ADD, so the run date is
-          // the epoch fence exactly as for additive/extremes
-          foldCounted(batch => graft.io.Maintenance.maintainQuantileView(
-            spark, m.targetTable, batch, m.primaryKeys,
-            m.quantileColumn.get, epochId = Some(epoch)))
-        } else if (m.refreshType == "distinct_view") {
-          // per-key HLL registers max-merge the batch in; no epoch
-          // fence — max is idempotent, so replays/out-of-order runs
-          // converge by algebra (see Maintenance.maintainDistinctView,
-          // which returns true always: the fence-free family never
-          // skips — foldCounted keeps the Observation contract shared)
-          foldCounted(batch => graft.io.Maintenance.maintainDistinctView(
-            spark, m.targetTable, batch, m.primaryKeys,
-            m.distinctColumn.get, m.hllM))
-        } else if (m.refreshType == "dedup_store") {
-          // standing cross-corpus dedup store: the batch's survivor
-          // band rows APPEND (state grows with the deduped corpus, so
-          // appends are not idempotent) — the run date is the epoch
-          // fence exactly as for additive/extremes. NOT foldCounted:
-          // maintain persists the batch subtree internally, and in
-          // Spark 4.1 a query over that cache poisons any outside
-          // Observation with Row.empty (see DedupStore.FoldResult),
-          // so the fold reports its own batch count
-          val d = m.dedupStore.get
-          graft.io.DedupStore.maintain(
-            spark, m.targetTable, df, d.idColumn, d.textColumn,
-            d.shingleSize, d.numHashes, d.bands, d.jaccardPct / 100.0,
-            maxBucketSize = d.maxBucketSize, storeBuckets = d.storeBuckets,
-            epochId = Some(epoch), keeper = d.keeper,
-            qualityCol = d.qualityColumn).batchRows
-        } else if (m.refreshType == "vector_dedup_store") {
-          // embedding twin of dedup_store: same epoch fence, same
-          // self-reported batch count (maintain persists the batch's
-          // code frame — the Observation caveat applies identically)
-          val v = m.vectorDedupStore.get
-          graft.io.VectorDedupStore.maintain(
-            spark, m.targetTable, df, v.idColumn, v.vectorColumn,
-            v.minScore, v.numCentroids, v.nprobe, v.trainIters,
-            v.maxCellSize, epochId = Some(epoch),
-            keeper = v.keeper).batchRows
-        } else if (m.refreshType == "media_dedup_store") {
-          // perceptual-hash twin of dedup_store: the batch frame is
-          // (id, dHash) rows — hashes computed upstream, payloads
-          // never enter the store path. Same epoch fence, same
-          // self-reported count (maintain persists the banded frame)
-          val d = m.mediaDedupStore.get
-          graft.io.MediaDedupStore.maintain(
-            spark, m.targetTable, df, d.idColumn, d.hashColumn,
-            d.bands, d.maxHamming, maxBucketSize = d.maxBucketSize,
-            storeBuckets = d.storeBuckets,
-            epochId = Some(epoch), keeper = d.keeper,
-            qualityCol = d.qualityColumn).batchRows
-        } else if (m.refreshType == "scd2") {
-          // type-2 dimension fold: close + open version rows per key
-          // (graft.io.Scd2). No epoch fence needed — the merge is
-          // naturally idempotent (replaying the latest batch is a
-          // bit-identical no-op) and an out-of-order backfill fails
-          // loudly inside the merge itself. records_processed = the
-          // batch's raw rows, the upsert family's contract.
-          graft.io.Scd2.merge(spark, m.targetTable, df, m.primaryKeys,
-            m.trackedColumns, m.effectiveColumn.get).rawRows
-        } else if (m.refreshType == "incremental" && m.primaryKeys.nonEmpty) {
-          // records_processed = this batch's raw source rows (counted
-          // by an Observation riding the upsert's commit write),
-          // NOT post-merge target cardinality — no target re-scan. The
-          // upsert also creates the table, so every run writes the same
-          // layout: unpartitioned (the merge rewrites the whole table, and
-          // partition_by would cost a file per value)
-          Upsert.upsertTable(spark, m.targetTable, df, m.primaryKeys)
-        } else {
-          writeCounted(df, Sinks.overwrite(_, m.targetTable, m.partitionBy))
-        }
+      // a join_view model has no sql_query: its fold reads the base
+      // tables and their delta queries, never a model frame
+      val query =
+        if (m.refreshType == "join_view") spark.emptyDataFrame
+        else spark.sql(EtlConfig.substitute(m.sqlQuery, Map("PROCESSING_DATE" -> runDate)))
+      // only the row-replacing refreshes carry the audit timestamp: a
+      // fold's standing table has its own shape (keys + folds, sketch
+      // registers, store rows, scd2 intervals) that would fold or
+      // version the timestamp; the audit log carries the run bookkeeping
+      val batch =
+        if (m.refreshType == "full" || m.refreshType == "incremental")
+          query.withColumn("gold_insert_timestamp", current_timestamp())
+        else query
+      // the run DATE is the fold's epoch, so re-running a date (a retry
+      // after a failure, an operator re-trigger) is a NO-OP for the
+      // fenced folds instead of a double-count. Across DATES the config
+      // owes those folds DELTA batches; a full-recompute sql_query fed
+      // here double-counts by declaration (documented at the model in
+      // configs/)
+      val rows = fold(m, batch, java.time.LocalDate.parse(runDate).toEpochDay)
       // trend gate BEFORE this run's SUCCESS lands anywhere: a breach
       // throws here, so per-item isolation records an ERROR audit row
       // and neither the control watermark nor the history advances
@@ -577,6 +423,119 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
       meta.updateDictionary(m.targetTable, m.modelId)
       ((), rows)
     }
+
+  /** The one refresh-type dispatch: fold `batch` into `m`'s target.
+    * A batch model passes its query and the run date's epoch day; a
+    * streaming model passes each micro-batch and its batchId. The
+    * folds that are not idempotent (additive, extremes, quantile_view,
+    * the stores, join_view) commit `epoch` with their write and skip
+    * an epoch they already committed; the rest converge on a replay
+    * by their own algebra. The session is the batch's own — inside
+    * foreachBatch that is the micro-batch clone.
+    *
+    * @return the records processed: the batch's raw rows (0 when the
+    *         epoch fence skipped), a changelog's surviving changes.
+    */
+  private def fold(m: ModelConfig, batch: DataFrame, epoch: => Long): Long = {
+    val spark = batch.sparkSession
+    // the batch's rows via an Observation riding the fold's single
+    // pass, read only when the fold ran: an Observation whose action
+    // never ran would block forever
+    def counted(folded: DataFrame => Boolean): Long = {
+      val obs = new Observation()
+      if (folded(batch.observe(obs, count(lit(1)).as("rows"))))
+        obs.get("rows").asInstanceOf[Long]
+      else 0L
+    }
+    m.refreshType match {
+      case "join_view" =>
+        // incremental JOIN view: fold this run's base-table deltas
+        // through the delta rule instead of re-joining full bases.
+        // The gold layer runs AFTER silver appended today's rows, so
+        // this is the POST-APPEND sequencing (basesIncludeBatches) —
+        // the batch queries re-select exactly the rows this run added
+        val obsL = new Observation()
+        val obsR = new Observation()
+        def delta(q: String, obs: Observation) =
+          spark.sql(EtlConfig.substitute(q, Map("PROCESSING_DATE" -> runDate)))
+            .observe(obs, count(lit(1)).as("rows"))
+        val lb = m.leftBatchSql.map(delta(_, obsL))
+        val rb = m.rightBatchSql.map(delta(_, obsR))
+        val existed = spark.catalog.tableExists(m.targetTable)
+        val folded = graft.io.Maintenance.maintainJoinView(spark,
+          m.targetTable, m.leftTable.get, m.rightTable.get, m.joinKeys,
+          lb, rb, epochId = Some(epoch), basesIncludeBatches = true)
+        // creation joins the bases wholesale — the batch frames were
+        // never consumed, so their Observations must not be read
+        if (!folded || !existed) 0L
+        else lb.map(_ => obsL.get("rows").asInstanceOf[Long]).getOrElse(0L) +
+          rb.map(_ => obsR.get("rows").asInstanceOf[Long]).getOrElse(0L)
+      case "additive" =>
+        counted(graft.io.Maintenance.maintainAdditiveAggregate(spark,
+          m.targetTable, _, m.primaryKeys, m.sumColumns, epochId = Some(epoch)))
+      case "extremes" =>
+        // insert-only MIN/MAX fold (least/greatest per key). The
+        // INSERT-ONLY feed contract is declared at the config
+        // (parseModel) — a retraction can strand a stale extreme,
+        // which is exactly the wholesale recompute this path avoids
+        counted(graft.io.Maintenance.maintainInsertOnlyExtremes(spark,
+          m.targetTable, _, m.primaryKeys, m.minColumns, m.maxColumns,
+          epochId = Some(epoch)))
+      case "quantile_view" =>
+        counted(graft.io.Maintenance.maintainQuantileView(spark,
+          m.targetTable, _, m.primaryKeys, m.quantileColumn.get,
+          epochId = Some(epoch)))
+      case "distinct_view" =>
+        // HLL registers max-merge the batch in: no epoch fence, max is
+        // idempotent (the fold returns true always)
+        counted(graft.io.Maintenance.maintainDistinctView(spark,
+          m.targetTable, _, m.primaryKeys, m.distinctColumn.get, m.hllM))
+      // the three stores report their own batch count: each persists
+      // the batch, and in Spark 4.1 a query over that cache poisons an
+      // outside Observation with Row.empty (see DedupStore.FoldResult)
+      case "dedup_store" =>
+        val d = m.dedupStore.get
+        graft.io.DedupStore.maintain(spark, m.targetTable, batch,
+          d.idColumn, d.textColumn, d.shingleSize, d.numHashes, d.bands,
+          d.jaccardPct / 100.0, maxBucketSize = d.maxBucketSize,
+          storeBuckets = d.storeBuckets, epochId = Some(epoch),
+          keeper = d.keeper, qualityCol = d.qualityColumn).batchRows
+      case "vector_dedup_store" =>
+        val v = m.vectorDedupStore.get
+        graft.io.VectorDedupStore.maintain(spark, m.targetTable, batch,
+          v.idColumn, v.vectorColumn, v.minScore, v.numCentroids, v.nprobe,
+          v.trainIters, v.maxCellSize, epochId = Some(epoch),
+          keeper = v.keeper).batchRows
+      case "media_dedup_store" =>
+        // the batch is (id, dHash) rows — hashes computed upstream,
+        // payloads never enter the store path
+        val d = m.mediaDedupStore.get
+        graft.io.MediaDedupStore.maintain(spark, m.targetTable, batch,
+          d.idColumn, d.hashColumn, d.bands, d.maxHamming,
+          maxBucketSize = d.maxBucketSize, storeBuckets = d.storeBuckets,
+          epochId = Some(epoch), keeper = d.keeper,
+          qualityCol = d.qualityColumn).batchRows
+      case "scd2" =>
+        // type-2 dimension fold: close + open version rows per key. No
+        // fence — replaying the latest batch is a bit-identical no-op,
+        // and an out-of-order batch fails loudly inside the merge
+        graft.io.Scd2.merge(spark, m.targetTable, batch, m.primaryKeys,
+          m.trackedColumns, m.effectiveColumn.get).rawRows
+      case "changelog" =>
+        val (upserted, deleted) = Upsert.applyChangeLog(spark, m.targetTable,
+          batch, m.primaryKeys, m.opColumn, m.seqColumn)
+        upserted + deleted
+      case "incremental" if m.primaryKeys.nonEmpty =>
+        // raw batch rows (an Observation riding the upsert's commit
+        // write), NOT post-merge target cardinality. The upsert also
+        // creates the table, so every run writes the same layout:
+        // unpartitioned (the merge rewrites the whole table, and
+        // partition_by would cost a file per value — parse refuses it)
+        Upsert.upsertTable(spark, m.targetTable, batch, m.primaryKeys)
+      case _ =>
+        writeCounted(batch, Sinks.overwrite(_, m.targetTable, m.partitionBy))
+    }
+  }
 }
 
 /** Maintenance: the declarative ops plane (the reference runs its

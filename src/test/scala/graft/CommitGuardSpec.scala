@@ -8,12 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * the only code that knows the staging layout. Fails when a `_stage"`
   * (or `_stage/"`) path literal, or a parquet write that the same file
   * reads back from the same path (a hand-rolled "stage → read back →
-  * overwrite"), shows up in the main sources anywhere else.
+  * overwrite"), shows up in the main sources anywhere else. Likewise
+  * every streaming write goes through `graft.io.Sinks.foreachBatch`:
+  * a `foreachBatch` writer call anywhere else is a hand-rolled twin.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get(TestSpark.repoRoot, "src/main/scala")
   private val commitModule = mainRoot.resolve("graft/io/Commit.scala")
+
+  private def mainSources: Seq[(Path, String)] =
+    Files.walk(mainRoot).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
 
   /** Chained calls split across lines are joined first, so a
     * `.write…` chain and its `.parquet(…)` land on one line.
@@ -36,6 +43,12 @@ class CommitGuardSpec extends AnyFunSuite {
     (stageLiterals ++ readBack).toSeq.distinct
   }
 
+  /** `foreachBatch` writer calls in one source text; calls of the
+    * bridge itself (`Sinks.foreachBatch(…)`) do not count.
+    */
+  def foreachBatchWriters(src: String): Int =
+    """(?<!Sinks)\.foreachBatch\b""".r.findAllIn(joined(src)).size
+
   test("the detector flags a hand-rolled stage copy and a stage literal") {
     val handRolled =
       """val scratch = s"${wh}/__upsert_stage/" + t
@@ -48,13 +61,32 @@ class CommitGuardSpec extends AnyFunSuite {
   }
 
   test("no staging copy outside the commit module") {
-    val files = Files.walk(mainRoot).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != commitModule).toSeq
+    val files = mainSources.filter(_._1 != commitModule)
     assert(files.size > 50, s"source scan found only ${files.size} files")
-    val bad = files.flatMap { (p: Path) =>
-      violations(new String(Files.readAllBytes(p), "UTF-8"))
-        .map(v => s"${mainRoot.relativize(p)}: $v")
+    val bad = files.flatMap { case (p, src) =>
+      violations(src).map(v => s"${mainRoot.relativize(p)}: $v")
     }
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the detector flags a hand-rolled foreachBatch twin") {
+    val twin =
+      """val writer = stream.writeStream
+        |  .outputMode("update")
+        |  .option("checkpointLocation", checkpoint)
+        |  .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        |    Scd2.merge(batch.sparkSession, table, batch, keys, tracked, eff)
+        |  }
+        |""".stripMargin
+    assert(foreachBatchWriters(twin) == 1)
+    assert(foreachBatchWriters(
+      "val q = Sinks.foreachBatch(stream, t, ckpt) { (b, id) => fold(m, b, id) }") == 0)
+  }
+
+  test("foreachBatch is called only inside the streaming bridge") {
+    val calls = mainSources.map { case (p, src) =>
+      mainRoot.relativize(p).toString -> foreachBatchWriters(src) }
+      .filter(_._2 > 0)
+    assert(calls == Seq("graft/io/Sinks.scala" -> 1), calls.mkString("\n"))
   }
 }

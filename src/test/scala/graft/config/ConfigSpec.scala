@@ -116,6 +116,26 @@ class ConfigSpec extends AnyFunSuite {
       "doc_id", "text", 64, 48, 90, 5)))
   }
 
+  test("partition_by refuses on a model whose write would ignore it") {
+    def model(body: String) = EtlConfig.fromYaml(
+      s"""models:
+         |  - model_id: m
+         |    sql_query: SELECT 1 AS k, 2 AS x
+         |    target_table: g.t
+         |    partition_by: [k]
+         |$body""".stripMargin).models.head
+    for (body <- Seq(
+        "    refresh_type: incremental\n    primary_keys: [k]\n",
+        "    refresh_type: additive\n    primary_keys: [k]\n    sum_columns: [x]\n")) {
+      val e = intercept[IllegalArgumentException](model(body))
+      assert(e.getMessage.contains("partition_by is only used by refresh_type full"),
+        e.getMessage)
+    }
+    // the overwrite arm honours it
+    assert(model("    refresh_type: full\n").partitionBy == Seq("k"))
+    assert(model("    refresh_type: incremental\n").partitionBy == Seq("k"))
+  }
+
   test("template substitution: vars, env, and unknown left empty") {
     assert(EtlConfig.substitute("d >= '${PROCESSING_DATE}'",
       Map("PROCESSING_DATE" -> "2024-01-01")) == "d >= '2024-01-01'")

@@ -9,6 +9,18 @@ class StreamingSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The pipeline's per-run shape over [[graft.io.Sinks.foreachBatch]]:
+    * each call starts one AvailableNow query on `ckpt` and waits for it
+    * to finish, so a test drives one micro-batch per `addData`, with
+    * batch ids counting up across the runs.
+    */
+  private def bridged(stream: org.apache.spark.sql.DataFrame, table: String,
+      ckpt: String)(fold: (org.apache.spark.sql.DataFrame, Long) => Unit): () => Unit =
+    () => {
+      val q = graft.io.Sinks.foreachBatch(stream, table, ckpt)(fold)
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+    }
+
   test("streaming hourly rollup converges to the batch answer") {
     val q = EventsStreaming.hourlyRollup(EventsStreaming.readEvents(spark, dir))
       .writeStream.outputMode("complete")
@@ -47,25 +59,23 @@ class StreamingSpec extends SparkSpec {
 
   test("streamUpsert merges each micro-batch by key: cross-batch updates win, replay converges") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_upsert_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_upsert"
     val ms = MemoryStream[(Long, String, Double)]
-    val q = Sinks.streamUpsert(
-      ms.toDF.toDF("id", "name", "value"), table, Seq("id"), ckpt,
-      availableNow = false)
+    val run = bridged(ms.toDF.toDF("id", "name", "value"), table, ckpt) {
+      (batch, _) => graft.io.Upsert.upsertTable(batch.sparkSession, table, batch, Seq("id")) }
     try {
       ms.addData((1L, "a", 1.0), (2L, "b", 2.0), (2L, "b-dup", 2.5))
-      q.processAllAvailable()
+      run()
       val after1 = spark.table(table).as[(Long, String, Double)].collect()
       assert(after1.map(_._1).toSet == Set(1L, 2L) && after1.length == 2,
         "one row per key after batch 1")
       // batch 2: update key 2, insert key 3
       ms.addData((2L, "b2", 20.0), (3L, "c", 3.0))
-      q.processAllAvailable()
+      run()
       val rows = spark.table(table).as[(Long, String, Double)].collect().toSet
       assert(rows.map(_._1) == Set(1L, 2L, 3L))
       assert(rows.exists(r => r._1 == 2L && r._2 == "b2" && r._3 == 20.0),
@@ -79,58 +89,56 @@ class StreamingSpec extends SparkSpec {
       assert(spark.table(table).as[(Long, String, Double)].collect().toSet == rows,
         "replaying a merged batch must be a no-op")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamAdditiveAggregate folds micro-batches into the standing gold table") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_additive_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_additive"
     val ms = MemoryStream[(String, Long, Double)]
-    val q = Sinks.streamAdditiveAggregate(
-      ms.toDF.toDF("g", "qty", "amt"), table, Seq("g"), Seq("qty", "amt"),
-      ckpt, availableNow = false)
+    val run = bridged(ms.toDF.toDF("g", "qty", "amt"), table, ckpt) {
+      (batch, batchId) => graft.io.Maintenance.maintainAdditiveAggregate(
+        batch.sparkSession, table, batch, Seq("g"), Seq("qty", "amt"),
+        epochId = Some(batchId)) }
     try {
       ms.addData(("a", 10L, 1.5), ("a", 20L, 2.5), ("b", 5L, 0.5))
-      q.processAllAvailable()
+      run()
       ms.addData(("a", 1L, 0.25), ("c", 7L, 7.0))
-      q.processAllAvailable()
+      run()
       ms.addData(("b", 2L, 1.0), ("c", 3L, 3.0))
-      q.processAllAvailable()
+      run()
       val got = spark.table(table)
         .select("g", "qty", "amt", "n_rows")
         .as[(String, Long, Double, Long)].collect().toSet
       val want = Set(("a", 31L, 4.25, 3L), ("b", 7L, 1.5, 2L), ("c", 10L, 10.0, 2L))
       assert(got == want, s"streamed fold must equal the one-shot aggregate: $got")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamInsertOnlyExtremes maintains min/max envelopes with an honest n_rows") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_extremes_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_extremes"
     val ms = MemoryStream[(String, Long)]
-    val q = Sinks.streamInsertOnlyExtremes(
-      ms.toDF.toDF("g", "qty"), table, Seq("g"),
-      minCols = Seq("qty"), maxCols = Seq("qty"), ckpt, availableNow = false)
+    val run = bridged(ms.toDF.toDF("g", "qty"), table, ckpt) {
+      (batch, batchId) => graft.io.Maintenance.maintainInsertOnlyExtremes(
+        batch.sparkSession, table, batch, Seq("g"), minCols = Seq("qty"),
+        maxCols = Seq("qty"), epochId = Some(batchId)) }
     try {
       ms.addData(("a", 10L), ("a", 3L), ("b", 5L))
-      q.processAllAvailable()
+      run()
       ms.addData(("a", 44L), ("c", 7L))
-      q.processAllAvailable()
+      run()
       val got = spark.table(table)
         .select("g", "min_qty", "max_qty", "n_rows")
         .as[(String, Long, Long, Long)].collect().toSet
@@ -148,28 +156,26 @@ class StreamingSpec extends SparkSpec {
         .as[(String, Long, Long, Long)].collect().toSet == got,
         "replaying a folded batch must be a no-op")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamDistinctView maintains per-key HLL registers; replay converges with no fence") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_dv_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_dv"
     val ms = MemoryStream[(String, Long)]
-    val q = Sinks.streamDistinctView(
-      ms.toDF.toDF("g", "item"), table, Seq("g"), "item", ckpt,
-      availableNow = false)
+    val run = bridged(ms.toDF.toDF("g", "item"), table, ckpt) {
+      (batch, _) => graft.io.Maintenance.maintainDistinctView(
+        batch.sparkSession, table, batch, Seq("g"), "item") }
     try {
       ms.addData(("a", 1L), ("a", 2L), ("b", 1L))
-      q.processAllAvailable()
+      run()
       ms.addData(("a", 2L), ("a", 3L), ("b", 9L))
-      q.processAllAvailable()
+      run()
       val oneShot = graft.operators.Sketches.hllRegistersBy(
           Seq(("a", 1L), ("a", 2L), ("b", 1L), ("a", 2L), ("a", 3L),
             ("b", 9L)).toDF("g", "item"), Seq("g"), $"item", 64)
@@ -188,28 +194,27 @@ class StreamingSpec extends SparkSpec {
       assert(!spark.table(table).columns.contains("_last_epoch"),
         "the sketch view needs no fence column")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamQuantileView maintains per-key HDR buckets; the epoch fence stops a replay") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_qv_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_qv"
     val ms = MemoryStream[(String, Long)]
-    val q = Sinks.streamQuantileView(
-      ms.toDF.toDF("g", "cents"), table, Seq("g"), "cents", ckpt,
-      availableNow = false)
+    val run = bridged(ms.toDF.toDF("g", "cents"), table, ckpt) {
+      (batch, batchId) => graft.io.Maintenance.maintainQuantileView(
+        batch.sparkSession, table, batch, Seq("g"), "cents",
+        epochId = Some(batchId)) }
     try {
       ms.addData(("a", 100L), ("a", 250L), ("b", 7L))
-      q.processAllAvailable()
+      run()
       ms.addData(("a", 9000L), ("b", 60L))
-      q.processAllAvailable()
+      run()
       val oneShot = graft.operators.Sketches.hdrSketchBy(
           Seq(("a", 100L), ("a", 250L), ("b", 7L), ("a", 9000L),
             ("b", 60L)).toDF("g", "cents"), Seq("g"), $"cents")
@@ -224,14 +229,13 @@ class StreamingSpec extends SparkSpec {
         epochId = Some(1L)))
       assert(regs == oneShot, "replayed epoch must not double-count")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamDedupStore folds a document stream; stream equals batch; fence stops a replay") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.{DedupStore, Sinks}
+    import graft.io.DedupStore
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_ds_out"
@@ -242,16 +246,16 @@ class StreamingSpec extends SparkSpec {
     val textB = "one two three four five six seven"
     val textC = "eight nine ten eleven twelve thirteen fourteen"
     val ms = MemoryStream[(Long, String)]
-    val q = Sinks.streamDedupStore(
-      ms.toDF.toDF("doc_id", "text"), table, "doc_id", "text", ckpt,
-      jaccardThreshold = 0.5, availableNow = false)
+    val run = bridged(ms.toDF.toDF("doc_id", "text"), table, ckpt) {
+      (batch, batchId) => DedupStore.maintain(batch.sparkSession, table, batch,
+        "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(batchId)) }
     try {
       // micro-batch 0: 101/103 exact dups (101 keeps), 105 unique
       ms.addData(101L -> textA, 103L -> textA, 105L -> textB)
-      q.processAllAvailable()
+      run()
       // micro-batch 1: 202 re-delivers stored content, 204/206 cluster
       ms.addData(202L -> textA, 204L -> textC, 206L -> textC)
-      q.processAllAvailable()
+      run()
       def stored(t: String) = DedupStore.storedDocIds(spark, t)
         .as[(Long, Long)].collect().toSet
       assert(stored(table) == Set(101L -> 0L, 105L -> 0L, 204L -> 1L),
@@ -273,14 +277,13 @@ class StreamingSpec extends SparkSpec {
         "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(1L)).applied)
       assert(stored(table) == stored(twin), "replayed epoch appends nothing")
     } finally {
-      q.stop()
       Seq(table, twin).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
   test("streamMediaDedupStore folds a phash stream; stream equals batch; fence stops a replay") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.{DedupStore, MediaDedupStore, Sinks}
+    import graft.io.{DedupStore, MediaDedupStore}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_mds_out"
@@ -291,16 +294,16 @@ class StreamingSpec extends SparkSpec {
     val hB = ~hA
     val hC = 0x00FF00FF00FF00FFL
     val ms = MemoryStream[(Long, Long)]
-    val q = Sinks.streamMediaDedupStore(
-      ms.toDF.toDF("media_id", "dhash"), table, "media_id", "dhash", ckpt,
-      availableNow = false)
+    val run = bridged(ms.toDF.toDF("media_id", "dhash"), table, ckpt) {
+      (batch, batchId) => MediaDedupStore.maintain(batch.sparkSession, table,
+        batch, "media_id", "dhash", epochId = Some(batchId)) }
     try {
       // micro-batch 0: 101/103 near-dup re-encodes (101 keeps), 105 unique
       ms.addData(101L -> hA, 103L -> (hA ^ 0x7L), 105L -> hB)
-      q.processAllAvailable()
+      run()
       // micro-batch 1: 202 re-delivers stored content, 204/206 cluster
       ms.addData(202L -> (hA ^ 0x30L), 204L -> hC, 206L -> (hC ^ 0x5L))
-      q.processAllAvailable()
+      run()
       def stored(t: String) = MediaDedupStore.storedMediaIds(spark, t)
         .select("media_id", "_epoch").as[(Long, Long)].collect().toSet
       assert(stored(table) == Set(101L -> 0L, 105L -> 0L, 204L -> 1L),
@@ -324,14 +327,13 @@ class StreamingSpec extends SparkSpec {
         "media_id", "dhash", epochId = Some(1L)).applied)
       assert(stored(table) == stored(twin), "replayed epoch appends nothing")
     } finally {
-      q.stop()
       Seq(table, twin).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 
   test("streamVectorDedupStore folds a vector stream; first batch freezes calibration") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.{DedupStore, Sinks, VectorDedupStore}
+    import graft.io.{DedupStore, VectorDedupStore}
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_vds_out"
@@ -343,18 +345,19 @@ class StreamingSpec extends SparkSpec {
     val vC = Array(0.0f, 0.0f, 1.0f, 0.0f)
     val vC2 = Array(0.0f, 0.0f, 0.995f, 0.1f)
     val ms = MemoryStream[(Long, Array[Float])]
-    val q = Sinks.streamVectorDedupStore(
-      ms.toDF.toDF("vec_id", "embedding"), table, "vec_id", "embedding",
-      minScore = 12000L, ckpt, numCentroids = 2, availableNow = false)
+    val run = bridged(ms.toDF.toDF("vec_id", "embedding"), table, ckpt) {
+      (batch, batchId) => VectorDedupStore.maintain(batch.sparkSession, table,
+        batch, "vec_id", "embedding", minScore = 12000L, numCentroids = 2,
+        epochId = Some(batchId)) }
     try {
       // founding micro-batch: freezes amax + 2 centroids; 1/3 identical
       ms.addData(1L -> vA, 3L -> vA, 5L -> vB)
-      q.processAllAvailable()
+      run()
       val model0 = spark.table(s"${table}_model")
         .orderBy("centroid_id").collect().toSeq
       // micro-batch 1: 12 near-dups stored content; 14/16 fresh cluster
       ms.addData(12L -> vA, 14L -> vC, 16L -> vC2)
-      q.processAllAvailable()
+      run()
       val got = VectorDedupStore.storedVecIds(spark, table)
         .as[(Long, Long)].collect().toSet
       assert(got == Set(1L -> 0L, 5L -> 0L, 14L -> 1L), got.toString)
@@ -364,7 +367,6 @@ class StreamingSpec extends SparkSpec {
       assert(DedupStore.committedEpoch(spark, table).contains(1L),
         "the stream's batchId is the committed epoch")
     } finally {
-      q.stop()
       Seq(table, s"${table}_model").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
@@ -372,25 +374,24 @@ class StreamingSpec extends SparkSpec {
 
   test("streamScd2 versions an attribute-change feed across micro-batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_scd2_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_scd2"
     val ms = MemoryStream[(Int, String, String)]
-    val q = Sinks.streamScd2(
-      ms.toDF.toDF("k", "v", "d")
-        .select($"k", $"v", $"d".cast("date").as("eff")),
-      table, Seq("k"), Seq("v"), "eff", ckpt, availableNow = false)
+    val run = bridged(ms.toDF.toDF("k", "v", "d")
+        .select($"k", $"v", $"d".cast("date").as("eff")), table, ckpt) {
+      (batch, _) => graft.io.Scd2.merge(batch.sparkSession, table, batch,
+        Seq("k"), Seq("v"), "eff") }
     try {
       ms.addData((1, "gold", "2024-01-01"), (2, "bronze", "2024-01-01"))
-      q.processAllAvailable()
+      run()
       // k1 changes; k2 re-observed unchanged; k1 changes AGAIN within
       // the same micro-batch (in-batch chaining)
       ms.addData((1, "platinum", "2024-02-01"), (2, "bronze", "2024-02-01"),
         (1, "iridium", "2024-03-01"))
-      q.processAllAvailable()
+      run()
       val hist = spark.table(table)
         .select($"k", $"v", $"valid_from".cast("string"),
           coalesce($"valid_to".cast("string"), lit("-")), $"is_current")
@@ -413,36 +414,33 @@ class StreamingSpec extends SparkSpec {
         .as[(Int, String, String, String, Boolean)].collect().toSet == hist,
         "latest-batch replay must be a bit-identical no-op")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
 
   test("streamChangeLog applies a streamed CDC feed: upserts land, deletes remove, replay converges") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.io.Sinks
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val table = "stream_cdc_out"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val ckpt = s"${spark.conf.get("spark.sql.warehouse.dir")}/__ckpt_stream_cdc"
     val ms = MemoryStream[(Long, String, String, Long)]
-    val q = Sinks.streamChangeLog(
-      ms.toDF.toDF("id", "name", "op", "seq"), table, Seq("id"), ckpt,
-      availableNow = false)
+    val run = bridged(ms.toDF.toDF("id", "name", "op", "seq"), table, ckpt) {
+      (batch, _) => graft.io.Upsert.applyChangeLog(batch.sparkSession, table,
+        batch, Seq("id")) }
     try {
       ms.addData((1L, "a", "I", 1L), (2L, "b", "I", 2L), (3L, "c", "I", 3L))
-      q.processAllAvailable()
+      run()
       assert(spark.table(table).count() == 3)
       // batch 2: delete 2, update 3, racing update-then-delete on 1
       ms.addData((2L, "", "D", 10L), (3L, "c2", "U", 11L),
         (1L, "a2", "U", 12L), (1L, "", "D", 13L))
-      q.processAllAvailable()
+      run()
       val rows = spark.table(table).as[(Long, String)].collect().toSet
       assert(rows == Set((3L, "c2")),
         s"deletes must remove 1 and 2, update must land on 3; got $rows")
     } finally {
-      q.stop()
       spark.sql(s"DROP TABLE IF EXISTS $table")
     }
   }
