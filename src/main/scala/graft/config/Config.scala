@@ -1168,9 +1168,9 @@ object EtlConfig {
       Set("incremental", "changelog", "additive", "extremes",
         "distinct_view", "quantile_view", "dedup_store",
         "vector_dedup_store", "media_dedup_store", "scd2")(mc.refreshType),
-      s"model '${mc.modelId}': refresh_type ${mc.refreshType} has no " +
-        "streaming sink twin (full rewrites history per run; join_view " +
-        "folds two coordinated base deltas) — use a batch model")
+      s"model '${mc.modelId}': refresh_type ${mc.refreshType} is " +
+        "batch-only (full rewrites history per run; join_view folds two " +
+        "coordinated base deltas) — use a batch model")
     require(mc.mode != "streaming" || mc.sqlQuery.isEmpty,
       s"model '${mc.modelId}': a streaming model consumes its declared " +
         "stream_source — sql_query is unused and would silently " +

@@ -33,9 +33,9 @@ import graft.operators.FrameCaches.track
   *
   * Replay contract: appends are NOT idempotent (a replayed batch
   * would re-test against a store that now contains its own survivors
-  * — every doc suddenly matches itself), so the fold carries the
-  * additive family's epoch fence: same-epoch re-run returns false
-  * (no-op), an older epoch throws.
+  * — every doc suddenly matches itself), so the fold is fenced by
+  * [[EpochFence]]: same-epoch re-run returns false (no-op), an older
+  * epoch throws.
   *
   * Scale shape: the batch side is shingled/hashed once (persisted for
   * its three consumers); the store side is a column scan of
@@ -227,14 +227,11 @@ object DedupStore {
     * near-dup sweep (or an uncapped one-off fold of the affected
     * epoch) reconciles it.
     */
-  def committedEpoch(spark: SparkSession, table: String): Option[Long] = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    meta.properties.get(EpochProperty).map(_.toLong).orElse {
+  def committedEpoch(spark: SparkSession, table: String): Option[Long] =
+    tableMeta(spark, table).properties.get(EpochProperty).map(_.toLong).orElse {
       val m = spark.table(table).agg(max(col("_epoch"))).head()
       if (m.isNullAt(0)) None else Some(m.getLong(0))
     }
-  }
 
   /** Within-batch keeper policies, the [[VectorDedupStore.Keepers]]
     * contract on the TEXT store: `min_id` (each within-batch near-dup
@@ -254,6 +251,11 @@ object DedupStore {
     * first call). Returns the [[FoldResult]]: applied=false means the
     * epoch fence skipped a same-epoch replay (batchRows 0 then — the
     * skip path never scans the batch).
+    *
+    * `epochId` is admitted through [[EpochFence]] against
+    * [[committedEpoch]] and stamped on the survivors' `_epoch`. An older
+    * epoch is refused because the store already holds later survivors:
+    * the backfilled batch would be deduped against the future.
     */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, textCol: String,
@@ -262,7 +264,7 @@ object DedupStore {
       mode: Dedup.HashMode = Dedup.XxHash,
       maxBucketSize: Option[Long] = None,
       storeBuckets: Int = 0,
-      epochId: Option[Long] = None,
+      epochId: Long,
       keeper: String = "min_id",
       qualityCol: Option[String] = None): FoldResult = {
     require(numHashes % bands == 0,
@@ -295,7 +297,7 @@ object DedupStore {
       shingleN: Int, numHashes: Int, bands: Int,
       jaccardThreshold: Double, mode: Dedup.HashMode,
       maxBucketSize: Option[Long], storeBuckets: Int,
-      epochId: Option[Long], keeper: String,
+      epochId: Long, keeper: String,
       qualityCol: Option[String]): FoldResult = {
     val bandNames = (0 until bands).map(b => s"band_$b")
     // one shingle+hash pass over the batch text; persisted — it feeds
@@ -326,15 +328,9 @@ object DedupStore {
       requireKnobsOn(meta, table, KnobsProperty,
         knobsValue(shingleN, numHashes, bands, mode), "dedup-store fold",
         requirePresent = false)
-      for (id <- epochId; c <- committedEpoch(spark, table)) {
-        if (c == id) return FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"dedup-store fold for '$table': batch epoch $id is OLDER than " +
-            s"the committed epoch $c — the store already contains later " +
-            "survivors, so a backfilled batch would be deduped against " +
-            "the future; recompute the store in epoch order or re-stamp " +
-            "the batch with a current epoch")
-      }
+      if (!EpochFence.admit("dedup-store fold", table, epochId,
+          committedEpoch(spark, table)))
+        return FoldResult(applied = false, batchRows = 0L)
     }
 
     val fresh =
@@ -387,51 +383,56 @@ object DedupStore {
         posexplode(array(bandNames.map(col): _*))
           .as(Seq("band_idx", "band_key")),
         col("sh"))
-      .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
+      .withColumn("_epoch", lit(epochId))
       .select("doc_id", "band_idx", "band_key", "sh", "_epoch")
-
-    // stage before touching the catalog: the survivor plan READS the
-    // store table it is about to append to. FOUNDING folds skip the
-    // stage outright (r19 optimization, guide §6): with exists=false
-    // the survivor plan reads no store table (fresh = banded), so the
-    // write-to-scratch + read-back cycle bought nothing — one direct
-    // write per store creation saved across every founding fold
-    def writeTo(df: DataFrame): Unit = {
-      val writer = df.write.mode(if (exists) SaveMode.Append
-        else SaveMode.ErrorIfExists).format("parquet")
-      (if (storeBuckets > 0) writer.bucketBy(storeBuckets, "band_key")
-       else writer).saveAsTable(table)
-    }
-    if (!exists) writeTo(survivors)
-    else
-      // sever the read-own-table cycle IN MEMORY (r20, guide §6): the
-      // survivor plan reads the store it appends to, which saveAsTable
-      // refuses; an EAGER localCheckpoint materializes the survivors
-      // (memory-and-disk blocks) and swaps the plan for the
-      // checkpointed RDD, so the append no longer references the table
-      // — the same barrier a staged parquet round-trip
-      // provides, minus one parquet encode + write + read + fs delete
-      // per fold. Crash posture unchanged: a failure mid-append commits
-      // nothing under the writer's commit protocol either way, and the
-      // retry re-runs the whole fold behind the identity guard. Blocks
-      // are tracked and drain with the fold's cache mark; the write is
-      // re-packed to read-sized splits (packedForWrite — the file
-      // sizing the scratch read-back used to provide).
-      writeTo(org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-        track(survivors.localCheckpoint(true))))
-    // stamp the committed epoch as a table property — the O(1) fence
-    // read for every future fold (see EpochProperty) — and freeze the
-    // key-affecting knobs (see KnobsProperty). ONE catalog round-trip
-    // for all properties: each ALTER is a serial driver-side write
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      epochId.map(id => s"'$EpochProperty' = '$id', ").getOrElse("") +
-      s"'$KnobsProperty' = " +
-      s"'${knobsValue(shingleN, numHashes, bands, mode)}', " +
-      s"'$VerifyProperty' = 'jaccardThreshold=$jaccardThreshold')")
-    spark.catalog.refreshTable(table)
+    appendSurvivors(spark, table, survivors, exists, storeBuckets, epochId,
+      Seq(KnobsProperty -> knobsValue(shingleN, numHashes, bands, mode),
+        VerifyProperty -> s"jaccardThreshold=$jaccardThreshold"))
     // one row per batch doc; the fold's writes materialized the cache,
     // so this count rides the in-memory frame, not a second text scan
     FoldResult(applied = true, batchRows = banded.count())
+  }
+
+  /** The write that ends every store fold (text, media, vector): the
+    * survivors land in `table`, then ONE `ALTER TABLE` stamps `epochId`
+    * as [[EpochProperty]] — the O(1) fence read of every later fold —
+    * together with the family's knobs/verify `properties` (each ALTER
+    * is a serial driver-side write), and the table is refreshed.
+    *
+    * A founding fold (`exists` false) writes directly: its survivor
+    * plan reads no store table, so it needs no barrier. An append fold's
+    * survivor plan READS the store it appends to, which `saveAsTable`
+    * refuses; an EAGER `localCheckpoint` materializes the survivors
+    * (memory-and-disk blocks) and swaps the plan for the checkpointed
+    * RDD — the barrier a staged parquet round-trip provides, minus one
+    * parquet encode, write, read and delete per fold. The blocks are
+    * tracked and drain with the fold's cache mark; `packedForWrite`
+    * re-packs the write to read-sized splits. With `buckets > 0` the
+    * store is bucketed on `band_key`.
+    *
+    * Executor-loss constraint: checkpoint blocks live only on the
+    * executors that computed them and cannot be recomputed, so losing an
+    * executor between the checkpoint and the append fails the fold. A
+    * failure mid-append commits nothing under the writer's commit
+    * protocol, and the retry re-runs the whole fold behind the identity
+    * guard. The property is stamped after the append; [[committedEpoch]]
+    * describes the crash window between the two.
+    */
+  private[io] def appendSurvivors(spark: SparkSession, table: String,
+      survivors: DataFrame, exists: Boolean, buckets: Int, epochId: Long,
+      properties: Seq[(String, String)]): Unit = {
+    val data =
+      if (!exists) survivors
+      else org.apache.spark.sql.GraftColumnBridge.packedForWrite(
+        track(survivors.localCheckpoint(true)))
+    val writer = data.write.mode(if (exists) SaveMode.Append
+      else SaveMode.ErrorIfExists).format("parquet")
+    (if (buckets > 0) writer.bucketBy(buckets, "band_key")
+     else writer).saveAsTable(table)
+    val props = ((EpochProperty -> epochId.toString) +: properties)
+      .map { case (k, v) => s"'$k' = '$v'" }.mkString(", ")
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ($props)")
+    spark.catalog.refreshTable(table)
   }
 
   /** The store-probe stage of a fold, exposed so its plan shape is

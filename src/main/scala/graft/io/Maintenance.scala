@@ -187,59 +187,32 @@ object Maintenance {
     * map-side-combined aggregate of the BATCH (not history) + one
     * keyed join against the standing table — cost rides the batch.
     *
-    * @param epochId when set (the streaming sink's batchId), the fold
-    *        becomes REPLAY-IDEMPOTENT: the id is written as a
-    *        `_last_epoch` column in the SAME table commit as the folded
-    *        data (one table write — data and marker can never diverge),
-    *        and a batch whose id EQUALS the standing `_last_epoch` is
-    *        skipped, while an OLDER id throws (a late backfill is not a
-    *        replay — dropping it silently would be data loss recorded
-    *        as success). This is what makes the additive fold safe under
-    *        foreachBatch's at-least-once delivery: a crash-replayed
-    *        epoch re-arrives, sees its own id already committed, and
-    *        no-ops — the parquet analog of Delta's txnAppId/txnVersion
-    *        pattern. Batch-path callers (no stream, no redelivery)
-    *        leave it None and get no marker column.
+    * @param epochId the batch's epoch (a run date's epoch day, a
+    *        micro-batch id), admitted through [[EpochFence]]: it is
+    *        written as a `_last_epoch` column in the SAME table commit
+    *        as the folded data, so data and marker can never diverge.
+    *        An older epoch is refused because sums add: a backfill
+    *        would double-count.
     * @return true if the batch folded (or created the table); false if
     *         it was a replayed epoch and was skipped — callers holding
     *         an Observation on the batch must not block on it then.
     */
   def maintainAdditiveAggregate(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], sumCols: Seq[String],
-      epochId: Option[Long] = None): Boolean = {
+      epochId: Long): Boolean = {
     require(sumCols.nonEmpty, "need at least one additive column")
     val aggExprs = sumCols.map(c => sum(col(c)).as(c)) :+
       count(lit(1)).as("n_rows")
-    val batchAgg0 = batch.groupBy(keys.map(col): _*)
+    val batchAgg = batch.groupBy(keys.map(col): _*)
       .agg(aggExprs.head, aggExprs.tail: _*)
-    val batchAgg = epochId.fold(batchAgg0)(id =>
-      batchAgg0.withColumn("_last_epoch", lit(id)))
+      .withColumn("_last_epoch", lit(epochId))
     Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       batchAgg.write.saveAsTable(table)
       return true
     }
-    // replayed epoch: its id is already committed with the data — no-op.
-    // NOTE the skip happens BEFORE any action touches `batch`: a caller
-    // observing the batch (GoldLayer's records count) must not block on
-    // an Observation whose action never ran — hence the Boolean return.
-    // Only the SAME epoch skips; an OLDER epoch is a late backfill whose
-    // silent drop would be data loss dressed as success (round-11
-    // advice: the audit row would record SUCCESS with 0 records) — it
-    // fails loudly so the layer's per-item isolation surfaces it.
-    val standingEpoch: Option[Long] =
-      if (spark.table(table).columns.contains("_last_epoch")) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"additive fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot fold " +
-          "additively without double-count risk; recompute the table or " +
-          "re-stamp the batch with a current epoch")
-    }
+    if (!EpochFence.admit("additive fold", table, epochId,
+        EpochFence.last(spark.table(table)))) return false
     val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
     val t = spark.table(table).alias("t")
     // NULL-SAFE key match (<=>): groupBy emits a null-key group per
@@ -250,17 +223,11 @@ object Maintenance {
     // t-then-b so both matched and one-sided rows keep their key.
     val joined = t.join(b,
       keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
-    // a batch-path call (epochId = None) against a table the STREAMING
-    // sink built must not strip the committed _last_epoch marker — a
-    // later crash-replay of that epoch would then double-count
-    // (round-11 advice); carry the standing max forward instead
-    val keepEpoch = epochId.orElse(standingEpoch)
     val merged = joined.select(
       keys.map(k => coalesce(t(k), b(k)).as(k)) ++
         (sumCols :+ "n_rows").map { c =>
           (coalesce(t(c), lit(0)) + coalesce(b(c), lit(0))).as(c)
-        } ++
-        keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq: _*)
+        } :+ lit(epochId).as("_last_epoch"): _*)
     Commit.replace(spark, table, merged)
     true
   }
@@ -280,16 +247,16 @@ object Maintenance {
     * their union in any order (min/max are associative + commutative)
     * — pinned in MaintenanceSpec.
     *
-    * `epochId` carries the additive fold's replay-idempotence contract
-    * (the min/max values are replay-idempotent on their own, but
-    * `n_rows` is NOT): same epoch → skip (returns false), older epoch
-    * → throw, batch path preserves a standing marker. A streaming feed
-    * is insert-only by nature, so fed from a stream the insert-only
-    * contract holds by construction.
+    * `epochId` is admitted through [[EpochFence]] and committed as
+    * `_last_epoch` with the data, as in the additive fold: the min/max
+    * values are replay-idempotent on their own, but `n_rows` is not, so
+    * a backfill would double-count it. A streaming feed is insert-only
+    * by nature, so fed from a stream the insert-only contract holds by
+    * construction.
     */
   def maintainInsertOnlyExtremes(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], minCols: Seq[String],
-      maxCols: Seq[String], epochId: Option[Long] = None): Boolean = {
+      maxCols: Seq[String], epochId: Long): Boolean = {
     require(minCols.nonEmpty || maxCols.nonEmpty,
       "need at least one min or max column")
     val outMin = minCols.map(c => s"min_$c")
@@ -297,45 +264,28 @@ object Maintenance {
     val aggExprs = minCols.map(c => min(col(c)).as(s"min_$c")) ++
       maxCols.map(c => max(col(c)).as(s"max_$c")) :+
       count(lit(1)).as("n_rows")
-    val batchAgg0 = batch.groupBy(keys.map(col): _*)
+    val batchAgg = batch.groupBy(keys.map(col): _*)
       .agg(aggExprs.head, aggExprs.tail: _*)
-    val batchAgg = epochId.fold(batchAgg0)(id =>
-      batchAgg0.withColumn("_last_epoch", lit(id)))
+      .withColumn("_last_epoch", lit(epochId))
     Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
       batchAgg.write.saveAsTable(table)
       return true
     }
-    // the SAME epoch fence as the additive fold (review finding): the
-    // min/max fold is value-idempotent but n_rows is NOT — a same-epoch
-    // replay (run-date retry) must no-op, an older epoch must fail loud
-    val standingEpoch: Option[Long] =
-      if (spark.table(table).columns.contains("_last_epoch")) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"extremes fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot fold " +
-          "without double-counting n_rows; recompute the table or " +
-          "re-stamp the batch with a current epoch")
-    }
+    if (!EpochFence.admit("extremes fold", table, epochId,
+        EpochFence.last(spark.table(table)))) return false
     val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
     val t = spark.table(table).alias("t")
     val joined = t.join(b,
       keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
     // least/greatest skip nulls (null only when BOTH sides are), so a
     // one-sided row keeps its own extreme without a coalesce dance
-    val keepEpoch = epochId.orElse(standingEpoch)
     val merged = joined.select(
       keys.map(k => coalesce(t(k), b(k)).as(k)) ++
         outMin.map(c => least(t(c), b(c)).as(c)) ++
-        outMax.map(c => greatest(t(c), b(c)).as(c)) ++
-        ((coalesce(t("n_rows"), lit(0)) + coalesce(b("n_rows"), lit(0)))
-          .as("n_rows") +:
-          keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq): _*)
+        outMax.map(c => greatest(t(c), b(c)).as(c)) :+
+        (coalesce(t("n_rows"), lit(0)) + coalesce(b("n_rows"), lit(0)))
+          .as("n_rows") :+ lit(epochId).as("_last_epoch"): _*)
     Commit.replace(spark, table, merged)
     true
   }
@@ -381,19 +331,17 @@ object Maintenance {
     * join's true output mass, never |V| or |A|+|B|. The view append
     * is file-append, not rewrite.
     *
-    * `epochId` carries the family's replay-idempotence contract: the
-    * appended rows are stamped, the committed epoch is
-    * `max(_last_epoch)` over the view, a same-epoch batch skips
-    * (returns false), an older epoch throws. A batch-path call
-    * (None) against an epoch-built view stamps its append with the
-    * standing max so the marker survives; an epoch'd call against a
-    * view built WITHOUT the marker column throws (parquet appends
-    * cannot retrofit a column — recreate the view with an epoch).
+    * `epochId` is admitted through [[EpochFence]]: the appended rows
+    * are stamped with it, and the committed epoch is `max(_last_epoch)`
+    * over the view. An older epoch is refused because the append is
+    * not idempotent: a backfill risks a double join. A view built
+    * without the marker column (by hand) is refused: parquet appends
+    * cannot retrofit a column, so recreate it through this fold.
     */
   def maintainJoinView(spark: SparkSession, table: String,
       leftTable: String, rightTable: String, joinKeys: Seq[String],
       leftBatch: Option[DataFrame], rightBatch: Option[DataFrame],
-      epochId: Option[Long] = None,
+      epochId: Long,
       basesIncludeBatches: Boolean = false): Boolean = {
     require(joinKeys.nonEmpty, "need at least one join key")
     Commit.recover(spark, table)
@@ -422,29 +370,17 @@ object Maintenance {
       // (post-append callers' bases already carry them)
       val aAll = if (basesIncludeBatches) a else dA.fold(a)(a.unionByName(_))
       val bAll = if (basesIncludeBatches) b else dB.fold(b)(b.unionByName(_))
-      val v0 = aAll.join(bAll, joinKeys)
-      epochId.fold(v0)(id => v0.withColumn("_last_epoch", lit(id)))
+      aAll.join(bAll, joinKeys).withColumn("_last_epoch", lit(epochId))
         .write.saveAsTable(table)
       return true
     }
-    val hasMarker = spark.table(table).columns.contains("_last_epoch")
-    if (epochId.isDefined && !hasMarker) throw new IllegalStateException(
+    val view = spark.table(table)
+    if (!view.columns.contains("_last_epoch")) throw new IllegalStateException(
       s"join-view fold for '$table': the view was built without epoch " +
         "fencing and parquet appends cannot retrofit the marker column — " +
-        "recreate the view with an epoch to fence replays")
-    val standingEpoch: Option[Long] =
-      if (hasMarker) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"join-view fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot append " +
-          "without double-join risk; recompute the view or re-stamp the " +
-          "batch with a current epoch")
-    }
+        "recreate the view through this fold to fence replays")
+    if (!EpochFence.admit("join-view fold", table, epochId,
+        EpochFence.last(view))) return false
     val ddTerm = for (x <- dA; y <- dB) yield x.join(y, joinKeys)
     val dV = if (basesIncludeBatches) {
       // bases already hold the batches: ΔA⋈B and A⋈ΔB each contain
@@ -456,10 +392,8 @@ object Maintenance {
       (Seq(dA.map(_.join(b, joinKeys)), dB.map(a.join(_, joinKeys)))
         .flatten ++ ddTerm).reduce(_.unionByName(_))
     }
-    val keepEpoch = epochId.orElse(standingEpoch)
-    val stamped = keepEpoch.filter(_ => hasMarker || epochId.isDefined)
-      .fold(dV)(id => dV.withColumn("_last_epoch", lit(id)))
-    stamped.write.mode(SaveMode.Append).saveAsTable(table)
+    dV.withColumn("_last_epoch", lit(epochId))
+      .write.mode(SaveMode.Append).saveAsTable(table)
     spark.catalog.refreshTable(table)
     true
   }
@@ -549,10 +483,10 @@ object Maintenance {
     * ([[graft.operators.Sketches.hdrSketchBy]], 6.25% relative error,
     * ≤ ~2k buckets per key forever) and each batch SUM-merges in.
     * Unlike the distinct view's max (idempotent — no fence), bucket
-    * counts ADD, so a replay double-counts: this fold carries the
-    * additive family's epoch fence verbatim — same epoch skips
-    * (returns false), an older epoch throws, a batch-path call
-    * preserves a standing marker. Read back with
+    * counts ADD, so a replay double-counts: `epochId` is admitted
+    * through [[EpochFence]] and committed as `_last_epoch` with the
+    * merge, as in the additive fold (an older epoch is refused: the
+    * bucket counts would double-count it). Read back with
     * [[quantileViewEstimate]].
     *
     * Scale shape: one map-side-combined sketch build of the BATCH +
@@ -561,15 +495,13 @@ object Maintenance {
     */
   def maintainQuantileView(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], centsCol: String,
-      epochId: Option[Long] = None): Boolean = {
+      epochId: Long): Boolean = {
     require(keys.nonEmpty, "need at least one key column")
     val regCols = keys ++ Seq("bkey", "cnt")
-    val regs0 = graft.operators.Sketches.hdrSketchBy(batch, keys, col(centsCol))
-    val regs = epochId.fold(regs0)(id =>
-      regs0.withColumn("_last_epoch", lit(id)))
+    val regs = graft.operators.Sketches.hdrSketchBy(batch, keys, col(centsCol))
     Commit.recover(spark, table)
     if (!spark.catalog.tableExists(table)) {
-      regs.write.saveAsTable(table)
+      regs.withColumn("_last_epoch", lit(epochId)).write.saveAsTable(table)
       return true
     }
     val t = spark.table(table)
@@ -578,26 +510,13 @@ object Maintenance {
       s"'$table' is not this view's sketch shape: has " +
         s"[${t.columns.sorted.mkString(", ")}], expected " +
         s"[${regCols.sorted.mkString(", ")}] (+ optional _last_epoch)")
-    val standingEpoch: Option[Long] =
-      if (t.columns.contains("_last_epoch")) {
-        val m = t.agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"quantile fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — bucket counts add, a late " +
-          "backfill cannot fold without double-count risk; recompute " +
-          "the table or re-stamp the batch with a current epoch")
-    }
-    val staged = Commit.stage(spark, table, "batch", regs0)
-    val keepEpoch = epochId.orElse(standingEpoch)
-    val merged0 = t.select(regCols.map(col): _*).unionByName(staged)
-      .groupBy((keys :+ "bkey").map(col): _*).agg(sum("cnt").as("cnt"))
-    val merged = keepEpoch.fold(merged0)(id =>
-      merged0.withColumn("_last_epoch", lit(id)))
-    Commit.replace(spark, table, merged)
+    if (!EpochFence.admit("quantile fold", table, epochId, EpochFence.last(t)))
+      return false
+    val staged = Commit.stage(spark, table, "batch", regs)
+    Commit.replace(spark, table,
+      t.select(regCols.map(col): _*).unionByName(staged)
+        .groupBy((keys :+ "bkey").map(col): _*).agg(sum("cnt").as("cnt"))
+        .withColumn("_last_epoch", lit(epochId)))
     true
   }
 

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.operators.FrameCaches.track
@@ -88,18 +88,17 @@ object MediaDedupStore {
     * call). Returns the shared [[DedupStore.FoldResult]] contract: the
     * fold reports its OWN batch count (it persists the banded batch
     * frame — the Spark 4.1 cache/observe interaction documented at
-    * [[DedupStore.FoldResult]] applies here too). Fed from a stream,
-    * `epochId` is the batchId: a replayed batch the store already
-    * committed no-ops through the fence, and the identity guard keeps
-    * a re-delivered media_id from appending twice inside the crash
-    * window between the append and the epoch stamp.
+    * [[DedupStore.FoldResult]] applies here too). `epochId` is
+    * admitted through [[EpochFence]] as in the text store, and the
+    * identity guard keeps a re-delivered media_id from appending twice
+    * inside the crash window between the append and the epoch stamp.
     */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, hashCol: String,
       bands: Int = 4, maxHamming: Long = 16L,
       maxBucketSize: Option[Long] = None,
       storeBuckets: Int = 0,
-      epochId: Option[Long] = None,
+      epochId: Long,
       keeper: String = "min_id",
       qualityCol: Option[String] = None): DedupStore.FoldResult = {
     require(bands >= 1 && bands <= 64 && 64 % bands == 0,
@@ -134,7 +133,7 @@ object MediaDedupStore {
   private def maintainImpl(spark: SparkSession, table: String,
       batch: DataFrame, idCol: String, hashCol: String, bands: Int,
       maxHamming: Long, maxBucketSize: Option[Long], storeBuckets: Int,
-      epochId: Option[Long], keeper: String,
+      epochId: Long, keeper: String,
       qualityCol: Option[String]): DedupStore.FoldResult = {
     val bandNames = (0 until bands).map(b => s"band_$b")
     // one pass derives the band keys; persisted — it feeds the store
@@ -165,15 +164,9 @@ object MediaDedupStore {
           "store under the new layout")
       DedupStore.requireKnobsOn(meta, table, KnobsProperty,
         s"bands=$bands", "media-dedup-store fold", requirePresent = false)
-      for (id <- epochId; c <- DedupStore.committedEpoch(spark, table)) {
-        if (c == id) return DedupStore.FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"media-dedup-store fold for '$table': batch epoch $id is OLDER " +
-            s"than the committed epoch $c — the store already contains " +
-            "later survivors, so a backfilled batch would be deduped " +
-            "against the future; recompute the store in epoch order or " +
-            "re-stamp the batch with a current epoch")
-      }
+      if (!EpochFence.admit("media-dedup-store fold", table, epochId,
+          DedupStore.committedEpoch(spark, table)))
+        return DedupStore.FoldResult(applied = false, batchRows = 0L)
     }
 
     val fresh =
@@ -221,35 +214,11 @@ object MediaDedupStore {
       .select(col("media_id"), col("dhash"),
         posexplode(array(bandNames.map(col): _*))
           .as(Seq("band_idx", "band_key")))
-      .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
+      .withColumn("_epoch", lit(epochId))
       .select("media_id", "band_idx", "band_key", "dhash", "_epoch")
-
-    // stage before touching the catalog: the survivor plan reads the
-    // store table it is about to append to. Founding folds write
-    // DIRECTLY (exists=false ⇒ fresh = banded reads no store table;
-    // the scratch round-trip bought nothing — DedupStore's r19 note)
-    def writeTo(df: DataFrame): Unit = {
-      val writer = df.write.mode(if (exists) SaveMode.Append
-        else SaveMode.ErrorIfExists).format("parquet")
-      (if (storeBuckets > 0) writer.bucketBy(storeBuckets, "band_key")
-       else writer).saveAsTable(table)
-    }
-    // append folds sever the read-own-table cycle with an EAGER
-    // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier a staged parquet round-trip provides, minus a
-    // parquet encode + write + read + fs delete per fold; blocks are
-    // tracked and drain with the fold's cache mark
-    if (!exists) writeTo(survivors)
-    else writeTo(org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-      track(survivors.localCheckpoint(true))))
-    // one catalog round-trip for all properties (each ALTER is a
-    // serial driver-side write)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      epochId.map(id =>
-        s"'${DedupStore.EpochProperty}' = '$id', ").getOrElse("") +
-      s"'$KnobsProperty' = 'bands=$bands', " +
-      s"'$VerifyProperty' = 'maxHamming=$maxHamming')")
-    spark.catalog.refreshTable(table)
+    DedupStore.appendSurvivors(spark, table, survivors, exists, storeBuckets,
+      epochId, Seq(KnobsProperty -> s"bands=$bands",
+        VerifyProperty -> s"maxHamming=$maxHamming"))
     DedupStore.FoldResult(applied = true, batchRows = banded.count())
   }
 

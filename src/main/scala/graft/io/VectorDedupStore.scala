@@ -159,14 +159,15 @@ object VectorDedupStore {
     * is the founding batch that freezes the calibration, so a stream
     * attached to an empty store calibrates on its first micro-batch:
     * seed the store from a representative corpus first, or accept
-    * that. Same epoch fence as the text store.
+    * that. `epochId` is admitted through [[EpochFence]] as in the
+    * text store.
     */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, vecCol: String, minScore: Long,
       numCentroids: Int = 8, nprobe: Int = 2,
       trainIters: Int = 2,
       maxCellSize: Option[Long] = None,
-      epochId: Option[Long] = None,
+      epochId: Long,
       keeper: String = "min_id"): DedupStore.FoldResult = {
     require(numCentroids >= 1, s"numCentroids must be >= 1, got $numCentroids")
     require(nprobe >= 1 && nprobe <= numCentroids,
@@ -188,7 +189,7 @@ object VectorDedupStore {
       batch: DataFrame, idCol: String, vecCol: String, minScore: Long,
       numCentroids: Int, nprobe: Int, trainIters: Int,
       maxCellSize: Option[Long],
-      epochId: Option[Long], keeper: String): DedupStore.FoldResult = {
+      epochId: Long, keeper: String): DedupStore.FoldResult = {
     val intDot = graft.functions.VectorExpressions.intDotProduct _
     val exists = spark.catalog.tableExists(table)
     if (exists) {
@@ -199,13 +200,9 @@ object VectorDedupStore {
         s"vector dedup store '$table' has no model table " +
           s"'${modelTable(table)}' — the frozen calibration is half the " +
           "store; restore it or rebuild the store")
-      for (id <- epochId; c <- DedupStore.committedEpoch(spark, table)) {
-        if (c == id) return DedupStore.FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"vector-dedup-store fold for '$table': batch epoch $id is OLDER " +
-            s"than the committed epoch $c — recompute the store in epoch " +
-            "order or re-stamp the batch with a current epoch")
-      }
+      if (!EpochFence.admit("vector-dedup-store fold", table, epochId,
+          DedupStore.committedEpoch(spark, table)))
+        return DedupStore.FoldResult(applied = false, batchRows = 0L)
     }
 
     val bu = Similarity.withUnitVector(
@@ -329,34 +326,10 @@ object VectorDedupStore {
     }
     val survivors = freshP
       .join(nonKeepers, Seq("vec_id"), "left_anti")
-      .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
+      .withColumn("_epoch", lit(epochId))
       .select("vec_id", "qv", "cell", "_epoch")
-
-    // stage before touching the catalog (the survivor plan reads the
-    // store table it appends to), exactly as the text store does.
-    // Founding folds write DIRECTLY (exists=false ⇒ the survivor plan
-    // reads no store table; the scratch round-trip bought nothing —
-    // DedupStore's r19 note)
-    // append folds sever the read-own-table cycle with an EAGER
-    // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier a staged parquet round-trip provides, minus a
-    // parquet encode + write + read + fs delete per fold; blocks are
-    // tracked and drain with the fold's cache mark
-    if (!exists)
-      survivors.write.mode(SaveMode.ErrorIfExists)
-        .format("parquet").saveAsTable(table)
-    else
-      org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-        track(survivors.localCheckpoint(true)))
-        .write.mode(SaveMode.Append)
-        .format("parquet").saveAsTable(table)
-    // one catalog round-trip for both properties (each ALTER is a
-    // serial driver-side write)
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +
-      epochId.map(id =>
-        s"'${DedupStore.EpochProperty}' = '$id', ").getOrElse("") +
-      s"'$VerifyProperty' = 'minScore=$minScore')")
-    spark.catalog.refreshTable(table)
+    DedupStore.appendSurvivors(spark, table, survivors, exists, 0, epochId,
+      Seq(VerifyProperty -> s"minScore=$minScore"))
     // one crank-1 row per batch vector; rides the persisted rank frame
     DedupStore.FoldResult(applied = true, batchRows = homed.count())
   }

@@ -428,10 +428,11 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     * A batch model passes its query and the run date's epoch day; a
     * streaming model passes each micro-batch and its batchId. The
     * folds that are not idempotent (additive, extremes, quantile_view,
-    * the stores, join_view) commit `epoch` with their write and skip
-    * an epoch they already committed; the rest converge on a replay
-    * by their own algebra. The session is the batch's own — inside
-    * foreachBatch that is the micro-batch clone.
+    * the stores, join_view) take `epoch` as their required `epochId`,
+    * admit it through `graft.io.EpochFence` (the committed epoch
+    * skips, an older one throws) and commit it with their write; the
+    * rest converge on a replay by their own algebra. The session is
+    * the batch's own — inside foreachBatch that is the micro-batch clone.
     *
     * @return the records processed: the batch's raw rows (0 when the
     *         epoch fence skipped), a changelog's surviving changes.
@@ -464,7 +465,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         val existed = spark.catalog.tableExists(m.targetTable)
         val folded = graft.io.Maintenance.maintainJoinView(spark,
           m.targetTable, m.leftTable.get, m.rightTable.get, m.joinKeys,
-          lb, rb, epochId = Some(epoch), basesIncludeBatches = true)
+          lb, rb, epochId = epoch, basesIncludeBatches = true)
         // creation joins the bases wholesale — the batch frames were
         // never consumed, so their Observations must not be read
         if (!folded || !existed) 0L
@@ -472,7 +473,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
           rb.map(_ => obsR.get("rows").asInstanceOf[Long]).getOrElse(0L)
       case "additive" =>
         counted(graft.io.Maintenance.maintainAdditiveAggregate(spark,
-          m.targetTable, _, m.primaryKeys, m.sumColumns, epochId = Some(epoch)))
+          m.targetTable, _, m.primaryKeys, m.sumColumns, epochId = epoch))
       case "extremes" =>
         // insert-only MIN/MAX fold (least/greatest per key). The
         // INSERT-ONLY feed contract is declared at the config
@@ -480,11 +481,11 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         // which is exactly the wholesale recompute this path avoids
         counted(graft.io.Maintenance.maintainInsertOnlyExtremes(spark,
           m.targetTable, _, m.primaryKeys, m.minColumns, m.maxColumns,
-          epochId = Some(epoch)))
+          epochId = epoch))
       case "quantile_view" =>
         counted(graft.io.Maintenance.maintainQuantileView(spark,
           m.targetTable, _, m.primaryKeys, m.quantileColumn.get,
-          epochId = Some(epoch)))
+          epochId = epoch))
       case "distinct_view" =>
         // HLL registers max-merge the batch in: no epoch fence, max is
         // idempotent (the fold returns true always)
@@ -498,13 +499,13 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         graft.io.DedupStore.maintain(spark, m.targetTable, batch,
           d.idColumn, d.textColumn, d.shingleSize, d.numHashes, d.bands,
           d.jaccardPct / 100.0, maxBucketSize = d.maxBucketSize,
-          storeBuckets = d.storeBuckets, epochId = Some(epoch),
+          storeBuckets = d.storeBuckets, epochId = epoch,
           keeper = d.keeper, qualityCol = d.qualityColumn).batchRows
       case "vector_dedup_store" =>
         val v = m.vectorDedupStore.get
         graft.io.VectorDedupStore.maintain(spark, m.targetTable, batch,
           v.idColumn, v.vectorColumn, v.minScore, v.numCentroids, v.nprobe,
-          v.trainIters, v.maxCellSize, epochId = Some(epoch),
+          v.trainIters, v.maxCellSize, epochId = epoch,
           keeper = v.keeper).batchRows
       case "media_dedup_store" =>
         // the batch is (id, dHash) rows — hashes computed upstream,
@@ -513,7 +514,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         graft.io.MediaDedupStore.maintain(spark, m.targetTable, batch,
           d.idColumn, d.hashColumn, d.bands, d.maxHamming,
           maxBucketSize = d.maxBucketSize, storeBuckets = d.storeBuckets,
-          epochId = Some(epoch), keeper = d.keeper,
+          epochId = epoch, keeper = d.keeper,
           qualityCol = d.qualityColumn).batchRows
       case "scd2" =>
         // type-2 dimension fold: close + open version rows per key. No

@@ -266,10 +266,10 @@ object DedupQueries extends QuerySet {
     if (fs.exists(loc)) fs.delete(loc, true)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(1L))
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(2L))
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 2L)
     graft.io.DedupStore.storedDocIds(s, table)
       .select(col("doc_id"), col("_epoch").as("folded_epoch"))
       .orderBy("doc_id")
@@ -298,7 +298,7 @@ object DedupQueries extends QuerySet {
     if (fs.exists(loc)) fs.delete(loc, true)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(1L))
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)
     val batch = docs.filter(col("doc_id") % 2 === 0)
     val hits = graft.io.DedupStore.probeHits(s, table, batch,
       "doc_id", "text", N, H, B, jaccardThreshold = 0.5, mode = Md5Hash)
@@ -335,11 +335,11 @@ object DedupQueries extends QuerySet {
     if (fs.exists(loc)) fs.delete(loc, true)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(1L),
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L,
       keeper = "max_quality", qualityCol = Some("quality"))
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(2L),
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 2L,
       keeper = "max_quality", qualityCol = Some("quality"))
     graft.io.DedupStore.storedDocIds(s, table)
       .select(col("doc_id"), col("_epoch").as("folded_epoch"))
@@ -384,7 +384,7 @@ object DedupQueries extends QuerySet {
     if (fs.exists(loc)) fs.delete(loc, true)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = Some(1L))
+      N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)
     val batch = docs.filter(col("doc_id") % 2 === 0)
     def hitsUnder(cap: Option[Long]): Long =
       graft.io.DedupStore.probeHits(s, table, batch, "doc_id", "text",

@@ -499,12 +499,12 @@ object ExtendedQueries extends QuerySet {
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(1L))
+      epochId = 1L)
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id >= 100).unionByName(variants)),
       "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(2L))
+      epochId = 2L)
     graft.io.MediaDedupStore.storedMediaIds(s, table)
       .select(col("media_id"), col("_epoch").as("folded_epoch"))
       .orderBy("media_id")
@@ -540,7 +540,7 @@ object ExtendedQueries extends QuerySet {
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(1L))
+      epochId = 1L)
     val batch = M.dHash(media.filter(_.media_id >= 100).unionByName(variants))
     val hits = graft.io.MediaDedupStore.probeHits(s, table, batch,
       "media_id", "dhash", bands = 4, maxHamming = 16L,
@@ -584,7 +584,7 @@ object ExtendedQueries extends QuerySet {
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(1L))
+      epochId = 1L)
     val batch = graft.operators.FrameCaches.track(
       M.dHash(media.filter(_.media_id >= 100).unionByName(variants))
         .persist())
@@ -645,12 +645,12 @@ object ExtendedQueries extends QuerySet {
     graft.io.MediaDedupStore.maintain(s, table,
       withQ(M.dHash(media.filter(_.media_id < 100))), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(1L), keeper = "max_quality", qualityCol = Some("q"))
+      epochId = 1L, keeper = "max_quality", qualityCol = Some("q"))
     graft.io.MediaDedupStore.maintain(s, table,
       withQ(M.dHash(media.filter(_.media_id >= 100).unionByName(variants))),
       "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
-      epochId = Some(2L), keeper = "max_quality", qualityCol = Some("q"))
+      epochId = 2L, keeper = "max_quality", qualityCol = Some("q"))
     graft.io.MediaDedupStore.storedMediaIds(s, table)
       .select(col("media_id"), col("_epoch").as("folded_epoch"))
       .orderBy("media_id")

@@ -407,11 +407,11 @@ object VectorQueries extends QuerySet {
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(1L))
+      maxCellSize = Some(VdsCellCap), epochId = 1L)
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(2L))
+      maxCellSize = Some(VdsCellCap), epochId = 2L)
     graft.io.VectorDedupStore.storedVecIds(s, table)
       .select(col("vec_id"), col("_epoch").as("folded_epoch"))
       .orderBy("vec_id")
@@ -447,12 +447,12 @@ object VectorQueries extends QuerySet {
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(1L),
+      maxCellSize = Some(VdsCellCap), epochId = 1L,
       keeper = "centroid_farthest")
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(2L),
+      maxCellSize = Some(VdsCellCap), epochId = 2L,
       keeper = "centroid_farthest")
     graft.io.VectorDedupStore.storedVecIds(s, table)
       .select(col("vec_id"), col("_epoch").as("folded_epoch"))
@@ -487,7 +487,7 @@ object VectorQueries extends QuerySet {
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(1L))
+      maxCellSize = Some(VdsCellCap), epochId = 1L)
     val batch = e.filter(col("vec_id") % 2 === 1)
     val hits = graft.io.VectorDedupStore.probeHits(s, table, batch,
       "vec_id", "embedding", MatchScore, nprobe = 2,
@@ -534,7 +534,7 @@ object VectorQueries extends QuerySet {
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
-      maxCellSize = Some(VdsCellCap), epochId = Some(1L))
+      maxCellSize = Some(VdsCellCap), epochId = 1L)
     val batch = graft.operators.FrameCaches.track(
       e.filter(col("vec_id") % 2 === 1).persist())
     def hitsUnder(np: Int, cap: Option[Long]): Long =

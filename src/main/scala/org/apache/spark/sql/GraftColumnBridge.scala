@@ -15,11 +15,18 @@ object GraftColumnBridge {
     * via `unpersist`, plus the underlying RDD blocks of
     * `localCheckpoint`-ed frames (which the cache manager does not
     * track — without this, checkpoint blocks linger until GC).
+    * A locally checkpointed RDD's blocks are dropped through the
+    * context directly: `RDD.unpersist` does the same, but first logs a
+    * "lineage has been truncated" WARN for every such RDD.
     */
   def freeStorage(df: Dataset[_]): Unit = {
     df.unpersist()
     df.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: execution.LogicalRDD =>
+        if (lr.rdd.checkpointData.exists(
+            _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+          lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
+        else lr.rdd.unpersist(blocking = false)
       case _ =>
     }
   }

@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * overwrite"), shows up in the main sources anywhere else. Likewise
   * every streaming write goes through `graft.io.Sinks.foreachBatch`:
   * a `foreachBatch` writer call anywhere else is a hand-rolled twin.
+  * The replay fence rule lives in `graft.io.EpochFence` and the store
+  * append barrier in `DedupStore.appendSurvivors`: a copy of either
+  * anywhere else fails.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -48,6 +51,20 @@ class CommitGuardSpec extends AnyFunSuite {
     */
   def foreachBatchWriters(src: String): Int =
     """(?<!Sinks)\.foreachBatch\b""".r.findAllIn(joined(src)).size
+
+  /** Marks of a hand-rolled epoch fence in one source text: the
+    * refusal phrase, and a `max` read of the `_last_epoch` marker.
+    * String literals concatenated across lines are joined first, so a
+    * phrase split over two literals still counts.
+    */
+  def fenceMarks(src: String): Int =
+    """is OLDER than|max\((?:col\()?\$?"_last_epoch"""".r
+      .findAllIn(joined(src).replaceAll("\"\\s*\\+\\s*s?\"", "")).size
+
+  /** The name of the last `def` that starts before offset `at`. */
+  private def enclosingDef(src: String, at: Int): String =
+    """def (\w+)""".r.findAllMatchIn(src.substring(0, at))
+      .map(_.group(1)).toSeq.lastOption.getOrElse("")
 
   test("the detector flags a hand-rolled stage copy and a stage literal") {
     val handRolled =
@@ -88,5 +105,35 @@ class CommitGuardSpec extends AnyFunSuite {
       mainRoot.relativize(p).toString -> foreachBatchWriters(src) }
       .filter(_._2 > 0)
     assert(calls == Seq("graft/io/Sinks.scala" -> 1), calls.mkString("\n"))
+  }
+
+  test("the detector flags a hand-rolled epoch fence copy") {
+    val copy =
+      """val m = spark.table(table).agg(max(col("_last_epoch"))).head()
+        |val committed = if (m.isNullAt(0)) None else Some(m.getLong(0))
+        |for (c <- committed) if (c > id) throw new IllegalStateException(
+        |  s"fold for '$table': batch epoch $id is OLDER " +
+        |    s"than the committed epoch $c")
+        |""".stripMargin
+    assert(fenceMarks(copy) == 2)
+    assert(fenceMarks(
+      "if (!EpochFence.admit(\"fold\", t, e, EpochFence.last(v))) return false") == 0)
+  }
+
+  test("the epoch fence rule lives only in EpochFence") {
+    val marks = mainSources.map { case (p, src) =>
+      mainRoot.relativize(p).toString -> fenceMarks(src) }
+      .filter(_._2 > 0)
+    assert(marks == Seq("graft/io/EpochFence.scala" -> 2), marks.mkString("\n"))
+  }
+
+  test("localCheckpoint(true) appears under graft/io only in appendSurvivors") {
+    val io = mainRoot.resolve("graft/io")
+    val sites = mainSources.filter(_._1.startsWith(io)).flatMap { case (p, src) =>
+      """localCheckpoint\(true\)""".r.findAllMatchIn(src)
+        .map(m => s"${mainRoot.relativize(p)}: ${enclosingDef(src, m.start)}")
+    }
+    assert(sites == Seq("graft/io/DedupStore.scala: appendSurvivors"),
+      sites.mkString("\n"))
   }
 }

@@ -47,13 +47,15 @@ class PropertySpec extends SparkSpec {
         Seq.fill(rnd.nextInt(30) + 1)(
           (s"g${rnd.nextInt(6)}", rnd.nextInt(1000).toLong))
           .toDF("g", "qty"))
-      batches.foreach(b =>
-        Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"), Seq("qty")))
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"), Seq("qty"),
+          epochId = i + 1L) }
       val oneShot = batches.reduce(_ unionByName _)
         .groupBy("g")
         .agg(sum("qty").as("qty"), count(lit(1)).as("n_rows"))
         .as[(String, Long, Long)].collect().toSet
-      val inc = spark.table(t).as[(String, Long, Long)].collect().toSet
+      val inc = spark.table(t).select("g", "qty", "n_rows")
+        .as[(String, Long, Long)].collect().toSet
       assert(inc == oneShot, s"seed $seed ($nBatches batches): $inc != $oneShot")
     }
   }

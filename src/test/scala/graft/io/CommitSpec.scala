@@ -76,10 +76,10 @@ class CommitSpec extends SparkSpec {
     Op("additive_fold",
       t => Maintenance.maintainAdditiveAggregate(spark, t,
         Seq(("a", 1L), ("b", 2L)).toDF("g", "x"), Seq("g"), Seq("x"),
-        epochId = Some(1L)),
+        epochId = 1L),
       t => Maintenance.maintainAdditiveAggregate(spark, t,
         Seq(("a", 10L), ("c", 5L)).toDF("g", "x"), Seq("g"), Seq("x"),
-        epochId = Some(2L))))
+        epochId = 2L)))
 
   test("a failure while the stage is written leaves the table unchanged") {
     for (op <- ops) {
@@ -119,7 +119,7 @@ class CommitSpec extends SparkSpec {
     def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def fold(t: String, epoch: Long, rows: (Long, String)*) =
       DedupStore.maintain(spark, t, docs(rows: _*), "doc_id", "text",
-        epochId = Some(epoch))
+        epochId = epoch)
     val ref = table("fold_ref")
     val t = table("fold_after_died_compact")
     fresh(ref, t)
@@ -194,10 +194,10 @@ class CommitSpec extends SparkSpec {
     def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     DedupStore.maintain(spark, s,
       docs(1L -> "alpha beta gamma delta epsilon zeta", 2L -> "one two three four five"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(1L))
+      "doc_id", "text", storeBuckets = 4, epochId = 1L)
     DedupStore.maintain(spark, s,
       docs(3L -> "eight nine ten eleven twelve thirteen"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(2L))
+      "doc_id", "text", storeBuckets = 4, epochId = 2L)
     val spec = meta(s).bucketSpec
     assert(spec.exists(_.numBuckets == 4), spec.toString)
     def kept(what: String): Unit = {
@@ -224,13 +224,13 @@ class CommitSpec extends SparkSpec {
     VectorDedupStore.maintain(spark, v,
       vecs(1L -> Array(1.0f, 0.0f, 0.0f, 0.0f), 2L -> Array(0.98f, 0.2f, 0.0f, 0.0f)),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     VectorDedupStore.maintain(spark, v,
       vecs(10L -> Array(0.0f, 0.0f, 1.0f, 0.0f),
         11L -> Array(0.0f, 0.0f, 0.995f, 0.1f),
         12L -> Array(0.0f, 0.0f, 0.0f, 1.0f)),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     spark.table(v).write.bucketBy(2, "cell").sortBy("vec_id").saveAsTable(vb)
     spark.table(s"${v}_model").write.saveAsTable(s"${vb}_model")
     spark.sql(s"ALTER TABLE $vb SET TBLPROPERTIES " +

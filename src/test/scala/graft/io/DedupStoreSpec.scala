@@ -3,6 +3,7 @@ package graft.io
 import graft.SparkSpec
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class DedupStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -24,7 +25,7 @@ class DedupStoreSpec extends SparkSpec {
     // batch 1: 101/103 exact dups (keeper = min id), 105 unique
     val f1 = DedupStore.maintain(spark, t,
       df(101L -> textA, 103L -> textA, 105L -> textB),
-      "doc_id", "text", epochId = Some(1L))
+      "doc_id", "text", epochId = 1L)
     assert(f1.applied && f1.batchRows == 3L, f1.toString)
     assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
       Set(101L -> 1L, 105L -> 1L))
@@ -36,7 +37,7 @@ class DedupStoreSpec extends SparkSpec {
     // within-batch cluster (204 keeps)
     val f2 = DedupStore.maintain(spark, t,
       df(202L -> textA, 204L -> textC, 206L -> textC, 208L -> textC),
-      "doc_id", "text", epochId = Some(2L))
+      "doc_id", "text", epochId = 2L)
     assert(f2.applied && f2.batchRows == 4L,
       "batchRows rides the incoming batch, not the survivors: " + f2)
     assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
@@ -47,15 +48,15 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_fence")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     assert(DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = Some(10L)).applied)
+      epochId = 10L).applied)
     val skip = DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = Some(10L))
+      epochId = 10L)
     assert(!skip.applied && skip.batchRows == 0L, "same-epoch replay must skip")
     assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
       Set(1L -> 10L), "skipped fold must leave the store untouched")
     val e = intercept[IllegalStateException] {
       DedupStore.maintain(spark, t, df(3L -> textC), "doc_id", "text",
-        epochId = Some(9L))
+        epochId = 9L)
     }
     assert(e.getMessage.contains("OLDER"))
   }
@@ -64,9 +65,11 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_replay")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     val batch = df(1L -> textA, 2L -> textB)
-    assert(DedupStore.maintain(spark, t, batch, "doc_id", "text").applied)
+    assert(DedupStore.maintain(spark, t, batch, "doc_id", "text",
+      epochId = 1L).applied)
     val first = spark.table(t).orderBy("doc_id", "band_idx").collect().toSeq
-    assert(DedupStore.maintain(spark, t, batch, "doc_id", "text").applied,
+    assert(DedupStore.maintain(spark, t, batch, "doc_id", "text",
+      epochId = 2L).applied,
       "unfenced fold applies ...")
     assert(spark.table(t).orderBy("doc_id", "band_idx").collect().toSeq == first,
       "... but appends nothing — the batch deduped against itself in the store")
@@ -100,7 +103,7 @@ class DedupStoreSpec extends SparkSpec {
     val strict = table("t_thresh_strict")
     spark.sql(s"DROP TABLE IF EXISTS $strict")
     DedupStore.maintain(spark, strict, df(1L -> long1, 2L -> long2),
-      "doc_id", "text", jaccardThreshold = 0.99)
+      "doc_id", "text", jaccardThreshold = 0.99, epochId = 1L)
     assert(DedupStore.storedDocIds(spark, strict).as[(Long, Long)]
       .collect().map(_._1).toSet == Set(1L, 2L),
       "threshold 0.99: the banded collision fails the verify — both kept")
@@ -108,7 +111,7 @@ class DedupStoreSpec extends SparkSpec {
     val loose = table("t_thresh_loose")
     spark.sql(s"DROP TABLE IF EXISTS $loose")
     DedupStore.maintain(spark, loose, df(1L -> long1, 2L -> long2),
-      "doc_id", "text", jaccardThreshold = 0.5)
+      "doc_id", "text", jaccardThreshold = 0.5, epochId = 1L)
     assert(DedupStore.storedDocIds(spark, loose).as[(Long, Long)]
       .collect().map(_._1).toSet == Set(1L),
       "threshold 0.5: the variant verifies as a near-dup — keeper only")
@@ -118,9 +121,9 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_probe_verify")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> long1), "doc_id", "text",
-      jaccardThreshold = 0.5, epochId = Some(1L))
+      jaccardThreshold = 0.5, epochId = 1L)
     DedupStore.maintain(spark, t, df(2L -> long2, 3L -> textB), "doc_id", "text",
-      jaccardThreshold = 0.5, epochId = Some(2L))
+      jaccardThreshold = 0.5, epochId = 2L)
     assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
       Set(1L -> 1L, 3L -> 2L))
   }
@@ -129,7 +132,7 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_epoch_prop")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     assert(DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = Some(5L)).applied)
+      epochId = 5L).applied)
     assert(DedupStore.committedEpoch(spark, t).contains(5L))
     // the property — not the data — is the fence's source of truth:
     // bump it past the stored rows' max(_epoch) and the fence follows
@@ -138,7 +141,7 @@ class DedupStoreSpec extends SparkSpec {
     assert(DedupStore.committedEpoch(spark, t).contains(7L),
       "a 5-row store scan would have said 5")
     assert(!DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = Some(7L)).applied, "fence must honor the property epoch")
+      epochId = 7L).applied, "fence must honor the property epoch")
     // legacy store (pre-property): unset → one-time max(_epoch) scan
     spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES " +
       s"('${DedupStore.EpochProperty}')")
@@ -146,7 +149,7 @@ class DedupStoreSpec extends SparkSpec {
       "property absent must fall back to the data scan")
     // and the next applied fold re-stamps the property
     assert(DedupStore.maintain(spark, t, df(3L -> textC), "doc_id", "text",
-      epochId = Some(8L)).applied)
+      epochId = 8L).applied)
     assert(DedupStore.committedEpoch(spark, t).contains(8L))
   }
 
@@ -154,28 +157,28 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_bucket_drift")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      storeBuckets = 4, epochId = Some(1L))
+      storeBuckets = 4, epochId = 1L)
     val e = intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-        storeBuckets = 0, epochId = Some(2L))
+        storeBuckets = 0, epochId = 2L)
     }
     assert(e.getMessage.contains("storeBuckets=0") &&
       e.getMessage.contains("4 buckets"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-        storeBuckets = 8, epochId = Some(2L))
+        storeBuckets = 8, epochId = 2L)
     }
     assert(e2.getMessage.contains("storeBuckets=8"), e2.getMessage)
     // the store's own setting still folds
     assert(DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      storeBuckets = 4, epochId = Some(2L)).applied)
+      storeBuckets = 4, epochId = 2L).applied)
   }
 
   test("compaction preserves the epoch property (graft.* TBLPROPERTIES survive the rewrite)") {
     val t = table("t_compact_epoch")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA, 2L -> textB),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(3L))
+      "doc_id", "text", storeBuckets = 4, epochId = 3L)
     assert(DedupStore.committedEpoch(spark, t).contains(3L))
     Maintenance.compact(spark, t)
     // saveAsTable(Overwrite) recreates the table; without the re-stamp
@@ -188,18 +191,18 @@ class DedupStoreSpec extends SparkSpec {
     assert(DedupStore.committedEpoch(spark, t).contains(3L))
     // and the fence still works post-compaction
     assert(!DedupStore.maintain(spark, t, df(9L -> textC), "doc_id", "text",
-      storeBuckets = 4, epochId = Some(3L)).applied)
+      storeBuckets = 4, epochId = 3L).applied)
   }
 
   test("identity guard: a stored doc_id never appends twice, even with changed content") {
     val t = table("t_identity")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA, 2L -> textB),
-      "doc_id", "text", epochId = Some(1L))
+      "doc_id", "text", epochId = 1L)
     // id 1 re-delivered with COMPLETELY different content: without the
     // guard it would append a second set of band rows under the same id
     DedupStore.maintain(spark, t, df(1L -> textC), "doc_id", "text",
-      epochId = Some(2L))
+      epochId = 2L)
     assert(spark.table(t).filter(col("doc_id") === 1L).count() == 4L,
       "one band-row set per doc id, ever")
     assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)]
@@ -210,7 +213,7 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_crash_retry")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA, 2L -> textB),
-      "doc_id", "text", epochId = Some(5L))
+      "doc_id", "text", epochId = 5L)
     val committed = spark.table(t).orderBy("doc_id", "band_idx").collect().toSeq
     // simulate a crash BETWEEN the append and the property stamp: the
     // data carries epoch 5 but the property says 4
@@ -219,7 +222,7 @@ class DedupStoreSpec extends SparkSpec {
     // the operator's same-date retry re-runs (the fence can't know) —
     // and must converge: every doc matches its stored self
     val r = DedupStore.maintain(spark, t, df(1L -> textA, 2L -> textB),
-      "doc_id", "text", epochId = Some(5L))
+      "doc_id", "text", epochId = 5L)
     assert(r.applied, "a stale property re-runs the fold (documented window)")
     assert(spark.table(t).orderBy("doc_id", "band_idx").collect().toSeq ==
       committed, "the retry must append nothing")
@@ -234,9 +237,9 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_scratch")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = Some(1L))
+      epochId = 1L)
     DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = Some(2L))
+      epochId = 2L)
     val scratch = Commit.dir(spark, t)
     val fs = scratch.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(scratch),
@@ -248,7 +251,8 @@ class DedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Seq((1L, "x")).toDF("k", "v").write.saveAsTable(t)
     val e = intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text")
+      DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
+        epochId = 1L)
     }
     assert(e.getMessage.contains("not a dedup store"))
   }
@@ -261,9 +265,9 @@ class DedupStoreSpec extends SparkSpec {
     val b2 = df(202L -> textA, 204L -> textC)
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       DedupStore.maintain(spark, plain, b, "doc_id", "text",
-        epochId = Some(i + 1L))
+        epochId = i + 1L)
       DedupStore.maintain(spark, bucketed, b, "doc_id", "text",
-        storeBuckets = 4, epochId = Some(i + 1L))
+        storeBuckets = 4, epochId = i + 1L)
     }
     assert(DedupStore.storedDocIds(spark, bucketed).as[(Long, Long)]
       .collect().toSet ==
@@ -284,10 +288,10 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_knob_drift")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = Some(1L))
+      epochId = 1L)
     assert(intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-        shingleN = 5, epochId = Some(2L))
+        shingleN = 5, epochId = 2L)
     }.getMessage.contains("frozen fold settings"))
     assert(intercept[IllegalArgumentException] {
       DedupStore.probeHits(spark, t, df(10L -> textA), "doc_id", "text",
@@ -306,10 +310,10 @@ class DedupStoreSpec extends SparkSpec {
     Seq(fwd, rev).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val b1 = df(1L -> textA, 3L -> textB)
     val b2 = df(2L -> textA, 4L -> textC)
-    DedupStore.maintain(spark, fwd, b1, "doc_id", "text", epochId = Some(1L))
-    DedupStore.maintain(spark, fwd, b2, "doc_id", "text", epochId = Some(2L))
-    DedupStore.maintain(spark, rev, b2, "doc_id", "text", epochId = Some(1L))
-    DedupStore.maintain(spark, rev, b1, "doc_id", "text", epochId = Some(2L))
+    DedupStore.maintain(spark, fwd, b1, "doc_id", "text", epochId = 1L)
+    DedupStore.maintain(spark, fwd, b2, "doc_id", "text", epochId = 2L)
+    DedupStore.maintain(spark, rev, b2, "doc_id", "text", epochId = 1L)
+    DedupStore.maintain(spark, rev, b1, "doc_id", "text", epochId = 2L)
     val all = b1.unionByName(b2)
     for (t <- Seq(fwd, rev)) {
       val kept = DedupStore.storedDocIds(spark, t).select("doc_id")
@@ -338,9 +342,9 @@ class DedupStoreSpec extends SparkSpec {
     val tQ = table("t_keeper_q")
     Seq(tMin, tQ).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     DedupStore.maintain(spark, tMin, batch, "doc_id", "text",
-      epochId = Some(1L))
+      epochId = 1L)
     DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-      epochId = Some(1L), keeper = "max_quality",
+      epochId = 1L, keeper = "max_quality",
       qualityCol = Some("quality"))
     assert(DedupStore.storedDocIds(spark, tMin).as[(Long, Long)]
       .collect().map(_._1).toSet == Set(101L, 105L))
@@ -354,19 +358,20 @@ class DedupStoreSpec extends SparkSpec {
     // column with min_id; a column missing from the batch
     assert(intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        keeper = "best_effort")
+        epochId = 2L, keeper = "best_effort")
     }.getMessage.contains("keeper"))
     assert(intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        keeper = "max_quality")
+        epochId = 2L, keeper = "max_quality")
     }.getMessage.contains("needs qualityCol"))
     assert(intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        qualityCol = Some("quality"))
+        epochId = 2L, qualityCol = Some("quality"))
     }.getMessage.contains("only used by keeper max_quality"))
     assert(intercept[IllegalArgumentException] {
       DedupStore.maintain(spark, tQ, batch.drop("quality"), "doc_id",
-        "text", keeper = "max_quality", qualityCol = Some("quality"))
+        "text", epochId = 2L, keeper = "max_quality",
+        qualityCol = Some("quality"))
     }.getMessage.contains("not in the batch"))
   }
 
@@ -374,7 +379,7 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_probe_noprop")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = Some(1L))
+      epochId = 1L)
     // simulate a pre-property store: the fold stamped the knobs, strip
     // them — the probe must refuse (the fold would pass once and
     // re-stamp; the probe has no stamping step, so a vacuous pass
@@ -388,7 +393,7 @@ class DedupStoreSpec extends SparkSpec {
       e.getMessage.contains("run one fold"), e.getMessage)
     // one fold re-stamps; the probe works again
     DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = Some(2L))
+      epochId = 2L)
     assert(DedupStore.probeHits(spark, t, df(10L -> textA),
       "doc_id", "text").as[Long].collect().toSet == Set(10L))
   }
@@ -410,7 +415,7 @@ class DedupStoreSpec extends SparkSpec {
     val t = table("t_probe_verify")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      jaccardThreshold = 0.5, epochId = Some(1L))
+      jaccardThreshold = 0.5, epochId = 1L)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(t))
     assert(meta.properties.get(DedupStore.VerifyProperty)
@@ -426,5 +431,51 @@ class DedupStoreSpec extends SparkSpec {
       .exists(_.contains("diverge")))
     assert(DedupStore.probeHits(spark, t, df(10L -> textA), "doc_id",
       "text", jaccardThreshold = 0.0).as[Long].collect().toSet == Set(10L))
+  }
+
+  test("an append fold's checkpoint blocks are freed without the lineage WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val t = table("t_free_blocks")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
+      epochId = 1L)
+    val caught = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val watch = new AbstractAppender("lineage-watch", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        caught.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    watch.start()
+    ctx.getConfiguration.getRootLogger.addAppender(watch, null, null)
+    ctx.updateLoggers()
+    try {
+      // the append path of a fold whose survivors read the store itself
+      val mark = graft.operators.FrameCaches.mark(spark)
+      DedupStore.appendSurvivors(spark, t,
+        spark.table(t).withColumn("doc_id", col("doc_id") + 1000L),
+        exists = true, buckets = 0, epochId = 2L, properties = Nil)
+      val ids = graft.operators.FrameCaches.mark(spark).toArray.toSeq
+        .filterNot(mark.contains)
+        .flatMap(_.asInstanceOf[org.apache.spark.sql.Dataset[_]]
+          .queryExecution.analyzed.collect {
+            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+          })
+      def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      assert(ids.nonEmpty && ids.forall(stored), s"checkpointed $ids")
+      graft.operators.FrameCaches.releaseSince(spark, mark)
+      assert(ids.forall(!stored(_)), s"blocks left for $ids")
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender("lineage-watch")
+      ctx.updateLoggers()
+      watch.stop()
+    }
+    assert(LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .isWarnEnabled, "the WARN this test watches for must be enabled")
+    assert(!caught.asScala.exists(_.contains("lineage has been truncated")),
+      caught.asScala.mkString("\n"))
+    assert(DedupStore.storedDocIds(spark, t).count() == 2L)
   }
 }

@@ -35,16 +35,20 @@ class MaintenanceSpec extends SparkSpec {
     val b1 = Seq(("a", 10L, 1.5), ("a", 20L, 2.5), ("b", 5L, 0.5)).toDF("g", "qty", "amt")
     val b2 = Seq(("a", 1L, 0.25), ("c", 7L, 7.0)).toDF("g", "qty", "amt")
     val b3 = Seq(("b", 2L, 1.0), ("c", 3L, 3.0), ("a", 4L, 4.0)).toDF("g", "qty", "amt")
-    Seq(b1, b2, b3).foreach(b =>
-      Maintenance.maintainAdditiveAggregate(spark, t1, b, Seq("g"), Seq("qty", "amt")))
-    Seq(b3, b1, b2).foreach(b =>
-      Maintenance.maintainAdditiveAggregate(spark, t2, b, Seq("g"), Seq("qty", "amt")))
+    Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainAdditiveAggregate(spark, t1, b, Seq("g"),
+        Seq("qty", "amt"), epochId = i + 1L) }
+    Seq(b3, b1, b2).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainAdditiveAggregate(spark, t2, b, Seq("g"),
+        Seq("qty", "amt"), epochId = i + 1L) }
     val oneShot = b1.unionByName(b2).unionByName(b3)
       .groupBy("g")
       .agg(sum("qty").as("qty"), sum("amt").as("amt"), count(lit(1)).as("n_rows"))
       .as[(String, Long, Double, Long)].collect().toSet
-    val inc = spark.table(t1).as[(String, Long, Double, Long)].collect().toSet
-    val rev = spark.table(t2).as[(String, Long, Double, Long)].collect().toSet
+    def sums(t: String) = spark.table(t).select("g", "qty", "amt", "n_rows")
+      .as[(String, Long, Double, Long)].collect().toSet
+    val inc = sums(t1)
+    val rev = sums(t2)
     assert(inc == oneShot, s"incremental $inc != one-shot $oneShot")
     assert(rev == oneShot, "batch order must not matter (commutativity)")
   }
@@ -116,9 +120,11 @@ class MaintenanceSpec extends SparkSpec {
     val b1 = Seq((Option("a"), 10L), (Option.empty[String], 5L)).toDF("g", "qty")
     val b2 = Seq((Option.empty[String], 7L), (Option("a"), 1L)).toDF("g", "qty")
     val b3 = Seq((Option.empty[String], 3L)).toDF("g", "qty")
-    Seq(b1, b2, b3).foreach(b =>
-      Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"), Seq("qty")))
-    val rows = spark.table(t).as[(Option[String], Long, Long)].collect().toSet
+    Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"), Seq("qty"),
+        epochId = i + 1L) }
+    val rows = spark.table(t).select("g", "qty", "n_rows")
+      .as[(Option[String], Long, Long)].collect().toSet
     assert(rows == Set((Some("a"), 11L, 2L), (None, 15L, 3L)),
       s"null-key group must fold into one row: $rows")
   }
@@ -153,10 +159,12 @@ class MaintenanceSpec extends SparkSpec {
     val b1 = Seq(("a", 10L, 1.5), ("a", 3L, 9.0), ("b", 5L, 0.5)).toDF("g", "qty", "amt")
     val b2 = Seq(("a", 1L, 0.25), ("c", 7L, 7.0)).toDF("g", "qty", "amt")
     val b3 = Seq(("b", 2L, 1.0), ("c", 3L, 3.0), ("a", 44L, 4.0)).toDF("g", "qty", "amt")
-    Seq(b1, b2, b3).foreach(b => Maintenance.maintainInsertOnlyExtremes(
-      spark, t1, b, Seq("g"), minCols = Seq("qty"), maxCols = Seq("qty", "amt")))
-    Seq(b3, b1, b2).foreach(b => Maintenance.maintainInsertOnlyExtremes(
-      spark, t2, b, Seq("g"), minCols = Seq("qty"), maxCols = Seq("qty", "amt")))
+    Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainInsertOnlyExtremes(spark, t1, b, Seq("g"),
+        minCols = Seq("qty"), maxCols = Seq("qty", "amt"), epochId = i + 1L) }
+    Seq(b3, b1, b2).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainInsertOnlyExtremes(spark, t2, b, Seq("g"),
+        minCols = Seq("qty"), maxCols = Seq("qty", "amt"), epochId = i + 1L) }
     val oneShot = b1.unionByName(b2).unionByName(b3)
       .groupBy("g")
       .agg(min("qty").as("min_qty"), max("qty").as("max_qty"),
@@ -202,16 +210,16 @@ class MaintenanceSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     val b1 = Seq(("a", 10L), ("b", 5L)).toDF("g", "qty")
     Maintenance.maintainAdditiveAggregate(spark, t, b1, Seq("g"), Seq("qty"),
-      epochId = Some(0L))
+      epochId = 0L)
     Maintenance.maintainAdditiveAggregate(spark, t, b1, Seq("g"), Seq("qty"),
-      epochId = Some(0L)) // replay — must not double-count
+      epochId = 0L) // replay — must not double-count
     val after0 = spark.table(t).select("g", "qty", "n_rows")
       .as[(String, Long, Long)].collect().toSet
     assert(after0 == Set(("a", 10L, 1L), ("b", 5L, 1L)),
       s"replayed epoch double-counted: $after0")
     Maintenance.maintainAdditiveAggregate(spark, t,
       Seq(("a", 1L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
-      epochId = Some(1L)) // a new epoch folds normally
+      epochId = 1L) // a new epoch folds normally
     val after1 = spark.table(t).select("g", "qty", "n_rows")
       .as[(String, Long, Long)].collect().toSet
     assert(after1 == Set(("a", 11L, 2L), ("b", 5L, 1L)), after1.toString)
@@ -226,11 +234,11 @@ class MaintenanceSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Maintenance.maintainAdditiveAggregate(spark, t,
       Seq(("a", 10L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
-      epochId = Some(5L))
+      epochId = 5L)
     val e = intercept[IllegalStateException] {
       Maintenance.maintainAdditiveAggregate(spark, t,
         Seq(("a", 3L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
-        epochId = Some(3L))
+        epochId = 3L)
     }
     assert(e.getMessage.contains("OLDER") && e.getMessage.contains("3"),
       s"unexpected: ${e.getMessage}")
@@ -239,25 +247,25 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("a batch-path fold preserves a streaming-built table's epoch marker") {
-    // round-11 advice: epochId = None against a table the streaming
-    // sink built must NOT strip _last_epoch — a later crash-replay of
-    // that epoch would then double-count
+    // every fold carries an epoch, so a later fold over a table the
+    // streaming sink built advances _last_epoch instead of stripping
+    // it — and the advanced marker fences a replay of the later epoch
     val t = table("t_gold_mixed_path")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Maintenance.maintainAdditiveAggregate(spark, t,
       Seq(("a", 10L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
-      epochId = Some(7L))
+      epochId = 7L)
     Maintenance.maintainAdditiveAggregate(spark, t,
-      Seq(("a", 5L)).toDF("g", "qty"), Seq("g"), Seq("qty")) // batch path
+      Seq(("a", 5L)).toDF("g", "qty"), Seq("g"), Seq("qty"), epochId = 8L)
     assert(spark.table(t).columns.contains("_last_epoch"),
-      "batch-path fold stripped the replay-idempotence marker")
-    assert(spark.table(t).agg(max($"_last_epoch")).as[Long].head() == 7L,
-      "the committed epoch must survive the batch-path fold")
-    // the preserved marker still fences a replay of epoch 7
+      "a later fold stripped the replay-idempotence marker")
+    assert(spark.table(t).agg(max($"_last_epoch")).as[Long].head() == 8L,
+      "the committed epoch must advance to the later fold's")
+    // the advanced marker fences a replay of epoch 8
     val folded = Maintenance.maintainAdditiveAggregate(spark, t,
       Seq(("a", 999L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
-      epochId = Some(7L))
-    assert(!folded, "replayed epoch must still no-op after a batch-path fold")
+      epochId = 8L)
+    assert(!folded, "replayed epoch must no-op after the later fold")
     assert(spark.table(t).select("g", "qty").as[(String, Long)]
       .collect().toSet == Set(("a", 15L)), "replay leaked into the standing sums")
   }
@@ -284,10 +292,11 @@ class MaintenanceSpec extends SparkSpec {
     val t = table("t_gold_keys")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Maintenance.maintainAdditiveAggregate(spark, t,
-      Seq(("x", 1L)).toDF("g", "qty"), Seq("g"), Seq("qty"))
+      Seq(("x", 1L)).toDF("g", "qty"), Seq("g"), Seq("qty"), epochId = 1L)
     Maintenance.maintainAdditiveAggregate(spark, t,
-      Seq(("y", 2L)).toDF("g", "qty"), Seq("g"), Seq("qty"))
-    val rows = spark.table(t).as[(String, Long, Long)].collect().toSet
+      Seq(("y", 2L)).toDF("g", "qty"), Seq("g"), Seq("qty"), epochId = 2L)
+    val rows = spark.table(t).select("g", "qty", "n_rows")
+      .as[(String, Long, Long)].collect().toSet
     assert(rows == Set(("x", 1L, 1L), ("y", 2L, 1L)), s"got $rows")
   }
 
@@ -299,19 +308,20 @@ class MaintenanceSpec extends SparkSpec {
     // step 1: create with a pending left batch (bases pre-append)
     val dA1 = Seq((3L, "a3")).toDF("k", "av")
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(dA1), None))
+      Some(dA1), None, epochId = 1L))
     dA1.write.mode("append").saveAsTable(ta)
     // step 2: both sides batch; key 4 joins ONLY within the step (the
     // ΔA⋈ΔB term a two-term delta rule drops), key 2 joins standing A
     val dA2 = Seq((4L, "a4"), (5L, "a5")).toDF("k", "av")
     val dB2 = Seq((4L, 40L), (2L, 20L)).toDF("k", "bv")
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(dA2), Some(dB2)))
+      Some(dA2), Some(dB2), epochId = 2L))
     dA2.write.mode("append").saveAsTable(ta)
     dB2.write.mode("append").saveAsTable(tb)
     val wholesale = spark.table(ta).join(spark.table(tb), Seq("k"))
       .as[(Long, String, Long)].collect().toSet
-    val maintained = spark.table(v).as[(Long, String, Long)].collect().toSet
+    val maintained = spark.table(v).select("k", "av", "bv")
+      .as[(Long, String, Long)].collect().toSet
     assert(maintained == wholesale, s"$maintained != $wholesale")
     assert(wholesale.map(_._1) == Set(1L, 2L, 3L, 4L), "scenario sanity")
   }
@@ -322,7 +332,7 @@ class MaintenanceSpec extends SparkSpec {
     Seq((1L, "a1"), (2L, "a2")).toDF("k", "av").write.saveAsTable(ta)
     Seq((1L, 10L)).toDF("k", "bv").write.saveAsTable(tb)
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      None, None, basesIncludeBatches = true))
+      None, None, epochId = 1L, basesIncludeBatches = true))
     // the declarative sequencing: silver appends FIRST, gold folds after.
     // key 4 exists only in this step's two batches — the ΔA⋈ΔB overlap
     // that the post-append rule must subtract exactly once
@@ -331,10 +341,11 @@ class MaintenanceSpec extends SparkSpec {
     dA.write.mode("append").saveAsTable(ta)
     dB.write.mode("append").saveAsTable(tb)
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(dA), Some(dB), basesIncludeBatches = true))
+      Some(dA), Some(dB), epochId = 2L, basesIncludeBatches = true))
     val wholesale = spark.table(ta).join(spark.table(tb), Seq("k"))
       .as[(Long, String, Long)].collect().toSet
-    val maintained = spark.table(v).as[(Long, String, Long)].collect().toSeq
+    val maintained = spark.table(v).select("k", "av", "bv")
+      .as[(Long, String, Long)].collect().toSeq
     assert(maintained.toSet == wholesale, s"$maintained != $wholesale")
     assert(maintained.size == wholesale.size,
       s"no bag-duplicates either: $maintained")
@@ -346,24 +357,29 @@ class MaintenanceSpec extends SparkSpec {
     Seq((1L, "a1")).toDF("k", "av").write.saveAsTable(ta)
     Seq((1L, 10L), (2L, 20L)).toDF("k", "bv").write.saveAsTable(tb)
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(Seq((2L, "a2")).toDF("k", "av")), None, epochId = Some(7L)))
+      Some(Seq((2L, "a2")).toDF("k", "av")), None, epochId = 7L))
     val afterCreate = spark.table(v).count()
     // same epoch re-delivered (foreachBatch crash replay): no-op
     assert(!Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(Seq((2L, "a2")).toDF("k", "av")), None, epochId = Some(7L)))
+      Some(Seq((2L, "a2")).toDF("k", "av")), None, epochId = 7L))
     assert(spark.table(v).count() == afterCreate, "replay must not append")
     // older epoch: loud failure, never a silent drop
     val e = intercept[IllegalStateException] {
       Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-        Some(Seq((9L, "a9")).toDF("k", "av")), None, epochId = Some(3L))
+        Some(Seq((9L, "a9")).toDF("k", "av")), None, epochId = 3L)
     }
     assert(e.getMessage.contains("OLDER"))
-    // batch path (no epoch) against the epoch-built view keeps the marker
+    // a later epoch appends and advances the marker, which then fences
+    // a replay of that epoch
     assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      None, Some(Seq((1L, 11L)).toDF("k", "bv"))))
+      None, Some(Seq((1L, 11L)).toDF("k", "bv")), epochId = 8L))
     val marks = spark.table(v).select(max(col("_last_epoch")))
       .as[Long].head()
-    assert(marks == 7L, "the committed epoch must survive a batch-path append")
+    assert(marks == 8L, "the committed epoch must advance with the append")
+    val afterLater = spark.table(v).count()
+    assert(!Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
+      None, Some(Seq((1L, 11L)).toDF("k", "bv")), epochId = 8L))
+    assert(spark.table(v).count() == afterLater, "replay must not append")
   }
 
   test("join view: epoch'd fold on a marker-less view and column overlap both refuse") {
@@ -371,11 +387,11 @@ class MaintenanceSpec extends SparkSpec {
     Seq(ta, tb, v).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     Seq((1L, "x")).toDF("k", "av").write.saveAsTable(ta)
     Seq((1L, 5L)).toDF("k", "bv").write.saveAsTable(tb)
-    assert(Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-      Some(Seq((2L, "y")).toDF("k", "av")), None))
+    // a view built by hand carries no marker column
+    Seq((1L, "x", 5L)).toDF("k", "av", "bv").write.saveAsTable(v)
     val e = intercept[IllegalStateException] {
       Maintenance.maintainJoinView(spark, v, ta, tb, Seq("k"),
-        Some(Seq((3L, "z")).toDF("k", "av")), None, epochId = Some(1L))
+        Some(Seq((3L, "z")).toDF("k", "av")), None, epochId = 1L)
     }
     assert(e.getMessage.contains("without epoch fencing"))
     // overlapping non-key columns: refuse, never silently disambiguate
@@ -384,7 +400,7 @@ class MaintenanceSpec extends SparkSpec {
     Seq((1L, "w")).toDF("k", "av").write.saveAsTable(tc)
     val e2 = intercept[IllegalArgumentException] {
       Maintenance.maintainJoinView(spark, table("t_jvr2"), ta, tc, Seq("k"),
-        Some(Seq((2L, "q")).toDF("k", "av")), None)
+        Some(Seq((2L, "q")).toDF("k", "av")), None, epochId = 1L)
     }
     assert(e2.getMessage.contains("disjoint"))
   }
@@ -450,11 +466,12 @@ class MaintenanceSpec extends SparkSpec {
     val b3 = Seq(("a", 100L), ("c", 12345L)).toDF("g", "cents")
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
       assert(Maintenance.maintainQuantileView(spark, t1, b, Seq("g"), "cents",
-        epochId = Some(i.toLong)))
+        epochId = i.toLong))
     }
-    // order flip (no epochs — library batch path) still equals one-shot
-    Seq(b3, b1, b2).foreach(b =>
-      Maintenance.maintainQuantileView(spark, t2, b, Seq("g"), "cents"))
+    // order flip (epochs numbered in fold order) still equals one-shot
+    Seq(b3, b1, b2).zipWithIndex.foreach { case (b, i) =>
+      Maintenance.maintainQuantileView(spark, t2, b, Seq("g"), "cents",
+        epochId = i.toLong) }
     val oneShot = graft.operators.Sketches.hdrSketchBy(
         b1.unionByName(b2).unionByName(b3), Seq("g"), col("cents"))
       .as[(String, Long, Long)].collect().toSet
@@ -463,11 +480,11 @@ class MaintenanceSpec extends SparkSpec {
     assert(regs(t1) == oneShot && regs(t2) == oneShot)
     // same-epoch replay no-ops; older epoch throws (counts ADD)
     assert(!Maintenance.maintainQuantileView(spark, t1, b3, Seq("g"), "cents",
-      epochId = Some(2L)))
+      epochId = 2L))
     assert(regs(t1) == oneShot, "replayed epoch must not double-count")
     val e = intercept[IllegalStateException] {
       Maintenance.maintainQuantileView(spark, t1, b1, Seq("g"), "cents",
-        epochId = Some(0L))
+        epochId = 0L)
     }
     assert(e.getMessage.contains("OLDER"), e.getMessage)
   }
@@ -478,8 +495,10 @@ class MaintenanceSpec extends SparkSpec {
     // key 'x': 1..1000 cents uniformly; key 'y': small exact values
     val b1 = (1L to 500L).map(("x", _)) ++ Seq(("y", 3L), ("y", 9L))
     val b2 = (501L to 1000L).map(("x", _)) ++ Seq(("y", 27L))
-    Maintenance.maintainQuantileView(spark, t, b1.toDF("g", "cents"), Seq("g"), "cents")
-    Maintenance.maintainQuantileView(spark, t, b2.toDF("g", "cents"), Seq("g"), "cents")
+    Maintenance.maintainQuantileView(spark, t, b1.toDF("g", "cents"), Seq("g"),
+      "cents", epochId = 1L)
+    Maintenance.maintainQuantileView(spark, t, b2.toDF("g", "cents"), Seq("g"),
+      "cents", epochId = 2L)
     val est = Maintenance.quantileViewEstimate(spark, t, Seq("g"), Seq(500, 900))
       .as[(String, Int, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
@@ -524,11 +543,11 @@ class MaintenanceSpec extends SparkSpec {
     def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     // three folds into a BUCKETED store: distinct content per epoch
     DedupStore.maintain(spark, t, docs(1L -> "alpha bravo charlie delta"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(100L))
+      "doc_id", "text", storeBuckets = 4, epochId = 100L)
     DedupStore.maintain(spark, t, docs(2L -> "echo foxtrot golf hotel"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(101L))
+      "doc_id", "text", storeBuckets = 4, epochId = 101L)
     DedupStore.maintain(spark, t, docs(3L -> "india juliet kilo lima"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(102L))
+      "doc_id", "text", storeBuckets = 4, epochId = 102L)
     val preSurvivors = spark.table(t).filter($"_epoch" > 100L)
       .orderBy("doc_id", "band_idx").collect().toSeq
     // keep 2 epochs anchored at the committed (102): 101,102 survive
@@ -549,7 +568,7 @@ class MaintenanceSpec extends SparkSpec {
     // identity guard with it) re-admits as fresh
     val f = DedupStore.maintain(spark, t,
       docs(20L -> "echo foxtrot golf hotel", 1L -> "alpha bravo charlie delta"),
-      "doc_id", "text", storeBuckets = 4, epochId = Some(103L))
+      "doc_id", "text", storeBuckets = 4, epochId = 103L)
     assert(f.applied)
     val ids = DedupStore.storedDocIds(spark, t)
       .select("doc_id").as[Long].collect().toSet
@@ -565,9 +584,9 @@ class MaintenanceSpec extends SparkSpec {
     val vA = Array(1.0f, 0.0f, 0.0f, 0.0f)
     val vB = Array(0.0f, 1.0f, 0.0f, 0.0f)
     VectorDedupStore.maintain(spark, t, vecs(1L -> vA), "vec_id",
-      "embedding", 12000L, numCentroids = 1, nprobe = 1, epochId = Some(200L))
+      "embedding", 12000L, numCentroids = 1, nprobe = 1, epochId = 200L)
     VectorDedupStore.maintain(spark, t, vecs(2L -> vB), "vec_id",
-      "embedding", 12000L, numCentroids = 1, nprobe = 1, epochId = Some(201L))
+      "embedding", 12000L, numCentroids = 1, nprobe = 1, epochId = 201L)
     val model = spark.table(s"${t}_model").collect().toSeq
     val (deleted, kept) = Maintenance.pruneStore(spark, t, keepEpochs = 1L)
     assert(deleted == 1L && kept == 1L, s"($deleted, $kept)")
@@ -631,5 +650,55 @@ class MaintenanceSpec extends SparkSpec {
     assert(intercept[IllegalArgumentException] {
       DedupStore.bandOccupancyStats(spark, table("t_band_stats_none"))
     }.getMessage.contains("no such table"))
+  }
+
+  test("every fenced fold: found at e, replay e skips, e-1 refuses, e+1 applies") {
+    val ta = table("t_fence_a"); val tb = table("t_fence_b")
+    Seq(ta, tb).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq((1L, "a1")).toDF("k", "av").write.saveAsTable(ta)
+    Seq((1L, 10L)).toDF("k", "bv").write.saveAsTable(tb)
+    def g(e: Long) = Seq(("a", e)).toDF("g", "qty")
+    def text(e: Long) = if (e % 2 == 0) "alpha bravo charlie delta"
+      else "india juliet kilo lima"
+    val views = (t: String) => EpochFence.last(spark.table(t))
+    val stores = (t: String) => DedupStore.committedEpoch(spark, t)
+    // (name, fold of epoch e's batch into t → applied, committed epoch)
+    val folds: Seq[(String, (String, Long) => Boolean, String => Option[Long])] = Seq(
+      ("additive", (t, e) => Maintenance.maintainAdditiveAggregate(spark, t,
+        g(e), Seq("g"), Seq("qty"), epochId = e), views),
+      ("extremes", (t, e) => Maintenance.maintainInsertOnlyExtremes(spark, t,
+        g(e), Seq("g"), Seq("qty"), Seq("qty"), epochId = e), views),
+      ("quantile", (t, e) => Maintenance.maintainQuantileView(spark, t,
+        g(e), Seq("g"), "qty", epochId = e), views),
+      ("join_view", (t, e) => Maintenance.maintainJoinView(spark, t, ta, tb,
+        Seq("k"), Some(Seq((e, s"a$e")).toDF("k", "av")),
+        Some(Seq((e, e)).toDF("k", "bv")), epochId = e), views),
+      ("dedup_store", (t, e) => DedupStore.maintain(spark, t,
+        Seq((e, text(e))).toDF("doc_id", "text"), "doc_id", "text",
+        epochId = e).applied, stores),
+      ("media_store", (t, e) => MediaDedupStore.maintain(spark, t,
+        Seq((e, e * 0x0f0f0f0f0f0f0fL)).toDF("media_id", "dhash"),
+        "media_id", "dhash", epochId = e).applied, stores),
+      ("vector_store", (t, e) => VectorDedupStore.maintain(spark, t,
+        Seq((e, Array(1.0f, e.toFloat, 0.0f))).toDF("vec_id", "v"),
+        "vec_id", "v", 12000L, numCentroids = 1, nprobe = 1,
+        epochId = e).applied, stores))
+    val e = 10L
+    for ((name, fold, committed) <- folds) {
+      val t = table(s"t_fence_$name")
+      Seq(t, s"${t}_model").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $x"))
+      def rows = spark.table(t).collect().map(_.toString).sorted.toSeq
+      assert(fold(t, e), s"$name: the founding fold applies")
+      val founded = rows
+      assert(!fold(t, e), s"$name: a replay of the committed epoch skips")
+      assert(rows == founded, s"$name: a skipped replay leaves the table")
+      val older = intercept[IllegalStateException](fold(t, e - 1))
+      assert(older.getMessage.contains(s"batch epoch ${e - 1} is OLDER than " +
+        s"the committed epoch $e") && older.getMessage.contains(t),
+        s"$name: ${older.getMessage}")
+      assert(rows == founded, s"$name: a refused backfill leaves the table")
+      assert(fold(t, e + 1), s"$name: a newer epoch applies")
+      assert(committed(t).contains(e + 1), s"$name: the fence advances")
+    }
   }
 }

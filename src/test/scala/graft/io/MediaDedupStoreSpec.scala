@@ -38,14 +38,14 @@ class MediaDedupStoreSpec extends SparkSpec {
     drop(t)
     // batch 1: 1/3 near-dup re-encodes (1 keeps), 5 unrelated
     val f1 = MediaDedupStore.maintain(spark, t, df(1L -> hA, 3L -> hA2, 5L -> hB),
-      "media_id", "dhash", epochId = Some(1L))
+      "media_id", "dhash", epochId = 1L)
     assert(f1.applied && f1.batchRows == 3L, f1.toString)
     assert(stored(t) == Set(1L -> 1L, 5L -> 1L), stored(t).toString)
     // batch 2: 202 is a re-encode of STORED content (probe drops it),
     // 204/206 a fresh near-dup cluster (204 keeps)
     val f2 = MediaDedupStore.maintain(spark, t,
       df(202L -> hA3, 204L -> hC, 206L -> hC2),
-      "media_id", "dhash", epochId = Some(2L))
+      "media_id", "dhash", epochId = 2L)
     assert(f2.applied && f2.batchRows == 3L, f2.toString)
     assert(stored(t) == Set(1L -> 1L, 5L -> 1L, 204L -> 2L),
       stored(t).toString)
@@ -57,15 +57,15 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_fence")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", epochId = Some(5L))
+      "media_id", "dhash", epochId = 5L)
     assert(DedupStore.committedEpoch(spark, t).contains(5L))
     val replay = MediaDedupStore.maintain(spark, t, df(2L -> hB),
-      "media_id", "dhash", epochId = Some(5L))
+      "media_id", "dhash", epochId = 5L)
     assert(!replay.applied && replay.batchRows == 0L, replay.toString)
     assert(stored(t).map(_._1) == Set(1L))
     val e = intercept[IllegalStateException] {
       MediaDedupStore.maintain(spark, t, df(2L -> hB),
-        "media_id", "dhash", epochId = Some(3L))
+        "media_id", "dhash", epochId = 3L)
     }
     assert(e.getMessage.contains("OLDER"), e.getMessage)
   }
@@ -74,11 +74,11 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_false_friend")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", epochId = Some(1L))
+      "media_id", "dhash", epochId = 1L)
     // hFalse collides with hA in band 0 (the banded candidate path)
     // but sits 48 bits away — NOT a near-dup; it must append
     MediaDedupStore.maintain(spark, t, df(9L -> hFalse),
-      "media_id", "dhash", epochId = Some(2L))
+      "media_id", "dhash", epochId = 2L)
     assert(stored(t).map(_._1) == Set(1L, 9L), stored(t).toString)
   }
 
@@ -97,9 +97,9 @@ class MediaDedupStoreSpec extends SparkSpec {
     val uncapped = table("t_hot_plain")
     Seq(capped, uncapped).foreach(drop)
     MediaDedupStore.maintain(spark, capped, batch, "media_id", "dhash",
-      maxBucketSize = Some(3L), epochId = Some(1L))
+      maxBucketSize = Some(3L), epochId = 1L)
     MediaDedupStore.maintain(spark, uncapped, batch, "media_id", "dhash",
-      epochId = Some(1L))
+      epochId = 1L)
     assert(stored(capped).map(_._1) == Set(1L, 2L, 3L, 4L),
       stored(capped).toString)
     assert(stored(uncapped).map(_._1) == Set(1L, 3L, 4L),
@@ -108,11 +108,11 @@ class MediaDedupStoreSpec extends SparkSpec {
     // band is the (still) hot stored bucket passes through uncaught
     val probeBatch = df(100L -> (x ^ (2L << 16) ^ (2L << 32) ^ (2L << 48)))
     MediaDedupStore.maintain(spark, capped, probeBatch, "media_id", "dhash",
-      maxBucketSize = Some(3L), epochId = Some(2L))
+      maxBucketSize = Some(3L), epochId = 2L)
     assert(stored(capped).map(_._1).contains(100L),
       "a hot store band is excluded from the probe (recall trade)")
     MediaDedupStore.maintain(spark, uncapped, probeBatch, "media_id", "dhash",
-      epochId = Some(2L))
+      epochId = 2L)
     assert(!stored(uncapped).map(_._1).contains(100L),
       "uncapped, the probe catches the stored near-dup")
   }
@@ -121,7 +121,7 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_probe_read")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA, 5L -> hB),
-      "media_id", "dhash", epochId = Some(1L))
+      "media_id", "dhash", epochId = 1L)
     val hits = MediaDedupStore.probeHits(spark, t,
         df(10L -> hA2, 11L -> hC), "media_id", "dhash")
       .as[Long].collect().toSet
@@ -133,9 +133,9 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_identity")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", epochId = Some(1L))
+      "media_id", "dhash", epochId = 1L)
     MediaDedupStore.maintain(spark, t, df(1L -> hB, 2L -> hC),
-      "media_id", "dhash", epochId = Some(2L))
+      "media_id", "dhash", epochId = 2L)
     assert(stored(t) == Set(1L -> 1L, 2L -> 2L), stored(t).toString)
     assert(spark.table(t).filter(col("media_id") === 1L).count() == 4L,
       "id 1 must keep exactly its original four band rows")
@@ -149,9 +149,9 @@ class MediaDedupStoreSpec extends SparkSpec {
     val b2 = df(202L -> hA3, 204L -> hC)
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       MediaDedupStore.maintain(spark, plain, b, "media_id", "dhash",
-        epochId = Some(i + 1L))
+        epochId = i + 1L)
       MediaDedupStore.maintain(spark, bucketed, b, "media_id", "dhash",
-        storeBuckets = 4, epochId = Some(i + 1L))
+        storeBuckets = 4, epochId = i + 1L)
     }
     assert(stored(bucketed) == stored(plain))
     val agg = spark.table(bucketed).groupBy("band_key").count()
@@ -161,7 +161,7 @@ class MediaDedupStoreSpec extends SparkSpec {
     // bucket-spec drift refuses with the store's own diagnostic
     val e = intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, bucketed, b1, "media_id", "dhash",
-        storeBuckets = 8, epochId = Some(3L))
+        storeBuckets = 8, epochId = 3L)
     }
     assert(e.getMessage.contains("bucket layout is fixed"), e.getMessage)
   }
@@ -171,15 +171,16 @@ class MediaDedupStoreSpec extends SparkSpec {
     drop(t)
     Seq((1L, "x")).toDF("k", "v").write.mode("overwrite").saveAsTable(t)
     assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, t, df(1L -> hA), "media_id", "dhash")
+      MediaDedupStore.maintain(spark, t, df(1L -> hA), "media_id", "dhash",
+        epochId = 1L)
     }.getMessage.contains("not a media dedup store"))
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, table("t_cfg"), df(1L -> hA),
-        "media_id", "dhash", bands = 5)
+        "media_id", "dhash", bands = 5, epochId = 1L)
     }.getMessage.contains("bands"))
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, table("t_cfg"), df(1L -> hA),
-        "media_id", "dhash", maxHamming = 64L)
+        "media_id", "dhash", maxHamming = 64L, epochId = 1L)
     }.getMessage.contains("maxHamming"))
   }
 
@@ -187,12 +188,12 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_knob_drift")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", bands = 4, epochId = Some(1L))
+      "media_id", "dhash", bands = 4, epochId = 1L)
     // band keys are a function of `bands` — a mismatched fold or probe
     // would band-join incompatible keys and silently match NOTHING
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, t, df(2L -> hB),
-        "media_id", "dhash", bands = 8, epochId = Some(2L))
+        "media_id", "dhash", bands = 8, epochId = 2L)
     }.getMessage.contains("frozen fold settings"))
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.probeHits(spark, t, df(10L -> hA2),
@@ -207,9 +208,9 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t = table("t_lifecycle_full")
     drop(t)
     MediaDedupStore.maintain(spark, t, df(1L -> hA, 5L -> hB),
-      "media_id", "dhash", epochId = Some(10L))
+      "media_id", "dhash", epochId = 10L)
     MediaDedupStore.maintain(spark, t, df(204L -> hC),
-      "media_id", "dhash", epochId = Some(20L))
+      "media_id", "dhash", epochId = 20L)
     // compaction folds the per-fold file growth; the graft.* properties
     // (epoch fence + frozen knobs) survive the staged rewrite
     val (before, after) = Maintenance.compact(spark, t, 1000000L)
@@ -225,10 +226,10 @@ class MediaDedupStoreSpec extends SparkSpec {
     // refuses, a matching fold still lands
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, t, df(7L -> hA2),
-        "media_id", "dhash", bands = 8, epochId = Some(30L))
+        "media_id", "dhash", bands = 8, epochId = 30L)
     }.getMessage.contains("frozen fold settings"))
     MediaDedupStore.maintain(spark, t, df(7L -> hA2),
-      "media_id", "dhash", epochId = Some(30L))
+      "media_id", "dhash", epochId = 30L)
     // hA was PRUNED, so its re-encode is re-admittable — the
     // documented retention trade, visible end to end
     assert(stored(t).map(_._1) == Set(204L, 7L), stored(t).toString)
@@ -240,10 +241,10 @@ class MediaDedupStoreSpec extends SparkSpec {
     Seq(fwd, rev).foreach(drop)
     val b1 = df(1L -> hA, 3L -> hB)
     val b2 = df(2L -> hA2, 4L -> hC)
-    MediaDedupStore.maintain(spark, fwd, b1, "media_id", "dhash", epochId = Some(1L))
-    MediaDedupStore.maintain(spark, fwd, b2, "media_id", "dhash", epochId = Some(2L))
-    MediaDedupStore.maintain(spark, rev, b2, "media_id", "dhash", epochId = Some(1L))
-    MediaDedupStore.maintain(spark, rev, b1, "media_id", "dhash", epochId = Some(2L))
+    MediaDedupStore.maintain(spark, fwd, b1, "media_id", "dhash", epochId = 1L)
+    MediaDedupStore.maintain(spark, fwd, b2, "media_id", "dhash", epochId = 2L)
+    MediaDedupStore.maintain(spark, rev, b2, "media_id", "dhash", epochId = 1L)
+    MediaDedupStore.maintain(spark, rev, b1, "media_id", "dhash", epochId = 2L)
     // whichever of {1, 2} (the near-dup pair across folds) arrived
     // first keeps; exactly one of them is stored either way
     for (t <- Seq(fwd, rev)) {
@@ -265,9 +266,9 @@ class MediaDedupStoreSpec extends SparkSpec {
     val tQ = table("t_keeper_q")
     Seq(tMin, tQ).foreach(drop)
     MediaDedupStore.maintain(spark, tMin, batch, "media_id", "dhash",
-      epochId = Some(1L))
+      epochId = 1L)
     MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-      epochId = Some(1L), keeper = "max_quality",
+      epochId = 1L, keeper = "max_quality",
       qualityCol = Some("bytes"))
     assert(stored(tMin).map(_._1) == Set(1L, 5L))
     assert(stored(tQ).map(_._1) == Set(3L, 5L),
@@ -277,11 +278,11 @@ class MediaDedupStoreSpec extends SparkSpec {
       Seq("_epoch", "band_idx", "band_key", "dhash", "media_id"))
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-        keeper = "max_quality")
+        epochId = 2L, keeper = "max_quality")
     }.getMessage.contains("needs qualityCol"))
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-        qualityCol = Some("bytes"))
+        epochId = 2L, qualityCol = Some("bytes"))
     }.getMessage.contains("only used by keeper max_quality"))
   }
 
@@ -296,7 +297,7 @@ class MediaDedupStoreSpec extends SparkSpec {
     val t2 = table("t_probe_noprop")
     drop(t2)
     MediaDedupStore.maintain(spark, t2, df(1L -> hA), "media_id", "dhash",
-      epochId = Some(1L))
+      epochId = 1L)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(t2))
     assert(meta.properties.get(MediaDedupStore.VerifyProperty)
@@ -309,7 +310,7 @@ class MediaDedupStoreSpec extends SparkSpec {
     }.getMessage.contains(MediaDedupStore.KnobsProperty))
     // a fold re-stamps; the probe reads again
     MediaDedupStore.maintain(spark, t2, df(2L -> hC), "media_id", "dhash",
-      epochId = Some(2L))
+      epochId = 2L)
     assert(MediaDedupStore.probeHits(spark, t2, df(9L -> hA2),
       "media_id", "dhash").as[Long].collect().toSet == Set(9L))
   }

@@ -37,14 +37,14 @@ class VectorDedupStoreSpec extends SparkSpec {
     // batch 1: 101/103 identical vectors (101 keeps), 105 orthogonal
     val f1 = VectorDedupStore.maintain(spark, t,
       df(101L -> vA, 103L -> vA, 105L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     assert(f1.applied && f1.batchRows == 3L, f1.toString)
     assert(stored(t) == Set(101L -> 1L, 105L -> 1L), stored(t).toString)
     // batch 2: 202 near-dups STORED content (dropped by the probe),
     // 204/206 a fresh near-dup cluster (204 keeps)
     val f2 = VectorDedupStore.maintain(spark, t,
       df(202L -> vA2, 204L -> vC, 206L -> vC2),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     assert(f2.applied && f2.batchRows == 3L, f2.toString)
     assert(stored(t) == Set(101L -> 1L, 105L -> 1L, 204L -> 2L),
       stored(t).toString)
@@ -55,7 +55,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     val model1 = spark.table(s"${t}_model")
       .orderBy("centroid_id").collect().toSeq
     // a batch with triple-magnitude raw vectors: unit-normalization +
@@ -63,7 +63,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     // to vC, so 30/60 near-dup each other and join the store fresh)
     VectorDedupStore.maintain(spark, t,
       df(30L -> vC.map(_ * 3f), 60L -> vC2.map(_ * 3f)),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     assert(spark.table(s"${t}_model")
       .orderBy("centroid_id").collect().toSeq == model1,
       "the model table must never change after creation")
@@ -71,7 +71,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     // and probing still works against the frozen scale: an exact dup
     // of stored 30 (delivered at raw scale) drops
     VectorDedupStore.maintain(spark, t, df(90L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(3L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 3L)
     assert(stored(t).map(_._1) == Set(1L, 2L, 30L),
       "a unit-equal re-delivery must near-dup its stored self")
   }
@@ -81,16 +81,16 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     assert(VectorDedupStore.maintain(spark, t, df(1L -> vA),
-      "vec_id", "embedding", Score, epochId = Some(10L)).applied)
+      "vec_id", "embedding", Score, epochId = 10L).applied)
     assert(DedupStore.committedEpoch(spark, t).contains(10L),
       "the shared O(1) epoch property carries the vector store's fence too")
     val skip = VectorDedupStore.maintain(spark, t, df(2L -> vB),
-      "vec_id", "embedding", Score, epochId = Some(10L))
+      "vec_id", "embedding", Score, epochId = 10L)
     assert(!skip.applied && skip.batchRows == 0L)
     assert(stored(t) == Set(1L -> 10L), "skipped fold must not append")
     val e = intercept[IllegalStateException] {
       VectorDedupStore.maintain(spark, t, df(3L -> vC),
-        "vec_id", "embedding", Score, epochId = Some(9L))
+        "vec_id", "embedding", Score, epochId = 9L)
     }
     assert(e.getMessage.contains("OLDER"))
   }
@@ -101,7 +101,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     Seq((1L, "x")).toDF("k", "v").write.mode("overwrite").saveAsTable(t)
     val e = intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, t, df(1L -> vA),
-        "vec_id", "embedding", Score)
+        "vec_id", "embedding", Score, epochId = 1L)
     }
     assert(e.getMessage.contains("not a vector dedup store"))
 
@@ -109,11 +109,11 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t2")
     spark.sql(s"DROP TABLE IF EXISTS ${t2}_model")
     VectorDedupStore.maintain(spark, t2, df(1L -> vA),
-      "vec_id", "embedding", Score, epochId = Some(1L))
+      "vec_id", "embedding", Score, epochId = 1L)
     spark.sql(s"DROP TABLE ${t2}_model")
     val e2 = intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, t2, df(2L -> vB),
-        "vec_id", "embedding", Score, epochId = Some(2L))
+        "vec_id", "embedding", Score, epochId = 2L)
     }
     assert(e2.getMessage.contains("no model table"))
   }
@@ -131,13 +131,13 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vB, 10L -> vC, 20L -> vCb),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     assert(stored(t).map(_._1) == Set(1L, 2L, 10L, 20L),
       "cross-cell near-dups are NOT merged within a batch (by design)")
     // the same vector re-delivered probes nprobe=2 cells and dies on
     // BOTH stored copies
     VectorDedupStore.maintain(spark, t, df(90L -> vCb),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     assert(stored(t).map(_._1) == Set(1L, 2L, 10L, 20L))
   }
 
@@ -151,7 +151,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     val vD = Array(0.0f, 0.0f, 0.0f, 1.0f)
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vB, 3L -> vC, 4L -> vD),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     // cell occupancies: vB's cell holds 1; centroid 1's cell holds 3.
     // cap 2: the 3-occupant cell is excluded from the probe, so a
     // re-delivery of its content is NOT dropped (the recall trade,
@@ -161,7 +161,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     assert(occ.values.max == 3L && occ.values.min == 1L, occ.toString)
     val r = VectorDedupStore.maintain(spark, t, df(90L -> vC, 91L -> vB),
       "vec_id", "embedding", Score, numCentroids = 2,
-      maxCellSize = Some(2L), epochId = Some(2L))
+      maxCellSize = Some(2L), epochId = 2L)
     assert(r.applied)
     val ids = stored(t).map(_._1)
     assert(ids.contains(90L),
@@ -174,9 +174,9 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t2}_model")
     VectorDedupStore.maintain(spark, t2,
       df(1L -> vA, 2L -> vB, 3L -> vC, 4L -> Array(0.0f, 0.0f, 0.0f, 1.0f)),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     VectorDedupStore.maintain(spark, t2, df(90L -> vC, 91L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     assert(stored(t2).map(_._1) == Set(1L, 2L, 3L, 4L),
       "uncapped control: both re-deliveries drop")
   }
@@ -194,7 +194,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     // vA/vC/vD all home to centroid 1's cell (occupancy 3); vB alone
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vB, 3L -> vC, 4L -> vD),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     // batch: near-dups of hot-cell content (vA2, vC2), of the cold
     // cell (vB), and a genuine novel direction (diagonal, no match)
     val batch = df(90L -> vA2, 91L -> vC2, 92L -> vB,
@@ -226,27 +226,27 @@ class VectorDedupStoreSpec extends SparkSpec {
     // all-zero, every fold silently appends nothing) must not be born
     val e1 = intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, t, df(), "vec_id", "embedding",
-        Score, numCentroids = 2, epochId = Some(1L))
+        Score, numCentroids = 2, epochId = 1L)
     }
     assert(e1.getMessage.contains("founding batch"), e1.getMessage)
     // all-zero vectors: amax = 0, same permanent brick
     val e2 = intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, t,
         df(1L -> Array(0.0f, 0.0f, 0.0f, 0.0f)),
-        "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+        "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     }
     assert(e2.getMessage.contains("zero"), e2.getMessage)
     assert(!spark.catalog.tableExists(t), "no store debris after refusal")
     // and a model table emptied behind the store's back refuses too
     VectorDedupStore.maintain(spark, t, df(1L -> vA), "vec_id",
-      "embedding", Score, numCentroids = 1, nprobe = 1, epochId = Some(1L))
+      "embedding", Score, numCentroids = 1, nprobe = 1, epochId = 1L)
     spark.table(s"${t}_model").filter(lit(false)).write
       .mode("overwrite").saveAsTable(s"${t}_model_empty")
     spark.sql(s"DROP TABLE ${t}_model")
     spark.sql(s"ALTER TABLE ${t}_model_empty RENAME TO ${t}_model")
     val e3 = intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, t, df(2L -> vB), "vec_id",
-        "embedding", Score, numCentroids = 1, nprobe = 1, epochId = Some(2L))
+        "embedding", Score, numCentroids = 1, nprobe = 1, epochId = 2L)
     }
     assert(e3.getMessage.contains("no centroid rows"), e3.getMessage)
   }
@@ -267,7 +267,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vA, 3L -> vA, 10L -> vB, 11L -> vB, 12L -> vB),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     val occ = spark.table(t).groupBy("cell").count()
       .as[(Long, Long)].collect().toMap
     assert(occ.size == 2 && occ.values.toSet == Set(3L),
@@ -287,7 +287,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vA, 3L -> vA, 4L -> vA, 5L -> vA),
       "vec_id", "embedding", Score, numCentroids = 1, nprobe = 1,
-      maxCellSize = Some(3L), epochId = Some(1L))
+      maxCellSize = Some(3L), epochId = 1L)
     assert(stored(t).map(_._1) == Set(1L, 2L, 3L, 4L, 5L),
       "a hot home cell passes through un-deduped under the cap")
     // uncapped control: the same batch collapses to its smallest id
@@ -297,7 +297,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     VectorDedupStore.maintain(spark, t2,
       df(1L -> vA, 2L -> vA, 3L -> vA, 4L -> vA, 5L -> vA),
       "vec_id", "embedding", Score, numCentroids = 1, nprobe = 1,
-      epochId = Some(1L))
+      epochId = 1L)
     assert(stored(t2).map(_._1) == Set(1L),
       "uncapped control: the cluster keeps its smallest id")
   }
@@ -307,11 +307,11 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     // vec 1 re-delivered with ORTHOGONAL content: the probe would miss
     // it (score 0); the identity guard must still refuse the append
     VectorDedupStore.maintain(spark, t, df(1L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     assert(spark.table(t).filter(col("vec_id") === 1L).count() == 1L,
       "one stored row per vec id, ever")
     assert(stored(t) == Set(1L -> 1L, 2L -> 1L))
@@ -327,14 +327,14 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vA2),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     // fold-2 content is orthogonal to BOTH founding centroids (zero
     // dot against each), so every vector ties to the lowest-id cell
     val vD = Array(0.0f, 0.0f, 0.0f, 1.0f)
     VectorDedupStore.maintain(spark, t,
       df(10L -> vC, 11L -> vC2, 12L -> vD),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     val occBefore = spark.table(t).groupBy("cell").count()
       .as[(Long, Long)].collect().toMap
     assert(occBefore.values.max == 4L,
@@ -379,9 +379,9 @@ class VectorDedupStoreSpec extends SparkSpec {
     // works against the NEW model: a re-delivery of stored content dies
     assert(!VectorDedupStore.maintain(spark, t, df(90L -> vC),
       "vec_id", "embedding", Score, numCentroids = 2,
-      epochId = Some(2L)).applied)
+      epochId = 2L).applied)
     VectorDedupStore.maintain(spark, t, df(90L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(3L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 3L)
     assert(!stored(t).map(_._1).contains(90L),
       "a stored-content re-delivery must still drop after retrain")
   }
@@ -392,10 +392,10 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vA2),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     VectorDedupStore.maintain(spark, t, df(10L -> vB, 11L -> vC),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     VectorDedupStore.retrain(spark, t)
     val model1 = spark.table(s"${t}_model").orderBy("centroid_id")
       .collect().toSeq
@@ -425,9 +425,9 @@ class VectorDedupStoreSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     }
     VectorDedupStore.maintain(spark, tMin, batch, "vec_id", "embedding",
-      Score, numCentroids = 2, epochId = Some(1L))
+      Score, numCentroids = 2, epochId = 1L)
     VectorDedupStore.maintain(spark, tFar, batch, "vec_id", "embedding",
-      Score, numCentroids = 2, epochId = Some(1L),
+      Score, numCentroids = 2, epochId = 1L,
       keeper = "centroid_farthest")
     assert(stored(tMin).map(_._1) == Set(1L, 2L), stored(tMin).toString)
     assert(stored(tFar).map(_._1) == Set(9L, 2L),
@@ -436,7 +436,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     // unknown policies refuse loudly
     assert(intercept[IllegalArgumentException] {
       VectorDedupStore.maintain(spark, tFar, batch, "vec_id", "embedding",
-        Score, epochId = Some(2L), keeper = "largest_id")
+        Score, epochId = 2L, keeper = "largest_id")
     }.getMessage.contains("keeper"))
   }
 
@@ -448,12 +448,12 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vA2),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     val vD = Array(0.0f, 0.0f, 0.0f, 1.0f)
     VectorDedupStore.maintain(spark, t,
       df(10L -> vC, 11L -> vC2, 12L -> vD),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     val s0 = VectorDedupStore.occupancyStats(spark, t, Some(3L))
     // 2 cells over 5 rows, the hot one holding 4: spread =
     // 1000·4·2/5 = 1600 permille, one cell over the 3-cap
@@ -480,7 +480,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     val hits = VectorDedupStore.probeHits(spark, t,
         df(10L -> vA2, 11L -> vC), "vec_id", "embedding", Score)
       .as[Long].collect().toSet
@@ -495,7 +495,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     // plant the post-prune drift shape: every surviving row in ONE of
     // the model's two cells. Counting only OCCUPIED cells would read
     // this catastrophe as spread = 1000 ("perfectly balanced") and the
@@ -522,7 +522,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB, 3L -> vC),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     // occupancy {2,1} with k=2 -> spread 1333 < 1500: the same-k
     // retrain gates...
     val r0 = VectorDedupStore.retrain(spark, t,
@@ -542,7 +542,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB, 3L -> vC),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     VectorDedupStore.retrain(spark, t)
     // converged: the k-means reproduces the installed model and no row
     // moves — the second retrain must not INSERT OVERWRITE either
@@ -563,7 +563,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     val model = spark.table(s"${t}_model").orderBy("centroid_id")
       .collect().toSeq
     // the legacy-cv migration's drop-and-recreate crash shape: the
@@ -581,7 +581,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     // and the recovered store still folds: stored content re-delivery
     // drops, fresh content appends
     VectorDedupStore.maintain(spark, t, df(90L -> vA, 91L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     val ids = stored(t).map(_._1)
     assert(!ids.contains(90L) && ids.contains(91L), ids.toString)
   }
@@ -598,7 +598,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t2")
     spark.sql(s"DROP TABLE IF EXISTS ${t2}_model")
     VectorDedupStore.maintain(spark, t2, df(1L -> vA),
-      "vec_id", "embedding", Score, epochId = Some(1L))
+      "vec_id", "embedding", Score, epochId = 1L)
     spark.sql(s"DROP TABLE ${t2}_model")
     assert(intercept[IllegalArgumentException] {
       VectorDedupStore.retrain(spark, t2)
@@ -610,7 +610,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t3")
     spark.sql(s"DROP TABLE IF EXISTS ${t3}_model")
     VectorDedupStore.maintain(spark, t3, df(1L -> vA),
-      "vec_id", "embedding", Score, epochId = Some(1L))
+      "vec_id", "embedding", Score, epochId = 1L)
     spark.table(t3).filter(lit(false)).write.mode("overwrite")
       .saveAsTable(s"${t3}_emptied")
     spark.sql(s"DROP TABLE $t3")
@@ -625,7 +625,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     // rewrite the model in the pre-training shape: integer code-vector
     // centroids under a `cv` column (read back as qsum = cv, n = 1)
     spark.table(s"${t}_model")
@@ -640,7 +640,7 @@ class VectorDedupStoreSpec extends SparkSpec {
       "retrain is the declared migration path off cv models")
     // and the migrated store still folds + probes
     VectorDedupStore.maintain(spark, t, df(90L -> vA, 91L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(2L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 2L)
     val ids = stored(t).map(_._1)
     assert(!ids.contains(90L) && ids.contains(91L), ids.toString)
   }
@@ -650,7 +650,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t")
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t, df(1L -> vA, 2L -> vB, 3L -> vC),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     val probes = spark.table(t).select("vec_id", "qv", "cell")
     val sp = VectorDedupStore.storeHits(spark, t, probes, Score)
       .queryExecution.sparkPlan
@@ -674,7 +674,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $t2")
     spark.sql(s"DROP TABLE IF EXISTS ${t2}_model")
     VectorDedupStore.maintain(spark, t2, df(1L -> vA, 2L -> vB),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(t2))
     assert(meta.properties.get(VectorDedupStore.VerifyProperty)
@@ -694,7 +694,7 @@ class VectorDedupStoreSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS ${t}_model")
     VectorDedupStore.maintain(spark, t,
       df(1L -> vA, 2L -> vB, 3L -> vC, 4L -> vC2),
-      "vec_id", "embedding", Score, numCentroids = 2, epochId = Some(1L))
+      "vec_id", "embedding", Score, numCentroids = 2, epochId = 1L)
     // a k-resize forces a real (modelChanged) retrain through the
     // staged path
     VectorDedupStore.retrain(spark, t, numCentroids = Some(3))

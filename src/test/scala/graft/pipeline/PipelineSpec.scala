@@ -913,7 +913,7 @@ class PipelineSpec extends SparkSpec {
     graft.io.Maintenance.maintainQuantileView(spark, qv,
       Seq(("P01", 100L), ("P01", 900L), ("P02", 7L), ("P02", 9L))
         .toDF("product_id", "cents"),
-      Seq("product_id"), "cents")
+      Seq("product_id"), "cents", epochId = 1L)
     val yaml =
       s"""transformations:
          |  - transform_id: buyers_estimate
@@ -1669,14 +1669,14 @@ class PipelineSpec extends SparkSpec {
           |    sql_query: SELECT 1
           |    target_table: g.t
           |""".stripMargin, "unknown mode")
-    // full has no streaming twin
+    // full is batch-only
     bad("""models:
           |  - model_id: m
           |    mode: streaming
           |    stream_source: {path: /tmp/x, format: parquet}
           |    target_table: g.t
           |    refresh_type: full
-          |""".stripMargin, "streaming sink twin")
+          |""".stripMargin, "is batch-only")
     // sql_query on a streaming model
     bad("""models:
           |  - model_id: m
@@ -2242,10 +2242,10 @@ class PipelineSpec extends SparkSpec {
     // window anchored at the later fold prunes the first
     graft.io.DedupStore.maintain(spark, t,
       Seq((1L, "old content from the first crawl")).toDF("doc_id", "text"),
-      "doc_id", "text", epochId = Some(10000L))
+      "doc_id", "text", epochId = 10000L)
     graft.io.DedupStore.maintain(spark, t,
       Seq((2L, "fresh content from the latest crawl")).toDF("doc_id", "text"),
-      "doc_id", "text", epochId = Some(20000L))
+      "doc_id", "text", epochId = 20000L)
     val p = new Pipeline(spark, "2024-09-02", new FixedClock(1804000000000L))
     val reports = p.run(Map("maintenance" -> EtlConfig.fromYaml(pruneYaml)),
       Seq("maintenance"))
@@ -2282,11 +2282,11 @@ class PipelineSpec extends SparkSpec {
     graft.io.VectorDedupStore.maintain(spark, t,
       Seq((1L, vX), (2L, vX2)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     graft.io.VectorDedupStore.maintain(spark, t,
       Seq((10L, vY), (11L, vZ)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     val p = new Pipeline(spark, "2024-09-03", new FixedClock(1804000000000L))
     val reports = p.run(Map("maintenance" -> EtlConfig.fromYaml(retrainYaml)),
       Seq("maintenance"))
@@ -2330,11 +2330,11 @@ class PipelineSpec extends SparkSpec {
     graft.io.VectorDedupStore.maintain(spark, t,
       Seq((1L, vX), (2L, vX2)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(1L))
+      epochId = 1L)
     graft.io.VectorDedupStore.maintain(spark, t,
       Seq((10L, vY), (11L, vY2), (12L, vZ)).toDF("vec_id", "embedding"),
       "vec_id", "embedding", minScore = 16200L, numCentroids = 2,
-      epochId = Some(2L))
+      epochId = 2L)
     def ctl(p: Pipeline, date: String): Map[String, Long] =
       spark.table(p.meta.controlTable)
         .filter($"layer".startsWith("maintenance.") &&
@@ -2745,7 +2745,7 @@ class PipelineSpec extends SparkSpec {
     graft.io.DedupStore.maintain(spark, store,
       Seq(1L -> "alpha beta gamma delta epsilon zeta eta theta")
         .toDF("doc_id", "text"),
-      "doc_id", "text", epochId = Some(1L))
+      "doc_id", "text", epochId = 1L)
     // the probe batch: 10 re-delivers stored content, 11 is fresh
     spark.sql("DROP TABLE IF EXISTS bronze_e2e.read_batch")
     Seq(10L -> "alpha beta gamma delta epsilon zeta eta theta",

@@ -898,7 +898,7 @@ class PlanSpec extends SparkSpec {
     s.sql(s"DROP TABLE IF EXISTS $t")
     graft.io.DedupStore.maintain(s, t,
       Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"),
-      "doc_id", "text", epochId = Some(1L))
+      "doc_id", "text", epochId = 1L)
     val banded = graft.operators.Dedup.withMinhashBands(
       Seq((2L, "one two three four five six")).toDF("doc_id", "_text"),
       "_text", 3, 16, 4).drop("_text")

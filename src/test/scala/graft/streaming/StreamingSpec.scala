@@ -104,7 +104,7 @@ class StreamingSpec extends SparkSpec {
     val run = bridged(ms.toDF.toDF("g", "qty", "amt"), table, ckpt) {
       (batch, batchId) => graft.io.Maintenance.maintainAdditiveAggregate(
         batch.sparkSession, table, batch, Seq("g"), Seq("qty", "amt"),
-        epochId = Some(batchId)) }
+        epochId = batchId) }
     try {
       ms.addData(("a", 10L, 1.5), ("a", 20L, 2.5), ("b", 5L, 0.5))
       run()
@@ -133,7 +133,7 @@ class StreamingSpec extends SparkSpec {
     val run = bridged(ms.toDF.toDF("g", "qty"), table, ckpt) {
       (batch, batchId) => graft.io.Maintenance.maintainInsertOnlyExtremes(
         batch.sparkSession, table, batch, Seq("g"), minCols = Seq("qty"),
-        maxCols = Seq("qty"), epochId = Some(batchId)) }
+        maxCols = Seq("qty"), epochId = batchId) }
     try {
       ms.addData(("a", 10L), ("a", 3L), ("b", 5L))
       run()
@@ -149,7 +149,7 @@ class StreamingSpec extends SparkSpec {
       // not double-count
       val replayed = graft.io.Maintenance.maintainInsertOnlyExtremes(
         spark, table, Seq(("a", 44L), ("c", 7L)).toDF("g", "qty"),
-        Seq("g"), Seq("qty"), Seq("qty"), epochId = Some(1L))
+        Seq("g"), Seq("qty"), Seq("qty"), epochId = 1L)
       assert(!replayed, "replayed epoch must no-op")
       assert(spark.table(table)
         .select("g", "min_qty", "max_qty", "n_rows")
@@ -209,7 +209,7 @@ class StreamingSpec extends SparkSpec {
     val run = bridged(ms.toDF.toDF("g", "cents"), table, ckpt) {
       (batch, batchId) => graft.io.Maintenance.maintainQuantileView(
         batch.sparkSession, table, batch, Seq("g"), "cents",
-        epochId = Some(batchId)) }
+        epochId = batchId) }
     try {
       ms.addData(("a", 100L), ("a", 250L), ("b", 7L))
       run()
@@ -226,7 +226,7 @@ class StreamingSpec extends SparkSpec {
       // committed batchId fence keeps it a no-op
       assert(!graft.io.Maintenance.maintainQuantileView(spark, table,
         Seq(("a", 9000L), ("b", 60L)).toDF("g", "cents"), Seq("g"), "cents",
-        epochId = Some(1L)))
+        epochId = 1L))
       assert(regs == oneShot, "replayed epoch must not double-count")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
@@ -248,7 +248,7 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[(Long, String)]
     val run = bridged(ms.toDF.toDF("doc_id", "text"), table, ckpt) {
       (batch, batchId) => DedupStore.maintain(batch.sparkSession, table, batch,
-        "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(batchId)) }
+        "doc_id", "text", jaccardThreshold = 0.5, epochId = batchId) }
     try {
       // micro-batch 0: 101/103 exact dups (101 keeps), 105 unique
       ms.addData(101L -> textA, 103L -> textA, 105L -> textB)
@@ -264,17 +264,17 @@ class StreamingSpec extends SparkSpec {
       // the stream's batchIds as epochs land bit-identically
       DedupStore.maintain(spark, twin,
         Seq(101L -> textA, 103L -> textA, 105L -> textB).toDF("doc_id", "text"),
-        "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(0L))
+        "doc_id", "text", jaccardThreshold = 0.5, epochId = 0L)
       DedupStore.maintain(spark, twin,
         Seq(202L -> textA, 204L -> textC, 206L -> textC).toDF("doc_id", "text"),
-        "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(1L))
+        "doc_id", "text", jaccardThreshold = 0.5, epochId = 1L)
       assert(stored(table) == stored(twin), "stream must equal batch")
       // the committed batchId IS the epoch property: a crash-replay of
       // the last micro-batch (at-least-once delivery) no-ops
       assert(DedupStore.committedEpoch(spark, table).contains(1L))
       assert(!DedupStore.maintain(spark, table,
         Seq(202L -> textA, 204L -> textC, 206L -> textC).toDF("doc_id", "text"),
-        "doc_id", "text", jaccardThreshold = 0.5, epochId = Some(1L)).applied)
+        "doc_id", "text", jaccardThreshold = 0.5, epochId = 1L).applied)
       assert(stored(table) == stored(twin), "replayed epoch appends nothing")
     } finally {
       Seq(table, twin).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -296,7 +296,7 @@ class StreamingSpec extends SparkSpec {
     val ms = MemoryStream[(Long, Long)]
     val run = bridged(ms.toDF.toDF("media_id", "dhash"), table, ckpt) {
       (batch, batchId) => MediaDedupStore.maintain(batch.sparkSession, table,
-        batch, "media_id", "dhash", epochId = Some(batchId)) }
+        batch, "media_id", "dhash", epochId = batchId) }
     try {
       // micro-batch 0: 101/103 near-dup re-encodes (101 keeps), 105 unique
       ms.addData(101L -> hA, 103L -> (hA ^ 0x7L), 105L -> hB)
@@ -312,11 +312,11 @@ class StreamingSpec extends SparkSpec {
       MediaDedupStore.maintain(spark, twin,
         Seq(101L -> hA, 103L -> (hA ^ 0x7L), 105L -> hB)
           .toDF("media_id", "dhash"),
-        "media_id", "dhash", epochId = Some(0L))
+        "media_id", "dhash", epochId = 0L)
       MediaDedupStore.maintain(spark, twin,
         Seq(202L -> (hA ^ 0x30L), 204L -> hC, 206L -> (hC ^ 0x5L))
           .toDF("media_id", "dhash"),
-        "media_id", "dhash", epochId = Some(1L))
+        "media_id", "dhash", epochId = 1L)
       assert(stored(table) == stored(twin), "stream must equal batch")
       // the committed batchId IS the epoch property: a crash-replay of
       // the last micro-batch (at-least-once delivery) no-ops
@@ -324,7 +324,7 @@ class StreamingSpec extends SparkSpec {
       assert(!MediaDedupStore.maintain(spark, table,
         Seq(202L -> (hA ^ 0x30L), 204L -> hC, 206L -> (hC ^ 0x5L))
           .toDF("media_id", "dhash"),
-        "media_id", "dhash", epochId = Some(1L)).applied)
+        "media_id", "dhash", epochId = 1L).applied)
       assert(stored(table) == stored(twin), "replayed epoch appends nothing")
     } finally {
       Seq(table, twin).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -348,7 +348,7 @@ class StreamingSpec extends SparkSpec {
     val run = bridged(ms.toDF.toDF("vec_id", "embedding"), table, ckpt) {
       (batch, batchId) => VectorDedupStore.maintain(batch.sparkSession, table,
         batch, "vec_id", "embedding", minScore = 12000L, numCentroids = 2,
-        epochId = Some(batchId)) }
+        epochId = batchId) }
     try {
       // founding micro-batch: freezes amax + 2 centroids; 1/3 identical
       ms.addData(1L -> vA, 3L -> vA, 5L -> vB)
