@@ -59,6 +59,11 @@ import graft.operators.FrameCaches.track
   * verify without a second doc_id-keyed join against a store-sized
   * signature table; `jaccardThreshold = 0` (LSH-only: any band
   * collision is a dup) never reads `sh` at fold time.
+  *
+  * The fold and probe are shared with the media family
+  * ([[MediaDedupStore]]): a private [[Banding]] value carries only
+  * what differs between the two (column names, band derivation,
+  * verify predicate, property stamps, error-message names).
   */
 object DedupStore {
 
@@ -118,12 +123,6 @@ object DedupStore {
     * incompatible keys and silently match nothing, the exact failure
     * the property prevents (advice-caught).
     */
-  private[io] def requireKnobs(spark: SparkSession, table: String,
-      property: String, declared: String, what: String,
-      requirePresent: Boolean = false): Unit =
-    requireKnobsOn(tableMeta(spark, table), table, property, declared,
-      what, requirePresent)
-
   private[io] def requireKnobsOn(
       meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
       table: String, property: String, declared: String, what: String,
@@ -234,11 +233,11 @@ object DedupStore {
     }
 
   /** Within-batch keeper policies, the [[VectorDedupStore.Keepers]]
-    * contract on the TEXT store: `min_id` (each within-batch near-dup
-    * cluster keeps its smallest id — the founding d8/d10 curation
-    * default) and `max_quality` (keep the member with the HIGHEST
-    * value of a declared `qualityCol`, ties → smallest id — the
-    * d8b/d10 policy a real corpus cleanup wants when duplicates differ
+    * contract on the banded (text and media) stores: `min_id` (each
+    * within-batch near-dup cluster keeps its smallest id — the founding
+    * d8/d10 curation default) and `max_quality` (keep the member with
+    * the HIGHEST value of a declared `qualityCol`, ties → smallest id —
+    * the d8b/d10 policy a real corpus cleanup wants when duplicates differ
     * in quality: truncation, boilerplate). The policy only picks WHICH
     * member of a duplicate cluster survives; the probe, banding, and
     * store schema are identical, so the quality column never enters
@@ -246,6 +245,46 @@ object DedupStore {
     * not batch mass).
     */
   val Keepers: Set[String] = Set("min_id", "max_quality")
+
+  /** What differs between the banded families (text here, 64-bit dHash
+    * in [[MediaDedupStore]]); the rest of [[fold]] and [[probe]] runs
+    * once for both. `band` maps the batch frame `(idCol, _v[, _q])` —
+    * `_v` the caller's text or hash column — to `(idCol[, _q],
+    * payloadCol, band_0..)`; `verify` is the exact check on a
+    * candidate's two payloads (`None`: any band collision is a dup and
+    * the payload is never read); `knobs`/`verifyStamp` are the
+    * (property, value) stamps; `foldLabel`/`family` name the family in
+    * error messages.
+    */
+  private[io] final case class Banding(idCol: String, payloadCol: String,
+      bands: Int, band: DataFrame => DataFrame,
+      verify: Option[(Column, Column) => Column],
+      knobs: (String, String), verifyStamp: (String, String),
+      foldLabel: String, family: String) {
+    val bandNames: Seq[String] = (0 until bands).map(b => s"band_$b")
+    val storeColumns: Seq[String] =
+      Seq(idCol, "band_idx", "band_key", payloadCol, "_epoch")
+  }
+
+  /** The text family: MinHash bands over hashed shingles, exact-Jaccard
+    * verify (skipped at threshold 0 — LSH-only).
+    */
+  private def textBanding(shingleN: Int = 3, numHashes: Int = 16,
+      bands: Int, jaccardThreshold: Double,
+      mode: Dedup.HashMode = Dedup.XxHash): Banding = {
+    require(numHashes % bands == 0,
+      s"bands ($bands) must divide numHashes ($numHashes) evenly")
+    require(jaccardThreshold >= 0.0 && jaccardThreshold <= 1.0,
+      s"jaccardThreshold must be in [0,1], got $jaccardThreshold")
+    Banding("doc_id", "sh", bands,
+      df => Dedup.withMinhashBands(df, "_v", shingleN, numHashes, bands,
+        mode).drop("_v"),
+      Option.when(jaccardThreshold > 0)((a: Column, b: Column) =>
+        Dedup.jaccard(a, b) >= jaccardThreshold),
+      KnobsProperty -> knobsValue(shingleN, numHashes, bands, mode),
+      VerifyProperty -> s"jaccardThreshold=$jaccardThreshold",
+      "dedup-store fold", "dedup store")
+  }
 
   /** Folds `batch` into the standing store at `table` (created on
     * first call). Returns the [[FoldResult]]: applied=false means the
@@ -266,11 +305,20 @@ object DedupStore {
       storeBuckets: Int = 0,
       epochId: Long,
       keeper: String = "min_id",
-      qualityCol: Option[String] = None): FoldResult = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) evenly")
-    require(jaccardThreshold >= 0.0 && jaccardThreshold <= 1.0,
-      s"jaccardThreshold must be in [0,1], got $jaccardThreshold")
+      qualityCol: Option[String] = None): FoldResult =
+    fold(spark, table, batch, idCol, textCol,
+      textBanding(shingleN, numHashes, bands, jaccardThreshold, mode),
+      maxBucketSize, storeBuckets, epochId, keeper, qualityCol)
+
+  /** The banded fold both families run (see [[maintain]] and the
+    * object doc); `valueCol` is the batch column `b.band` consumes.
+    */
+  private[io] def fold(spark: SparkSession, table: String,
+      batch: DataFrame, idCol: String, valueCol: String, b: Banding,
+      maxBucketSize: Option[Long], storeBuckets: Int, epochId: Long,
+      keeper: String, qualityCol: Option[String]): FoldResult = {
+    require(maxBucketSize.forall(_ > 0),
+      s"maxBucketSize must be positive when set, got ${maxBucketSize.get}")
     require(storeBuckets >= 0, s"storeBuckets must be >= 0, got $storeBuckets")
     require(Keepers(keeper),
       s"keeper must be one of [${Keepers.mkString(", ")}], got '$keeper'")
@@ -286,110 +334,105 @@ object DedupStore {
     // checkpoints) drains when the fold's writes are done — the store
     // is a long-lived session's gold path, not a one-query session
     val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try maintainImpl(spark, table, batch, idCol, textCol, shingleN,
-      numHashes, bands, jaccardThreshold, mode, maxBucketSize,
+    try foldImpl(spark, table, batch, idCol, valueCol, b, maxBucketSize,
       storeBuckets, epochId, keeper, qualityCol)
     finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
   }
 
-  private def maintainImpl(spark: SparkSession, table: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int,
-      jaccardThreshold: Double, mode: Dedup.HashMode,
-      maxBucketSize: Option[Long], storeBuckets: Int,
-      epochId: Long, keeper: String,
-      qualityCol: Option[String]): FoldResult = {
-    val bandNames = (0 until bands).map(b => s"band_$b")
-    // one shingle+hash pass over the batch text; persisted — it feeds
-    // the store probe, the within-batch pairs, and the final append.
-    // The keeper's quality column (when declared) rides the same frame
-    val baseCols = Seq(col(idCol).as("doc_id"), col(textCol).as("_text")) ++
-      qualityCol.map(q => col(q).as("_q"))
-    val banded = track(Dedup.withMinhashBands(
-        batch.select(baseCols: _*),
-        "_text", shingleN, numHashes, bands, mode)
-      .drop("_text").persist())
+  private def foldImpl(spark: SparkSession, table: String,
+      batch: DataFrame, idCol: String, valueCol: String, b: Banding,
+      maxBucketSize: Option[Long], storeBuckets: Int, epochId: Long,
+      keeper: String, qualityCol: Option[String]): FoldResult = {
+    val id = b.idCol
+    // one banding pass over the batch; persisted — it feeds the store
+    // probe, the within-batch pairs, and the final append. The
+    // keeper's quality column (when declared) rides the same frame
+    val banded = track(b.band(batch.select(
+        Seq(col(idCol).as(id), col(valueCol).as("_v")) ++
+          qualityCol.map(q => col(q).as("_q")): _*))
+      .persist())
 
     val exists = spark.catalog.tableExists(table)
     if (exists) {
-      val meta = requireStoreSchema(spark, table,
-        Seq("doc_id", "band_idx", "band_key", "sh", "_epoch"),
-        "dedup-store fold", "dedup store")
+      val meta = requireStoreSchema(spark, table, b.storeColumns,
+        b.foldLabel, b.family)
       // bucket-spec drift fails HERE with the store's own diagnostic,
       // not deep inside saveAsTable(Append) with a raw Spark error
       val haveBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(0)
       require(haveBuckets == storeBuckets,
-        s"dedup-store fold for '$table': storeBuckets=$storeBuckets but the " +
+        s"${b.foldLabel} for '$table': storeBuckets=$storeBuckets but the " +
           s"existing store was created with " +
           (if (haveBuckets == 0) "no bucketing" else s"$haveBuckets buckets") +
           " — the bucket layout is fixed at store creation; fold with the " +
           s"store's own setting (storeBuckets=$haveBuckets) or rebuild the " +
           "store under the new layout")
-      requireKnobsOn(meta, table, KnobsProperty,
-        knobsValue(shingleN, numHashes, bands, mode), "dedup-store fold",
+      requireKnobsOn(meta, table, b.knobs._1, b.knobs._2, b.foldLabel,
         requirePresent = false)
-      if (!EpochFence.admit("dedup-store fold", table, epochId,
+      if (!EpochFence.admit(b.foldLabel, table, epochId,
           committedEpoch(spark, table)))
         return FoldResult(applied = false, batchRows = 0L)
     }
 
+    // a founding batch has no store to probe: the persisted banded
+    // frame IS the fresh set (persisting it again only re-asks the
+    // cache manager for data it already holds)
     val fresh =
       if (!exists) banded
-      else banded.join(
-          storeHits(spark, table, banded, bandNames, jaccardThreshold,
-            maxBucketSize),
-          Seq("doc_id"), "left_anti")
-        // identity guard: a doc_id ALREADY in the store never appends
+      else track(banded
+        .join(hits(spark, table, banded, b, maxBucketSize), Seq(id),
+          "left_anti")
+        // identity guard: an id ALREADY in the store never appends
         // again, whatever its content. Without it two edges duplicate
         // store rows: a crash between append and the epoch-property
         // stamp (the retry re-runs the fold) combined with a hot-band
-        // cap that hides the doc's stored self from the probe, and an
+        // cap that hides the id's stored self from the probe, and an
         // id re-delivered with CHANGED content. Costs one thin
-        // doc_id-column pass over a store the probe already scans
-        .join(storedDocIds(spark, table).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-    val freshP = track(fresh.persist())
+        // id-column pass over a store the probe already scans
+        .join(spark.table(table).filter(col("band_idx") === 0).select(id),
+          Seq(id), "left_anti")
+        .persist())
 
-    // within-batch near-dup clusters among the store-fresh docs; the
-    // keeper policy picks each cluster's surviving member
-    val pairs0 = Dedup.candidatePairs(freshP, "doc_id",
-      bandNames.map(col), maxBucketSize)
-    val pairs =
-      if (jaccardThreshold > 0) {
-        val l = freshP.select(col("doc_id").as("doc_a"), col("sh").as("_sh_a"))
-        val r = freshP.select(col("doc_id").as("doc_b"), col("sh").as("_sh_b"))
+    // within-batch near-dup clusters among the store-fresh rows:
+    // banded candidates, the family's exact verify, connected
+    // components; the keeper policy picks each cluster's survivor
+    val pairs0 = Dedup.candidatePairs(fresh, id, b.bandNames.map(col),
+      maxBucketSize)
+    val pairs = b.verify match {
+      case Some(verify) =>
+        val l = fresh.select(col(id).as("doc_a"), col(b.payloadCol).as("_pa"))
+        val r = fresh.select(col(id).as("doc_b"), col(b.payloadCol).as("_pb"))
         pairs0.join(l, "doc_a").join(r, "doc_b")
-          .filter(Dedup.jaccard(col("_sh_a"), col("_sh_b")) >= jaccardThreshold)
+          .filter(verify(col("_pa"), col("_pb")))
           .select("doc_a", "doc_b")
-      } else pairs0
+      case None => pairs0
+    }
     val clusters = Dedup.connectedComponents(pairs)
-    // docs in no pair never enter `clusters` and survive untouched
+      .withColumnRenamed("doc_id", id)
+    // ids in no pair never enter `clusters` and survive untouched
     val nonKeepers = keeper match {
       case "max_quality" =>
         // d8b/d10's rule on the maintained store: one window per
         // cluster ranks members by the declared quality (ties →
         // smallest id); everything but rank 1 is anti-joined away
         val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id").orderBy(col("_q").desc, col("doc_id"))
-        clusters.join(freshP.select(col("doc_id"), col("_q")), Seq("doc_id"))
+          .partitionBy("cluster_id").orderBy(col("_q").desc, col(id))
+        clusters.join(fresh.select(col(id), col("_q")), Seq(id))
           .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") =!= 1).select("doc_id")
+          .filter(col("_rn") =!= 1).select(id)
       case _ => // min_id: the min-label closure's canonical id keeps
-        clusters.filter(col("doc_id") =!= col("cluster_id"))
-          .select("doc_id")
+        clusters.filter(col(id) =!= col("cluster_id")).select(id)
     }
-    val survivors = freshP.join(nonKeepers, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"),
-        posexplode(array(bandNames.map(col): _*))
+    val survivors = fresh.join(nonKeepers, Seq(id), "left_anti")
+      .select(col(id),
+        posexplode(array(b.bandNames.map(col): _*))
           .as(Seq("band_idx", "band_key")),
-        col("sh"))
+        col(b.payloadCol))
       .withColumn("_epoch", lit(epochId))
-      .select("doc_id", "band_idx", "band_key", "sh", "_epoch")
+      .select(b.storeColumns.map(col): _*)
     appendSurvivors(spark, table, survivors, exists, storeBuckets, epochId,
-      Seq(KnobsProperty -> knobsValue(shingleN, numHashes, bands, mode),
-        VerifyProperty -> s"jaccardThreshold=$jaccardThreshold"))
-    // one row per batch doc; the fold's writes materialized the cache,
-    // so this count rides the in-memory frame, not a second text scan
+      Seq(b.knobs, b.verifyStamp))
+    // one row per batch row; the fold's writes materialized the cache,
+    // so this count rides the in-memory frame, not a second batch scan
     FoldResult(applied = true, batchRows = banded.count())
   }
 
@@ -436,41 +479,34 @@ object DedupStore {
   }
 
   /** The store-probe stage of a fold, exposed so its plan shape is
-    * pinnable: batch docs (as a [[Dedup.withMinhashBands]] frame)
-    * whose exact Jaccard vs ANY stored doc reaches the threshold —
-    * candidates come ONLY from the banded equi-join (band_idx,
-    * band_key), never an all-pairs comparison, and the verify runs per
-    * COLLISION row. Returns the distinct hit `doc_id`s.
+    * pinnable: batch docs (as a [[Dedup.withMinhashBands]] frame with
+    * columns `band_0..` named by `bandNames`) whose exact Jaccard vs
+    * ANY stored doc reaches the threshold. Returns the distinct hit
+    * `doc_id`s; see [[hits]].
     */
   def storeHits(spark: SparkSession, table: String, banded: DataFrame,
       bandNames: Seq[String], jaccardThreshold: Double,
-      maxBucketSize: Option[Long]): DataFrame = {
-    val probe = banded.select(col("doc_id"), col("sh").as("_sh_b"),
-      posexplode(array(bandNames.map(col): _*))
+      maxBucketSize: Option[Long]): DataFrame =
+    hits(spark, table, banded,
+      textBanding(bands = bandNames.size, jaccardThreshold = jaccardThreshold),
+      maxBucketSize)
+
+  /** Distinct ids of banded batch rows that near-dup ANY stored row:
+    * candidates come ONLY from the (band_idx, band_key) equi-join, the
+    * family's verify runs per collision row (see the object doc), and
+    * [[Dedup.withoutHotBuckets]] drops degenerate store buckets.
+    */
+  private def hits(spark: SparkSession, table: String, banded: DataFrame,
+      b: Banding, maxBucketSize: Option[Long]): DataFrame = {
+    val probe = banded.select(col(b.idCol), col(b.payloadCol).as("_pb"),
+      posexplode(array(b.bandNames.map(col): _*))
         .as(Seq("band_idx", "band_key")))
-    val store0 = spark.table(table)
-      .select(col("band_idx"), col("band_key"), col("sh").as("_sh_r"))
-    val store = maxBucketSize match {
-      case Some(cap) =>
-        val hot = track(store0.groupBy("band_idx", "band_key")
-          .agg(count(lit(1)).as("_bn")).filter(col("_bn") > cap)
-          .select("band_idx", "band_key").persist())
-        // same degrade rule as candidatePairs: broadcast the hot
-        // keys only while provably few
-        val nHot = hot.count()
-        if (nHot == 0) store0
-        else {
-          val hotSide = if (nHot <= 100000L) broadcast(hot) else hot
-          store0.join(hotSide, Seq("band_idx", "band_key"), "left_anti")
-        }
-      case None => store0
-    }
+    val store = Dedup.withoutHotBuckets(spark.table(table)
+      .select(col("band_idx"), col("band_key"), col(b.payloadCol).as("_pr")),
+      maxBucketSize)
     val collisions = probe.join(store, Seq("band_idx", "band_key"))
-    (if (jaccardThreshold > 0)
-      collisions.filter(
-        Dedup.jaccard(col("_sh_b"), col("_sh_r")) >= jaccardThreshold)
-    else collisions)
-      .select("doc_id").distinct()
+    b.verify.fold(collisions)(v => collisions.filter(v(col("_pb"), col("_pr"))))
+      .select(b.idCol).distinct()
   }
 
   /** READ-path membership probe — "has the accumulated corpus seen
@@ -486,28 +522,30 @@ object DedupStore {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 4,
       jaccardThreshold: Double = 0.0,
       maxBucketSize: Option[Long] = None,
-      mode: Dedup.HashMode = Dedup.XxHash): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) evenly")
-    require(jaccardThreshold >= 0.0 && jaccardThreshold <= 1.0,
-      s"jaccardThreshold must be in [0,1], got $jaccardThreshold")
+      mode: Dedup.HashMode = Dedup.XxHash): DataFrame =
+    probe(spark, table, batch, idCol, textCol,
+      textBanding(shingleN, numHashes, bands, jaccardThreshold, mode),
+      maxBucketSize)
+
+  /** The READ path both families run: store-shape and frozen-knob
+    * guards (the knobs property MUST exist — see [[requireKnobsOn]]),
+    * a warning on a divergent verify threshold, then [[hits]] over the
+    * freshly banded batch.
+    */
+  private[io] def probe(spark: SparkSession, table: String,
+      batch: DataFrame, idCol: String, valueCol: String, b: Banding,
+      maxBucketSize: Option[Long]): DataFrame = {
     require(maxBucketSize.forall(_ > 0),
       s"maxBucketSize must be positive when set, got ${maxBucketSize.get}")
-    val meta = requireStoreSchema(spark, table,
-      Seq("doc_id", "band_idx", "band_key", "sh", "_epoch"), "store probe",
-      "dedup store")
-    requireKnobsOn(meta, table, KnobsProperty,
-      knobsValue(shingleN, numHashes, bands, mode), "store probe",
+    val meta = requireStoreSchema(spark, table, b.storeColumns,
+      "store probe", b.family)
+    requireKnobsOn(meta, table, b.knobs._1, b.knobs._2, "store probe",
       requirePresent = true)
-    warnVerifyDivergenceOn(meta, table, VerifyProperty,
-      s"jaccardThreshold=$jaccardThreshold", "store probe")
-    val bandNames = (0 until bands).map(b => s"band_$b")
-    val banded = Dedup.withMinhashBands(
-        batch.select(col(idCol).as("doc_id"), col(textCol).as("_text")),
-        "_text", shingleN, numHashes, bands, mode)
-      .drop("_text")
-    storeHits(spark, table, banded, bandNames, jaccardThreshold,
-      maxBucketSize)
+    warnVerifyDivergenceOn(meta, table, b.verifyStamp._1, b.verifyStamp._2,
+      "store probe")
+    hits(spark, table,
+      b.band(batch.select(col(idCol).as(b.idCol), col(valueCol).as("_v"))),
+      b, maxBucketSize)
   }
 
   /** The accumulated deduped corpus: one row per stored doc

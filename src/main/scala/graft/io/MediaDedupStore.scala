@@ -1,55 +1,34 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
-import graft.operators.FrameCaches.track
 
 /** Standing cross-corpus MEDIA (perceptual-hash) dedup store — the
   * third member of the store family (text [[DedupStore]], vectors
   * [[VectorDedupStore]]; reference scope: none — beyond-reference).
-  * Closes round-16 verdict item 1: `m6_phash_neardup` finds an image
-  * batch's re-encoded copies per call, but a crawl-N+1 image batch had
-  * no ACCUMULATED phash corpus to probe — every call re-hashed and
-  * re-banded everything. This store persists what that work produces:
-  * one row per (surviving image, Hamming-LSH band) carrying the band
-  * key and the image's 64-bit dHash, so each new batch band-equi-joins
-  * PRECOMPUTED keys and the accumulated corpus is never re-decoded.
+  * `m6_phash_neardup` finds an image batch's re-encoded copies per
+  * call; this store keeps the ACCUMULATED phash corpus a crawl-N+1
+  * batch probes: one row per (surviving image, Hamming-LSH band)
+  * carrying the band key and the image's 64-bit dHash, so each new
+  * batch band-equi-joins PRECOMPUTED keys and the corpus is never
+  * re-decoded. The fold takes (id, dhash) — hashes, not payloads
+  * ([[graft.multimodal.Multimodal.dHash]] is scan-fused map work over
+  * the image files).
   *
-  * The fold takes (id, dhash) — hashes, not payloads: dHash
-  * ([[graft.multimodal.Multimodal.dHash]]) is scan-fused map work over
-  * the image files, so payload bytes never reach the store path at
-  * all; only 8-byte hashes enter the join. Bands are the standard
-  * Hamming-LSH split (64/bands bits each — a pair differing in ≤
-  * bands−1 scattered bits keeps ≥1 band intact with certainty), the
-  * verify is the exact codegen'd `bit_count(xor)` ≤ `maxHamming`.
-  *
-  * Fold semantics per batch (mirrors [[DedupStore]] exactly):
-  *  1. batch images whose Hamming distance vs ANY stored image is ≤
-  *     `maxHamming` (candidates from the banded equi-join only) drop —
-  *     near-dups of content the corpus already has;
-  *  2. the rest near-dup-cluster among THEMSELVES (banded pairs →
-  *     exact-Hamming verify → connected components); each cluster
-  *     keeps its smallest id;
-  *  3. survivors' band rows APPEND stamped with the fold's epoch.
-  *
-  * Same epoch fence as the siblings (appends are not idempotent): the
-  * O(1) [[DedupStore.EpochProperty]] catalog property. Same identity
-  * guard (a stored media_id never appends twice). Same hot-band cap
-  * (`maxBucketSize` — a degenerate band value, e.g. the all-zero band
-  * of flat images, would multiply every colliding batch image) on BOTH
-  * the probe and the within-batch pair join, via
-  * [[Dedup.candidatePairs]]'s own discipline. With `storeBuckets > 0`
-  * the store table is bucketed on `band_key`, so the store side of
-  * every future fold's probe join reads WITHOUT a shuffle — at 100 TB
-  * of images the accumulated store is the big side, and this is what
-  * keeps crawl-N+1 cost linear in the BATCH.
+  * The store is a banding of the one banded fold in [[DedupStore]]:
+  * this object supplies only the media [[DedupStore.Banding]] — the
+  * `media_id`/`dhash` columns, the [[bandKeys]] split (64/bands bits
+  * each: a pair differing in ≤ bands−1 scattered bits keeps ≥1 band
+  * intact with certainty), the exact codegen'd `bit_count(xor)` ≤
+  * `maxHamming` verify, its own properties and error-message names —
+  * plus its argument checks. Fold semantics, epoch fence, identity
+  * guard, hot-band cap, keeper policies and store bucketing are the
+  * text store's, on the same code.
   *
   * Store schema: `media_id, band_idx, band_key, dhash, _epoch` — the
-  * full hash rides every band row (an 8-byte fixed-width copy per
-  * band, the cheap analog of the text store's `sh` duplication) so the
-  * verify needs no second id-keyed join against a store-sized hash
-  * table.
+  * full hash rides every band row (the cheap analog of the text
+  * store's `sh` duplication), so the verify needs no second id-keyed
+  * join against a store-sized hash table.
   */
 object MediaDedupStore {
 
@@ -71,17 +50,36 @@ object MediaDedupStore {
     * band b = bits [b·w, (b+1)·w). All integer shifts/masks — the
     * m6 oracle re-derives them bit for bit.
     */
-  def bandKeys(hash: org.apache.spark.sql.Column, bands: Int)
-      : Seq[org.apache.spark.sql.Column] = {
+  def bandKeys(hash: Column, bands: Int): Seq[Column] = {
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1L
     (0 until bands).map(b =>
       shiftrightunsigned(hash, b * width).bitwiseAND(lit(mask)))
   }
 
-  private def hamming(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    bit_count(a.bitwiseXOR(b)).cast("long")
+  /** The media family's [[DedupStore.Banding]], after its argument
+    * checks: `bands` must divide the 64-bit hash, and `maxHamming` must
+    * stay below 64 — 64 would accept every banded collision, including
+    * the shared-band false friends the verify exists to reject.
+    */
+  private def banding(bands: Int, maxHamming: Long): DedupStore.Banding = {
+    require(bands >= 1 && bands <= 64 && 64 % bands == 0,
+      s"bands must divide 64 (the dHash width), got $bands")
+    require(maxHamming >= 0L && maxHamming < 64L,
+      s"maxHamming must be in [0, 64), got $maxHamming (64 would accept " +
+        "every pair)")
+    DedupStore.Banding("media_id", "dhash", bands,
+      df => {
+        val h = df.withColumn("dhash", col("_v").cast("long")).drop("_v")
+        h.select(h.columns.toSeq.map(col) ++ bandKeys(col("dhash"), bands)
+          .zipWithIndex.map { case (c, i) => c.as(s"band_$i") }: _*)
+      },
+      Some((a: Column, b: Column) =>
+        bit_count(a.bitwiseXOR(b)).cast("long") <= maxHamming),
+      KnobsProperty -> s"bands=$bands",
+      VerifyProperty -> s"maxHamming=$maxHamming",
+      "media-dedup-store fold", "media dedup store")
+  }
 
   /** Folds `batch` (one row per image: `idCol`, `hashCol` = the 64-bit
     * dHash) into the standing store at `table` (created on first
@@ -92,6 +90,9 @@ object MediaDedupStore {
     * admitted through [[EpochFence]] as in the text store, and the
     * identity guard keeps a re-delivered media_id from appending twice
     * inside the crash window between the append and the epoch stamp.
+    * `keeper`/`qualityCol` are the [[DedupStore.Keepers]] policies:
+    * quality = a declared batch column (resolution, byte size, a
+    * decode-stage score) ranking which re-encode survives.
     */
   def maintain(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, hashCol: String,
@@ -100,161 +101,10 @@ object MediaDedupStore {
       storeBuckets: Int = 0,
       epochId: Long,
       keeper: String = "min_id",
-      qualityCol: Option[String] = None): DedupStore.FoldResult = {
-    require(bands >= 1 && bands <= 64 && 64 % bands == 0,
-      s"bands must divide 64 (the dHash width), got $bands")
-    require(maxHamming >= 0L && maxHamming < 64L,
-      s"maxHamming must be in [0, 64), got $maxHamming (64 would accept " +
-        "every pair)")
-    require(maxBucketSize.forall(_ > 0),
-      s"maxBucketSize must be positive when set, got ${maxBucketSize.get}")
-    require(storeBuckets >= 0, s"storeBuckets must be >= 0, got $storeBuckets")
-    // the [[DedupStore.Keepers]] policy surface on the media family:
-    // quality = a declared batch column (resolution, byte size, a
-    // decode-stage score) ranking which re-encode of a duplicate
-    // cluster survives
-    require(DedupStore.Keepers(keeper),
-      s"keeper must be one of [${DedupStore.Keepers.mkString(", ")}], " +
-        s"got '$keeper'")
-    require((keeper == "max_quality") == qualityCol.isDefined,
-      if (keeper == "max_quality")
-        "keeper max_quality needs qualityCol (the batch column ranking " +
-          "cluster members)"
-      else s"qualityCol is only used by keeper max_quality (got '$keeper')")
-    for (q <- qualityCol) require(batch.columns.contains(q),
-      s"qualityCol '$q' not in the batch")
-    Commit.recover(spark, table)
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try maintainImpl(spark, table, batch, idCol, hashCol, bands,
-      maxHamming, maxBucketSize, storeBuckets, epochId, keeper, qualityCol)
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
-  }
-
-  private def maintainImpl(spark: SparkSession, table: String,
-      batch: DataFrame, idCol: String, hashCol: String, bands: Int,
-      maxHamming: Long, maxBucketSize: Option[Long], storeBuckets: Int,
-      epochId: Long, keeper: String,
-      qualityCol: Option[String]): DedupStore.FoldResult = {
-    val bandNames = (0 until bands).map(b => s"band_$b")
-    // one pass derives the band keys; persisted — it feeds the store
-    // probe, the within-batch pairs, and the final append. The
-    // keeper's quality column (when declared) rides the same frame
-    val base = batch.select(Seq(col(idCol).as("media_id"),
-      col(hashCol).cast("long").as("dhash")) ++
-      qualityCol.map(q => col(q).as("_q")): _*)
-    val banded = track(base.select(
-        Seq(col("media_id"), col("dhash")) ++
-          qualityCol.map(_ => col("_q")) ++
-          bandKeys(col("dhash"), bands).zip(bandNames)
-            .map { case (c, n) => c.as(n) }: _*)
-      .persist())
-
-    val exists = spark.catalog.tableExists(table)
-    if (exists) {
-      val meta = DedupStore.requireStoreSchema(spark, table,
-        Seq("media_id", "band_idx", "band_key", "dhash", "_epoch"),
-        "media-dedup-store fold", "media dedup store")
-      val haveBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(0)
-      require(haveBuckets == storeBuckets,
-        s"media-dedup-store fold for '$table': storeBuckets=$storeBuckets " +
-          "but the existing store was created with " +
-          (if (haveBuckets == 0) "no bucketing" else s"$haveBuckets buckets") +
-          " — the bucket layout is fixed at store creation; fold with the " +
-          s"store's own setting (storeBuckets=$haveBuckets) or rebuild the " +
-          "store under the new layout")
-      DedupStore.requireKnobsOn(meta, table, KnobsProperty,
-        s"bands=$bands", "media-dedup-store fold", requirePresent = false)
-      if (!EpochFence.admit("media-dedup-store fold", table, epochId,
-          DedupStore.committedEpoch(spark, table)))
-        return DedupStore.FoldResult(applied = false, batchRows = 0L)
-    }
-
-    val fresh =
-      if (!exists) banded
-      else banded.join(
-          storeHits(spark, table, banded, bandNames, maxHamming,
-            maxBucketSize),
-          Seq("media_id"), "left_anti")
-        // identity guard, as in the siblings: a stored media_id never
-        // appends again (crash-retry between append and the epoch
-        // stamp; an id re-delivered with changed content)
-        .join(storedMediaIds(spark, table).select("media_id"),
-          Seq("media_id"), "left_anti")
-    val freshP = track(fresh.persist())
-
-    // within-batch near-dup clusters among the store-fresh images:
-    // banded candidates, exact Hamming verify, smallest id keeps
-    val pairs0 = Dedup.candidatePairs(freshP, "media_id",
-      bandNames.map(col), maxBucketSize)
-    val ha = freshP.select(col("media_id").as("doc_a"), col("dhash").as("_ha"))
-    val hb = freshP.select(col("media_id").as("doc_b"), col("dhash").as("_hb"))
-    val pairs = pairs0.join(ha, Seq("doc_a")).join(hb, Seq("doc_b"))
-      .filter(hamming(col("_ha"), col("_hb")) <= maxHamming)
-      .select("doc_a", "doc_b")
-    val clusters = Dedup.connectedComponents(pairs)
-      .withColumnRenamed("doc_id", "media_id")
-    // images in no pair never enter `clusters` and survive untouched
-    val nonKeepers = keeper match {
-      case "max_quality" =>
-        // rank each cluster's members by the declared quality (ties →
-        // smallest id); everything but rank 1 is anti-joined away
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("cluster_id")
-          .orderBy(col("_q").desc, col("media_id"))
-        clusters
-          .join(freshP.select(col("media_id"), col("_q")), Seq("media_id"))
-          .withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") =!= 1).select("media_id")
-      case _ => // min_id: the min-label closure's canonical id keeps
-        clusters.filter(col("media_id") =!= col("cluster_id"))
-          .select("media_id")
-    }
-    val survivors = freshP
-      .join(nonKeepers, Seq("media_id"), "left_anti")
-      .select(col("media_id"), col("dhash"),
-        posexplode(array(bandNames.map(col): _*))
-          .as(Seq("band_idx", "band_key")))
-      .withColumn("_epoch", lit(epochId))
-      .select("media_id", "band_idx", "band_key", "dhash", "_epoch")
-    DedupStore.appendSurvivors(spark, table, survivors, exists, storeBuckets,
-      epochId, Seq(KnobsProperty -> s"bands=$bands",
-        VerifyProperty -> s"maxHamming=$maxHamming"))
-    DedupStore.FoldResult(applied = true, batchRows = banded.count())
-  }
-
-  /** The store-probe stage, exposed for plan pinning: batch images
-    * (as the banded frame) within `maxHamming` of ANY stored image —
-    * candidates come ONLY from the (band_idx, band_key) equi-join,
-    * never all-pairs; the verify is the codegen'd `bit_count(xor)`
-    * per collision row. `maxBucketSize` excludes degenerate store-side
-    * bands exactly as the text store does (same broadcast-bounded hot
-    * set, same recall trade).
-    */
-  def storeHits(spark: SparkSession, table: String, banded: DataFrame,
-      bandNames: Seq[String], maxHamming: Long,
-      maxBucketSize: Option[Long]): DataFrame = {
-    val probe = banded.select(col("media_id"), col("dhash").as("_hb"),
-      posexplode(array(bandNames.map(col): _*))
-        .as(Seq("band_idx", "band_key")))
-    val store0 = spark.table(table)
-      .select(col("band_idx"), col("band_key"), col("dhash").as("_hr"))
-    val store = maxBucketSize match {
-      case Some(cap) =>
-        val hot = track(store0.groupBy("band_idx", "band_key")
-          .agg(count(lit(1)).as("_bn")).filter(col("_bn") > cap)
-          .select("band_idx", "band_key").persist())
-        val nHot = hot.count()
-        if (nHot == 0) store0
-        else {
-          val hotSide = if (nHot <= 100000L) broadcast(hot) else hot
-          store0.join(hotSide, Seq("band_idx", "band_key"), "left_anti")
-        }
-      case None => store0
-    }
-    probe.join(store, Seq("band_idx", "band_key"))
-      .filter(hamming(col("_hb"), col("_hr")) <= maxHamming)
-      .select("media_id").distinct()
-  }
+      qualityCol: Option[String] = None): DedupStore.FoldResult =
+    DedupStore.fold(spark, table, batch, idCol, hashCol,
+      banding(bands, maxHamming), maxBucketSize, storeBuckets, epochId,
+      keeper, qualityCol)
 
   /** READ-path membership probe — band the batch hashes and Hamming-
     * verify banded collisions against the store, WITHOUT folding.
@@ -264,34 +114,9 @@ object MediaDedupStore {
   def probeHits(spark: SparkSession, table: String, batch: DataFrame,
       idCol: String, hashCol: String,
       bands: Int = 4, maxHamming: Long = 16L,
-      maxBucketSize: Option[Long] = None): DataFrame = {
-    require(bands >= 1 && bands <= 64 && 64 % bands == 0,
-      s"bands must divide 64 (the dHash width), got $bands")
-    // the fold's own guards, mirrored: a read path that accepted
-    // maxHamming = 64 would flag EVERY banded collision a hit —
-    // including the shared-band false friends the verify exists to
-    // reject (review-caught)
-    require(maxHamming >= 0L && maxHamming < 64L,
-      s"maxHamming must be in [0, 64), got $maxHamming (64 would accept " +
-        "every pair)")
-    require(maxBucketSize.forall(_ > 0),
-      s"maxBucketSize must be positive when set, got ${maxBucketSize.get}")
-    val meta = DedupStore.requireStoreSchema(spark, table,
-      Seq("media_id", "band_idx", "band_key", "dhash", "_epoch"),
-      "store probe", "media dedup store")
-    DedupStore.requireKnobsOn(meta, table, KnobsProperty,
-      s"bands=$bands", "store probe", requirePresent = true)
-    DedupStore.warnVerifyDivergenceOn(meta, table, VerifyProperty,
-      s"maxHamming=$maxHamming", "store probe")
-    val bandNames = (0 until bands).map(b => s"band_$b")
-    val base = batch.select(col(idCol).as("media_id"),
-      col(hashCol).cast("long").as("dhash"))
-    val banded = base.select(
-      Seq(col("media_id"), col("dhash")) ++
-        bandKeys(col("dhash"), bands).zip(bandNames)
-          .map { case (c, n) => c.as(n) }: _*)
-    storeHits(spark, table, banded, bandNames, maxHamming, maxBucketSize)
-  }
+      maxBucketSize: Option[Long] = None): DataFrame =
+    DedupStore.probe(spark, table, batch, idCol, hashCol,
+      banding(bands, maxHamming), maxBucketSize)
 
   /** The accumulated deduped image corpus: one row per stored image
     * (`media_id, dhash, _epoch`). Reads one band slice.

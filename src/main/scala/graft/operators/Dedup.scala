@@ -174,6 +174,31 @@ object Dedup {
     */
   private val HotKeyBroadcastLimit = 100000L
 
+  /** Drops the rows of `frame` (any frame carrying `band_idx, band_key`)
+    * that sit in a band bucket with more than `maxBucketSize` rows —
+    * the one hot-bucket exclusion of every banded join (within-batch
+    * pairs, reference corpora, standing-store probes). Cost: one
+    * map-side-combined count over the (band, key) pairs, whose tiny
+    * result is persisted and counted — zero hot keys skips the
+    * anti-join entirely — then an anti-join of the hot keys, broadcast
+    * while they number at most [[HotKeyBroadcastLimit]] and shuffled
+    * above it, so a pathological cap/corpus combination cannot blow
+    * the broadcast limit. `None` returns `frame` untouched.
+    */
+  def withoutHotBuckets(frame: DataFrame,
+      maxBucketSize: Option[Long]): DataFrame = maxBucketSize match {
+    case Some(cap) =>
+      val hot = track(frame.groupBy("band_idx", "band_key")
+        .agg(count(lit(1)).as("_bn")).filter(col("_bn") > cap)
+        .select("band_idx", "band_key").persist())
+      val nHot = hot.count()
+      if (nHot == 0) frame
+      else frame.join(
+        if (nHot <= HotKeyBroadcastLimit) broadcast(hot) else hot,
+        Seq("band_idx", "band_key"), "left_anti")
+    case None => frame
+  }
+
   /** Candidate pairs via banded LSH: explode band keys, equi-join on
     * (band position, key), dedupe. `id < id` keeps one direction.
     *
@@ -184,33 +209,14 @@ object Dedup {
     * bucket quadratic — n² pairs from a single reducer — and one hot
     * key can sink the whole job. Standard LSH practice treats oversized
     * buckets as junk keys (they carry no near-dup signal precisely
-    * because they match everything). Cost of the guard: one map-side-
-    * combined count over the exploded (band, key) frame (whose tiny
-    * result is persisted and counted — zero hot keys skips the
-    * anti-join entirely), then an anti-join of the hot keys — broadcast
-    * when they are few (the by-construction case), degrading to a
-    * shuffled anti-join above [[HotKeyBroadcastLimit]] so a
-    * pathological cap/corpus combination cannot blow the broadcast
-    * limit.
+    * because they match everything). The guard is
+    * [[withoutHotBuckets]] over the exploded (band, key) frame.
     */
   def candidatePairs(base: DataFrame, idCol: String, bandCols: Seq[Column],
       maxBucketSize: Option[Long] = None): DataFrame = {
-    val exploded0 = base
-      .select(col(idCol), posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_key")))
-    val exploded = maxBucketSize match {
-      case Some(cap) =>
-        val hot = track(exploded0.groupBy("band_idx", "band_key")
-          .agg(count(lit(1)).as("_bn")).filter(col("_bn") > cap)
-          .select("band_idx", "band_key")
-          .persist())
-        val nHot = hot.count()
-        if (nHot == 0) exploded0
-        else {
-          val hotSide = if (nHot <= HotKeyBroadcastLimit) broadcast(hot) else hot
-          exploded0.join(hotSide, Seq("band_idx", "band_key"), "left_anti")
-        }
-      case None => exploded0
-    }
+    val exploded = withoutHotBuckets(base.select(col(idCol),
+      posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_key"))),
+      maxBucketSize)
     val a = exploded.as("a")
     val b = exploded.as("b")
     a.join(b,
@@ -510,24 +516,7 @@ object Dedup {
     def exploded(df: DataFrame, as: String) = df.select(col(idCol).as(as),
       posexplode(array((0 until bands).map(i => col(s"band_$i")): _*))
         .as(Seq("band_idx", "band_key")))
-    val re0 = exploded(r, "ref_id")
-    val re = maxBucketSize match {
-      case Some(cap) =>
-        val hot = track(re0.groupBy("band_idx", "band_key")
-          .agg(count(lit(1)).as("_bn")).filter(col("_bn") > cap)
-          .select("band_idx", "band_key").persist())
-        val nHot = hot.count()
-        if (nHot == 0) re0
-        else {
-          // same degrade rule as candidatePairs: broadcast only while
-          // the hot-key set is provably small; a small cap on a
-          // templated reference corpus can flag enough keys to blow
-          // the broadcast limit, so fall back to a shuffled anti-join
-          val hotSide = if (nHot <= HotKeyBroadcastLimit) broadcast(hot) else hot
-          re0.join(hotSide, Seq("band_idx", "band_key"), "left_anti")
-        }
-      case None => re0
-    }
+    val re = withoutHotBuckets(exploded(r, "ref_id"), maxBucketSize)
     val cands = exploded(b, "batch_id")
       .join(re, Seq("band_idx", "band_key"))
       .select("batch_id", "ref_id").distinct()

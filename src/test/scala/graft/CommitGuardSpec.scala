@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a `foreachBatch` writer call anywhere else is a hand-rolled twin.
   * The replay fence rule lives in `graft.io.EpochFence` and the store
   * append barrier in `DedupStore.appendSurvivors`: a copy of either
-  * anywhere else fails.
+  * anywhere else fails. The banded stores share one fold, and the
+  * band-keyed hot-bucket exclusion is `Dedup.withoutHotBuckets`: a
+  * fold step in `MediaDedupStore` or a second band-keyed hot broadcast
+  * fails.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -65,6 +68,10 @@ class CommitGuardSpec extends AnyFunSuite {
   private def enclosingDef(src: String, at: Int): String =
     """def (\w+)""".r.findAllMatchIn(src.substring(0, at))
       .map(_.group(1)).toSeq.lastOption.getOrElse("")
+
+  /** The source line around offset `at`. */
+  private def lineAt(src: String, at: Int): String =
+    src.substring(src.lastIndexOf('\n', at) + 1, src.indexOf('\n', at))
 
   test("the detector flags a hand-rolled stage copy and a stage literal") {
     val handRolled =
@@ -134,6 +141,23 @@ class CommitGuardSpec extends AnyFunSuite {
         .map(m => s"${mainRoot.relativize(p)}: ${enclosingDef(src, m.start)}")
     }
     assert(sites == Seq("graft/io/DedupStore.scala: appendSurvivors"),
+      sites.mkString("\n"))
+  }
+
+  test("MediaDedupStore holds no fold step; the band-keyed hot broadcast lives only in withoutHotBuckets") {
+    val media = mainSources.collectFirst {
+      case (p, src) if p.endsWith("graft/io/MediaDedupStore.scala") => src
+    }.get
+    val foldSteps = """\.persist\(|left_anti|connectedComponents|appendSurvivors""".r
+      .findAllIn(media).toSeq
+    assert(foldSteps.isEmpty, foldSteps.mkString("\n"))
+    // the vector store's cell caps (`Seq("cell")`) are a different join
+    val sites = mainSources.flatMap { case (p, src) =>
+      """broadcast\(hot\)""".r.findAllMatchIn(src)
+        .filterNot(m => lineAt(src, m.start).contains("\"cell\""))
+        .map(m => s"${mainRoot.relativize(p)}: ${enclosingDef(src, m.start)}")
+    }
+    assert(sites == Seq("graft/operators/Dedup.scala: withoutHotBuckets"),
       sites.mkString("\n"))
   }
 }

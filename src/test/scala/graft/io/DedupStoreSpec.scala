@@ -1,64 +1,24 @@
 package graft.io
 
-import graft.SparkSpec
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-class DedupStoreSpec extends SparkSpec {
+class DedupStoreSpec extends BandedStoreSpec {
   import spark.implicits._
 
-  private def table(name: String): String = {
-    spark.sql("CREATE DATABASE IF NOT EXISTS dstore_test")
-    s"dstore_test.$name"
-  }
+  private def table(name: String): String = TextFamily.table(spark, name)
 
-  private val textA = "alpha beta gamma delta epsilon zeta eta theta"
-  private val textB = "one two three four five six seven"
-  private val textC = "eight nine ten eleven twelve thirteen fourteen"
+  import TextFamily.{textA, textB, textC}
 
   private def df(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
   test("crawl-N+1 lifecycle: within-batch keepers, store hits dropped, epochs stamped") {
-    val t = table("t_lifecycle")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    // batch 1: 101/103 exact dups (keeper = min id), 105 unique
-    val f1 = DedupStore.maintain(spark, t,
-      df(101L -> textA, 103L -> textA, 105L -> textB),
-      "doc_id", "text", epochId = 1L)
-    assert(f1.applied && f1.batchRows == 3L, f1.toString)
-    assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
-      Set(101L -> 1L, 105L -> 1L))
-    // one row per (doc, band)
-    assert(spark.table(t).groupBy("doc_id").count()
-      .as[(Long, Long)].collect().toMap.values.toSet == Set(4L))
-
-    // batch 2: 202 dups stored content (dropped), 204/206/208 a fresh
-    // within-batch cluster (204 keeps)
-    val f2 = DedupStore.maintain(spark, t,
-      df(202L -> textA, 204L -> textC, 206L -> textC, 208L -> textC),
-      "doc_id", "text", epochId = 2L)
-    assert(f2.applied && f2.batchRows == 4L,
-      "batchRows rides the incoming batch, not the survivors: " + f2)
-    assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
-      Set(101L -> 1L, 105L -> 1L, 204L -> 2L))
+    lifecycleCase(TextFamily)
   }
 
   test("epoch fence: same-epoch replay no-ops, older epoch throws") {
-    val t = table("t_fence")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    assert(DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = 10L).applied)
-    val skip = DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = 10L)
-    assert(!skip.applied && skip.batchRows == 0L, "same-epoch replay must skip")
-    assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)].collect().toSet ==
-      Set(1L -> 10L), "skipped fold must leave the store untouched")
-    val e = intercept[IllegalStateException] {
-      DedupStore.maintain(spark, t, df(3L -> textC), "doc_id", "text",
-        epochId = 9L)
-    }
-    assert(e.getMessage.contains("OLDER"))
+    epochFenceCase(TextFamily)
   }
 
   test("unfenced exact replay converges: every doc matches its own stored self") {
@@ -195,18 +155,7 @@ class DedupStoreSpec extends SparkSpec {
   }
 
   test("identity guard: a stored doc_id never appends twice, even with changed content") {
-    val t = table("t_identity")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    DedupStore.maintain(spark, t, df(1L -> textA, 2L -> textB),
-      "doc_id", "text", epochId = 1L)
-    // id 1 re-delivered with COMPLETELY different content: without the
-    // guard it would append a second set of band rows under the same id
-    DedupStore.maintain(spark, t, df(1L -> textC), "doc_id", "text",
-      epochId = 2L)
-    assert(spark.table(t).filter(col("doc_id") === 1L).count() == 4L,
-      "one band-row set per doc id, ever")
-    assert(DedupStore.storedDocIds(spark, t).as[(Long, Long)]
-      .collect().toSet == Set(1L -> 1L, 2L -> 1L))
+    identityGuardCase(TextFamily)
   }
 
   test("crash-retry converges: a stale epoch property re-runs the fold without duplicating") {
@@ -247,168 +196,31 @@ class DedupStoreSpec extends SparkSpec {
   }
 
   test("store shape guard refuses a foreign table") {
-    val t = table("t_wrong_shape")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    Seq((1L, "x")).toDF("k", "v").write.saveAsTable(t)
-    val e = intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-        epochId = 1L)
-    }
-    assert(e.getMessage.contains("not a dedup store"))
+    foldForeignCase(TextFamily)
   }
 
   test("bucketed store: folds agree with unbucketed, store-side reads need no shuffle") {
-    val plain = table("t_plain")
-    val bucketed = table("t_bucketed")
-    Seq(plain, bucketed).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val b1 = df(101L -> textA, 103L -> textA, 105L -> textB)
-    val b2 = df(202L -> textA, 204L -> textC)
-    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
-      DedupStore.maintain(spark, plain, b, "doc_id", "text",
-        epochId = i + 1L)
-      DedupStore.maintain(spark, bucketed, b, "doc_id", "text",
-        storeBuckets = 4, epochId = i + 1L)
-    }
-    assert(DedupStore.storedDocIds(spark, bucketed).as[(Long, Long)]
-      .collect().toSet ==
-      DedupStore.storedDocIds(spark, plain).as[(Long, Long)].collect().toSet)
-    // HashPartitioning(band_key) from the bucket spec satisfies a
-    // band_key-clustered distribution without an Exchange — the pin
-    // that the store side of every future probe join stays shuffle-free
-    val agg = spark.table(bucketed).groupBy("band_key").count()
-    val physical = agg.queryExecution.executedPlan.toString
-    assert(!physical.contains("Exchange"),
-      s"bucketed store scan must not shuffle:\n$physical")
-    val unbucketedAgg = spark.table(plain).groupBy("band_key").count()
-    assert(unbucketedAgg.queryExecution.executedPlan.toString.contains("Exchange"),
-      "control: the unbucketed twin DOES shuffle")
+    bucketedCase(TextFamily)
   }
 
   test("knob drift refuses: frozen shingle/hash/band settings gate folds AND probes") {
-    val t = table("t_knob_drift")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = 1L)
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-        shingleN = 5, epochId = 2L)
-    }.getMessage.contains("frozen fold settings"))
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.probeHits(spark, t, df(10L -> textA), "doc_id", "text",
-        numHashes = 8, bands = 4)
-    }.getMessage.contains("frozen fold settings"))
-    // matching settings: the probe is a pure read that finds the dup
-    assert(DedupStore.probeHits(spark, t, df(10L -> textA),
-      "doc_id", "text").as[Long].collect().toSet == Set(10L))
-    assert(DedupStore.storedDocIds(spark, t).count() == 1L,
-      "a probe must never append")
+    knobDriftCase(TextFamily)
   }
 
   test("fold order changes keepers but never the dedup invariant (exact-dup corpus)") {
-    val fwd = table("t_order_fwd")
-    val rev = table("t_order_rev")
-    Seq(fwd, rev).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val b1 = df(1L -> textA, 3L -> textB)
-    val b2 = df(2L -> textA, 4L -> textC)
-    DedupStore.maintain(spark, fwd, b1, "doc_id", "text", epochId = 1L)
-    DedupStore.maintain(spark, fwd, b2, "doc_id", "text", epochId = 2L)
-    DedupStore.maintain(spark, rev, b2, "doc_id", "text", epochId = 1L)
-    DedupStore.maintain(spark, rev, b1, "doc_id", "text", epochId = 2L)
-    val all = b1.unionByName(b2)
-    for (t <- Seq(fwd, rev)) {
-      val kept = DedupStore.storedDocIds(spark, t).select("doc_id")
-      val texts = all.join(kept, "doc_id")
-        .select("text").as[String].collect().toSeq
-      assert(texts.distinct.size == texts.size,
-        s"$t: stored docs must never contain dups of each other")
-      assert(texts.toSet == Set(textA, textB, textC),
-        s"$t: every distinct content must have exactly one representative")
-    }
-    // first-folded batch wins the representative for shared content
-    assert(DedupStore.storedDocIds(spark, fwd).as[(Long, Long)]
-      .collect().map(_._1).toSet == Set(1L, 3L, 4L))
-    assert(DedupStore.storedDocIds(spark, rev).as[(Long, Long)]
-      .collect().map(_._1).toSet == Set(2L, 3L, 4L))
+    foldOrderCase(TextFamily)
   }
 
   test("keeper policies: max_quality keeps the best member, min_id the smallest id") {
-    def qdf(rows: (Long, String, Double)*) =
-      rows.toDF("doc_id", "text", "quality")
-    // a planted high-quality-duplicate cluster: 103 carries the best
-    // quality but NOT the smallest id — the two policies must diverge
-    val batch = qdf((101L, textA, 0.2), (103L, textA, 0.9),
-      (105L, textB, 0.5))
-    val tMin = table("t_keeper_min")
-    val tQ = table("t_keeper_q")
-    Seq(tMin, tQ).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    DedupStore.maintain(spark, tMin, batch, "doc_id", "text",
-      epochId = 1L)
-    DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-      epochId = 1L, keeper = "max_quality",
-      qualityCol = Some("quality"))
-    assert(DedupStore.storedDocIds(spark, tMin).as[(Long, Long)]
-      .collect().map(_._1).toSet == Set(101L, 105L))
-    assert(DedupStore.storedDocIds(spark, tQ).as[(Long, Long)]
-      .collect().map(_._1).toSet == Set(103L, 105L),
-      "max_quality must keep the planted cluster's best member")
-    // the quality column never enters the store schema
-    assert(spark.table(tQ).columns.sorted.toSeq ==
-      Seq("_epoch", "band_idx", "band_key", "doc_id", "sh"))
-    // guards: unknown keeper; max_quality without the column; a
-    // column with min_id; a column missing from the batch
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        epochId = 2L, keeper = "best_effort")
-    }.getMessage.contains("keeper"))
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        epochId = 2L, keeper = "max_quality")
-    }.getMessage.contains("needs qualityCol"))
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, tQ, batch, "doc_id", "text",
-        epochId = 2L, qualityCol = Some("quality"))
-    }.getMessage.contains("only used by keeper max_quality"))
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.maintain(spark, tQ, batch.drop("quality"), "doc_id",
-        "text", epochId = 2L, keeper = "max_quality",
-        qualityCol = Some("quality"))
-    }.getMessage.contains("not in the batch"))
+    keeperCase(TextFamily)
   }
 
   test("read-path knob check is never vacuous: a property-less store refuses the probe") {
-    val t = table("t_probe_noprop")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    DedupStore.maintain(spark, t, df(1L -> textA), "doc_id", "text",
-      epochId = 1L)
-    // simulate a pre-property store: the fold stamped the knobs, strip
-    // them — the probe must refuse (the fold would pass once and
-    // re-stamp; the probe has no stamping step, so a vacuous pass
-    // would silently match nothing on mismatched knobs)
-    spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES " +
-      s"('${DedupStore.KnobsProperty}')")
-    val e = intercept[IllegalArgumentException] {
-      DedupStore.probeHits(spark, t, df(10L -> textA), "doc_id", "text")
-    }
-    assert(e.getMessage.contains(DedupStore.KnobsProperty) &&
-      e.getMessage.contains("run one fold"), e.getMessage)
-    // one fold re-stamps; the probe works again
-    DedupStore.maintain(spark, t, df(2L -> textB), "doc_id", "text",
-      epochId = 2L)
-    assert(DedupStore.probeHits(spark, t, df(10L -> textA),
-      "doc_id", "text").as[Long].collect().toSet == Set(10L))
+    probeNoPropCase(TextFamily)
   }
 
   test("probe refuses a foreign table with a named error, not a missing-column crash") {
-    val t = table("t_probe_foreign")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    Seq((1L, "x")).toDF("k", "v").write.mode("overwrite").saveAsTable(t)
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.probeHits(spark, t, df(10L -> textA), "doc_id", "text")
-    }.getMessage.contains("not a dedup store"))
-    assert(intercept[IllegalArgumentException] {
-      DedupStore.probeHits(spark, table("t_probe_nonexistent"),
-        df(10L -> textA), "doc_id", "text")
-    }.getMessage.contains("no such table"))
+    probeForeignCase(TextFamily)
   }
 
   test("verify threshold is stamped informationally: divergent probes warn but run") {
@@ -477,5 +289,32 @@ class DedupStoreSpec extends SparkSpec {
     assert(!caught.asScala.exists(_.contains("lineage has been truncated")),
       caught.asScala.mkString("\n"))
     assert(DedupStore.storedDocIds(spark, t).count() == 2L)
+  }
+
+  test("a founding fold caches its banded batch once: no CacheManager re-cache WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val caught = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val watch = new AbstractAppender("cache-watch", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        caught.add(e.getMessage.getFormattedMessage)
+    }
+    val cacheLog = LogManager.getLogger(
+      "org.apache.spark.sql.execution.CacheManager").asInstanceOf[Logger]
+    assert(cacheLog.isWarnEnabled, "the WARN this test watches for must be enabled")
+    watch.start()
+    cacheLog.addAppender(watch)
+    try for (f <- families) {
+      val t = fresh(f, "t_founding_cache")
+      assert(f.maintain(spark, t, f.batch(spark, 1L -> f.a, 2L -> f.b),
+        epochId = 1L).applied)
+      assert(!caught.asScala.exists(_.contains("already cached")),
+        s"${f.idCol} founding fold: " + caught.asScala.mkString("\n"))
+    } finally {
+      cacheLog.removeAppender(watch)
+      watch.stop()
+    }
   }
 }

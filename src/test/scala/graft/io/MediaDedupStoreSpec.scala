@@ -1,24 +1,11 @@
 package graft.io
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
-
-class MediaDedupStoreSpec extends SparkSpec {
+class MediaDedupStoreSpec extends BandedStoreSpec {
   import spark.implicits._
+  import MediaFamily.{hA, hA2, hB, hC}
 
-  private def table(name: String): String = {
-    spark.sql("CREATE DATABASE IF NOT EXISTS mstore_test")
-    s"mstore_test.$name"
-  }
+  private def table(name: String): String = MediaFamily.table(spark, name)
 
-  // 64-bit dHash fixtures: near-dups differ in <= 16 bits, unrelated
-  // images in ~32 (the dHash contract MultimodalSpec measures)
-  private val hA = 0x0123456789ABCDEFL
-  private val hA2 = hA ^ 0x7L // 3 flips inside band 0 — bands 1..3 intact
-  private val hA3 = hA ^ 0x30L // another re-encode of the same content
-  private val hB = ~hA // hamming 64, every band differs
-  private val hC = 0x00FF00FF00FF00FFL
-  private val hC2 = hC ^ ((1L << 20) | (1L << 40)) // hamming 2
   // shares band 0 with hA but differs in 48 of the other bits — the
   // banded candidate the exact verify must reject
   private val hFalse = hA ^ 0xFFFFFFFFFFFF0000L
@@ -26,48 +13,18 @@ class MediaDedupStoreSpec extends SparkSpec {
   private def df(rows: (Long, Long)*) = rows.toDF("media_id", "dhash")
 
   private def stored(t: String): Set[(Long, Long)] =
-    MediaDedupStore.storedMediaIds(spark, t)
-      .select("media_id", "_epoch").as[(Long, Long)].collect().toSet
+    MediaFamily.stored(spark, t)
 
   private def drop(t: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("crawl-N+1 lifecycle: within-batch keepers, store hits dropped, epochs stamped") {
-    val t = table("t_lifecycle")
-    drop(t)
-    // batch 1: 1/3 near-dup re-encodes (1 keeps), 5 unrelated
-    val f1 = MediaDedupStore.maintain(spark, t, df(1L -> hA, 3L -> hA2, 5L -> hB),
-      "media_id", "dhash", epochId = 1L)
-    assert(f1.applied && f1.batchRows == 3L, f1.toString)
-    assert(stored(t) == Set(1L -> 1L, 5L -> 1L), stored(t).toString)
-    // batch 2: 202 is a re-encode of STORED content (probe drops it),
-    // 204/206 a fresh near-dup cluster (204 keeps)
-    val f2 = MediaDedupStore.maintain(spark, t,
-      df(202L -> hA3, 204L -> hC, 206L -> hC2),
-      "media_id", "dhash", epochId = 2L)
-    assert(f2.applied && f2.batchRows == 3L, f2.toString)
-    assert(stored(t) == Set(1L -> 1L, 5L -> 1L, 204L -> 2L),
-      stored(t).toString)
-    // store schema: one row per (image, band), hash carried per row
-    assert(spark.table(t).count() == 12L)
+    lifecycleCase(MediaFamily)
   }
 
   test("epoch fence: same-epoch replay no-ops, older epoch throws; property is the source") {
-    val t = table("t_fence")
-    drop(t)
-    MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", epochId = 5L)
-    assert(DedupStore.committedEpoch(spark, t).contains(5L))
-    val replay = MediaDedupStore.maintain(spark, t, df(2L -> hB),
-      "media_id", "dhash", epochId = 5L)
-    assert(!replay.applied && replay.batchRows == 0L, replay.toString)
-    assert(stored(t).map(_._1) == Set(1L))
-    val e = intercept[IllegalStateException] {
-      MediaDedupStore.maintain(spark, t, df(2L -> hB),
-        "media_id", "dhash", epochId = 3L)
-    }
-    assert(e.getMessage.contains("OLDER"), e.getMessage)
+    epochFenceCase(MediaFamily)
   }
 
   test("a shared-band false friend survives: the exact Hamming verify rejects it") {
@@ -130,50 +87,15 @@ class MediaDedupStoreSpec extends SparkSpec {
   }
 
   test("identity guard: a stored media_id never appends twice, even with changed content") {
-    val t = table("t_identity")
-    drop(t)
-    MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", epochId = 1L)
-    MediaDedupStore.maintain(spark, t, df(1L -> hB, 2L -> hC),
-      "media_id", "dhash", epochId = 2L)
-    assert(stored(t) == Set(1L -> 1L, 2L -> 2L), stored(t).toString)
-    assert(spark.table(t).filter(col("media_id") === 1L).count() == 4L,
-      "id 1 must keep exactly its original four band rows")
+    identityGuardCase(MediaFamily)
   }
 
   test("bucketed store: folds agree with unbucketed, store-side reads need no shuffle") {
-    val plain = table("t_plain")
-    val bucketed = table("t_bucketed")
-    Seq(plain, bucketed).foreach(drop)
-    val b1 = df(101L -> hA, 103L -> hA2, 105L -> hB)
-    val b2 = df(202L -> hA3, 204L -> hC)
-    Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
-      MediaDedupStore.maintain(spark, plain, b, "media_id", "dhash",
-        epochId = i + 1L)
-      MediaDedupStore.maintain(spark, bucketed, b, "media_id", "dhash",
-        storeBuckets = 4, epochId = i + 1L)
-    }
-    assert(stored(bucketed) == stored(plain))
-    val agg = spark.table(bucketed).groupBy("band_key").count()
-    val physical = agg.queryExecution.executedPlan.toString
-    assert(!physical.contains("Exchange"),
-      s"bucketed store scan must not shuffle:\n$physical")
-    // bucket-spec drift refuses with the store's own diagnostic
-    val e = intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, bucketed, b1, "media_id", "dhash",
-        storeBuckets = 8, epochId = 3L)
-    }
-    assert(e.getMessage.contains("bucket layout is fixed"), e.getMessage)
+    bucketedCase(MediaFamily)
   }
 
   test("shape guards: foreign table, bad bands, bad hamming refuse with named errors") {
-    val t = table("t_foreign")
-    drop(t)
-    Seq((1L, "x")).toDF("k", "v").write.mode("overwrite").saveAsTable(t)
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, t, df(1L -> hA), "media_id", "dhash",
-        epochId = 1L)
-    }.getMessage.contains("not a media dedup store"))
+    foldForeignCase(MediaFamily)
     assert(intercept[IllegalArgumentException] {
       MediaDedupStore.maintain(spark, table("t_cfg"), df(1L -> hA),
         "media_id", "dhash", bands = 5, epochId = 1L)
@@ -185,23 +107,7 @@ class MediaDedupStoreSpec extends SparkSpec {
   }
 
   test("knob drift refuses: the frozen band count gates later folds AND probes") {
-    val t = table("t_knob_drift")
-    drop(t)
-    MediaDedupStore.maintain(spark, t, df(1L -> hA),
-      "media_id", "dhash", bands = 4, epochId = 1L)
-    // band keys are a function of `bands` — a mismatched fold or probe
-    // would band-join incompatible keys and silently match NOTHING
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, t, df(2L -> hB),
-        "media_id", "dhash", bands = 8, epochId = 2L)
-    }.getMessage.contains("frozen fold settings"))
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.probeHits(spark, t, df(10L -> hA2),
-        "media_id", "dhash", bands = 2)
-    }.getMessage.contains("frozen fold settings"))
-    // the matching settings still work both ways
-    assert(MediaDedupStore.probeHits(spark, t, df(10L -> hA2),
-      "media_id", "dhash", bands = 4).as[Long].collect().toSet == Set(10L))
+    knobDriftCase(MediaFamily)
   }
 
   test("lifecycle completeness: compact and prune_store work on the media store, properties survive") {
@@ -236,82 +142,15 @@ class MediaDedupStoreSpec extends SparkSpec {
   }
 
   test("fold order changes keepers but never the dedup invariant") {
-    val fwd = table("t_order_fwd")
-    val rev = table("t_order_rev")
-    Seq(fwd, rev).foreach(drop)
-    val b1 = df(1L -> hA, 3L -> hB)
-    val b2 = df(2L -> hA2, 4L -> hC)
-    MediaDedupStore.maintain(spark, fwd, b1, "media_id", "dhash", epochId = 1L)
-    MediaDedupStore.maintain(spark, fwd, b2, "media_id", "dhash", epochId = 2L)
-    MediaDedupStore.maintain(spark, rev, b2, "media_id", "dhash", epochId = 1L)
-    MediaDedupStore.maintain(spark, rev, b1, "media_id", "dhash", epochId = 2L)
-    // whichever of {1, 2} (the near-dup pair across folds) arrived
-    // first keeps; exactly one of them is stored either way
-    for (t <- Seq(fwd, rev)) {
-      val ids = stored(t).map(_._1)
-      assert(ids.intersect(Set(1L, 2L)).size == 1 &&
-        ids.contains(3L) && ids.contains(4L), s"$t: $ids")
-    }
-    assert(stored(fwd).map(_._1).contains(1L))
-    assert(stored(rev).map(_._1).contains(2L))
+    foldOrderCase(MediaFamily)
   }
 
   test("keeper policies: max_quality keeps the best re-encode, min_id the smallest id") {
-    def qdf(rows: (Long, Long, Long)*) =
-      rows.toDF("media_id", "dhash", "bytes")
-    // 1/3 near-dup re-encodes; 3 is the higher-resolution copy (more
-    // bytes) but NOT the smallest id — the policies must diverge
-    val batch = qdf((1L, hA, 100L), (3L, hA2, 900L), (5L, hC, 400L))
-    val tMin = table("t_keeper_min")
-    val tQ = table("t_keeper_q")
-    Seq(tMin, tQ).foreach(drop)
-    MediaDedupStore.maintain(spark, tMin, batch, "media_id", "dhash",
-      epochId = 1L)
-    MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-      epochId = 1L, keeper = "max_quality",
-      qualityCol = Some("bytes"))
-    assert(stored(tMin).map(_._1) == Set(1L, 5L))
-    assert(stored(tQ).map(_._1) == Set(3L, 5L),
-      "max_quality must keep the planted cluster's best re-encode")
-    // quality never enters the store schema; guards mirror the text store
-    assert(spark.table(tQ).columns.sorted.toSeq ==
-      Seq("_epoch", "band_idx", "band_key", "dhash", "media_id"))
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-        epochId = 2L, keeper = "max_quality")
-    }.getMessage.contains("needs qualityCol"))
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.maintain(spark, tQ, batch, "media_id", "dhash",
-        epochId = 2L, qualityCol = Some("bytes"))
-    }.getMessage.contains("only used by keeper max_quality"))
+    keeperCase(MediaFamily)
   }
 
   test("probe guards: foreign table named error, property-less store refuses, verify stamp") {
-    val t = table("t_probe_guards")
-    drop(t)
-    Seq((1L, "x")).toDF("k", "v").write.mode("overwrite").saveAsTable(t)
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.probeHits(spark, t, df(9L -> hA), "media_id", "dhash")
-    }.getMessage.contains("not a media dedup store"))
-
-    val t2 = table("t_probe_noprop")
-    drop(t2)
-    MediaDedupStore.maintain(spark, t2, df(1L -> hA), "media_id", "dhash",
-      epochId = 1L)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(t2))
-    assert(meta.properties.get(MediaDedupStore.VerifyProperty)
-      .contains("maxHamming=16"))
-    spark.sql(s"ALTER TABLE $t2 UNSET TBLPROPERTIES " +
-      s"('${MediaDedupStore.KnobsProperty}')")
-    assert(intercept[IllegalArgumentException] {
-      MediaDedupStore.probeHits(spark, t2, df(9L -> hA2),
-        "media_id", "dhash")
-    }.getMessage.contains(MediaDedupStore.KnobsProperty))
-    // a fold re-stamps; the probe reads again
-    MediaDedupStore.maintain(spark, t2, df(2L -> hC), "media_id", "dhash",
-      epochId = 2L)
-    assert(MediaDedupStore.probeHits(spark, t2, df(9L -> hA2),
-      "media_id", "dhash").as[Long].collect().toSet == Set(9L))
+    probeForeignCase(MediaFamily)
+    probeNoPropCase(MediaFamily)
   }
 }
