@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.config._
 import graft.dq.DqEngine
 import graft.io.{Sinks, Sources, Upsert}
-import graft.meta.{AuditLogger, MetadataManager}
+import graft.meta.{AuditItem, AuditLogger, MetadataManager}
 
 /** The three medallion layer processors (reference F1–F6 loop
   * semantics: `enabled` gating, per-item error isolation, audit
@@ -58,11 +58,47 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
     *
     * Dependencies are composed futures, so no pool thread ever waits
     * on another item; the daemon pool ends with the layer.
+    *
+    * The layer writes the ledger twice, whatever its item count: before
+    * the first item starts, one append of every item's STARTED row (so a
+    * crash still leaves each unfinished item visible); after the last
+    * item ends, one append of their terminal rows, each made (and
+    * timed) when its item ended and carrying that item's run date,
+    * config snapshot, dictionary entries and DQ metrics. `audited` is
+    * an item's one audit identity, used by both rows. If the opening
+    * append fails, no item runs; if the closing one fails, every item
+    * is reported failed and no SUCCESS row, hence no watermark, lands.
+    * The price: a terminal row becomes durable when its layer ends, not
+    * when its item ends, so after a crash mid-layer the finished items
+    * look unfinished, their watermarks stay put, and the next run redoes
+    * them (every refresh is idempotent within a date). Nothing in a
+    * layer reads a sibling's row from the same run: watermarks and
+    * VolumeGuard read earlier runs.
     */
-  protected def runAll[C](items: Seq[C], id: C => String,
+  protected def runAll[C](items: Seq[C], audited: C => AuditItem,
       enabled: C => Boolean, footprint: C => Option[Footprint])(
       work: C => Unit): LayerReport = {
     val todo = items.filter(enabled).toVector
+    val audits = todo.map(audited)
+    def report(errors: Seq[Option[String]]): LayerReport = {
+      val outcomes = audits.map(_.sourceId).zip(errors)
+      LayerReport(layerName, outcomes.collect { case (i, None) => i },
+        outcomes.collect { case (i, Some(e)) => i -> e })
+    }
+    scala.util.Try(audit.openLayer(audits)) match {
+      case scala.util.Failure(e) =>
+        report(audits.map(_ => Some(String.valueOf(e.getMessage))))
+      case scala.util.Success(ledger) =>
+        schedule(todo, footprint)(j => audit.runItem(ledger, j)(work(todo(j))))
+        report(audit.closeLayer(ledger))
+    }
+  }
+
+  /** Runs `run(j)` for every item, each once the earlier items it
+    * waits for (see [[runAll]]) have finished.
+    */
+  private def schedule[C](todo: Vector[C], footprint: C => Option[Footprint])(
+      run: Int => Unit): Unit = {
     val prints = todo.map(footprint)
     def waits(i: Int, j: Int): Boolean = (prints(i), prints(j)) match {
       case (Some(a), Some(b)) =>
@@ -82,18 +118,11 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
     pool.prestartAllCoreThreads()
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val done = todo.indices.foldLeft(Vector.empty[Future[Either[(String, String), String]]]) {
+      val done = todo.indices.foldLeft(Vector.empty[Future[Unit]]) {
         (started, j) => started :+ Future.sequence(started.indices.filter(waits(_, j))
-          .map(started)).map { _ =>
-            val item = todo(j)
-            try { work(item); Right(id(item)) }
-            catch { case e: Throwable => Left(id(item) -> String.valueOf(e.getMessage)) }
-          }
+          .map(started)).map(_ => run(j))
       }
-      val results = Await.result(Future.sequence(done), Duration.Inf)
-      LayerReport(layerName,
-        results.collect { case Right(i) => i },
-        results.collect { case Left(f) => f })
+      Await.result(Future.sequence(done), Duration.Inf): Unit
     } finally pool.shutdown()
   }
 
@@ -154,8 +183,11 @@ class BronzeLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "bronze"
 
   def run(): LayerReport =
-    runAll[SourceConfig](config.sources, _.sourceId, _.enabled,
+    runAll[SourceConfig](config.sources, audited, _.enabled,
       src => Some(Footprint(Set.empty, src.targetTable.toLowerCase)))(ingest)
+
+  private def audited(src: SourceConfig): AuditItem = AuditItem(layerName,
+    "ingest", "BronzeLayer", src.sourceId, src.targetTable, runDate, src)
 
   def ingest(src0: SourceConfig): Unit = {
     // incremental watermark: substitute ${EXTRACT_DATE} with the last
@@ -173,8 +205,7 @@ class BronzeLayer(spark: SparkSession, config: EtlConfig,
     val src = src0.copy(
       sourcePath = EtlConfig.substitute(src0.sourcePath, vars),
       options = src0.options.map { case (k, v) => k -> EtlConfig.substitute(v, vars) })
-    audit.bracket(layerName, "ingest", "BronzeLayer", src.sourceId,
-        src.targetTable, runDate, src0) {
+    audit.bracket(audited(src0)) {
       var df = Sources.read(spark, src)
         .withColumn("ingestion_timestamp", current_timestamp())
         .withColumn("source_id", lit(src.sourceId))
@@ -196,14 +227,16 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "silver"
 
   def run(): LayerReport =
-    runAll[TransformConfig](config.transformations, _.transformId, _.enabled,
+    runAll[TransformConfig](config.transformations, audited, _.enabled,
       t => if (t.transformType != "sql") None
         else reads(EtlConfig.substitute(t.sqlQuery, Map("PROCESSING_DATE" -> runDate)),
           t.dataQuality.flatMap(_.refTable)).map(Footprint(_, t.targetTable.toLowerCase)))(transform)
 
+  private def audited(t: TransformConfig): AuditItem = AuditItem(layerName,
+    "transform", "SilverLayer", t.transformId, t.targetTable, runDate, t)
+
   def transform(t: TransformConfig): Unit =
-    audit.bracket(layerName, "transform", "SilverLayer", t.transformId,
-        t.targetTable, runDate, t) {
+    audit.bracket(audited(t)) {
       // snapshot BEFORE this step tracks anything: the drain below must
       // free only frames THIS transform created — a blanket release
       // would free localCheckpoint blocks owned by other in-flight
@@ -268,7 +301,7 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
       meta.recordDqMetrics(dq.metrics.map(m =>
         graft.meta.DqMetricRow(t.targetTable, t.transformId, m.rule,
           m.ruleType, m.action, m.validCount, m.invalidCount, runDate,
-          new java.sql.Timestamp(0)))) // stamped by the manager's clock
+          null))) // recorded_at: the carrying SUCCESS row's event time
       ((), rows)
     }
 }
@@ -284,10 +317,14 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
   val layerName = "gold"
 
   def run(): LayerReport =
-    runAll[ModelConfig](config.models, _.modelId, _.enabled,
+    runAll[ModelConfig](config.models, audited, _.enabled,
       m => if (m.mode == "streaming" || !Set("full", "incremental")(m.refreshType)) None
         else reads(EtlConfig.substitute(m.sqlQuery, Map("PROCESSING_DATE" -> runDate)))
           .map(Footprint(_, m.targetTable.toLowerCase)))(build)
+
+  private def audited(m: ModelConfig): AuditItem = AuditItem(layerName,
+    if (m.mode == "streaming") "stream" else "model", "GoldLayer", m.modelId,
+    m.targetTable, runDate, m)
 
   def build(m: ModelConfig): Unit =
     if (m.mode == "streaming") buildStreaming(m) else buildBatch(m)
@@ -306,8 +343,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     * progress counters, summed over the run's micro-batches).
     */
   def buildStreaming(m: ModelConfig): Unit =
-    audit.bracket(layerName, "stream", "GoldLayer", m.modelId,
-        m.targetTable, runDate, m) {
+    audit.bracket(audited(m)) {
       // same template substitution as bronze source paths (${ENV:…},
       // ${PROCESSING_DATE}) — corpus configs resolve their data root
       // this way
@@ -385,8 +421,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     }
 
   def buildBatch(m: ModelConfig): Unit =
-    audit.bracket(layerName, "model", "GoldLayer", m.modelId,
-        m.targetTable, runDate, m) {
+    audit.bracket(audited(m)) {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${m.targetTable.split('.').head}")
       // a join_view model has no sql_query: its fold reads the base
       // tables and their delta queries, never a model frame
@@ -574,16 +609,18 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
 
   def run(): LayerReport = {
     priorFailure = false
-    runAll[MaintenanceTaskConfig](config.maintenance, _.taskId, _.enabled, _ => None) { t =>
+    runAll[MaintenanceTaskConfig](config.maintenance, audited, _.enabled, _ => None) { t =>
       try exec(t)
       catch { case e: Throwable => priorFailure = true; throw e }
     }
   }
 
-  def exec(t: MaintenanceTaskConfig): Unit = {
-    val target = t.table.getOrElse("(warehouse staging)")
-    audit.bracket(layerName, t.taskType, "MaintenanceLayer", t.taskId,
-        target, runDate, t) {
+  private def audited(t: MaintenanceTaskConfig): AuditItem = AuditItem(layerName,
+    t.taskType, "MaintenanceLayer", t.taskId,
+    t.table.getOrElse("(warehouse staging)"), runDate, t)
+
+  def exec(t: MaintenanceTaskConfig): Unit =
+    audit.bracket(audited(t)) {
       val n: Long = t.taskType match {
         case "compact" =>
           val (_, after) = graft.io.Maintenance.compact(spark, t.table.get,
@@ -665,5 +702,4 @@ class MaintenanceLayer(spark: SparkSession, config: EtlConfig,
       }
       ((), n)
     }
-  }
 }

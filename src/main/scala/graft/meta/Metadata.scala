@@ -2,38 +2,44 @@ package graft.meta
 
 import java.sql.Timestamp
 import scala.util.DynamicVariable
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.EtlConfig
 
 /** Metadata plane: one append-only ledger, the audit log (an event per
-  * unit of work), the catalog views derived from it, and the per-rule
-  * DQ table — the reference's metadata_manager.py / audit_logger.py
-  * re-expressed as typed Datasets on parquet catalog tables:
+  * unit of work), and three catalog views derived from it — the
+  * reference's metadata_manager.py / audit_logger.py re-expressed as
+  * typed Datasets on one parquet catalog table:
   *
   *   - `etl_audit_log` (table): the ledger. An item's terminal row
   *     carries its run date, config snapshot and, on SUCCESS, the
-  *     dictionary entries `updateDictionary` handed its bracket.
+  *     dictionary entries and DQ rule metrics its bracket was handed.
   *   - `etl_control_table` (view): the latest SUCCESS per (target
   *     table, `<layer>.<source_id>`), so an item's SUCCESS row IS its
   *     control row and never claims a success the audit log records as
   *     an error.
   *   - `data_dictionary` (view): the latest entry per (table, column).
-  *   - `data_quality_metrics` (table): one row per DQ rule and run.
+  *   - `data_quality_metrics` (view): every DQ rule metric, stamped
+  *     with its carrying row's event time.
   *
   * Every view orders by (event_timestamp, log_id), the order every audit
-  * reader uses. Finishing an item costs one append, never a rewrite, and
-  * every metadata write holds one lock, so the layer scheduler may run
-  * items concurrently (two concurrent appends to one parquet table would
-  * share its `_temporary/0`).
+  * reader uses. The ledger is written once per layer side, never
+  * rewritten: [[graft.layers.Layer]] opens a layer's items with one
+  * append of their STARTED rows and closes them with one append of
+  * their terminal rows (a bracket outside a layer is a layer of one).
+  * Every append holds one lock, so the layer scheduler may run items
+  * concurrently (two concurrent appends to one parquet table would
+  * share its `_temporary/0`). `init` creates the ledger by DDL: no job,
+  * no file.
   *
   * Deliberate fixes vs the reference (SURVEY.md §2.12 latent bugs):
   * create-if-absent instead of drop-and-recreate (which wiped history
   * mid-pipeline and made incremental watermarks unreachable), and
   * DataFrame writes instead of f-string SQL interpolation.
   */
-/** Per-rule DQ outcome row (reference declares this schema in
-  * silver_schemas.py:72-85 but never populates it — we do).
+/** Per-rule DQ outcome row, the `data_quality_metrics` view's schema
+  * (reference declares it in silver_schemas.py:72-85 but never
+  * populates it — we do).
   */
 final case class DqMetricRow(
     target_table: String, transform_id: String, rule_name: String,
@@ -56,13 +62,31 @@ final case class DictEntry(
     table_name: String, column_name: String, data_type: String,
     description: String, model_id: String)
 
+/** One DQ rule's outcome, as a terminal audit row carries it; the row's
+  * `event_timestamp` is its `recorded_at`.
+  */
+final case class DqEntry(
+    target_table: String, transform_id: String, rule_name: String,
+    rule_type: String, action: String, valid_count: Long,
+    invalid_count: Long, run_date: String)
+
 final case class AuditEvent(
     log_id: String, event_timestamp: Timestamp, layer: String,
     operation: String, component: String, source_id: String,
     target_table: String, status: String, rows_processed: Long,
     error_message: String, execution_time_seconds: Double,
     run_id: String, spark_user: String, run_date: String,
-    config_snapshot: String, dictionary: Seq[DictEntry] = Nil)
+    config_snapshot: String, dictionary: Seq[DictEntry] = Nil,
+    dq_metrics: Seq[DqEntry] = Nil)
+
+/** An item's audit identity, the fields its STARTED and terminal rows
+  * share. With a `runDate`, the terminal row also carries it and
+  * `config`'s snapshot, and a SUCCESS becomes the item's control row
+  * (`<layer>.<sourceId>` on `targetTable`).
+  */
+final case class AuditItem(layer: String, operation: String,
+    component: String, sourceId: String, targetTable: String,
+    runDate: String = null, config: Product = null)
 
 /** Injectable clock/id source so tests are deterministic. */
 trait IdClock {
@@ -85,13 +109,13 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
 
   def init(): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    // DDL, not an empty write: no Spark job, no file
     if (!spark.catalog.tableExists(auditTable))
-      spark.emptyDataset[AuditEvent].write.saveAsTable(auditTable)
-    if (!spark.catalog.tableExists(dqMetricsTable))
-      spark.emptyDataset[DqMetricRow].write.saveAsTable(dqMetricsTable)
+      spark.catalog.createTable(auditTable, "parquet",
+        Encoders.product[AuditEvent].schema, Map.empty[String, String])
     // only terminal rows that carry a run date are control rows (a bare
     // `AuditLogger.event` or an undated bracket records no watermark)
-    spark.sql(s"""CREATE VIEW IF NOT EXISTS $controlTable AS
+    val control = s"""
       |SELECT table_name, layer, last_run_date, records_processed, status,
       |       config_snapshot, updated_timestamp
       |FROM (SELECT *, row_number() OVER (PARTITION BY table_name, layer
@@ -104,23 +128,46 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       |                   log_id
       |            FROM $auditTable
       |            WHERE status = 'SUCCESS' AND run_date IS NOT NULL))
-      |WHERE rn = 1""".stripMargin)
-    spark.sql(s"""CREATE VIEW IF NOT EXISTS $dictionaryTable AS
+      |WHERE rn = 1""".stripMargin
+    val dictionary = s"""
       |SELECT table_name, column_name, data_type, description, model_id,
       |       updated_timestamp
       |FROM (SELECT e.*, event_timestamp AS updated_timestamp,
       |             row_number() OVER (PARTITION BY e.table_name, e.column_name
       |               ORDER BY event_timestamp DESC, log_id DESC) AS rn
       |      FROM $auditTable LATERAL VIEW explode(dictionary) x AS e)
-      |WHERE rn = 1""".stripMargin)
+      |WHERE rn = 1""".stripMargin
+    val dq = s"""
+      |SELECT d.target_table, d.transform_id, d.rule_name, d.rule_type,
+      |       d.action, d.valid_count, d.invalid_count, d.run_date,
+      |       event_timestamp AS recorded_at
+      |FROM $auditTable LATERAL VIEW explode(dq_metrics) x AS d""".stripMargin
+    // CREATE VIEW analyzes its query even when the view exists, so a
+    // re-run skips the statement
+    for ((view, query) <- Seq(controlTable -> control,
+        dictionaryTable -> dictionary, dqMetricsTable -> dq)
+        if !spark.catalog.tableExists(view))
+      spark.sql(s"CREATE VIEW IF NOT EXISTS $view AS $query")
   }
 
-  /** The one ledger write: every audit event, control row and
-    * dictionary entry rides a single-row append to the audit log.
+  /** The one ledger write: every audit event, control row, dictionary
+    * entry and DQ metric rides an append of `rows` to the audit log, in
+    * one file.
     */
-  private[meta] def append(e: AuditEvent): Unit = MetadataManager.writeLock.synchronized {
-    Seq(e).toDS().write.mode(SaveMode.Append).saveAsTable(auditTable)
-  }
+  private[meta] def append(rows: Seq[AuditEvent]): Unit =
+    if (rows.nonEmpty) MetadataManager.writeLock.synchronized {
+      val ds = rows.toDS()
+      val fails = rows.exists(r => MetadataManager.failAt.contains(auditTable -> r.status))
+      (if (fails) ds.filter(udf(() => MetadataManager.fail()).asNondeterministic()()) else ds)
+        .coalesce(1).write.mode(SaveMode.Append).saveAsTable(auditTable)
+    }
+
+  /** A ledger row outside any bracket: no run date, so no control row. */
+  private def standalone(operation: String, sourceId: String, table: String,
+      dictionary: Seq[DictEntry] = Nil, dq: Seq[DqEntry] = Nil): Unit =
+    append(Seq(AuditEvent(clock.uuid(), clock.now(), "meta", operation,
+      "MetadataManager", sourceId, table, "SUCCESS", 0L, "", 0.0, null,
+      spark.sparkContext.sparkUser, null, null, dictionary, dq)))
 
   /** Documents one table from its live catalog schema (a catalog read,
     * no Spark job). Inside a bracket the entries ride that bracket's
@@ -134,20 +181,25 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
       .map(c => DictEntry(tableName, c.name, c.dataType, description, modelId))
     Option(AuditLogger.open.value) match {
       case Some(bracket) => bracket.dictionary ++= entries
-      case None =>
-        append(AuditEvent(clock.uuid(), clock.now(), "meta", "dictionary",
-          "MetadataManager", modelId, tableName, "SUCCESS", 0L, "", 0.0, null,
-          spark.sparkContext.sparkUser, null, null, entries))
+      case None => standalone("dictionary", modelId, tableName, dictionary = entries)
     }
   }
 
-  /** Stamps `recorded_at` here with the manager's (injectable) clock so
-    * callers don't reach for wall-clock time.
+  /** Records DQ rule metrics the way `updateDictionary` records entries:
+    * inside a bracket they ride its SUCCESS row, outside one a standalone
+    * ledger row. `recorded_at` is ignored; the `data_quality_metrics`
+    * view stamps each metric with its carrying row's event time.
     */
   def recordDqMetrics(rows: Seq[DqMetricRow]): Unit =
-    if (rows.nonEmpty) MetadataManager.writeLock.synchronized {
-      rows.map(_.copy(recorded_at = clock.now())).toDS()
-        .write.mode(SaveMode.Append).saveAsTable(dqMetricsTable)
+    if (rows.nonEmpty) {
+      val entries = rows.map(r => DqEntry(r.target_table, r.transform_id,
+        r.rule_name, r.rule_type, r.action, r.valid_count, r.invalid_count,
+        r.run_date))
+      Option(AuditLogger.open.value) match {
+        case Some(bracket) => bracket.dq ++= entries
+        case None => standalone("dq_metrics", rows.head.transform_id,
+          rows.head.target_table, dq = entries)
+      }
     }
 
   /** Record one control row keyed on (table_name, layer) as a terminal
@@ -162,10 +214,10 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
   def updateControl(tableName: String, layer: String, runDate: String,
       records: Long, status: String, configSnapshot: String = "{}"): Unit = {
     val (plane, item) = layer.span(_ != '.')
-    append(AuditEvent(clock.uuid(), clock.now(), plane, "control",
+    append(Seq(AuditEvent(clock.uuid(), clock.now(), plane, "control",
       "MetadataManager", if (item.isEmpty) null else item.tail, tableName,
       status, records, "", 0.0, null, spark.sparkContext.sparkUser,
-      runDate, configSnapshot))
+      runDate, configSnapshot)))
   }
 
   /** Incremental watermark: last successful run date for a target. */
@@ -189,71 +241,162 @@ object MetadataManager {
     * run concurrently and share the ledger.
     */
   private val writeLock = new Object
+
+  /** Test seam: an append to this ledger table holding a row of this
+    * status fails in its write job (`STARTED` fails a layer's opening
+    * append, `SUCCESS` its closing one).
+    */
+  @volatile private[graft] var failAt: Option[(String, String)] = None
+
+  private def fail(): Boolean =
+    throw new IllegalStateException("injected failure in a ledger append")
 }
 
 object AuditLogger {
+  /** What a terminal row carries beyond its identity and outcome. */
+  private[meta] final case class Terminal(runDate: String, snapshot: String,
+      dictionary: Seq[DictEntry], dq: Seq[DqEntry])
+  private val Bare = Terminal(null, null, Nil, Nil)
+
   /** The bracket open on a thread. [[AuditLogger.bracket]] binds one
-    * around its body and terminal row: `updateDictionary` adds entries
-    * to it, and `event` writes `terminal` (run date, config snapshot,
-    * entries) only while the terminal row is being written.
+    * around its body and terminal row: `updateDictionary` and
+    * `recordDqMetrics` add to it, and a row made while `terminal` is set
+    * carries it.
     */
   private[meta] final class Open {
     val dictionary = scala.collection.mutable.ArrayBuffer.empty[DictEntry]
-    var terminal: Option[(String, String, Seq[DictEntry])] = None
+    val dq = scala.collection.mutable.ArrayBuffer.empty[DqEntry]
+    var terminal: Terminal = Bare
   }
   private[meta] val open = new DynamicVariable[Open](null)
+
+  /** A layer's items between its opening and closing appends: item j's
+    * terminal row once its bracket has ended, and the error its work
+    * threw, if any.
+    */
+  final class LayerLedger private[meta] (private[meta] val items: IndexedSeq[AuditItem]) {
+    private[meta] val ended = new Array[AuditEvent](items.size)
+    private[meta] val failed = new Array[String](items.size)
+  }
+  /** The layer item a thread runs, bound by `AuditLogger.runItem`. */
+  private val slot = new DynamicVariable[(LayerLedger, Int)](null)
 }
 
 class AuditLogger(spark: SparkSession, meta: MetadataManager,
     clock: IdClock = SystemIdClock) {
-  import spark.implicits._
+  import AuditLogger.{LayerLedger, Open, Terminal}
 
   val runId: String = clock.uuid()
 
-  /** Every audit row goes through this one overridable write; inside a
-    * bracket's terminal row it also carries that row's run date, config
-    * snapshot and dictionary entries.
+  /** Writes one audit row before it returns; inside a bracket's terminal
+    * row it also carries that row's run date, config snapshot,
+    * dictionary entries and DQ metrics. A bracket outside a layer writes
+    * both its rows through here.
     */
   def event(layer: String, operation: String, component: String,
       sourceId: String, targetTable: String, status: String,
-      rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit = {
-    val (runDate, snapshot, dictionary) = Option(AuditLogger.open.value)
-      .flatMap(_.terminal).getOrElse((null, null, Nil))
-    meta.append(AuditEvent(clock.uuid(), clock.now(), layer, operation,
-      component, sourceId, targetTable, status, rows, error, seconds, runId,
-      spark.sparkContext.sparkUser, runDate, snapshot, dictionary))
+      rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit =
+    meta.append(Seq(row(AuditItem(layer, operation, component, sourceId,
+      targetTable), status, rows, error, seconds)))
+
+  /** One audit row, made (and stamped) now. */
+  private def row(item: AuditItem, status: String, rows: Long = 0L,
+      error: String = "", seconds: Double = 0.0): AuditEvent = {
+    val t = Option(AuditLogger.open.value).fold(AuditLogger.Bare)(_.terminal)
+    AuditEvent(clock.uuid(), clock.now(), item.layer, item.operation,
+      item.component, item.sourceId, item.targetTable, status, rows, error,
+      seconds, runId, spark.sparkContext.sparkUser, t.runDate, t.snapshot,
+      t.dictionary, t.dq)
+  }
+
+  /** Runs `make` with `open`'s terminal set for `item`: the run date and
+    * config snapshot, and on SUCCESS the entries and metrics handed to
+    * `open`.
+    */
+  private def ending[T](item: AuditItem, open: Open, status: String)(make: => T): T = {
+    val ok = status == "SUCCESS"
+    open.terminal = Terminal(item.runDate,
+      Option(item.config).map(EtlConfig.snapshot).orNull,
+      if (ok) open.dictionary.toSeq else Nil, if (ok) open.dq.toSeq else Nil)
+    AuditLogger.open.withValue(open)(make)
   }
 
   /** STARTED/SUCCESS/ERROR bracketing around a unit of work (reference
-    * F4), returning the body's result. With a `runDate`, the terminal
-    * row also carries it and `config`'s snapshot, and a SUCCESS becomes
-    * the item's control row (`<layer>.<sourceId>` on `targetTable`).
-    * Only the SUCCESS row carries the dictionary entries the body
-    * handed `updateDictionary`.
+    * F4), returning the body's result. Only the SUCCESS row carries the
+    * dictionary entries and DQ metrics the body handed the manager.
+    * Inside [[runItem]] for this item, the layer already wrote the
+    * STARTED row and the terminal row goes to the layer's closing
+    * append; anywhere else the bracket is a layer of one and writes both
+    * rows itself, through [[event]].
     */
-  def bracket[T](layer: String, operation: String, component: String,
-      sourceId: String, targetTable: String, runDate: String = null,
-      config: Product = null)(body: => (T, Long)): T = {
+  def bracket[T](item: AuditItem)(body: => (T, Long)): T = {
     val t0 = System.nanoTime()
-    event(layer, operation, component, sourceId, targetTable, "STARTED")
-    val open = new AuditLogger.Open
-    def end(status: String, rows: Long, error: String): Unit = {
-      open.terminal = Some((runDate, Option(config).map(EtlConfig.snapshot).orNull,
-        if (status == "SUCCESS") open.dictionary.toSeq else Nil))
-      event(layer, operation, component, sourceId, targetTable, status,
-        rows, error, (System.nanoTime() - t0) / 1e9)
-    }
-    AuditLogger.open.withValue(open) {
-      try {
-        val (result, rows) = body
-        end("SUCCESS", rows, "")
-        result
-      } catch {
-        case e: Throwable =>
-          end("ERROR", 0L, String.valueOf(e.getMessage))
-          throw e
+    val slot = Option(AuditLogger.slot.value)
+    def write(status: String, rows: Long = 0L, error: String = "",
+        seconds: Double = 0.0): Unit =
+      event(item.layer, item.operation, item.component, item.sourceId,
+        item.targetTable, status, rows, error, seconds)
+    if (slot.isEmpty) write("STARTED")
+    val open = new Open
+    def end(status: String, rows: Long, error: String): Unit =
+      ending(item, open, status) {
+        val seconds = (System.nanoTime() - t0) / 1e9
+        slot match {
+          case Some((l, j)) => l.ended(j) = row(item, status, rows, error, seconds)
+          case None => write(status, rows, error, seconds)
+        }
+      }
+    AuditLogger.slot.withValue(null) {
+      AuditLogger.open.withValue(open) {
+        try {
+          val (result, rows) = body
+          end("SUCCESS", rows, "")
+          result
+        } catch {
+          case e: Throwable =>
+            end("ERROR", 0L, String.valueOf(e.getMessage))
+            throw e
+        }
       }
     }
+  }
+
+  /** Opens a layer's items with one append of their STARTED rows, all
+    * made now, before any item starts.
+    */
+  def openLayer(items: Seq[AuditItem]): LayerLedger = {
+    meta.append(items.map(row(_, "STARTED")))
+    new LayerLedger(items.toIndexedSeq)
+  }
+
+  /** Runs item `j` of an open layer, keeping the error it throws: the
+    * item's [[bracket]] hands its terminal row to `ledger`.
+    */
+  def runItem(ledger: LayerLedger, j: Int)(work: => Unit): Unit =
+    AuditLogger.slot.withValue((ledger, j)) {
+      try work
+      catch { case e: Throwable => ledger.failed(j) = String.valueOf(e.getMessage) }
+    }
+
+  /** Closes an open layer with one append of its items' terminal rows.
+    * An item whose bracket never ended gets an ERROR row made now, with
+    * the error its work threw.
+    *
+    * @return each item's error (None: it succeeded). When the append
+    *         fails every item fails, with its own error or the append's.
+    */
+  def closeLayer(ledger: LayerLedger): IndexedSeq[Option[String]] = {
+    val rows = ledger.items.indices.map { j =>
+      val item = ledger.items(j)
+      Option(ledger.ended(j)).getOrElse(ending(item, new Open, "ERROR") {
+        row(item, "ERROR", error = Option(ledger.failed(j))
+          .getOrElse("ended without a terminal audit row"))
+      })
+    }
+    val errors = rows.indices.map(j => Option(ledger.failed(j))
+      .orElse(Some(rows(j).error_message).filter(_ => rows(j).status != "SUCCESS")))
+    try { meta.append(rows); errors }
+    catch { case e: Throwable => errors.map(_.orElse(Some(String.valueOf(e.getMessage)))) }
   }
 
   def recentEvents(n: Int = 100): DataFrame =

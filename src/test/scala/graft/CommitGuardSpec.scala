@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * anywhere else fails. The banded stores share one fold, and the
   * band-keyed hot-bucket exclusion is `Dedup.withoutHotBuckets`: a
   * fold step in `MediaDedupStore` or a second band-keyed hot broadcast
-  * fails.
+  * fails. The metadata ledger is written only by
+  * `MetadataManager.append`: any other table write into the metadata
+  * database, or any write of `data_quality_metrics` (a view), fails.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -72,6 +74,60 @@ class CommitGuardSpec extends AnyFunSuite {
   /** The source line around offset `at`. */
   private def lineAt(src: String, at: Int): String =
     src.substring(src.lastIndexOf('\n', at) + 1, src.indexOf('\n', at))
+
+  private val tableWrite = """(?:saveAsTable|insertInto)\(([^()\n]*)\)""".r
+  private val dqTarget = """dqMetricsTable|data_quality_metrics"""
+  private val metaTarget =
+    s"""auditTable|controlTable|dictionaryTable|\\bmetadata\\.|$dqTarget""".r
+
+  /** Table writes into the metadata database in one source text, as
+    * the names of their enclosing `def`s: every `saveAsTable` or
+    * `insertInto` in a `graft/meta` source (`inMeta`), and anywhere one
+    * whose target names a metadata table.
+    */
+  def metadataWrites(inMeta: Boolean, src: String): Seq[String] =
+    tableWrite.findAllMatchIn(src)
+      .filter(m => inMeta || metaTarget.findFirstIn(m.group(1)).isDefined)
+      .map(m => enclosingDef(src, m.start)).toSeq
+
+  /** Writes of `data_quality_metrics` in one source text: a table write
+    * whose target names it, or a SQL INSERT into it.
+    */
+  def dqWrites(src: String): Int =
+    tableWrite.findAllMatchIn(src).count(m => dqTarget.r.findFirstIn(m.group(1)).isDefined) +
+      s"""(?i)INSERT\\s+(?:INTO|OVERWRITE)\\s+(?:TABLE\\s+)?\\S*(?:$dqTarget)""".r
+        .findAllIn(src).size
+
+  test("the detector flags metadata writes beside the ledger append") {
+    val parentShape =
+      """def init(): Unit = {
+        |  spark.emptyDataset[AuditEvent].write.saveAsTable(auditTable)
+        |  spark.emptyDataset[DqMetricRow].write.saveAsTable(dqMetricsTable)
+        |}
+        |private[meta] def append(e: AuditEvent): Unit =
+        |  Seq(e).toDS().write.mode(SaveMode.Append).saveAsTable(auditTable)
+        |def recordDqMetrics(rows: Seq[DqMetricRow]): Unit =
+        |  rows.toDS().write.mode(SaveMode.Append).saveAsTable(dqMetricsTable)
+        |""".stripMargin
+    assert(metadataWrites(inMeta = true, parentShape) ==
+      Seq("init", "init", "append", "recordDqMetrics"))
+    assert(dqWrites(parentShape) == 2)
+    assert(metadataWrites(inMeta = false, "df.write.saveAsTable(table)").isEmpty)
+    assert(metadataWrites(inMeta = false,
+      """def log(): Unit = df.write.insertInto("metadata.etl_audit_log")""") == Seq("log"))
+    assert(dqWrites("""spark.sql(s"INSERT INTO $dqMetricsTable SELECT * FROM v")""") == 1)
+  }
+
+  test("the ledger append is the only metadata write; nothing writes data_quality_metrics") {
+    val meta = mainRoot.resolve("graft/meta")
+    val writes = mainSources.flatMap { case (p, src) =>
+      metadataWrites(p.startsWith(meta), src).map(d => s"${mainRoot.relativize(p)}: $d")
+    }
+    assert(writes == Seq("graft/meta/Metadata.scala: append"), writes.mkString("\n"))
+    val dq = mainSources.map { case (p, src) =>
+      mainRoot.relativize(p).toString -> dqWrites(src) }.filter(_._2 > 0)
+    assert(dq.isEmpty, dq.mkString("\n"))
+  }
 
   test("the detector flags a hand-rolled stage copy and a stage literal") {
     val handRolled =

@@ -49,7 +49,7 @@ class MetadataSpec extends SparkSpec {
   test("audit bracket records STARTED then SUCCESS with rows") {
     meta.init()
     val audit = new AuditLogger(spark, meta, new FixedClock(1800000000000L))
-    val out = audit.bracket("silver", "transform", "Test", "tx1", "silver.t") {
+    val out = audit.bracket(AuditItem("silver", "transform", "Test", "tx1", "silver.t")) {
       ("result", 42L)
     }
     assert(out == "result")
@@ -62,7 +62,7 @@ class MetadataSpec extends SparkSpec {
     meta.init()
     val audit = new AuditLogger(spark, meta, new FixedClock(1900000000000L))
     intercept[RuntimeException] {
-      audit.bracket("gold", "model", "Test", "m1", "gold.t") {
+      audit.bracket(AuditItem("gold", "model", "Test", "m1", "gold.t")) {
         throw new RuntimeException("boom"); (("x", 0L))
       }
     }
@@ -73,11 +73,11 @@ class MetadataSpec extends SparkSpec {
   test("failedEvents returns only this run's ERROR rows") {
     meta.init()
     val audit = new AuditLogger(spark, meta, new FixedClock(2000000000000L))
-    audit.bracket("silver", "transform", "Test", "ok1", "silver.ok") {
+    audit.bracket(AuditItem("silver", "transform", "Test", "ok1", "silver.ok")) {
       ("fine", 1L)
     }
     intercept[RuntimeException] {
-      audit.bracket("silver", "transform", "Test", "bad1", "silver.bad") {
+      audit.bracket(AuditItem("silver", "transform", "Test", "bad1", "silver.bad")) {
         throw new RuntimeException("boom"); (("x", 0L))
       }
     }
@@ -126,8 +126,8 @@ class MetadataSpec extends SparkSpec {
     def cfg(item: String) =
       graft.config.MaintenanceTaskConfig(item, "compact", Some("gold.shared"))
     def run(item: String, date: String, rows: Long, fail: Boolean = false): Unit =
-      try audit.bracket("gold", "model", "Test", item, "gold.shared", date,
-          cfg(item)) {
+      try audit.bracket(AuditItem("gold", "model", "Test", item, "gold.shared", date,
+          cfg(item))) {
         if (fail) throw new RuntimeException("boom")
         ((), rows)
       } catch { case _: RuntimeException if fail => () }
@@ -172,8 +172,8 @@ class MetadataSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS dict_test.t")
     Seq((1L, "a")).toDF("k", "v").write.saveAsTable("dict_test.t")
     def documented(model: String, fail: Boolean = false): Unit =
-      try audit.bracket("gold", "model", "Test", model, "dict_test.t",
-          "2024-01-01") {
+      try audit.bracket(AuditItem("gold", "model", "Test", model, "dict_test.t",
+          "2024-01-01")) {
         m.updateDictionary("dict_test.t", model, s"by $model")
         if (fail) throw new RuntimeException("boom")
         ((), 1L)
@@ -214,5 +214,192 @@ class MetadataSpec extends SparkSpec {
     val walk = java.nio.file.Files.walk(root)
     try assert(!walk.anyMatch(_.getFileName.toString == "data_dictionary"))
     finally walk.close()
+  }
+
+  /** Parquet data files under `table`'s directory (no `_SUCCESS`). */
+  private def dataFiles(table: String): Long = {
+    val dir = java.nio.file.Paths.get(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
+    if (!java.nio.file.Files.exists(dir)) 0L
+    else {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.filter(_.getFileName.toString.startsWith("part-")).count()
+      finally walk.close()
+    }
+  }
+
+  /** Whether any path under the warehouse is named `name`. */
+  private def underWarehouse(name: String): Boolean = {
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val root = java.nio.file.Paths.get(
+      wh.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(wh).toUri)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.anyMatch(_.getFileName.toString == name)
+    finally walk.close()
+  }
+
+  /** Three silver SQL items on `db`: `ok_a` (one DQ rule), `bad` (reads
+    * a missing table) and `ok_c`.
+    */
+  private def threeItems(db: String): graft.config.EtlConfig = {
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
+    Seq("a", "c").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $db.$t"))
+    graft.config.EtlConfig.fromYaml(
+      s"""transformations:
+         |  - transform_id: ok_a
+         |    source_table: $db.src
+         |    target_table: $db.a
+         |    sql_query: SELECT 1L AS k UNION ALL SELECT CAST(NULL AS BIGINT) AS k
+         |    data_quality:
+         |      - rule_name: k_not_null
+         |        rule_type: not_null
+         |        column: k
+         |        action_on_failure: filter
+         |  - transform_id: bad
+         |    source_table: $db.missing
+         |    target_table: $db.b
+         |    sql_query: SELECT * FROM $db.missing
+         |  - transform_id: ok_c
+         |    source_table: $db.src
+         |    target_table: $db.c
+         |    sql_query: SELECT 3L AS k
+         |""".stripMargin)
+  }
+
+  test("init creates the ledger by DDL: no data file") {
+    val m = new MetadataManager(spark, db = "metadata_ddl", clock = new FixedClock())
+    m.init()
+    assert(dataFiles(m.auditTable) == 0L)
+    assert(spark.table(m.auditTable).count() == 0L)
+    m.init()
+    assert(dataFiles(m.auditTable) == 0L)
+  }
+
+  test("a layer appends the ledger twice: its items' STARTED rows, then their terminal rows") {
+    import spark.implicits._
+    val clock = new FixedClock(2600000000000L)
+    val m = new MetadataManager(spark, db = "metadata_layer", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    val before = dataFiles(m.auditTable)
+    val report = new graft.layers.SilverLayer(spark, threeItems("ledger_layer"), m,
+      audit, "2024-12-01").run()
+    assert(dataFiles(m.auditTable) - before == 2L)
+    assert(report.succeeded == Seq("ok_a", "ok_c"))
+    assert(report.failed.map(_._1) == Seq("bad"))
+    val rows = audit.recentEvents().select("source_id", "status", "event_timestamp",
+      "execution_time_seconds").as[(String, String, Timestamp, Double)].collect().toSeq
+    assert(rows.map(r => r._1 -> r._2).toSet == Set("ok_a" -> "STARTED",
+      "bad" -> "STARTED", "ok_c" -> "STARTED", "ok_a" -> "SUCCESS",
+      "bad" -> "ERROR", "ok_c" -> "SUCCESS"))
+    // every STARTED row is made when the layer opens, every terminal row
+    // when its item ends, and each item is timed from its own start
+    val (started, ended) = rows.partition(_._2 == "STARTED")
+    assert(started.map(_._3.getTime).max < ended.map(_._3.getTime).min)
+    assert(ended.forall(_._4 > 0.0))
+    assert(m.controlReport("silver").select("layer").as[String].collect().toSet ==
+      Set("silver.ok_a", "silver.ok_c"))
+    // the DQ metrics ride ok_a's SUCCESS row
+    val okA = ended.find(_._1 == "ok_a").get._3
+    assert(spark.table(m.dqMetricsTable).select("rule_name", "valid_count",
+      "invalid_count", "recorded_at").as[(String, Long, Long, Timestamp)]
+      .collect().toSeq == Seq(("k_not_null", 1L, 1L, okA)))
+  }
+
+  test("a bracket outside a layer is a layer of one: two ledger appends") {
+    val clock = new FixedClock(2700000000000L)
+    val m = new MetadataManager(spark, db = "metadata_single", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    val before = dataFiles(m.auditTable)
+    audit.bracket(AuditItem("gold", "model", "Test", "one", "gold.t", "2024-12-01"))(((), 1L))
+    assert(dataFiles(m.auditTable) - before == 2L)
+  }
+
+  test("data_quality_metrics is a view of the metrics on SUCCESS audit rows") {
+    import spark.implicits._
+    val clock = new FixedClock(2800000000000L)
+    val m = new MetadataManager(spark, db = "metadata_dq", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    def metric(rule: String) =
+      DqMetricRow("silver.t", "tx", rule, "not_null", "filter", 9L, 1L, "2024-12-01", null)
+    def checked(rule: String, fail: Boolean = false): Unit =
+      try audit.bracket(AuditItem("silver", "transform", "Test", "tx", "silver.t",
+          "2024-12-01")) {
+        m.recordDqMetrics(Seq(metric(rule)))
+        if (fail) throw new RuntimeException("boom")
+        ((), 9L)
+      } catch { case _: RuntimeException if fail => () }
+    checked("kept")
+    checked("dropped", fail = true) // an ERROR row carries no metrics
+    m.recordDqMetrics(Seq(metric("adhoc"))) // outside a bracket: its own row
+    val dq = spark.table(m.dqMetricsTable)
+    assert(dq.select("rule_name").as[String].collect().toSet == Set("kept", "adhoc"))
+    val kept = spark.table(m.auditTable)
+      .filter($"source_id" === "tx" && $"status" === "SUCCESS")
+      .select("event_timestamp").as[Timestamp].head()
+    assert(dq.filter($"rule_name" === "kept").select("recorded_at").as[Timestamp]
+      .head() == kept)
+    assert(dq.filter($"rule_name" === "kept").drop("recorded_at").as[(String, String,
+      String, String, String, Long, Long, String)].head() ==
+      ("silver.t", "tx", "kept", "not_null", "filter", 9L, 1L, "2024-12-01"))
+    // the adhoc row has no run date, so the control view does not change
+    assert(m.controlReport("meta").count() == 0L)
+    // DqMetricRow's nine columns: names, types and order
+    assert(dq.schema.map(f => f.name -> f.dataType) ==
+      org.apache.spark.sql.Encoders.product[DqMetricRow].schema.map(f => f.name -> f.dataType))
+    // a catalog VIEW: nothing is ever written under its name
+    assert(spark.catalog.getTable(m.dqMetricsTable).tableType == "VIEW")
+    assert(!underWarehouse("data_quality_metrics"))
+  }
+
+  test("a failed opening append runs no item and fails every item") {
+    val clock = new FixedClock(2900000000000L)
+    val m = new MetadataManager(spark, db = "metadata_open_fault", clock = clock)
+    m.init()
+    val entered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val layer = new graft.layers.SilverLayer(spark, threeItems("ledger_open"), m,
+        new AuditLogger(spark, m, clock), "2024-12-01") {
+      override def transform(t: graft.config.TransformConfig): Unit = {
+        entered.add(t.transformId)
+        super.transform(t)
+      }
+    }
+    MetadataManager.failAt = Some(m.auditTable -> "STARTED")
+    val report =
+      try layer.run()
+      finally MetadataManager.failAt = None
+    assert(entered.isEmpty, entered.toString)
+    assert(report.succeeded.isEmpty)
+    assert(report.failed.map(_._1) == Seq("ok_a", "bad", "ok_c"))
+    assert(report.failed.forall(_._2.nonEmpty))
+    assert(!spark.catalog.tableExists("ledger_open.a"))
+    assert(spark.table(m.auditTable).count() == 0L)
+  }
+
+  test("a failed closing append fails every item and moves no watermark") {
+    import spark.implicits._
+    val clock = new FixedClock(3000000000000L)
+    val m = new MetadataManager(spark, db = "metadata_close_fault", clock = clock)
+    m.init()
+    def layer(date: String) = new graft.layers.SilverLayer(spark,
+      threeItems("ledger_close"), m, new AuditLogger(spark, m, clock), date)
+    assert(layer("2024-12-01").run().failed.map(_._1) == Seq("bad"))
+    def control() = spark.table(m.controlTable).as[(String, String, String, Long,
+      String, String, Timestamp)].collect().toSet
+    val before = control()
+    assert(m.lastRunDate("ledger_close.a", "silver.ok_a").contains("2024-12-01"))
+    MetadataManager.failAt = Some(m.auditTable -> "SUCCESS")
+    val report =
+      try layer("2024-12-02").run()
+      finally MetadataManager.failAt = None
+    assert(report.succeeded.isEmpty)
+    assert(report.failed.map(_._1) == Seq("ok_a", "bad", "ok_c"))
+    assert(report.failed.forall(_._2.nonEmpty))
+    assert(control() == before)
+    assert(m.lastRunDate("ledger_close.a", "silver.ok_a").contains("2024-12-01"))
+    // the items' STARTED rows landed; their terminal rows did not
+    assert(spark.table(m.auditTable).filter($"status" =!= "STARTED").count() == 3L)
   }
 }

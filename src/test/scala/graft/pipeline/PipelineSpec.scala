@@ -1279,36 +1279,50 @@ class PipelineSpec extends SparkSpec {
     assert(p.summary().count(_._2 == "gold_e2e.shared_target") == 2)
   }
 
-  /** Records every audit row's (item, status) in write order. An item
-    * in `held` (item -> (other item, seconds)) writes its STARTED row
-    * only once the other item's STARTED row was written or the seconds
-    * passed; `released` names the items whose hold the other item ended.
+  /** Records each item's (item, status) in run order at the layers'
+    * per-item entry points: STARTED on entry, then SUCCESS or ERROR. An
+    * item in `held` (item -> (other item, seconds)) enters only once the
+    * other item entered or the seconds passed; `released` names the
+    * items whose hold the other item ended.
     */
-  private class Recorder(meta: graft.meta.MetadataManager, clock: FixedClock,
-      held: Map[String, (String, Long)])
-      extends graft.meta.AuditLogger(spark, meta, clock) {
+  private class Recorder(held: Map[String, (String, Long)]) {
     import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
     private val log = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     private val started = new ConcurrentHashMap[String, CountDownLatch]()
     val released = ConcurrentHashMap.newKeySet[String]()
     private def latch(id: String) = started.computeIfAbsent(id, _ => new CountDownLatch(1))
-    override def event(layer: String, operation: String, component: String,
-        sourceId: String, targetTable: String, status: String, rows: Long,
-        error: String, seconds: Double): Unit = {
-      if (status == "STARTED") held.get(sourceId).foreach { case (other, secs) =>
-        if (latch(other).await(secs, TimeUnit.SECONDS)) released.add(sourceId)
+    def around(id: String)(body: => Unit): Unit = {
+      held.get(id).foreach { case (other, secs) =>
+        if (latch(other).await(secs, TimeUnit.SECONDS)) released.add(id)
       }
-      super.event(layer, operation, component, sourceId, targetTable, status,
-        rows, error, seconds)
-      log.add(sourceId -> status)
-      if (status == "STARTED") latch(sourceId).countDown()
+      log.add(id -> "STARTED")
+      latch(id).countDown()
+      try body
+      catch { case e: Throwable => log.add(id -> "ERROR"); throw e }
+      log.add(id -> "SUCCESS")
     }
-    /** Position of an item's row in write order (-1: never written). */
+    /** Position of an item's entry in run order (-1: never logged). */
     def at(id: String, status: String): Int = {
       import scala.jdk.CollectionConverters._
       log.asScala.toSeq.indexOf(id -> status)
     }
   }
+
+  private def recordedGold(cfg: EtlConfig, meta: graft.meta.MetadataManager,
+      clock: FixedClock, date: String, rec: Recorder) =
+    new graft.layers.GoldLayer(spark, cfg, meta,
+        new graft.meta.AuditLogger(spark, meta, clock), date) {
+      override def build(m: graft.config.ModelConfig): Unit =
+        rec.around(m.modelId)(super.build(m))
+    }
+
+  private def recordedSilver(cfg: EtlConfig, meta: graft.meta.MetadataManager,
+      clock: FixedClock, date: String, rec: Recorder) =
+    new graft.layers.SilverLayer(spark, cfg, meta,
+        new graft.meta.AuditLogger(spark, meta, clock), date) {
+      override def transform(t: graft.config.TransformConfig): Unit =
+        rec.around(t.transformId)(super.transform(t))
+    }
 
   private def schedDb(): Unit = {
     spark.sql("CREATE DATABASE IF NOT EXISTS sched")
@@ -1334,9 +1348,9 @@ class PipelineSpec extends SparkSpec {
     val meta = new graft.meta.MetadataManager(spark, clock = clock)
     meta.init()
     // run one at a time, model_a would wait out the full minute
-    val audit = new Recorder(meta, clock, Map("model_a" -> ("model_b", 60L)))
-    val report = new graft.layers.GoldLayer(spark, EtlConfig.fromYaml(yaml), meta,
-      audit, "2024-11-01").run()
+    val audit = new Recorder(Map("model_a" -> ("model_b", 60L)))
+    val report = recordedGold(EtlConfig.fromYaml(yaml), meta, clock,
+      "2024-11-01", audit).run()
     assert(report.failed.isEmpty, report.toString)
     assert(report.succeeded == Seq("model_a", "model_b"))
     assert(audit.released.contains("model_a"), "model_b never started beside model_a")
@@ -1372,10 +1386,10 @@ class PipelineSpec extends SparkSpec {
     val meta = new graft.meta.MetadataManager(spark, clock = clock)
     meta.init()
     // a dependent that started early would end these holds
-    val audit = new Recorder(meta, clock,
+    val audit = new Recorder(
       Map("chain_a" -> ("chain_b", 3L), "shared_1" -> ("shared_2", 3L)))
-    val report = new graft.layers.SilverLayer(spark, EtlConfig.fromYaml(yaml), meta,
-      audit, "2024-11-02").run()
+    val report = recordedSilver(EtlConfig.fromYaml(yaml), meta, clock,
+      "2024-11-02", audit).run()
     assert(report.failed.isEmpty, report.toString)
     assert(report.succeeded == Seq("chain_a", "chain_b", "shared_1", "shared_2"))
     assert(audit.released.isEmpty, audit.released.toString)
@@ -1411,10 +1425,10 @@ class PipelineSpec extends SparkSpec {
     val clock = new FixedClock(1807200000000L)
     val meta = new graft.meta.MetadataManager(spark, clock = clock)
     meta.init()
-    val audit = new Recorder(meta, clock,
+    val audit = new Recorder(
       Map("fails" -> ("after_failure", 3L), "barrier" -> ("after_barrier", 3L)))
-    val report = new graft.layers.SilverLayer(spark, EtlConfig.fromYaml(yaml), meta,
-      audit, "2024-11-03").run()
+    val report = recordedSilver(EtlConfig.fromYaml(yaml), meta, clock,
+      "2024-11-03", audit).run()
     assert(report.failed.map(_._1) == Seq("fails"), report.toString)
     assert(report.succeeded == Seq("after_failure", "barrier", "after_barrier"))
     assert(audit.released.isEmpty, audit.released.toString)
