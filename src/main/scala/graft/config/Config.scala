@@ -524,6 +524,16 @@ object EtlConfig {
       m => java.util.regex.Matcher.quoteReplacement(env(m.group(1)).getOrElse("")))
   }
 
+  /** Parse a config document. Shape errors fail here, not inside a run.
+    * One ownership rule covers every type-specific key: each item kind
+    * with a discriminator (`transform_type`; `refresh_type` and `mode`;
+    * `task_type`; a probe's `store_type`; a view read's `view_type`; a
+    * banded store's `keeper`) declares its valid values and which of
+    * them use which key, and a declared key present under a value that
+    * does not use it is refused, whatever its value. Keys no declaration
+    * names (the reference's `description`, `model_type`, `frequency`)
+    * are accepted and ignored.
+    */
   def fromYaml(yaml: String): EtlConfig = {
     val root = Option(new Yaml().load[ju.Map[String, Object]](yaml))
       .map(asMap).getOrElse(Map.empty)
@@ -566,6 +576,96 @@ object EtlConfig {
     case Some(l: ju.List[_]) => l.asScala.toSeq.map(_.toString)
     case Some(s: String) if s.nonEmpty => s.split(",").toSeq.map(_.trim)
     case _ => Seq.empty
+  }
+
+  // ---- key ownership: which type of an item kind uses which key ----
+
+  /** One item kind's key ownership: the values its `discriminator` may
+    * take, and for each type-specific key the values that use it.
+    * `bare` prints values without the discriminator's name (maintenance
+    * task types); `notes` adds a hint to a key's refusal.
+    */
+  private final case class Ownership(discriminator: String, values: Seq[String],
+      keys: Seq[(String, Set[String])], bare: Boolean = false,
+      notes: Map[String, String] = Map.empty)
+
+  private def usedBy(owners: String*)(keys: String*): Seq[(String, Set[String])] =
+    keys.map(_ -> owners.toSet)
+
+  private val storeTypes = Seq("dedup_store", "vector_dedup_store", "media_dedup_store")
+
+  private val transformTypes = {
+    val verbs = Seq("dedup", "curation", "chunk", "quota", "mix", "split",
+      "decontaminate", "weighted_sample", "relevance_filter", "asof",
+      "store_probe", "view_estimate")
+    Ownership("transform_type", "sql" +: verbs,
+      usedBy("sql")("sql_query") ++ verbs.flatMap(v => usedBy(v)(v)))
+  }
+
+  private val refreshTypes = {
+    val all = Seq("full", "incremental", "additive", "extremes", "join_view",
+      "scd2", "distinct_view", "quantile_view") ++ storeTypes :+ "changelog"
+    Ownership("refresh_type", all,
+      usedBy(all.filter(_ != "join_view"): _*)("sql_query") ++
+        usedBy(all.filterNot(storeTypes.contains): _*)("primary_keys") ++
+        usedBy("additive")("sum_columns") ++
+        usedBy("extremes")("min_columns", "max_columns") ++
+        usedBy("join_view")("left_table", "right_table", "join_keys",
+          "left_batch_sql", "right_batch_sql") ++
+        usedBy("scd2")("tracked_columns", "effective_column") ++
+        usedBy("distinct_view")("distinct_column", "hll_m") ++
+        usedBy("quantile_view")("quantile_column") ++
+        usedBy("changelog")("op_column", "seq_column") ++
+        storeTypes.flatMap(s => usedBy(s)(s)))
+  }
+
+  private val modes = Ownership("mode", Seq("batch", "streaming"),
+    usedBy("batch")("sql_query") ++ usedBy("streaming")("stream_source", "checkpoint"))
+
+  private val taskTypes = {
+    val all = Seq("compact", "zone_maps", "vacuum_staging", "prune_store",
+      "retrain_store", "store_stats")
+    Ownership("task_type", all,
+      usedBy(all.filter(_ != "vacuum_staging"): _*)("table") ++
+        usedBy("compact")("cluster_by", "target_rows_per_file") ++
+        usedBy("zone_maps")("columns") ++
+        usedBy("prune_store")("keep_epochs") ++
+        usedBy("retrain_store")("train_iters", "num_centroids",
+          "spread_threshold_permille") ++
+        usedBy("store_stats")("max_cell_size", "max_bucket_size", "spread_trend_pct"),
+      bare = true,
+      notes = Map("table" ->
+        "vacuum_staging sweeps the whole staging plane; a table would not scope it"))
+  }
+
+  private val probeStoreTypes = Ownership("store_type", storeTypes,
+    usedBy("dedup_store")("shingle_size", "num_hashes", "jaccard_pct") ++
+      usedBy("dedup_store", "media_dedup_store")("bands") ++
+      usedBy("vector_dedup_store")("min_score", "nprobe", "max_cell_size") ++
+      usedBy("media_dedup_store")("max_hamming"),
+    notes = Map("max_cell_size" -> "banded stores call it max_bucket_size"))
+
+  private val viewTypes = Ownership("view_type", Seq("distinct_view", "quantile_view"),
+    usedBy("quantile_view")("q_permille"))
+
+  private val keepers = Ownership("keeper", graft.io.DedupStore.Keepers.toSeq,
+    usedBy("max_quality")("quality_column"))
+
+  /** The one ownership rule: `declared` must be one of `o.values`, and a
+    * key `o` declares may appear in `m` only when `declared` uses it.
+    * Presence counts, whatever the value.
+    */
+  private def checkOwnership(item: String, o: Ownership, declared: String,
+      m: Map[String, Object]): Unit = {
+    val d = o.discriminator
+    require(o.values.contains(declared),
+      s"$item: unknown $d '$declared' ($d must be one of ${o.values.mkString(" | ")})")
+    val named = if (o.bare) "" else s"$d "
+    for ((key, owners) <- o.keys)
+      require(!m.contains(key) || owners(declared),
+        s"$item: $key is not used by $named$declared — it is only used by " +
+          named + o.values.filter(owners).mkString(", ") +
+          o.notes.get(key).fold("")(n => s" ($n)"))
   }
 
   private def parseSource(m: Map[String, Object]): SourceConfig = SourceConfig(
@@ -620,33 +720,15 @@ object EtlConfig {
       viewEstimate = m.get("view_estimate")
         .map(x => parseViewEstimate(asMap(x))))
     // config shape errors fail at PARSE time, not at run time inside a
-    // per-item catch: a verb step without its params block (or vice
-    // versa) is an authoring bug, never a data error
-    val blocks: Map[String, Option[_]] = Map(
-      "dedup" -> t.dedup, "curation" -> t.curation, "chunk" -> t.chunk,
-      "quota" -> t.quota, "mix" -> t.mix, "split" -> t.split,
-      "decontaminate" -> t.decontaminate,
-      "weighted_sample" -> t.weightedSample,
-      "relevance_filter" -> t.relevanceFilter,
-      "asof" -> t.asof, "store_probe" -> t.storeProbe,
-      "view_estimate" -> t.viewEstimate)
-    for ((verb, block) <- blocks) {
-      require(t.transformType != verb || block.nonEmpty,
-        s"transform '${t.transformId}': transform_type $verb needs a $verb: block")
-      // the inverse too: a params block on a DIFFERENT step type would
-      // be silently ignored — a config the user wrote must act or fail
-      require(t.transformType == verb || block.isEmpty,
-        s"transform '${t.transformId}': a $verb: block is not used by " +
-          s"transform_type ${t.transformType}")
-    }
+    // per-item catch: a verb step without its params block (or a block
+    // on another step type) is an authoring bug, never a data error
+    checkOwnership(s"transform '${t.transformId}'", transformTypes,
+      t.transformType, m)
+    require(t.transformType == "sql" || m.contains(t.transformType),
+      s"transform '${t.transformId}': transform_type ${t.transformType} " +
+        s"needs a ${t.transformType}: block")
     require(t.transformType != "sql" || t.sqlQuery.nonEmpty,
       s"transform '${t.transformId}': transform_type sql needs sql_query")
-    require(t.transformType == "sql" || t.sqlQuery.isEmpty,
-      s"transform '${t.transformId}': sql_query is not used by " +
-        s"transform_type ${t.transformType} — pre-filter via a preceding " +
-        "sql transform instead")
-    require((Set("sql") ++ blocks.keySet)(t.transformType),
-      s"transform '${t.transformId}': unknown transform_type '${t.transformType}'")
     t
   }
 
@@ -816,14 +898,10 @@ object EtlConfig {
       storeBuckets = num(m, "store_buckets", 0),
       keeper = str(m, "keeper", "min_id"),
       qualityColumn = opt(m, "quality_column"))
-    require(graft.io.DedupStore.Keepers(d.keeper),
-      "dedup_store: keeper must be one of " +
-        s"[${graft.io.DedupStore.Keepers.mkString(", ")}], got '${d.keeper}'")
-    require((d.keeper == "max_quality") == d.qualityColumn.exists(_.nonEmpty),
-      if (d.keeper == "max_quality")
-        "dedup_store: keeper max_quality needs quality_column (the " +
-          "batch column ranking duplicate-cluster members)"
-      else "dedup_store: quality_column is only used by keeper max_quality")
+    checkOwnership("dedup_store", keepers, d.keeper, m)
+    require(d.keeper != "max_quality" || d.qualityColumn.nonEmpty,
+      "dedup_store: keeper max_quality needs quality_column (the " +
+        "batch column ranking duplicate-cluster members)")
     require(d.idColumn.nonEmpty && d.textColumn.nonEmpty,
       "dedup_store needs id_column and text_column")
     require(d.shingleSize >= 1, s"shingle_size must be >= 1, got ${d.shingleSize}")
@@ -868,62 +946,33 @@ object EtlConfig {
         "max_bucket_size are aliases for the same hot-bucket/cell cap — " +
         "declare one, not both")
     require(t.taskId.nonEmpty, "maintenance task needs task_id")
-    require(Set("compact", "zone_maps", "vacuum_staging", "prune_store",
-        "retrain_store", "store_stats")(t.taskType),
-      s"maintenance task '${t.taskId}': unknown task_type '${t.taskType}' " +
-        "(expected compact | zone_maps | vacuum_staging | prune_store | " +
-        "retrain_store | store_stats)")
+    checkOwnership(s"maintenance task '${t.taskId}'", taskTypes, t.taskType, m)
     require(t.taskType == "vacuum_staging" || t.table.exists(_.nonEmpty),
       s"maintenance task '${t.taskId}': ${t.taskType} needs a table")
-    require(t.taskType != "vacuum_staging" || t.table.isEmpty,
-      s"maintenance task '${t.taskId}': vacuum_staging sweeps the whole " +
-        "staging plane — a table would silently not scope it")
     require(t.targetRowsPerFile > 0,
       s"maintenance task '${t.taskId}': target_rows_per_file must be " +
         s"positive, got ${t.targetRowsPerFile}")
-    require(t.taskType == "compact" || (t.clusterBy.isEmpty &&
-        t.targetRowsPerFile == 1000000L),
-      s"maintenance task '${t.taskId}': cluster_by/target_rows_per_file " +
-        "are only used by compact")
     require(t.taskType != "zone_maps" || t.columns.nonEmpty,
       s"maintenance task '${t.taskId}': zone_maps needs columns " +
         "(the min/max manifest dimensions)")
-    require(t.taskType == "zone_maps" || t.columns.isEmpty,
-      s"maintenance task '${t.taskId}': columns is only used by zone_maps")
     require(t.taskType != "prune_store" || t.keepEpochs > 0,
       s"maintenance task '${t.taskId}': prune_store needs keep_epochs " +
         "(the retention window in run-date epoch days, > 0)")
-    require(t.taskType == "prune_store" || t.keepEpochs == 0L,
-      s"maintenance task '${t.taskId}': keep_epochs is only used by " +
-        "prune_store")
     require(t.taskType != "retrain_store" || t.trainIters >= 1,
       s"maintenance task '${t.taskId}': retrain_store needs train_iters " +
         s">= 1 (Lloyd's rounds), got ${t.trainIters}")
     require(t.taskType != "retrain_store" || t.numCentroids >= 0,
       s"maintenance task '${t.taskId}': num_centroids must be >= 0 " +
         s"(0 = keep the current model's k), got ${t.numCentroids}")
-    require(t.taskType == "retrain_store" ||
-        (t.trainIters == 0 && t.numCentroids == 0),
-      s"maintenance task '${t.taskId}': train_iters/num_centroids are " +
-        "only used by retrain_store")
     require(t.spreadThresholdPermille >= 0L,
       s"maintenance task '${t.taskId}': spread_threshold_permille must " +
         s"be >= 0 (0 = always retrain), got ${t.spreadThresholdPermille}")
-    require(t.taskType == "retrain_store" || t.spreadThresholdPermille == 0L,
-      s"maintenance task '${t.taskId}': spread_threshold_permille is " +
-        "only used by retrain_store")
     require(t.maxCellSize.forall(_ > 0),
       s"maintenance task '${t.taskId}': max_cell_size must be positive " +
         s"when set, got ${t.maxCellSize.getOrElse(0L)}")
-    require(t.taskType == "store_stats" || t.maxCellSize.isEmpty,
-      s"maintenance task '${t.taskId}': max_cell_size is only used by " +
-        "store_stats (the hot-cell count's cap)")
     require(t.spreadTrendPct >= 0,
       s"maintenance task '${t.taskId}': spread_trend_pct must be >= 0 " +
         s"(0 = no trend gate), got ${t.spreadTrendPct}")
-    require(t.taskType == "store_stats" || t.spreadTrendPct == 0,
-      s"maintenance task '${t.taskId}': spread_trend_pct is only used " +
-        "by store_stats (the spread-vs-trailing-median alert)")
     t
   }
 
@@ -987,35 +1036,14 @@ object EtlConfig {
     require(!(m.contains("max_bucket_size") && m.contains("max_cell_size")),
       "store_probe: max_bucket_size and max_cell_size are aliases for " +
         "the same hot-bucket/cell cap — declare one, not both")
-    require(p.storeType == "vector_dedup_store" || !m.contains("max_cell_size"),
-      "store_probe: max_cell_size (the vector store's cap spelling) is " +
-        "only accepted for store_type vector_dedup_store — banded stores " +
-        "call it max_bucket_size")
+    checkOwnership("store_probe", probeStoreTypes, p.storeType, m)
     require(p.storeTable.nonEmpty && p.idColumn.nonEmpty &&
         p.contentColumn.nonEmpty,
       "store_probe needs store_table, id_column and content_column")
-    require(Set("dedup_store", "vector_dedup_store",
-        "media_dedup_store")(p.storeType),
-      s"store_probe: unknown store_type '${p.storeType}' (expected " +
-        "dedup_store | vector_dedup_store | media_dedup_store)")
     require(p.flagColumn.nonEmpty, "store_probe: flag_column must be named")
     require(p.storeType != "vector_dedup_store" || p.minScore >= 0,
       "store_probe: vector_dedup_store needs min_score (the exact " +
         "int8-code dot threshold, >= 0)")
-    require(p.storeType == "vector_dedup_store" ||
-        (p.minScore == -1L && !m.contains("nprobe")),
-      "store_probe: min_score/nprobe are only used by store_type " +
-        "vector_dedup_store")
-    require(p.storeType == "dedup_store" ||
-        (!m.contains("shingle_size") && !m.contains("num_hashes") &&
-          !m.contains("jaccard_pct")),
-      "store_probe: shingle_size/num_hashes/jaccard_pct are only used " +
-        "by store_type dedup_store")
-    require(p.storeType == "media_dedup_store" || !m.contains("max_hamming"),
-      "store_probe: max_hamming is only used by store_type " +
-        "media_dedup_store")
-    require(p.storeType != "vector_dedup_store" || !m.contains("bands"),
-      "store_probe: bands is not used by store_type vector_dedup_store")
     require(p.numHashes >= 1 && p.bands >= 1,
       s"store_probe: bands/num_hashes must be >= 1")
     require(p.storeType != "dedup_store" || p.numHashes % p.bands == 0,
@@ -1044,15 +1072,10 @@ object EtlConfig {
       storeBuckets = num(m, "store_buckets", 0),
       keeper = str(m, "keeper", "min_id"),
       qualityColumn = opt(m, "quality_column"))
-    require(graft.io.DedupStore.Keepers(d.keeper),
-      "media_dedup_store: keeper must be one of " +
-        s"[${graft.io.DedupStore.Keepers.mkString(", ")}], got '${d.keeper}'")
-    require((d.keeper == "max_quality") == d.qualityColumn.exists(_.nonEmpty),
-      if (d.keeper == "max_quality")
-        "media_dedup_store: keeper max_quality needs quality_column (the " +
-          "batch column ranking duplicate-cluster members)"
-      else "media_dedup_store: quality_column is only used by keeper " +
-        "max_quality")
+    checkOwnership("media_dedup_store", keepers, d.keeper, m)
+    require(d.keeper != "max_quality" || d.qualityColumn.nonEmpty,
+      "media_dedup_store: keeper max_quality needs quality_column (the " +
+        "batch column ranking duplicate-cluster members)")
     require(d.idColumn.nonEmpty && d.hashColumn.nonEmpty,
       "media_dedup_store needs id_column and hash_column (the 64-bit " +
         "dHash the upstream image scan computed)")
@@ -1078,23 +1101,16 @@ object EtlConfig {
         case l: ju.List[_] => l.toArray.map(_.toString.toInt).toSeq
         case x => Seq(x.toString.toInt)
       }.getOrElse(Nil))
-    require(Set("distinct_view", "quantile_view")(v.viewType),
-      s"view_estimate: unknown view_type '${v.viewType}' (expected " +
-        "distinct_view | quantile_view)")
+    checkOwnership("view_estimate", viewTypes, v.viewType, m)
     require(v.keyColumns.nonEmpty && v.keyColumns.forall(_.nonEmpty),
       "view_estimate needs key_columns (the view's grouping keys)")
-    v.viewType match {
-      case "quantile_view" =>
-        require(v.qPermille.nonEmpty,
-          "view_estimate: quantile_view needs q_permille (the quantile " +
-            "points, e.g. [500, 950, 990])")
-        require(v.qPermille.forall(q => q >= 1 && q <= 999),
-          s"view_estimate: q_permille points must be in [1, 999], got " +
-            s"${v.qPermille.mkString(", ")}")
-      case _ =>
-        require(v.qPermille.isEmpty,
-          "view_estimate: q_permille is only used by view_type " +
-            "quantile_view")
+    if (v.viewType == "quantile_view") {
+      require(v.qPermille.nonEmpty,
+        "view_estimate: quantile_view needs q_permille (the quantile " +
+          "points, e.g. [500, 950, 990])")
+      require(v.qPermille.forall(q => q >= 1 && q <= 999),
+        s"view_estimate: q_permille points must be in [1, 999], got " +
+          s"${v.qPermille.mkString(", ")}")
     }
     v
   }
@@ -1149,155 +1165,78 @@ object EtlConfig {
       opColumn = str(m, "op_column", "op"),
       seqColumn = str(m, "seq_column", "seq"),
       volumeGuardPct = num(m, "volume_guard_pct", 0))
-    require(Set("full", "incremental", "additive", "extremes",
-      "join_view", "scd2", "distinct_view", "quantile_view",
-      "dedup_store", "vector_dedup_store", "media_dedup_store",
-      "changelog")(mc.refreshType),
-      s"model '${mc.modelId}': unknown refresh_type '${mc.refreshType}'")
-    require(Set("batch", "streaming")(mc.mode),
-      s"model '${mc.modelId}': unknown mode '${mc.mode}' " +
-        "(expected batch | streaming)")
+    val item = s"model '${mc.modelId}'"
+    checkOwnership(item, refreshTypes, mc.refreshType, m)
+    checkOwnership(item, modes, mc.mode, m)
     require(mc.mode != "streaming" || mc.streamSource.nonEmpty,
-      s"model '${mc.modelId}': mode streaming needs a stream_source " +
-        "block (path + format; schema_table recommended)")
-    require(mc.mode == "streaming" || (mc.streamSource.isEmpty &&
-      mc.checkpoint.isEmpty),
-      s"model '${mc.modelId}': stream_source/checkpoint are only used " +
-        "by mode streaming")
-    require(mc.mode != "streaming" ||
-      Set("incremental", "changelog", "additive", "extremes",
-        "distinct_view", "quantile_view", "dedup_store",
-        "vector_dedup_store", "media_dedup_store", "scd2")(mc.refreshType),
-      s"model '${mc.modelId}': refresh_type ${mc.refreshType} is " +
-        "batch-only (full rewrites history per run; join_view folds two " +
-        "coordinated base deltas) — use a batch model")
-    require(mc.mode != "streaming" || mc.sqlQuery.isEmpty,
-      s"model '${mc.modelId}': a streaming model consumes its declared " +
-        "stream_source — sql_query is unused and would silently " +
-        "diverge (transformations belong upstream of the landing path)")
+      s"$item: mode streaming needs a stream_source block " +
+        "(path + format; schema_table recommended)")
+    require(mc.mode != "streaming" || !Set("full", "join_view")(mc.refreshType),
+      s"$item: refresh_type ${mc.refreshType} is batch-only (full " +
+        "rewrites history per run; join_view folds two coordinated base " +
+        "deltas) — use a batch model")
     require(mc.mode != "streaming" || mc.partitionBy.isEmpty,
-      s"model '${mc.modelId}': partition_by is not used by the " +
-        "streaming sinks (the standing tables own their layout)")
+      s"$item: partition_by is not used by the streaming sinks " +
+        "(the standing tables own their layout)")
     require(mc.partitionBy.isEmpty || mc.refreshType == "full" ||
       (mc.refreshType == "incremental" && mc.primaryKeys.isEmpty),
-      s"model '${mc.modelId}': partition_by is only used by refresh_type " +
-        "full or an incremental model without primary_keys (the keyed " +
-        "upsert and the folds rewrite one unpartitioned standing table)")
+      s"$item: partition_by is only used by refresh_type full or an " +
+        "incremental model without primary_keys (the keyed upsert and " +
+        "the folds rewrite one unpartitioned standing table)")
     require(mc.mode != "streaming" || mc.refreshType != "incremental" ||
       mc.primaryKeys.nonEmpty,
-      s"model '${mc.modelId}': streaming incremental needs primary_keys " +
-        "(there is no overwrite fallback for a stream)")
+      s"$item: streaming incremental needs primary_keys (there is no " +
+        "overwrite fallback for a stream)")
     require(mc.refreshType != "changelog" || mc.mode == "streaming",
-      s"model '${mc.modelId}': refresh_type changelog is streaming-only " +
-        "(a batch changelog is Upsert.applyChangeLog via the API)")
+      s"$item: refresh_type changelog is streaming-only (a batch " +
+        "changelog is Upsert.applyChangeLog via the API)")
     require(mc.refreshType != "changelog" || mc.primaryKeys.nonEmpty,
-      s"model '${mc.modelId}': refresh_type changelog needs primary_keys")
-    require(mc.refreshType == "changelog" ||
-      (!m.contains("op_column") && !m.contains("seq_column")),
-      s"model '${mc.modelId}': op_column/seq_column are only used by " +
-        "refresh_type changelog")
+      s"$item: refresh_type changelog needs primary_keys")
     require(mc.refreshType != "dedup_store" || mc.dedupStore.nonEmpty,
-      s"model '${mc.modelId}': refresh_type dedup_store needs a " +
-        "dedup_store block (id_column + text_column at minimum) — the " +
-        "model's sql_query selects this run's batch of docs")
-    require(mc.refreshType == "dedup_store" || mc.dedupStore.isEmpty,
-      s"model '${mc.modelId}': dedup_store is only used by refresh_type " +
-        "dedup_store")
-    require(mc.refreshType != "dedup_store" || mc.primaryKeys.isEmpty,
-      s"model '${mc.modelId}': dedup_store derives its identity from " +
-        "dedup_store.id_column — primary_keys is unused and would " +
-        "silently diverge")
+      s"$item: refresh_type dedup_store needs a dedup_store block " +
+        "(id_column + text_column at minimum) — the model's sql_query " +
+        "selects this run's batch of docs")
     require(mc.refreshType != "vector_dedup_store" || mc.vectorDedupStore.nonEmpty,
-      s"model '${mc.modelId}': refresh_type vector_dedup_store needs a " +
-        "vector_dedup_store block (id_column + vector_column + min_score " +
-        "at minimum) — the model's sql_query selects this run's batch " +
-        "of vectors")
-    require(mc.refreshType == "vector_dedup_store" || mc.vectorDedupStore.isEmpty,
-      s"model '${mc.modelId}': vector_dedup_store is only used by " +
-        "refresh_type vector_dedup_store")
-    require(mc.refreshType != "vector_dedup_store" || mc.primaryKeys.isEmpty,
-      s"model '${mc.modelId}': vector_dedup_store derives its identity " +
-        "from vector_dedup_store.id_column — primary_keys is unused and " +
-        "would silently diverge")
+      s"$item: refresh_type vector_dedup_store needs a vector_dedup_store " +
+        "block (id_column + vector_column + min_score at minimum) — the " +
+        "model's sql_query selects this run's batch of vectors")
     require(mc.refreshType != "media_dedup_store" || mc.mediaDedupStore.nonEmpty,
-      s"model '${mc.modelId}': refresh_type media_dedup_store needs a " +
-        "media_dedup_store block (id_column + hash_column at minimum) — " +
-        "the model's sql_query selects this run's batch of (id, dHash) " +
-        "rows")
-    require(mc.refreshType == "media_dedup_store" || mc.mediaDedupStore.isEmpty,
-      s"model '${mc.modelId}': media_dedup_store is only used by " +
-        "refresh_type media_dedup_store")
-    require(mc.refreshType != "media_dedup_store" || mc.primaryKeys.isEmpty,
-      s"model '${mc.modelId}': media_dedup_store derives its identity " +
-        "from media_dedup_store.id_column — primary_keys is unused and " +
-        "would silently diverge")
+      s"$item: refresh_type media_dedup_store needs a media_dedup_store " +
+        "block (id_column + hash_column at minimum) — the model's " +
+        "sql_query selects this run's batch of (id, dHash) rows")
     require(mc.refreshType != "quantile_view" || (mc.primaryKeys.nonEmpty &&
       mc.quantileColumn.nonEmpty),
-      s"model '${mc.modelId}': refresh_type quantile_view needs " +
-        "primary_keys and quantile_column")
-    require(mc.refreshType == "quantile_view" || mc.quantileColumn.isEmpty,
-      s"model '${mc.modelId}': quantile_column is only used by " +
-        "refresh_type quantile_view")
+      s"$item: refresh_type quantile_view needs primary_keys and quantile_column")
     require(mc.refreshType != "distinct_view" || (mc.primaryKeys.nonEmpty &&
       mc.distinctColumn.nonEmpty),
-      s"model '${mc.modelId}': refresh_type distinct_view needs " +
-        "primary_keys and distinct_column")
-    require(mc.refreshType == "distinct_view" ||
-      (mc.distinctColumn.isEmpty && !m.contains("hll_m")),
-      s"model '${mc.modelId}': distinct_column/hll_m are only used by " +
-        "refresh_type distinct_view")
-    require(mc.refreshType != "distinct_view" ||
-      Set(16, 32, 64)(mc.hllM),
-      s"model '${mc.modelId}': hll_m must be 16, 32 or 64 (the " +
-        s"exact-integer estimator's alpha table), got ${mc.hllM}")
+      s"$item: refresh_type distinct_view needs primary_keys and distinct_column")
+    require(mc.refreshType != "distinct_view" || Set(16, 32, 64)(mc.hllM),
+      s"$item: hll_m must be 16, 32 or 64 (the exact-integer estimator's " +
+        s"alpha table), got ${mc.hllM}")
     require(mc.volumeGuardPct >= 0,
-      s"model '${mc.modelId}': volume_guard_pct must be >= 0 " +
-        s"(0 disables), got ${mc.volumeGuardPct}")
+      s"$item: volume_guard_pct must be >= 0 (0 disables), got ${mc.volumeGuardPct}")
     require(mc.refreshType != "scd2" || (mc.primaryKeys.nonEmpty &&
       mc.trackedColumns.nonEmpty && mc.effectiveColumn.nonEmpty),
-      s"model '${mc.modelId}': refresh_type scd2 needs primary_keys, " +
-        "tracked_columns and effective_column — the model's query must " +
-        "emit exactly those columns (versioning anything else would " +
-        "silently widen the dimension)")
-    require(mc.refreshType == "scd2" ||
-      (mc.trackedColumns.isEmpty && mc.effectiveColumn.isEmpty),
-      s"model '${mc.modelId}': tracked_columns/effective_column are only " +
-        "used by refresh_type scd2")
+      s"$item: refresh_type scd2 needs primary_keys, tracked_columns and " +
+        "effective_column — the model's query must emit exactly those " +
+        "columns (versioning anything else would silently widen the dimension)")
     require(mc.refreshType != "join_view" || (mc.leftTable.nonEmpty &&
       mc.rightTable.nonEmpty && mc.joinKeys.nonEmpty),
-      s"model '${mc.modelId}': refresh_type join_view needs left_table, " +
-        "right_table and join_keys — and INSERT-ONLY batch queries " +
-        "selecting exactly this run's appended base rows (a retraction " +
-        "needs a keyed delete, not a join fold)")
-    require(mc.refreshType == "join_view" || (mc.leftTable.isEmpty &&
-      mc.rightTable.isEmpty && mc.joinKeys.isEmpty &&
-      mc.leftBatchSql.isEmpty && mc.rightBatchSql.isEmpty),
-      s"model '${mc.modelId}': left_table/right_table/join_keys/" +
-        "left_batch_sql/right_batch_sql are only used by refresh_type " +
-        "join_view")
-    require(mc.refreshType != "join_view" || mc.sqlQuery.isEmpty,
-      s"model '${mc.modelId}': join_view derives the view from its base " +
-        "tables — sql_query is unused and would silently diverge")
+      s"$item: refresh_type join_view needs left_table, right_table and " +
+        "join_keys — and INSERT-ONLY batch queries selecting exactly this " +
+        "run's appended base rows (a retraction needs a keyed delete, not " +
+        "a join fold)")
     require(mc.refreshType == "join_view" || mc.mode == "streaming" ||
-      mc.sqlQuery.nonEmpty,
-      s"model '${mc.modelId}': sql_query is required")
+      mc.sqlQuery.nonEmpty, s"$item: sql_query is required")
     require(mc.refreshType != "additive" ||
       (mc.primaryKeys.nonEmpty && mc.sumColumns.nonEmpty),
-      s"model '${mc.modelId}': refresh_type additive needs primary_keys " +
-        "and sum_columns")
+      s"$item: refresh_type additive needs primary_keys and sum_columns")
     require(mc.refreshType != "extremes" || (mc.primaryKeys.nonEmpty &&
       (mc.minColumns.nonEmpty || mc.maxColumns.nonEmpty)),
-      s"model '${mc.modelId}': refresh_type extremes needs primary_keys " +
-        "and at least one of min_columns / max_columns — and an " +
-        "INSERT-ONLY feed (a retraction-capable source must use additive " +
-        "or full: extremes cannot un-see a deleted row)")
-    // declared-but-unused fold columns would silently vanish — act or fail
-    require(mc.refreshType == "additive" || mc.sumColumns.isEmpty,
-      s"model '${mc.modelId}': sum_columns is only used by refresh_type additive")
-    require(mc.refreshType == "extremes" ||
-      (mc.minColumns.isEmpty && mc.maxColumns.isEmpty),
-      s"model '${mc.modelId}': min_columns/max_columns are only used by " +
-        "refresh_type extremes")
+      s"$item: refresh_type extremes needs primary_keys and at least one " +
+        "of min_columns / max_columns — and an INSERT-ONLY feed (a " +
+        "retraction-capable source must use additive or full: extremes " +
+        "cannot un-see a deleted row)")
     mc
   }
 }

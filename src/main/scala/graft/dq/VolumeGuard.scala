@@ -1,6 +1,6 @@
 package graft.dq
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Volume-anomaly guard: the TREND member of the DQ family. The five
@@ -36,19 +36,79 @@ object VolumeGuard {
     */
   def check(spark: SparkSession, auditTable: String, targetTable: String,
       observed: Long, tolerancePct: Int, window: Int = 7,
-      minHistory: Int = 3): Verdict = {
-    require(tolerancePct > 0, "tolerancePct must be positive")
-    require(window >= minHistory && minHistory >= 1,
-      s"need window >= minHistory >= 1, got $window/$minHistory")
-    val hist = spark.table(auditTable)
+      minHistory: Int = 3): Verdict =
+    judge(spark, auditTable,
       // data-layer history ONLY: the maintenance plane writes SUCCESS
       // rows for the SAME target tables whose rows_processed is a file
       // or manifest count — interleaving those into the window would
       // poison the median (a daily compact stamping "2" would halve it
       // within a week and fail every honest batch)
-      .filter(col("target_table") === targetTable &&
-        col("layer") =!= "maintenance" &&
-        col("status") === "SUCCESS" && col("rows_processed") > 0)
+      col("target_table") === targetTable && col("layer") =!= "maintenance",
+      observed, tolerancePct, window, minHistory)
+
+  /** [[check]] and THROW on breach — the per-item-isolation form the
+    * layers call: the failure lands as this model's ERROR audit row
+    * and the run's failed list, never a silent success.
+    */
+  def enforce(spark: SparkSession, auditTable: String, targetTable: String,
+      observed: Long, tolerancePct: Int): Unit =
+    failOnBreach(check(spark, auditTable, targetTable, observed, tolerancePct)) { v =>
+      s"volume anomaly for '$targetTable': this run produced " +
+        s"${v.observed} rows vs a trailing median of ${v.median.get} " +
+        s"over ${v.historyRuns} runs — outside ±$tolerancePct%. " +
+        "If the shift is intended (backfill, scope change), re-run " +
+        "with a raised volume_guard_pct or after pruning the audit " +
+        "history window."
+    }
+
+  /** Trend check for a MAINTENANCE-plane metric (round-19 verdict
+    * item 7 — store_stats' occupancy spread): same trailing-median /
+    * integer-deviation discipline as [[check]], but the history is the
+    * SAME task's own SUCCESS rows — matched on (layer = maintenance,
+    * operation, source_id, target_table). [[check]]'s data-layer
+    * filter exists to keep these rows OUT of volume medians; here they
+    * ARE the series, and the operation+source_id match keeps two tasks
+    * profiling the same table from poisoning each other's baseline.
+    */
+  def checkMetric(spark: SparkSession, auditTable: String,
+      targetTable: String, operation: String, sourceId: String,
+      observed: Long, tolerancePct: Int, window: Int = 7,
+      minHistory: Int = 3): Verdict =
+    judge(spark, auditTable,
+      col("target_table") === targetTable && col("layer") === "maintenance" &&
+        col("operation") === operation && col("source_id") === sourceId,
+      observed, tolerancePct, window, minHistory)
+
+  /** [[checkMetric]] and THROW — the store_stats trend gate: a spread
+    * that jumps vs its own trailing median means the store's occupancy
+    * profile moved (a hot band forming, a skewed crawl landing) and
+    * the tuning the stats exist to drive should run NOW, not after the
+    * probe mass silently degrades.
+    */
+  def enforceMetric(spark: SparkSession, auditTable: String,
+      targetTable: String, operation: String, sourceId: String,
+      observed: Long, tolerancePct: Int): Unit =
+    failOnBreach(checkMetric(spark, auditTable, targetTable, operation,
+        sourceId, observed, tolerancePct)) { v =>
+      s"store_stats trend anomaly for '$targetTable' ($sourceId): " +
+        s"occupancy spread ${v.observed} permille vs a trailing median " +
+        s"of ${v.median.get} over ${v.historyRuns} runs — outside " +
+        s"±$tolerancePct%. The store's occupancy profile moved: " +
+        "re-tune max_bucket_size/max_cell_size, or run compact/prune/" +
+        "retrain before the next fold. If the shift is intended " +
+        "(corpus scope change), re-run with a raised spread_trend_pct."
+    }
+
+  /** The one trailing-median rule: the latest `window` SUCCESS rows
+    * with rows_processed > 0 that `history` selects are the baseline.
+    */
+  private def judge(spark: SparkSession, auditTable: String, history: Column,
+      observed: Long, tolerancePct: Int, window: Int, minHistory: Int): Verdict = {
+    require(tolerancePct > 0, "tolerancePct must be positive")
+    require(window >= minHistory && minHistory >= 1,
+      s"need window >= minHistory >= 1, got $window/$minHistory")
+    val hist = spark.table(auditTable)
+      .filter(history && col("status") === "SUCCESS" && col("rows_processed") > 0)
       // log_id tie-break: back-to-back runs can share a timestamp, and
       // an untied desc sort would make the WINDOW's composition (and
       // the median) nondeterministic at the boundary — the same
@@ -64,73 +124,6 @@ object VolumeGuard {
     Verdict(observed, Some(med), hist.length, breach)
   }
 
-  /** [[check]] and THROW on breach — the per-item-isolation form the
-    * layers call: the failure lands as this model's ERROR audit row
-    * and the run's failed list, never a silent success.
-    */
-  def enforce(spark: SparkSession, auditTable: String, targetTable: String,
-      observed: Long, tolerancePct: Int): Unit = {
-    val v = check(spark, auditTable, targetTable, observed, tolerancePct)
-    if (v.breach) throw new IllegalStateException(
-      s"volume anomaly for '$targetTable': this run produced " +
-        s"${v.observed} rows vs a trailing median of ${v.median.get} " +
-        s"over ${v.historyRuns} runs — outside ±$tolerancePct%. " +
-        "If the shift is intended (backfill, scope change), re-run " +
-        "with a raised volume_guard_pct or after pruning the audit " +
-        "history window.")
-  }
-
-  /** Trend check for a MAINTENANCE-plane metric (round-19 verdict
-    * item 7 — store_stats' occupancy spread): same trailing-median /
-    * integer-deviation discipline as [[check]], but the history is the
-    * SAME task's own SUCCESS rows — matched on (layer = maintenance,
-    * operation, source_id, target_table). [[check]]'s data-layer
-    * filter exists to keep these rows OUT of volume medians; here they
-    * ARE the series, and the operation+source_id match keeps two tasks
-    * profiling the same table from poisoning each other's baseline.
-    */
-  def checkMetric(spark: SparkSession, auditTable: String,
-      targetTable: String, operation: String, sourceId: String,
-      observed: Long, tolerancePct: Int, window: Int = 7,
-      minHistory: Int = 3): Verdict = {
-    require(tolerancePct > 0, "tolerancePct must be positive")
-    require(window >= minHistory && minHistory >= 1,
-      s"need window >= minHistory >= 1, got $window/$minHistory")
-    val hist = spark.table(auditTable)
-      .filter(col("target_table") === targetTable &&
-        col("layer") === "maintenance" &&
-        col("operation") === operation &&
-        col("source_id") === sourceId &&
-        col("status") === "SUCCESS" && col("rows_processed") > 0)
-      .orderBy(col("event_timestamp").desc, col("log_id").desc)
-      .select(col("rows_processed")).limit(window)
-      .collect().map(_.getLong(0))
-    if (observed == 0L || hist.length < minHistory)
-      return Verdict(observed, None, hist.length, breach = false)
-    val sorted = hist.sorted
-    val med = sorted((sorted.length - 1) / 2)
-    val breach = math.abs(observed - med) * 100L > tolerancePct.toLong * med
-    Verdict(observed, Some(med), hist.length, breach)
-  }
-
-  /** [[checkMetric]] and THROW — the store_stats trend gate: a spread
-    * that jumps vs its own trailing median means the store's occupancy
-    * profile moved (a hot band forming, a skewed crawl landing) and
-    * the tuning the stats exist to drive should run NOW, not after the
-    * probe mass silently degrades.
-    */
-  def enforceMetric(spark: SparkSession, auditTable: String,
-      targetTable: String, operation: String, sourceId: String,
-      observed: Long, tolerancePct: Int): Unit = {
-    val v = checkMetric(spark, auditTable, targetTable, operation,
-      sourceId, observed, tolerancePct)
-    if (v.breach) throw new IllegalStateException(
-      s"store_stats trend anomaly for '$targetTable' ($sourceId): " +
-        s"occupancy spread ${v.observed} permille vs a trailing median " +
-        s"of ${v.median.get} over ${v.historyRuns} runs — outside " +
-        s"±$tolerancePct%. The store's occupancy profile moved: " +
-        "re-tune max_bucket_size/max_cell_size, or run compact/prune/" +
-        "retrain before the next fold. If the shift is intended " +
-        "(corpus scope change), re-run with a raised spread_trend_pct.")
-  }
+  private def failOnBreach(v: Verdict)(message: Verdict => String): Unit =
+    if (v.breach) throw new IllegalStateException(message(v))
 }

@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails. The metadata ledger is written only by
   * `MetadataManager.append`: any other table write into the metadata
   * database, or any write of `data_quality_metrics` (a view), fails.
+  * Which config type uses which YAML key is declared once in
+  * `EtlConfig` and refused by its one ownership check: an "only used
+  * by" message anywhere else in `Config.scala` (beyond the
+  * `partition_by` rule) is a hand-written copy.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -64,7 +68,21 @@ class CommitGuardSpec extends AnyFunSuite {
     */
   def fenceMarks(src: String): Int =
     """is OLDER than|max\((?:col\()?\$?"_last_epoch"""".r
-      .findAllIn(joined(src).replaceAll("\"\\s*\\+\\s*s?\"", "")).size
+      .findAllIn(literalsJoined(src)).size
+
+  /** Source text with string literals concatenated across lines
+    * joined, so a phrase split over two literals reads whole.
+    */
+  private def literalsJoined(src: String): String =
+    joined(src).replaceAll("\"\\s*\\+\\s*s?\"", "")
+
+  /** The enclosing `def` of each "only used by" phrase in one source
+    * text (a hand-written key-ownership refusal).
+    */
+  def ownershipRefusals(src: String): Seq[String] = {
+    val code = literalsJoined(src)
+    "only used by".r.findAllMatchIn(code).map(m => enclosingDef(code, m.start)).toSeq
+  }
 
   /** The name of the last `def` that starts before offset `at`. */
   private def enclosingDef(src: String, at: Int): String =
@@ -188,6 +206,25 @@ class CommitGuardSpec extends AnyFunSuite {
       mainRoot.relativize(p).toString -> fenceMarks(src) }
       .filter(_._2 > 0)
     assert(marks == Seq("graft/io/EpochFence.scala" -> 2), marks.mkString("\n"))
+  }
+
+  test("the detector flags a hand-written key-ownership refusal split over literals") {
+    val copy =
+      """private def parseTask(m: Map[String, Object]): Task = {
+        |  require(t.taskType == "zone_maps" || t.columns.isEmpty,
+        |    s"maintenance task '${t.taskId}': columns is only " +
+        |      "used by zone_maps")
+        |""".stripMargin
+    assert(ownershipRefusals(copy) == Seq("parseTask"))
+    assert(ownershipRefusals("require(ok, \"a is not used by b\")").isEmpty)
+  }
+
+  test("Config.scala has one ownership message; only the partition_by rule is hand-written") {
+    val config = mainSources.collectFirst {
+      case (p, src) if p.endsWith("graft/config/Config.scala") => src
+    }.get
+    assert(ownershipRefusals(config) == Seq("checkOwnership", "parseModel"),
+      ownershipRefusals(config).mkString("\n"))
   }
 
   test("localCheckpoint(true) appears under graft/io only in appendSurvivors") {

@@ -84,7 +84,8 @@ class ConfigSpec extends AnyFunSuite {
           |    quota: {id_column: doc_id, stratum_column: src, max_per_stratum: 5}
           |""".stripMargin))
     }
-    assert(mism.getMessage.contains("quota: block is not used"), mism.getMessage)
+    assert(mism.getMessage.contains("quota is not used by transform_type chunk"),
+      mism.getMessage)
     // value-range shapes: stride > chunk_tokens, zero quota, a no-op
     // mix, a missing probe table — each named at parse time
     intercept[IllegalArgumentException] { EtlConfig.fromYaml(transformYaml(
@@ -134,6 +135,183 @@ class ConfigSpec extends AnyFunSuite {
     // the overwrite arm honours it
     assert(model("    refresh_type: full\n").partitionBy == Seq("k"))
     assert(model("    refresh_type: incremental\n").partitionBy == Seq("k"))
+  }
+
+  test("every ownership rule: a key parses under an owner type and refuses under a non-owner") {
+    // one item that parses, per (kind, type); a row's key line replaces
+    // the base's own line for that key
+    val bases: Map[(String, String), Seq[String]] = Map(
+      ("transform", "sql") -> Seq("transform_type: sql", "sql_query: SELECT 1"),
+      ("transform", "dedup") -> Seq("transform_type: dedup",
+        "dedup: {id_column: doc_id, text_column: text}"),
+      ("transform", "curation") -> Seq("transform_type: curation",
+        "curation: {id_column: doc_id, text_column: text}"),
+      ("transform", "chunk") -> Seq("transform_type: chunk",
+        "chunk: {id_column: doc_id, text_column: text}"),
+      ("transform", "quota") -> Seq("transform_type: quota",
+        "quota: {id_column: doc_id, stratum_column: src, max_per_stratum: 5}"),
+      ("transform", "mix") -> Seq("transform_type: mix",
+        "mix: {id_column: doc_id, source_column: src, default_epochs: 2}"),
+      ("transform", "split") -> Seq("transform_type: split",
+        "split: {id_column: doc_id, text_column: text}"),
+      ("transform", "decontaminate") -> Seq("transform_type: decontaminate",
+        "decontaminate: {id_column: doc_id, text_column: text, probe_table: e.p}"),
+      ("transform", "weighted_sample") -> Seq("transform_type: weighted_sample",
+        "weighted_sample: {id_column: doc_id, stratum_column: lang, " +
+          "weight_column: n, samples_per_stratum: 3}"),
+      ("transform", "relevance_filter") -> Seq("transform_type: relevance_filter",
+        "relevance_filter: {id_column: doc_id, text_column: text, terms: [spark], " +
+          "min_score_micro: 0}"),
+      ("transform", "asof") -> Seq("transform_type: asof",
+        "asof: {as_of: '2024-01-01'}"),
+      ("transform", "store_probe") -> Seq("transform_type: store_probe",
+        "store_probe: {store_table: g.s, store_type: dedup_store, id_column: a, " +
+          "content_column: b}"),
+      ("transform", "view_estimate") -> Seq("transform_type: view_estimate",
+        "view_estimate: {view_type: distinct_view, key_columns: [k]}"),
+      ("model", "full") -> Seq("refresh_type: full", "sql_query: SELECT 1"),
+      ("model", "incremental") -> Seq("refresh_type: incremental", "sql_query: SELECT 1"),
+      ("model", "additive") -> Seq("refresh_type: additive", "sql_query: SELECT 1",
+        "primary_keys: [k]", "sum_columns: [x]"),
+      ("model", "extremes") -> Seq("refresh_type: extremes", "sql_query: SELECT 1",
+        "primary_keys: [k]", "min_columns: [x]"),
+      ("model", "join_view") -> Seq("refresh_type: join_view", "left_table: a.l",
+        "right_table: a.r", "join_keys: [k]"),
+      ("model", "scd2") -> Seq("refresh_type: scd2", "sql_query: SELECT 1",
+        "primary_keys: [k]", "tracked_columns: [v]", "effective_column: d"),
+      ("model", "distinct_view") -> Seq("refresh_type: distinct_view",
+        "sql_query: SELECT 1", "primary_keys: [k]", "distinct_column: u"),
+      ("model", "quantile_view") -> Seq("refresh_type: quantile_view",
+        "sql_query: SELECT 1", "primary_keys: [k]", "quantile_column: c"),
+      ("model", "dedup_store") -> Seq("refresh_type: dedup_store", "sql_query: SELECT 1",
+        "dedup_store: {id_column: doc_id, text_column: text}"),
+      ("model", "vector_dedup_store") -> Seq("refresh_type: vector_dedup_store",
+        "sql_query: SELECT 1",
+        "vector_dedup_store: {id_column: v, vector_column: e, min_score: 100}"),
+      ("model", "media_dedup_store") -> Seq("refresh_type: media_dedup_store",
+        "sql_query: SELECT 1", "media_dedup_store: {id_column: i, hash_column: h}"),
+      ("model", "changelog") -> Seq("refresh_type: changelog", "mode: streaming",
+        "stream_source: {path: /tmp/x}", "primary_keys: [k]"),
+      ("model", "streaming") -> Seq("refresh_type: incremental", "mode: streaming",
+        "stream_source: {path: /tmp/x}", "primary_keys: [k]"),
+      ("maintenance", "compact") -> Seq("task_type: compact", "table: a.b"),
+      ("maintenance", "zone_maps") -> Seq("task_type: zone_maps", "table: a.b",
+        "columns: [k]"),
+      ("maintenance", "vacuum_staging") -> Seq("task_type: vacuum_staging"),
+      ("maintenance", "prune_store") -> Seq("task_type: prune_store", "table: a.b",
+        "keep_epochs: 7"),
+      ("maintenance", "retrain_store") -> Seq("task_type: retrain_store", "table: a.b"),
+      ("maintenance", "store_stats") -> Seq("task_type: store_stats", "table: a.b"),
+      ("store_probe", "dedup_store") -> Seq("store_table: g.s",
+        "store_type: dedup_store", "id_column: a", "content_column: b"),
+      ("store_probe", "vector_dedup_store") -> Seq("store_table: g.s",
+        "store_type: vector_dedup_store", "id_column: a", "content_column: b",
+        "min_score: 100"),
+      ("store_probe", "media_dedup_store") -> Seq("store_table: g.s",
+        "store_type: media_dedup_store", "id_column: a", "content_column: b"),
+      ("view_estimate", "distinct_view") -> Seq("view_type: distinct_view",
+        "key_columns: [k]"),
+      ("view_estimate", "quantile_view") -> Seq("view_type: quantile_view",
+        "key_columns: [k]", "q_permille: [500]"),
+      ("dedup_store", "min_id") -> Seq("id_column: doc_id", "text_column: text",
+        "keeper: min_id"),
+      ("dedup_store", "max_quality") -> Seq("id_column: doc_id", "text_column: text",
+        "keeper: max_quality", "quality_column: q"),
+      ("media_dedup_store", "min_id") -> Seq("id_column: i", "hash_column: h",
+        "keeper: min_id"),
+      ("media_dedup_store", "max_quality") -> Seq("id_column: i", "hash_column: h",
+        "keeper: max_quality", "quality_column: q"))
+    def indented(lines: Seq[String]) = lines.map(l => s"    $l\n").mkString
+    def block(key: String, lines: Seq[String]) = s"    $key: ${lines.mkString("{", ", ", "}")}\n"
+    def model(body: String) = s"models:\n  - model_id: m\n    target_table: g.t\n$body"
+    def render(kind: String, lines: Seq[String]): String = kind match {
+      case "transform" => transformYaml(indented(lines))
+      case "model" => model(indented(lines))
+      case "maintenance" => s"maintenance:\n  - task_id: t\n${indented(lines)}"
+      case "store_probe" | "view_estimate" =>
+        transformYaml(s"    transform_type: $kind\n" + block(kind, lines))
+      case store => model(s"    refresh_type: $store\n    sql_query: SELECT 1\n" +
+        block(store, lines))
+    }
+    // (item kind, the key's line, one type that uses it, one that does not)
+    val rows = Seq(
+      ("transform", "sql_query: SELECT 2", "sql", "chunk"),
+      ("transform", "dedup: {id_column: doc_id, text_column: text}", "dedup", "sql"),
+      ("transform", "curation: {id_column: doc_id, text_column: text}", "curation", "sql"),
+      ("transform", "chunk: {id_column: doc_id, text_column: text}", "chunk", "split"),
+      ("transform", "quota: {id_column: doc_id, stratum_column: src, max_per_stratum: 5}",
+        "quota", "chunk"),
+      ("transform", "mix: {id_column: doc_id, source_column: src, default_epochs: 2}",
+        "mix", "sql"),
+      ("transform", "split: {id_column: doc_id, text_column: text}", "split", "chunk"),
+      ("transform", "decontaminate: {id_column: doc_id, text_column: text, probe_table: e.p}",
+        "decontaminate", "sql"),
+      ("transform", "weighted_sample: {id_column: doc_id, stratum_column: lang, " +
+        "weight_column: n, samples_per_stratum: 3}", "weighted_sample", "quota"),
+      ("transform", "relevance_filter: {id_column: doc_id, text_column: text, " +
+        "terms: [spark], min_score_micro: 0}", "relevance_filter", "sql"),
+      ("transform", "asof: {as_of: '2024-01-01'}", "asof", "sql"),
+      ("transform", "store_probe: {store_table: g.s, store_type: dedup_store, " +
+        "id_column: a, content_column: b}", "store_probe", "sql"),
+      ("transform", "view_estimate: {view_type: distinct_view, key_columns: [k]}",
+        "view_estimate", "sql"),
+      ("model", "sql_query: SELECT 2", "full", "join_view"),
+      ("model", "sql_query: SELECT 2", "full", "streaming"),
+      ("model", "stream_source: {path: /tmp/y}", "streaming", "full"),
+      ("model", "checkpoint: /tmp/chk", "streaming", "full"),
+      ("model", "primary_keys: [k]", "incremental", "dedup_store"),
+      ("model", "primary_keys: [k]", "incremental", "vector_dedup_store"),
+      ("model", "primary_keys: [k]", "incremental", "media_dedup_store"),
+      ("model", "sum_columns: [x]", "additive", "full"),
+      ("model", "min_columns: [x]", "extremes", "full"),
+      ("model", "max_columns: [y]", "extremes", "additive"),
+      ("model", "left_table: a.l", "join_view", "full"),
+      ("model", "right_table: a.r", "join_view", "full"),
+      ("model", "join_keys: [k]", "join_view", "incremental"),
+      ("model", "left_batch_sql: SELECT 1", "join_view", "full"),
+      ("model", "right_batch_sql: SELECT 1", "join_view", "full"),
+      ("model", "tracked_columns: [v]", "scd2", "full"),
+      ("model", "effective_column: d", "scd2", "full"),
+      ("model", "distinct_column: u", "distinct_view", "full"),
+      ("model", "hll_m: 32", "distinct_view", "quantile_view"),
+      ("model", "quantile_column: c", "quantile_view", "full"),
+      ("model", "op_column: operation", "changelog", "incremental"),
+      ("model", "seq_column: lsn", "changelog", "streaming"),
+      ("model", "dedup_store: {id_column: doc_id, text_column: text}", "dedup_store", "full"),
+      ("model", "vector_dedup_store: {id_column: v, vector_column: e, min_score: 100}",
+        "vector_dedup_store", "full"),
+      ("model", "media_dedup_store: {id_column: i, hash_column: h}",
+        "media_dedup_store", "full"),
+      ("maintenance", "table: a.b", "compact", "vacuum_staging"),
+      ("maintenance", "cluster_by: [k]", "compact", "zone_maps"),
+      ("maintenance", "target_rows_per_file: 5000", "compact", "store_stats"),
+      ("maintenance", "columns: [k]", "zone_maps", "compact"),
+      ("maintenance", "keep_epochs: 7", "prune_store", "compact"),
+      ("maintenance", "train_iters: 3", "retrain_store", "compact"),
+      ("maintenance", "num_centroids: 8", "retrain_store", "zone_maps"),
+      ("maintenance", "spread_threshold_permille: 1500", "retrain_store", "store_stats"),
+      ("maintenance", "max_cell_size: 40", "store_stats", "compact"),
+      ("maintenance", "max_bucket_size: 40", "store_stats", "prune_store"),
+      ("maintenance", "spread_trend_pct: 50", "store_stats", "retrain_store"),
+      ("store_probe", "shingle_size: 4", "dedup_store", "media_dedup_store"),
+      ("store_probe", "num_hashes: 16", "dedup_store", "vector_dedup_store"),
+      ("store_probe", "jaccard_pct: 50", "dedup_store", "media_dedup_store"),
+      ("store_probe", "bands: 4", "media_dedup_store", "vector_dedup_store"),
+      ("store_probe", "min_score: 100", "vector_dedup_store", "dedup_store"),
+      ("store_probe", "nprobe: 2", "vector_dedup_store", "media_dedup_store"),
+      ("store_probe", "max_cell_size: 7", "vector_dedup_store", "dedup_store"),
+      ("store_probe", "max_hamming: 8", "media_dedup_store", "dedup_store"),
+      ("view_estimate", "q_permille: [500]", "quantile_view", "distinct_view"),
+      ("dedup_store", "quality_column: q", "max_quality", "min_id"),
+      ("media_dedup_store", "quality_column: q", "max_quality", "min_id"))
+    for ((kind, line, owner, nonOwner) <- rows) withClue(s"$kind $line: ") {
+      val key = line.takeWhile(_ != ':')
+      def doc(tpe: String, extra: Seq[String]): String =
+        render(kind, bases(kind -> tpe).filterNot(_.startsWith(s"$key:")) ++ extra)
+      EtlConfig.fromYaml(doc(nonOwner, Nil))
+      EtlConfig.fromYaml(doc(owner, Seq(line)))
+      intercept[IllegalArgumentException](EtlConfig.fromYaml(doc(nonOwner, Seq(line))))
+    }
   }
 
   test("template substitution: vars, env, and unknown left empty") {

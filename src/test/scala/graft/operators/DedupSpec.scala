@@ -135,6 +135,7 @@ class DedupSpec extends SparkSpec {
     assert(got((1L, 2L)) == 1000L, "every shingle of 1 appears in 2")
     assert(!got.contains((2L, 1L)), "the long doc is NOT contained in the quote")
     assert(!got.keys.exists(k => k._1 == 3L || k._2 == 3L))
+    Dedup.releaseCaches(spark)
   }
 
   test("containmentPairs: posting cap is a subset trade, never an inflation") {
@@ -143,11 +144,13 @@ class DedupSpec extends SparkSpec {
         s"unique$i tail$i piece$i")).toDF("doc_id", "text")
     val exact = Dedup.containmentPairs(d, "doc_id", "text", 3, 700)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    Dedup.releaseCaches(spark)
     val capped = Dedup.containmentPairs(d, "doc_id", "text", 3, 700,
         maxPostingSize = Some(5L))
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(capped.subsetOf(exact),
       s"capped must be a subset: ${capped -- exact}")
+    Dedup.releaseCaches(spark)
   }
 
   test("jaccard is exact on known sets") {
@@ -280,8 +283,8 @@ class DedupSpec extends SparkSpec {
         .as[(Long, Long, Double)].collect().toSet
       assert(fast == brute,
         s"mode=$mode t=$t: prefix-filtered join diverged from brute force")
+      Dedup.releaseCaches(spark)
     }
-    Dedup.releaseCaches(spark)
   }
 
   test("ngramJaccardPairs: posting cap drops boilerplate-only pairs, keeps rare ones") {
@@ -298,6 +301,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(uncapped.map(p => (p._1, p._2)) ==
       Set((1L, 2L), (3L, 4L), (3L, 5L), (3L, 6L), (4L, 5L), (4L, 6L), (5L, 6L)))
+    Dedup.releaseCaches(spark)
     val capped = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.9,
       Dedup.XxHash, maxPostingSize = Some(3L))
       .as[(Long, Long, Double)].collect().toSet

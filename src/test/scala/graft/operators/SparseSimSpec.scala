@@ -56,6 +56,7 @@ class SparseSimSpec extends SparkSpec {
     // the near-dup pairs rank far above the unrelated ones
     assert(got((1L, 2L))._2 > 350000L && got((3L, 4L))._2 > 350000L)
     assert(!got.contains((1L, 5L)), "no shared trigram, no pair row")
+    FrameCaches.release(spark)
   }
 
   test("maxDf truncates the hot term from vectors AND norms (both engines' spelling)") {
@@ -78,6 +79,7 @@ class SparseSimSpec extends SparkSpec {
         maxDf = 1L)
     }
     assert(e.getMessage.contains("pairable"), e.getMessage)
+    FrameCaches.release(spark)
   }
 
   test("docs shorter than n tokens carry no terms; threshold filters pairs") {
@@ -88,5 +90,6 @@ class SparseSimSpec extends SparkSpec {
     // doc 6 ("ha") is 1 token: no grams, no norm row, no pairs — and
     // no NULL/negative-size array crash on the way
     assert(!thr.exists(r => r._1 == 6L || r._2 == 6L))
+    FrameCaches.release(spark)
   }
 }

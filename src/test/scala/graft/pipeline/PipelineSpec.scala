@@ -721,7 +721,8 @@ class PipelineSpec extends SparkSpec {
           |    join_keys: [k]
           |""".stripMargin)
     }
-    assert(e3.getMessage.contains("silently diverge"), e3.getMessage)
+    assert(e3.getMessage.contains("sql_query is not used by refresh_type join_view"),
+      e3.getMessage)
   }
 
   test("extremes config without fold columns (or with sum_columns) fails at parse time") {
@@ -1701,7 +1702,7 @@ class PipelineSpec extends SparkSpec {
           |    refresh_type: additive
           |    primary_keys: [k]
           |    sum_columns: [x]
-          |""".stripMargin, "sql_query is unused")
+          |""".stripMargin, "sql_query is not used by mode streaming")
     // checkpoint/stream_source on a batch model
     bad("""models:
           |  - model_id: m
@@ -2584,7 +2585,8 @@ class PipelineSpec extends SparkSpec {
           |      min_score: 100
           |""".stripMargin)
     }
-    assert(e4.getMessage.contains("primary_keys is unused"), e4.getMessage)
+    assert(e4.getMessage.contains(
+      "primary_keys is not used by refresh_type vector_dedup_store"), e4.getMessage)
     val e5 = intercept[IllegalArgumentException] {
       EtlConfig.fromYaml(
         """models:
@@ -2717,7 +2719,8 @@ class PipelineSpec extends SparkSpec {
                  |    refresh_type: media_dedup_store
                  |    primary_keys: [media_id]
                  |    media_dedup_store: {id_column: a, hash_column: b}
-                 |""".stripMargin).getMessage.contains("primary_keys is unused"))
+                 |""".stripMargin).getMessage.contains(
+      "primary_keys is not used by refresh_type media_dedup_store"))
     assert(bad("""models:
                  |  - model_id: m
                  |    sql_query: SELECT 1
@@ -2915,7 +2918,8 @@ class PipelineSpec extends SparkSpec {
           |      text_column: text
           |""".stripMargin)
     }
-    assert(e3.getMessage.contains("primary_keys is unused"), e3.getMessage)
+    assert(e3.getMessage.contains(
+      "primary_keys is not used by refresh_type dedup_store"), e3.getMessage)
     val e4 = intercept[IllegalArgumentException] {
       EtlConfig.fromYaml(
         """models:
