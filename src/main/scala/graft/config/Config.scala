@@ -527,12 +527,13 @@ object EtlConfig {
   /** Parse a config document. Shape errors fail here, not inside a run.
     * One ownership rule covers every type-specific key: each item kind
     * with a discriminator (`transform_type`; `refresh_type` and `mode`;
-    * `task_type`; a probe's `store_type`; a view read's `view_type`; a
-    * banded store's `keeper`) declares its valid values and which of
-    * them use which key, and a declared key present under a value that
-    * does not use it is refused, whatever its value. Keys no declaration
-    * names (the reference's `description`, `model_type`, `frequency`)
-    * are accepted and ignored.
+    * `task_type`; a source's `extract_strategy`; a DQ rule's
+    * `rule_type` and `action_on_failure`; a probe's `store_type`; a
+    * view read's `view_type`; a banded store's `keeper`) declares its
+    * valid values and which of them use which key, and a declared key
+    * present under a value that does not use it is refused, whatever
+    * its value. Keys no declaration names (the reference's
+    * `description`, `model_type`, `frequency`) are accepted and ignored.
     */
   def fromYaml(yaml: String): EtlConfig = {
     val root = Option(new Yaml().load[ju.Map[String, Object]](yaml))
@@ -651,6 +652,17 @@ object EtlConfig {
   private val keepers = Ownership("keeper", graft.io.DedupStore.Keepers.toSeq,
     usedBy("max_quality")("quality_column"))
 
+  private val extractStrategies = Ownership("extract_strategy",
+    Seq("full", "incremental"), usedBy("incremental")("incremental_column"))
+
+  private val ruleTypes = Ownership("rule_type",
+    Seq("not_null", "regex", "expression", "referential_integrity", "uniqueness"),
+    usedBy("regex")("pattern") ++ usedBy("expression")("expression") ++
+      usedBy("referential_integrity")("ref_table", "ref_column"))
+
+  private val ruleActions = Ownership("action_on_failure",
+    Seq("filter", "tag", "reject"), Nil)
+
   /** The one ownership rule: `declared` must be one of `o.values`, and a
     * key `o` declares may appear in `m` only when `declared` uses it.
     * Presence counts, whatever the value.
@@ -668,26 +680,36 @@ object EtlConfig {
           o.notes.get(key).fold("")(n => s" ($n)"))
   }
 
-  private def parseSource(m: Map[String, Object]): SourceConfig = SourceConfig(
-    sourceId = str(m, "source_id"),
-    sourceType = str(m, "source_type", "file"),
-    sourcePath = str(m, "source_path"),
-    fileFormat = str(m, "file_format", "parquet"),
-    options = asMap(m.get("options")).map { case (k, v) => k -> v.toString },
-    targetTable = str(m, "target_table"),
-    extractStrategy = str(m, "extract_strategy", "full"),
-    incrementalColumn = opt(m, "incremental_column"),
-    enabled = bool(m, "enabled"))
+  private def parseSource(m: Map[String, Object]): SourceConfig = {
+    val s = SourceConfig(
+      sourceId = str(m, "source_id"),
+      sourceType = str(m, "source_type", "file"),
+      sourcePath = str(m, "source_path"),
+      fileFormat = str(m, "file_format", "parquet"),
+      options = asMap(m.get("options")).map { case (k, v) => k -> v.toString },
+      targetTable = str(m, "target_table"),
+      extractStrategy = str(m, "extract_strategy", "full"),
+      incrementalColumn = opt(m, "incremental_column"),
+      enabled = bool(m, "enabled"))
+    checkOwnership(s"source '${s.sourceId}'", extractStrategies, s.extractStrategy, m)
+    s
+  }
 
-  private def parseDqRule(m: Map[String, Object]): DqRuleConfig = DqRuleConfig(
-    ruleName = str(m, "rule_name"),
-    ruleType = str(m, "rule_type"),
-    columns = strSeq(m, "columns") ++ opt(m, "column").toSeq,
-    pattern = opt(m, "pattern"),
-    expression = opt(m, "expression"),
-    refTable = opt(m, "ref_table"),
-    refColumn = opt(m, "ref_column"),
-    actionOnFailure = str(m, "action_on_failure", "tag"))
+  private def parseDqRule(m: Map[String, Object]): DqRuleConfig = {
+    val r = DqRuleConfig(
+      ruleName = str(m, "rule_name"),
+      ruleType = str(m, "rule_type"),
+      columns = strSeq(m, "columns") ++ opt(m, "column").toSeq,
+      pattern = opt(m, "pattern"),
+      expression = opt(m, "expression"),
+      refTable = opt(m, "ref_table"),
+      refColumn = opt(m, "ref_column"),
+      actionOnFailure = str(m, "action_on_failure", "tag"))
+    val item = s"data_quality rule '${r.ruleName}'"
+    checkOwnership(item, ruleTypes, r.ruleType, m)
+    checkOwnership(item, ruleActions, r.actionOnFailure, m)
+    r
+  }
 
   private def parseTransform(m: Map[String, Object]): TransformConfig = {
     val t = TransformConfig(

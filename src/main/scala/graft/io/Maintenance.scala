@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance operators for parquet catalog tables — the
@@ -9,6 +9,26 @@ import org.apache.spark.sql.functions._
   * (reference scope: the gold layer recomputes models wholesale and
   * upserts; VACUUM/OPTIMIZE are Delta-only per SURVEY §7.4 — these are
   * the parquet-native equivalents of the parts that ARE expressible).
+  *
+  * The four key-bounded views — [[maintainAdditiveAggregate]],
+  * [[maintainInsertOnlyExtremes]], [[maintainDistinctView]] and
+  * [[maintainQuantileView]] — are one fold, [[foldKeyed]]. Each
+  * declares only its batch state (one map-side-combined aggregate of
+  * the BATCH, never of history) and the aggregates that merge two
+  * states per key. Those combiners are associative and commutative,
+  * and the commit regroups `standing ∪ batch state` under them, so N
+  * folds ≡ one aggregate over the union of their batches, in any
+  * order (pinned in MaintenanceSpec and PropertySpec). NULL rules are
+  * the one-shot aggregate's: grouping puts NULL keys in one row, and a
+  * sum over only NULLs stays NULL. Type rule: every column keeps the
+  * standing table's type (a sum of decimals does not widen per fold),
+  * so the commit is an INSERT OVERWRITE that keeps the table
+  * definition. Scale shape: cost rides the batch plus the standing
+  * table, which is key-bounded — one row per key (per key and bucket
+  * for the sketches) however long the history. A FENCED fold admits
+  * its epoch through [[EpochFence]] and commits it as a `_last_epoch`
+  * column in the same table commit as the data, so data and marker
+  * cannot diverge; the committed epoch skips, an older one throws.
   */
 object Maintenance {
 
@@ -174,25 +194,18 @@ object Maintenance {
   /** Incremental maintenance of an ADDITIVE aggregate table — the
     * 100 TB gold-refresh path: instead of rescanning all history per
     * run (the reference's wholesale recompute), fold each new fact
-    * batch into the standing (keys → sums, count) table:
-    * `new_sum = old_sum + batch_sum` via full-outer join + coalesce.
-    * Correct exactly for the ADDITIVE family (SUM/COUNT — and the
-    * AVG/rate family derived from them at read time); MIN/MAX survive
-    * inserts but not retractions, and DISTINCT needs a sketch
+    * batch into the standing (keys → sums, `n_rows`) table. Combiner:
+    * `sum`. Correct exactly for the ADDITIVE family (SUM/COUNT — and
+    * the AVG/rate family derived from them at read time); MIN/MAX
+    * survive inserts but not retractions, and DISTINCT needs a sketch
     * ([[graft.operators.Sketches]]) — that boundary is the classic
     * materialized-view-maintenance taxonomy, enforced here by only
-    * accepting sum columns. Maintaining N batches ≡ one aggregate over
-    * their union, in ANY batch order (associativity + commutativity of
-    * +) — pinned in `MaintenanceSpec`. Scale shape: per batch, one
-    * map-side-combined aggregate of the BATCH (not history) + one
-    * keyed join against the standing table — cost rides the batch.
+    * accepting sum columns.
     *
-    * @param epochId the batch's epoch (a run date's epoch day, a
-    *        micro-batch id), admitted through [[EpochFence]]: it is
-    *        written as a `_last_epoch` column in the SAME table commit
-    *        as the folded data, so data and marker can never diverge.
-    *        An older epoch is refused because sums add: a backfill
-    *        would double-count.
+    * Fenced: `epochId` is the batch's epoch (a run date's epoch day, a
+    * micro-batch id). An older epoch is refused because sums add: a
+    * backfill would double-count.
+    *
     * @return true if the batch folded (or created the table); false if
     *         it was a replayed epoch and was skipped — callers holding
     *         an Observation on the batch must not block on it then.
@@ -201,92 +214,67 @@ object Maintenance {
       batch: DataFrame, keys: Seq[String], sumCols: Seq[String],
       epochId: Long): Boolean = {
     require(sumCols.nonEmpty, "need at least one additive column")
-    val aggExprs = sumCols.map(c => sum(col(c)).as(c)) :+
-      count(lit(1)).as("n_rows")
-    val batchAgg = batch.groupBy(keys.map(col): _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .withColumn("_last_epoch", lit(epochId))
-    Commit.recover(spark, table)
-    if (!spark.catalog.tableExists(table)) {
-      batchAgg.write.saveAsTable(table)
-      return true
-    }
-    if (!EpochFence.admit("additive fold", table, epochId,
-        EpochFence.last(spark.table(table)))) return false
-    val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
-    val t = spark.table(table).alias("t")
-    // NULL-SAFE key match (<=>): groupBy emits a null-key group per
-    // batch, and a plain USING full_outer never matches null keys —
-    // each batch would append a fresh duplicate null-key row instead of
-    // folding into the standing one, breaking the N-batches ≡ one-
-    // aggregate invariant (round-10 advice). Key columns coalesce
-    // t-then-b so both matched and one-sided rows keep their key.
-    val joined = t.join(b,
-      keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
-    val merged = joined.select(
-      keys.map(k => coalesce(t(k), b(k)).as(k)) ++
-        (sumCols :+ "n_rows").map { c =>
-          (coalesce(t(c), lit(0)) + coalesce(b(c), lit(0))).as(c)
-        } :+ lit(epochId).as("_last_epoch"): _*)
-    Commit.replace(spark, table, merged)
-    true
+    val aggs = sumCols.map(c => sum(col(c)).as(c)) :+ count(lit(1)).as("n_rows")
+    foldKeyed(spark, table, "additive",
+      batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*), keys,
+      (sumCols :+ "n_rows").map(c => sum(col(c)).as(c)), Some(epochId))
   }
 
   /** Incremental MIN/MAX maintenance — the other half of the
-    * materialized-view taxonomy [[maintainAdditiveAggregate]] enforces:
-    * extremes fold correctly under INSERT-ONLY feeds (`new_min =
-    * least(old_min, batch_min)`), and that restriction is the contract,
-    * not a caveat — a retraction can strand a stale extreme with no way
-    * to recompute short of a full rescan, which is exactly the
-    * wholesale-recompute this path exists to avoid (a retraction-heavy
-    * feed wants the additive family or a rescan schedule). Output
-    * columns are `min_<c>` / `max_<c>` plus an additive `n_rows`.
-    * Same scale shape and null-safe (<=>) key fold as the additive
-    * path: one map-side-combined aggregate of the BATCH, one keyed
-    * join against the standing table. N batches ≡ one aggregate over
-    * their union in any order (min/max are associative + commutative)
-    * — pinned in MaintenanceSpec.
+    * materialized-view taxonomy [[maintainAdditiveAggregate]] enforces.
+    * Combiner: `min` / `max` into `min_<c>` / `max_<c>`, plus an
+    * additive `n_rows`. Feed contract: INSERT-ONLY, and that
+    * restriction is the contract, not a caveat — a retraction can
+    * strand a stale extreme with no way to recompute short of a full
+    * rescan, which is exactly the wholesale-recompute this path exists
+    * to avoid (a retraction-heavy feed wants the additive family or a
+    * rescan schedule). A streaming feed is insert-only by nature.
     *
-    * `epochId` is admitted through [[EpochFence]] and committed as
-    * `_last_epoch` with the data, as in the additive fold: the min/max
-    * values are replay-idempotent on their own, but `n_rows` is not, so
-    * a backfill would double-count it. A streaming feed is insert-only
-    * by nature, so fed from a stream the insert-only contract holds by
-    * construction.
+    * Fenced: the min/max values are replay-idempotent on their own,
+    * but `n_rows` is not, so a backfill would double-count it.
     */
   def maintainInsertOnlyExtremes(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], minCols: Seq[String],
       maxCols: Seq[String], epochId: Long): Boolean = {
     require(minCols.nonEmpty || maxCols.nonEmpty,
       "need at least one min or max column")
-    val outMin = minCols.map(c => s"min_$c")
-    val outMax = maxCols.map(c => s"max_$c")
-    val aggExprs = minCols.map(c => min(col(c)).as(s"min_$c")) ++
-      maxCols.map(c => max(col(c)).as(s"max_$c")) :+
+    val (mins, maxs) = (minCols.map(c => s"min_$c"), maxCols.map(c => s"max_$c"))
+    val aggs = minCols.zip(mins).map { case (c, o) => min(col(c)).as(o) } ++
+      maxCols.zip(maxs).map { case (c, o) => max(col(c)).as(o) } :+
       count(lit(1)).as("n_rows")
-    val batchAgg = batch.groupBy(keys.map(col): _*)
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .withColumn("_last_epoch", lit(epochId))
+    foldKeyed(spark, table, "extremes",
+      batch.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*), keys,
+      mins.map(c => min(col(c)).as(c)) ++ maxs.map(c => max(col(c)).as(c)) :+
+        sum(col("n_rows")).as("n_rows"), Some(epochId))
+  }
+
+  /** The one fold of the four key-bounded views (see the object doc):
+    * `state` is the batch's aggregate and `merge` combines states per
+    * `groupBy` key. Recovers a died commit, refuses a standing table of
+    * another shape, admits `epochId` (when fenced) through
+    * [[EpochFence]], then commits `standing ∪ state` regrouped under
+    * `merge`, in the standing column types and stamped with the epoch.
+    * A missing table is created from `state`.
+    *
+    * @return false when the fence skipped a replayed epoch.
+    */
+  private def foldKeyed(spark: SparkSession, table: String, what: String,
+      state: DataFrame, groupBy: Seq[String], merge: Seq[Column],
+      epochId: Option[Long]): Boolean = {
     Commit.recover(spark, table)
-    if (!spark.catalog.tableExists(table)) {
-      batchAgg.write.saveAsTable(table)
-      return true
-    }
-    if (!EpochFence.admit("extremes fold", table, epochId,
-        EpochFence.last(spark.table(table)))) return false
-    val b = Commit.stage(spark, table, "batch", batchAgg).alias("b")
-    val t = spark.table(table).alias("t")
-    val joined = t.join(b,
-      keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
-    // least/greatest skip nulls (null only when BOTH sides are), so a
-    // one-sided row keeps its own extreme without a coalesce dance
-    val merged = joined.select(
-      keys.map(k => coalesce(t(k), b(k)).as(k)) ++
-        outMin.map(c => least(t(c), b(c)).as(c)) ++
-        outMax.map(c => greatest(t(c), b(c)).as(c)) :+
-        (coalesce(t("n_rows"), lit(0)) + coalesce(b("n_rows"), lit(0)))
-          .as("n_rows") :+ lit(epochId).as("_last_epoch"): _*)
-    Commit.replace(spark, table, merged)
+    val standing = Some(table).filter(spark.catalog.tableExists).map(spark.table)
+    val shape = state.columns.sorted.toSeq
+    for (t <- standing; has = t.columns.filter(_ != "_last_epoch").sorted.toSeq)
+      require(has == shape, s"'$table' is not this view's $what shape: has " +
+        s"[${has.mkString(", ")}], expected [${shape.mkString(", ")}]")
+    if (epochId.exists(e => !EpochFence.admit(s"$what fold", table, e,
+        standing.flatMap(EpochFence.last)))) return false
+    val next = standing.fold(state)(t =>
+      t.select(state.columns.map(col).toSeq: _*).unionByName(state)
+        .groupBy(groupBy.map(col): _*).agg(merge.head, merge.tail: _*)
+        .select(state.columns.map(c => col(c).cast(t.schema(c).dataType)).toSeq: _*))
+    Commit.replace(spark, table,
+      epochId.fold(next)(e => next.withColumn("_last_epoch", lit(e))))
     true
   }
 
@@ -404,20 +392,19 @@ object Maintenance {
     * joins): COUNT(DISTINCT x) per key is not additive and cannot fold
     * exactly from batches, so the standing table holds per-key
     * HyperLogLog REGISTERS ([[graft.operators.Sketches
-    * .hllRegistersBy]]) and each batch max-merges into them. Because
-    * `max` is associative, commutative AND IDEMPOTENT, this is the one
-    * view family that needs NO epoch fence at all: a crash-replayed
-    * batch, a reordered batch, even a late backfill all max-merge to
-    * the registers of the union — replays and out-of-order arrivals
-    * are harmless by algebra, not by bookkeeping (pinned in
-    * MaintenanceSpec). Deletions remain out of scope, as for every
-    * sketch (an HLL cannot un-see an item).
+    * .hllRegistersBy]]), ≤ m rows per key forever. Combiner: `max` of
+    * `rho` per (keys, bucket). Because `max` is associative,
+    * commutative AND IDEMPOTENT, this is the one view family that
+    * needs NO epoch fence at all: a crash-replayed batch, a reordered
+    * batch, even a late backfill all max-merge to the registers of the
+    * union — replays and out-of-order arrivals are harmless by algebra,
+    * not by bookkeeping (pinned in MaintenanceSpec). Deletions remain
+    * out of scope, as for every sketch (an HLL cannot un-see an item).
+    * Read the view back with [[distinctViewEstimate]].
     *
-    * Scale shape: per batch, one map-side-combined register build of
-    * the BATCH + one ≤ m-rows-per-key merge against the standing table
-    * — cost rides the batch; the standing table is ≤ m rows per key
-    * forever, independent of history size. Read the view back with
-    * [[distinctViewEstimate]].
+    * m is PERSISTED with the registers as `_m`: registers built with
+    * different m live in different bucket spaces, so an `hll_m` edited
+    * between runs is refused rather than max-merged into garbage.
     */
   def maintainDistinctView(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], itemCol: String,
@@ -426,37 +413,26 @@ object Maintenance {
     require(graft.operators.Sketches.hllAlphaMs.contains(m),
       s"m must be one of ${graft.operators.Sketches.hllAlphaMs.sorted}, got $m" +
         " (the exact-integer estimator's alpha table)")
-    // m is PERSISTED with the registers: registers built with different
-    // m live in different bucket spaces, and a config drift (hll_m
-    // edited between runs) would otherwise max-merge them silently into
-    // garbage estimates (review finding) — the fold validates it, the
-    // readback derives it
-    val regCols = keys ++ Seq("bucket", "rho", "_m")
-    val regs = graft.operators.Sketches.hllRegistersBy(
-        batch, keys, col(itemCol), m)
-      .withColumn("_m", lit(m.toLong))
     Commit.recover(spark, table)
-    if (!spark.catalog.tableExists(table)) {
-      regs.write.saveAsTable(table)
-      return true
-    }
-    val t = spark.table(table)
-    require(t.columns.sorted.sameElements(regCols.sorted.toArray[String]),
-      s"'$table' is not this view's register shape: has " +
-        s"[${t.columns.sorted.mkString(", ")}], expected " +
-        s"[${regCols.sorted.mkString(", ")}]")
-    val standingM = t.agg(max(col("_m"))).head().getLong(0)
-    if (standingM != m.toLong) throw new IllegalStateException(
-      s"distinct view '$table' was built with m=$standingM but this " +
-        s"fold uses m=$m — different register spaces cannot merge; " +
-        "recreate the view or restore the original hll_m")
-    val staged = Commit.stage(spark, table, "batch", regs)
-    Commit.replace(spark, table,
-      t.select(regCols.map(col): _*).unionByName(staged)
-        .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("rho"))
-        .withColumn("_m", lit(m.toLong)))
-    true
+    for (standingM <- registerCount(spark, table) if standingM != m)
+      throw new IllegalStateException(
+        s"distinct view '$table' was built with m=$standingM but this " +
+          s"fold uses m=$m — different register spaces cannot merge; " +
+          "recreate the view or restore the original hll_m")
+    foldKeyed(spark, table, "register",
+      graft.operators.Sketches.hllRegistersBy(batch, keys, col(itemCol), m)
+        .withColumn("_m", lit(m.toLong)),
+      keys ++ Seq("bucket", "_m"), Seq(max(col("rho")).as("rho")), None)
   }
+
+  /** The `_m` a distinct view's registers were built with; None when
+    * the table is missing, empty or has no `_m` column.
+    */
+  private def registerCount(spark: SparkSession, table: String): Option[Int] =
+    Some(table).filter(spark.catalog.tableExists).map(spark.table)
+      .filter(_.columns.contains("_m"))
+      .flatMap(t => Option(t.agg(max(col("_m"))).head().get(0)))
+      .map(_.asInstanceOf[Long].toInt)
 
   /** Per-key approximate distinct count from a [[maintainDistinctView]]
     * table: `(keys…, m, n_empty, est)` via the exact-integer raw HLL
@@ -467,12 +443,10 @@ object Maintenance {
     */
   def distinctViewEstimate(spark: SparkSession, table: String,
       keys: Seq[String]): DataFrame = {
-    val t = spark.table(table)
-    require(t.columns.contains("_m"),
-      s"'$table' is not a maintainDistinctView table (no _m column)")
-    val m = t.agg(max(col("_m"))).head().getLong(0).toInt
-    graft.operators.Sketches.hllEstimateBy(
-      t.select((keys ++ Seq("bucket", "rho")).map(col): _*), keys, m)
+    val m = registerCount(spark, table).getOrElse(throw new IllegalArgumentException(
+      s"'$table' is not a maintainDistinctView table (no _m registers)"))
+    graft.operators.Sketches.hllEstimateBy(spark.table(table)
+      .select((keys ++ Seq("bucket", "rho")).map(col): _*), keys, m)
   }
 
   /** Incremental QUANTILE view — the fifth member of the
@@ -481,43 +455,18 @@ object Maintenance {
     * exact ones need the full data, so the standing table holds
     * per-key HDR log-bucket counts
     * ([[graft.operators.Sketches.hdrSketchBy]], 6.25% relative error,
-    * ≤ ~2k buckets per key forever) and each batch SUM-merges in.
-    * Unlike the distinct view's max (idempotent — no fence), bucket
-    * counts ADD, so a replay double-counts: `epochId` is admitted
-    * through [[EpochFence]] and committed as `_last_epoch` with the
-    * merge, as in the additive fold (an older epoch is refused: the
-    * bucket counts would double-count it). Read back with
-    * [[quantileViewEstimate]].
-    *
-    * Scale shape: one map-side-combined sketch build of the BATCH +
-    * one keys·buckets-bounded merge — cost rides the batch, state is
-    * invariant in history size.
+    * ≤ ~2k buckets per key forever). Combiner: `sum` of `cnt` per
+    * (keys, bkey). Fenced: unlike the distinct view's max, bucket
+    * counts ADD, so a replay or a backfill would double-count. Read
+    * back with [[quantileViewEstimate]].
     */
   def maintainQuantileView(spark: SparkSession, table: String,
       batch: DataFrame, keys: Seq[String], centsCol: String,
       epochId: Long): Boolean = {
     require(keys.nonEmpty, "need at least one key column")
-    val regCols = keys ++ Seq("bkey", "cnt")
-    val regs = graft.operators.Sketches.hdrSketchBy(batch, keys, col(centsCol))
-    Commit.recover(spark, table)
-    if (!spark.catalog.tableExists(table)) {
-      regs.withColumn("_last_epoch", lit(epochId)).write.saveAsTable(table)
-      return true
-    }
-    val t = spark.table(table)
-    require((regCols.sorted sameElements
-        t.columns.filter(_ != "_last_epoch").sorted.toIndexedSeq),
-      s"'$table' is not this view's sketch shape: has " +
-        s"[${t.columns.sorted.mkString(", ")}], expected " +
-        s"[${regCols.sorted.mkString(", ")}] (+ optional _last_epoch)")
-    if (!EpochFence.admit("quantile fold", table, epochId, EpochFence.last(t)))
-      return false
-    val staged = Commit.stage(spark, table, "batch", regs)
-    Commit.replace(spark, table,
-      t.select(regCols.map(col): _*).unionByName(staged)
-        .groupBy((keys :+ "bkey").map(col): _*).agg(sum("cnt").as("cnt"))
-        .withColumn("_last_epoch", lit(epochId)))
-    true
+    foldKeyed(spark, table, "quantile",
+      graft.operators.Sketches.hdrSketchBy(batch, keys, col(centsCol)),
+      keys :+ "bkey", Seq(sum(col("cnt")).as("cnt")), Some(epochId))
   }
 
   /** Per-key quantile estimates from a [[maintainQuantileView]] table:

@@ -167,11 +167,16 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
     }.toOption.flatten
   }
 
-  /** Write with an observed row count (single pass). */
-  protected def writeCounted(df: DataFrame, write: DataFrame => Unit): Long = {
+  /** `df`'s rows, observed on the one action `run` takes over it (a
+    * single pass). `run` reports whether it took the action: 0 when it
+    * did not, because an Observation whose action never ran would
+    * block forever.
+    */
+  protected def counted(df: DataFrame)(run: DataFrame => Boolean): Long = {
     val obs = new Observation()
-    write(df.observe(obs, count(lit(1)).as("rows")))
-    obs.get("rows").asInstanceOf[Long]
+    if (run(df.observe(obs, count(lit(1)).as("rows"))))
+      obs.get("rows").asInstanceOf[Long]
+    else 0L
   }
 }
 
@@ -212,7 +217,7 @@ class BronzeLayer(spark: SparkSession, config: EtlConfig,
       for (c <- src.incrementalColumn if src.extractStrategy == "incremental")
         df = df.filter(col(c) > lit(extractDate))
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${db(src.targetTable)}")
-      ((), writeCounted(df, Sinks.append(_, src.targetTable)))
+      ((), counted(df) { d => Sinks.append(d, src.targetTable); true })
     }
   }
 
@@ -291,7 +296,7 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
       val dq = DqEngine(spark, base, t.dataQuality)
       spark.sql(s"CREATE DATABASE IF NOT EXISTS ${t.targetTable.split('.').head}")
       val rows =
-        try writeCounted(dq.data, Sinks.overwrite(_, t.targetTable, t.partitionBy))
+        try counted(dq.data) { d => Sinks.overwrite(d, t.targetTable, t.partitionBy); true }
         finally {
           dq.cleanup()
           // the near-dup funnel persists its survivor frame (it feeds
@@ -474,15 +479,6 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
     */
   private def fold(m: ModelConfig, batch: DataFrame, epoch: => Long): Long = {
     val spark = batch.sparkSession
-    // the batch's rows via an Observation riding the fold's single
-    // pass, read only when the fold ran: an Observation whose action
-    // never ran would block forever
-    def counted(folded: DataFrame => Boolean): Long = {
-      val obs = new Observation()
-      if (folded(batch.observe(obs, count(lit(1)).as("rows"))))
-        obs.get("rows").asInstanceOf[Long]
-      else 0L
-    }
     m.refreshType match {
       case "join_view" =>
         // incremental JOIN view: fold this run's base-table deltas
@@ -507,24 +503,24 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         else lb.map(_ => obsL.get("rows").asInstanceOf[Long]).getOrElse(0L) +
           rb.map(_ => obsR.get("rows").asInstanceOf[Long]).getOrElse(0L)
       case "additive" =>
-        counted(graft.io.Maintenance.maintainAdditiveAggregate(spark,
+        counted(batch)(graft.io.Maintenance.maintainAdditiveAggregate(spark,
           m.targetTable, _, m.primaryKeys, m.sumColumns, epochId = epoch))
       case "extremes" =>
         // insert-only MIN/MAX fold (least/greatest per key). The
         // INSERT-ONLY feed contract is declared at the config
         // (parseModel) — a retraction can strand a stale extreme,
         // which is exactly the wholesale recompute this path avoids
-        counted(graft.io.Maintenance.maintainInsertOnlyExtremes(spark,
+        counted(batch)(graft.io.Maintenance.maintainInsertOnlyExtremes(spark,
           m.targetTable, _, m.primaryKeys, m.minColumns, m.maxColumns,
           epochId = epoch))
       case "quantile_view" =>
-        counted(graft.io.Maintenance.maintainQuantileView(spark,
+        counted(batch)(graft.io.Maintenance.maintainQuantileView(spark,
           m.targetTable, _, m.primaryKeys, m.quantileColumn.get,
           epochId = epoch))
       case "distinct_view" =>
         // HLL registers max-merge the batch in: no epoch fence, max is
         // idempotent (the fold returns true always)
-        counted(graft.io.Maintenance.maintainDistinctView(spark,
+        counted(batch)(graft.io.Maintenance.maintainDistinctView(spark,
           m.targetTable, _, m.primaryKeys, m.distinctColumn.get, m.hllM))
       // the three stores report their own batch count: each persists
       // the batch, and in Spark 4.1 a query over that cache poisons an
@@ -569,7 +565,7 @@ class GoldLayer(spark: SparkSession, config: EtlConfig,
         // partition_by would cost a file per value — parse refuses it)
         Upsert.upsertTable(spark, m.targetTable, batch, m.primaryKeys)
       case _ =>
-        writeCounted(batch, Sinks.overwrite(_, m.targetTable, m.partitionBy))
+        counted(batch) { d => Sinks.overwrite(d, m.targetTable, m.partitionBy); true }
     }
   }
 }

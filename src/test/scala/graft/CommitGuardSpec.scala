@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * Which config type uses which YAML key is declared once in
   * `EtlConfig` and refused by its one ownership check: an "only used
   * by" message anywhere else in `Config.scala` (beyond the
-  * `partition_by` rule) is a hand-written copy.
+  * `partition_by` rule) is a hand-written copy. The four key-bounded
+  * view folds are `Maintenance.foldKeyed`: a `"full_outer"` merge or a
+  * staged `"batch"` under `graft/io`, or a `_last_epoch` stamp outside
+  * `foldKeyed` and the join view's append, is a hand-copied fold.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -84,10 +87,25 @@ class CommitGuardSpec extends AnyFunSuite {
     "only used by".r.findAllMatchIn(code).map(m => enclosingDef(code, m.start)).toSeq
   }
 
-  /** The name of the last `def` that starts before offset `at`. */
+  /** The name of the last member `def` (indented at most two spaces)
+    * that starts before offset `at`; a helper `def` local to a member
+    * does not count.
+    */
   private def enclosingDef(src: String, at: Int): String =
-    """def (\w+)""".r.findAllMatchIn(src.substring(0, at))
-      .map(_.group(1)).toSeq.lastOption.getOrElse("")
+    """(?m)^ {0,2}(?:(?:private|protected)(?:\[\w+\])? |override |final )*def (\w+)""".r
+      .findAllMatchIn(src.substring(0, at)).map(_.group(1)).toSeq.lastOption.getOrElse("")
+
+  /** Marks of a hand-copied keyed view fold in one source text: each
+    * `"full_outer"` join, each `Commit.stage(…, "batch", …)`, and the
+    * enclosing `def` of each `_last_epoch` stamp.
+    */
+  def keyedFoldCopies(src: String): (Int, Int, Seq[String]) = {
+    val code = joined(src)
+    ("\"full_outer\"".r.findAllIn(code).size,
+      """Commit\.stage\([^()]*"batch"""".r.findAllIn(code).size,
+      """(?:withColumn\(|\.as\()"_last_epoch"""".r.findAllMatchIn(code)
+        .map(m => enclosingDef(code, m.start)).toSeq)
+  }
 
   /** The source line around offset `at`. */
   private def lineAt(src: String, at: Int): String =
@@ -225,6 +243,35 @@ class CommitGuardSpec extends AnyFunSuite {
     }.get
     assert(ownershipRefusals(config) == Seq("checkOwnership", "parseModel"),
       ownershipRefusals(config).mkString("\n"))
+  }
+
+  test("the detector flags a hand-copied keyed view fold") {
+    val copy =
+      """  def maintainAdditiveAggregate(spark: SparkSession, table: String): Boolean = {
+        |    def agg(df: DataFrame) = df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+        |    val b = Commit.stage(spark, table, "batch",
+        |      agg(batch).withColumn("_last_epoch", lit(epochId))).alias("b")
+        |    val t = spark.table(table).alias("t")
+        |    val joined = t.join(b, keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
+        |    Commit.replace(spark, table, joined.select(
+        |      keys.map(k => coalesce(t(k), b(k)).as(k)) :+ lit(epochId).as("_last_epoch"): _*))
+        |""".stripMargin
+    assert(keyedFoldCopies(copy) ==
+      ((1, 1, Seq("maintainAdditiveAggregate", "maintainAdditiveAggregate"))))
+    assert(keyedFoldCopies(
+      "foldKeyed(spark, table, \"additive\", state, keys, merge, Some(epochId))") ==
+      ((0, 0, Nil)))
+  }
+
+  test("graft/io holds no full-outer view merge or batch stage; only foldKeyed and maintainJoinView stamp _last_epoch") {
+    val io = mainRoot.resolve("graft/io")
+    val marks = mainSources.filter(_._1.startsWith(io)).map { case (p, src) =>
+      mainRoot.relativize(p).toString -> keyedFoldCopies(src) }
+    val copies = marks.filter { case (_, (outer, stages, _)) => outer + stages > 0 }
+    assert(copies.isEmpty, copies.mkString("\n"))
+    val stamps = marks.flatMap { case (p, (_, _, defs)) => defs.map(d => s"$p: $d") }.distinct
+    assert(stamps == Seq("graft/io/Maintenance.scala: foldKeyed",
+      "graft/io/Maintenance.scala: maintainJoinView"), stamps.mkString("\n"))
   }
 
   test("localCheckpoint(true) appears under graft/io only in appendSurvivors") {

@@ -37,25 +37,33 @@ class PropertySpec extends SparkSpec {
 
   test("incremental additive aggregate equals the one-shot aggregate for arbitrary batch splits") {
     import graft.io.Maintenance
+    import org.apache.spark.sql.types.DecimalType
     spark.sql("CREATE DATABASE IF NOT EXISTS prop_test")
     for (seed <- seeds) {
       val rnd = new Random(seed)
       val t = s"prop_test.m_$seed"
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val nBatches = rnd.nextInt(4) + 2
+      // g0's sums are always NULL (its one-shot sum is NULL); any other
+      // value is NULL one time in four. amt is a decimal(10,2) column.
+      def value[T](g: Int, v: => T): Option[T] =
+        if (g == 0 || rnd.nextInt(4) == 0) None else Some(v)
       val batches = Seq.fill(nBatches)(
-        Seq.fill(rnd.nextInt(30) + 1)(
-          (s"g${rnd.nextInt(6)}", rnd.nextInt(1000).toLong))
-          .toDF("g", "qty"))
+        Seq.fill(rnd.nextInt(30) + 1) {
+          val g = rnd.nextInt(6)
+          (s"g$g", value(g, rnd.nextInt(1000).toLong),
+            value(g, BigDecimal(rnd.nextInt(100000), 2)))
+        }.toDF("g", "qty", "amt").withColumn("amt", $"amt".cast("decimal(10,2)")))
       batches.zipWithIndex.foreach { case (b, i) =>
-        Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"), Seq("qty"),
-          epochId = i + 1L) }
+        Maintenance.maintainAdditiveAggregate(spark, t, b, Seq("g"),
+          Seq("qty", "amt"), epochId = i + 1L) }
       val oneShot = batches.reduce(_ unionByName _)
         .groupBy("g")
-        .agg(sum("qty").as("qty"), count(lit(1)).as("n_rows"))
-        .as[(String, Long, Long)].collect().toSet
-      val inc = spark.table(t).select("g", "qty", "n_rows")
-        .as[(String, Long, Long)].collect().toSet
+        .agg(sum("qty").as("qty"), sum("amt").as("amt"), count(lit(1)).as("n_rows"))
+        .collect().toSet
+      assert(spark.table(t).schema("amt").dataType == DecimalType(20, 2),
+        s"seed $seed: a decimal sum must keep its type across folds")
+      val inc = spark.table(t).select("g", "qty", "amt", "n_rows").collect().toSet
       assert(inc == oneShot, s"seed $seed ($nBatches batches): $inc != $oneShot")
     }
   }

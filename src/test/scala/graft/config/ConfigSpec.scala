@@ -220,7 +220,14 @@ class ConfigSpec extends AnyFunSuite {
       ("media_dedup_store", "min_id") -> Seq("id_column: i", "hash_column: h",
         "keeper: min_id"),
       ("media_dedup_store", "max_quality") -> Seq("id_column: i", "hash_column: h",
-        "keeper: max_quality", "quality_column: q"))
+        "keeper: max_quality", "quality_column: q"),
+      ("source", "full") -> Seq("extract_strategy: full"),
+      ("source", "incremental") -> Seq("extract_strategy: incremental"),
+      ("dq_rule", "not_null") -> Seq("rule_type: not_null"),
+      ("dq_rule", "regex") -> Seq("rule_type: regex", "pattern: x"),
+      ("dq_rule", "expression") -> Seq("rule_type: expression", "expression: c > 0"),
+      ("dq_rule", "referential_integrity") -> Seq("rule_type: referential_integrity",
+        "ref_table: b.r"))
     def indented(lines: Seq[String]) = lines.map(l => s"    $l\n").mkString
     def block(key: String, lines: Seq[String]) = s"    $key: ${lines.mkString("{", ", ", "}")}\n"
     def model(body: String) = s"models:\n  - model_id: m\n    target_table: g.t\n$body"
@@ -228,6 +235,9 @@ class ConfigSpec extends AnyFunSuite {
       case "transform" => transformYaml(indented(lines))
       case "model" => model(indented(lines))
       case "maintenance" => s"maintenance:\n  - task_id: t\n${indented(lines)}"
+      case "source" => s"sources:\n  - source_id: s\n    target_table: b.t\n${indented(lines)}"
+      case "dq_rule" => transformYaml("    sql_query: SELECT 1\n    data_quality:\n" +
+        "      - rule_name: r\n        column: c\n" + lines.map(l => s"        $l\n").mkString)
       case "store_probe" | "view_estimate" =>
         transformYaml(s"    transform_type: $kind\n" + block(kind, lines))
       case store => model(s"    refresh_type: $store\n    sql_query: SELECT 1\n" +
@@ -303,7 +313,12 @@ class ConfigSpec extends AnyFunSuite {
       ("store_probe", "max_hamming: 8", "media_dedup_store", "dedup_store"),
       ("view_estimate", "q_permille: [500]", "quantile_view", "distinct_view"),
       ("dedup_store", "quality_column: q", "max_quality", "min_id"),
-      ("media_dedup_store", "quality_column: q", "max_quality", "min_id"))
+      ("media_dedup_store", "quality_column: q", "max_quality", "min_id"),
+      ("source", "incremental_column: d", "incremental", "full"),
+      ("dq_rule", "pattern: x", "regex", "expression"),
+      ("dq_rule", "expression: c > 0", "expression", "regex"),
+      ("dq_rule", "ref_table: b.r", "referential_integrity", "not_null"),
+      ("dq_rule", "ref_column: k", "referential_integrity", "regex"))
     for ((kind, line, owner, nonOwner) <- rows) withClue(s"$kind $line: ") {
       val key = line.takeWhile(_ != ':')
       def doc(tpe: String, extra: Seq[String]): String =
@@ -312,6 +327,26 @@ class ConfigSpec extends AnyFunSuite {
       EtlConfig.fromYaml(doc(owner, Seq(line)))
       intercept[IllegalArgumentException](EtlConfig.fromYaml(doc(nonOwner, Seq(line))))
     }
+  }
+
+  test("a misspelt extract strategy, rule type or DQ action refuses instead of running as a no-op") {
+    def source(strategy: String) = EtlConfig.fromYaml(
+      s"sources:\n  - source_id: s\n    target_table: b.t\n    extract_strategy: $strategy\n")
+    def rule(tpe: String, action: String) = EtlConfig.fromYaml(transformYaml(
+      "    sql_query: SELECT 1\n    data_quality:\n      - rule_name: r\n" +
+        s"        rule_type: $tpe\n        column: c\n        action_on_failure: $action\n"))
+    source("incremental"); rule("not_null", "reject")
+    for ((what, parse) <- Seq(
+        "extract_strategy 'incremntal'" -> (() => source("incremntal")),
+        "rule_type 'not_nul'" -> (() => rule("not_nul", "filter")),
+        "action_on_failure 'rejct'" -> (() => rule("not_null", "rejct")))) {
+      val e = intercept[IllegalArgumentException](parse())
+      assert(e.getMessage.contains(s"unknown $what"), e.getMessage)
+    }
+    val e = intercept[IllegalArgumentException](EtlConfig.fromYaml(
+      "sources:\n  - source_id: s\n    target_table: b.t\n    incremental_column: d\n"))
+    assert(e.getMessage.contains("incremental_column is not used by extract_strategy full"),
+      e.getMessage)
   }
 
   test("template substitution: vars, env, and unknown left empty") {

@@ -129,6 +129,18 @@ class MaintenanceSpec extends SparkSpec {
       s"null-key group must fold into one row: $rows")
   }
 
+  test("a NULL sum stays NULL when a later fold does not touch its key") {
+    val t = table("t_gold_null_sum")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Maintenance.maintainAdditiveAggregate(spark, t,
+      Seq(("a", Option.empty[Long])).toDF("g", "qty"), Seq("g"), Seq("qty"), epochId = 1L)
+    Maintenance.maintainAdditiveAggregate(spark, t,
+      Seq(("b", Option(2L))).toDF("g", "qty"), Seq("g"), Seq("qty"), epochId = 2L)
+    val rows = spark.table(t).select("g", "qty", "n_rows")
+      .as[(String, Option[Long], Long)].collect().toSet
+    assert(rows == Set(("a", None, 1L), ("b", Some(2L), 1L)), s"got $rows")
+  }
+
   test("compact preserves a partitioned table's partition spec and pruning") {
     // round-10 advice: the rewrite must re-apply partitionBy, or every
     // later scan loses partition pruning while compact reports success
