@@ -21,6 +21,23 @@ object Tables {
     if (name == "events") loadEvents(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Drops the `graft_tmp` scratch `tables` (each `graft_tmp.<name>`) a
+    * store-lifecycle query rebuilds, and returns once they are gone. A
+    * fresh session's catalog forgets a previous run's managed table, but
+    * the warehouse directory survives, and saveAsTable(ErrorIfExists)
+    * refuses the leftover location, so the directory goes too.
+    */
+  def resetScratch(spark: SparkSession, tables: String*): Unit = {
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
+    tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val loc = new org.apache.hadoop.fs.Path(
+        s"${spark.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/${t.split('.')(1)}")
+      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(loc)) fs.delete(loc, true)
+    }
+  }
+
   /** The driver has shipped events.ts under two physical encodings:
     * parquet TIMESTAMP(NANOS) — which Spark's TimestampType
     * (microseconds) cannot represent, so the vectorized reader throws

@@ -372,6 +372,10 @@ object DedupStore {
           committedEpoch(spark, table)))
         return FoldResult(applied = false, batchRows = 0L)
     }
+    // one row per batch row. Taken before the probe and pair joins read
+    // `banded`, it materializes the cache once; left to those joins, two
+    // concurrent stages would each compute and offer the same blocks
+    val batchRows = banded.count()
 
     // a founding batch has no store to probe: the persisted banded
     // frame IS the fresh set (persisting it again only re-asks the
@@ -431,9 +435,7 @@ object DedupStore {
       .select(b.storeColumns.map(col): _*)
     appendSurvivors(spark, table, survivors, exists, storeBuckets, epochId,
       Seq(b.knobs, b.verifyStamp))
-    // one row per batch row; the fold's writes materialized the cache,
-    // so this count rides the in-memory frame, not a second batch scan
-    FoldResult(applied = true, batchRows = banded.count())
+    FoldResult(applied = true, batchRows = batchRows)
   }
 
   /** The write that ends every store fold (text, media, vector): the

@@ -267,6 +267,10 @@ object VectorDedupStore {
         .select(col("vec_id"), col("qv")))
     val ranked = track(rankCells(quantized, cents, nprobe).persist())
     val homed = ranked.filter(col("_crank") === 1).drop("_crank")
+    // one crank-1 row per batch vector; taken before the probe and pair
+    // joins read `ranked`, it materializes the cache once (as in
+    // DedupStore.fold)
+    val batchRows = homed.count()
 
     val fresh =
       if (!exists) homed
@@ -330,8 +334,7 @@ object VectorDedupStore {
       .select("vec_id", "qv", "cell", "_epoch")
     DedupStore.appendSurvivors(spark, table, survivors, exists, 0, epochId,
       Seq(VerifyProperty -> s"minScore=$minScore"))
-    // one crank-1 row per batch vector; rides the persisted rank frame
-    DedupStore.FoldResult(applied = true, batchRows = homed.count())
+    DedupStore.FoldResult(applied = true, batchRows = batchRows)
   }
 
   /** Result of a [[retrain]]: `k` centroid rows in the new model,

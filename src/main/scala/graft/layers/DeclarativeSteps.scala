@@ -157,14 +157,6 @@ object DeclarativeSteps {
       col(cfg.weightColumn), cfg.samplesPerStratum)
   }
 
-  /** BM25 relevance filter ([[graft.operators.Relevance.bm25]]) — the
-    * topic-mining step as a metadata verb: keep documents whose
-    * 6dp-rounded score × 10⁶ reaches `minScoreMicro` for the query
-    * terms (exact integer threshold — the keep set is deterministic).
-    * Scoring shuffles only query-term hits; the keep set comes back as
-    * one semi join on the id. A document with no hits has no score row
-    * and is kept only when the threshold is 0.
-    */
   /** SCD2 as-of READ: the snapshot of a type-2 dimension in force at
     * `cfg.asOf` (already template-substituted by the layer) — a pure
     * interval filter over the versioned table ([[graft.io.Scd2.asOf]]).
@@ -260,6 +252,14 @@ object DeclarativeSteps {
     }
   }
 
+  /** BM25 relevance filter ([[graft.operators.Relevance.bm25]]) — the
+    * topic-mining step as a metadata verb: keep documents whose
+    * 6dp-rounded score × 10⁶ reaches `minScoreMicro` for the query
+    * terms (exact integer threshold — the keep set is deterministic).
+    * Scoring shuffles only query-term hits; the keep set comes back as
+    * one semi join on the id. A document with no hits has no score row
+    * and is kept only when the threshold is 0.
+    */
   def relevanceFilterFrame(df: DataFrame,
       cfg: RelevanceFilterStepConfig): DataFrame = {
     val missing = Seq(cfg.idColumn, cfg.textColumn)

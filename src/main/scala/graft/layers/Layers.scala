@@ -59,13 +59,14 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
     * Dependencies are composed futures, so no pool thread ever waits
     * on another item; the daemon pool ends with the layer.
     *
-    * The layer writes the ledger twice, whatever its item count: before
-    * the first item starts, one append of every item's STARTED row (so a
-    * crash still leaves each unfinished item visible); after the last
-    * item ends, one append of their terminal rows, each made (and
-    * timed) when its item ended and carrying that item's run date,
-    * config snapshot, dictionary entries and DQ metrics. `audited` is
-    * an item's one audit identity, used by both rows. If the opening
+    * The layer writes the ledger twice, whatever its item count, in one
+    * [[graft.meta.AuditLogger.layer]] call: before the first item starts,
+    * one append of every item's STARTED row (so a crash still leaves each
+    * unfinished item visible); after the last item ends, one append of
+    * their terminal rows, each made (and timed) when its item ended and
+    * carrying that item's run date, config snapshot, dictionary entries
+    * and DQ metrics. `audited` is an item's one audit identity, used by
+    * both rows. If the opening
     * append fails, no item runs; if the closing one fails, every item
     * is reported failed and no SUCCESS row, hence no watermark, lands.
     * The price: a terminal row becomes durable when its layer ends, not
@@ -80,18 +81,10 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
       work: C => Unit): LayerReport = {
     val todo = items.filter(enabled).toVector
     val audits = todo.map(audited)
-    def report(errors: Seq[Option[String]]): LayerReport = {
-      val outcomes = audits.map(_.sourceId).zip(errors)
-      LayerReport(layerName, outcomes.collect { case (i, None) => i },
-        outcomes.collect { case (i, Some(e)) => i -> e })
-    }
-    scala.util.Try(audit.openLayer(audits)) match {
-      case scala.util.Failure(e) =>
-        report(audits.map(_ => Some(String.valueOf(e.getMessage))))
-      case scala.util.Success(ledger) =>
-        schedule(todo, footprint)(j => audit.runItem(ledger, j)(work(todo(j))))
-        report(audit.closeLayer(ledger))
-    }
+    val outcomes = audits.map(_.sourceId).zip(audit.layer(audits,
+      j => work(todo(j)))(schedule(todo, footprint)))
+    LayerReport(layerName, outcomes.collect { case (i, None) => i },
+      outcomes.collect { case (i, Some(e)) => i -> String.valueOf(e.getMessage) })
   }
 
   /** Runs `run(j)` for every item, each once the earlier items it

@@ -162,12 +162,23 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
         .coalesce(1).write.mode(SaveMode.Append).saveAsTable(auditTable)
     }
 
+  /** One ledger row for `item`, made (and stamped by `ids`) now: the one
+    * place a row is built, by this manager and by [[AuditLogger]].
+    */
+  private[meta] def row(ids: IdClock, item: AuditItem, status: String,
+      runId: String = null, rows: Long = 0L, error: String = "",
+      seconds: Double = 0.0, runDate: String = null, snapshot: String = null,
+      dictionary: Seq[DictEntry] = Nil, dq: Seq[DqEntry] = Nil): AuditEvent =
+    AuditEvent(ids.uuid(), ids.now(), item.layer, item.operation,
+      item.component, item.sourceId, item.targetTable, status, rows, error,
+      seconds, runId, spark.sparkContext.sparkUser, runDate, snapshot,
+      dictionary, dq)
+
   /** A ledger row outside any bracket: no run date, so no control row. */
   private def standalone(operation: String, sourceId: String, table: String,
       dictionary: Seq[DictEntry] = Nil, dq: Seq[DqEntry] = Nil): Unit =
-    append(Seq(AuditEvent(clock.uuid(), clock.now(), "meta", operation,
-      "MetadataManager", sourceId, table, "SUCCESS", 0L, "", 0.0, null,
-      spark.sparkContext.sparkUser, null, null, dictionary, dq)))
+    append(Seq(row(clock, AuditItem("meta", operation, "MetadataManager",
+      sourceId, table), "SUCCESS", dictionary = dictionary, dq = dq)))
 
   /** Documents one table from its live catalog schema (a catalog read,
     * no Spark job). Inside a bracket the entries ride that bracket's
@@ -214,10 +225,9 @@ class MetadataManager(spark: SparkSession, db: String = "metadata",
   def updateControl(tableName: String, layer: String, runDate: String,
       records: Long, status: String, configSnapshot: String = "{}"): Unit = {
     val (plane, item) = layer.span(_ != '.')
-    append(Seq(AuditEvent(clock.uuid(), clock.now(), plane, "control",
-      "MetadataManager", if (item.isEmpty) null else item.tail, tableName,
-      status, records, "", 0.0, null, spark.sparkContext.sparkUser,
-      runDate, configSnapshot)))
+    append(Seq(row(clock, AuditItem(plane, "control", "MetadataManager",
+      if (item.isEmpty) null else item.tail, tableName), status,
+      rows = records, runDate = runDate, snapshot = configSnapshot)))
   }
 
   /** Incremental watermark: last successful run date for a target. */
@@ -253,151 +263,124 @@ object MetadataManager {
 }
 
 object AuditLogger {
-  /** What a terminal row carries beyond its identity and outcome. */
-  private[meta] final case class Terminal(runDate: String, snapshot: String,
-      dictionary: Seq[DictEntry], dq: Seq[DqEntry])
-  private val Bare = Terminal(null, null, Nil, Nil)
-
-  /** The bracket open on a thread. [[AuditLogger.bracket]] binds one
-    * around its body and terminal row: `updateDictionary` and
-    * `recordDqMetrics` add to it, and a row made while `terminal` is set
-    * carries it.
+  /** The bracket open on a thread: `updateDictionary` and
+    * `recordDqMetrics` hand it the entries and metrics its SUCCESS row
+    * carries.
     */
   private[meta] final class Open {
     val dictionary = scala.collection.mutable.ArrayBuffer.empty[DictEntry]
     val dq = scala.collection.mutable.ArrayBuffer.empty[DqEntry]
-    var terminal: Terminal = Bare
   }
   private[meta] val open = new DynamicVariable[Open](null)
 
   /** A layer's items between its opening and closing appends: item j's
-    * terminal row once its bracket has ended, and the error its work
-    * threw, if any.
+    * terminal row once its bracket has ended, and what its work threw,
+    * if anything.
     */
-  final class LayerLedger private[meta] (private[meta] val items: IndexedSeq[AuditItem]) {
-    private[meta] val ended = new Array[AuditEvent](items.size)
-    private[meta] val failed = new Array[String](items.size)
+  private final class LayerLedger(val items: IndexedSeq[AuditItem]) {
+    val ended = new Array[AuditEvent](items.size)
+    val failed = new Array[Throwable](items.size)
   }
-  /** The layer item a thread runs, bound by `AuditLogger.runItem`. */
+  /** The layer item a thread runs, bound by [[AuditLogger.layer]]. */
   private val slot = new DynamicVariable[(LayerLedger, Int)](null)
 }
 
 class AuditLogger(spark: SparkSession, meta: MetadataManager,
     clock: IdClock = SystemIdClock) {
-  import AuditLogger.{LayerLedger, Open, Terminal}
+  import AuditLogger.{LayerLedger, Open}
 
   val runId: String = clock.uuid()
 
-  /** Writes one audit row before it returns; inside a bracket's terminal
-    * row it also carries that row's run date, config snapshot,
-    * dictionary entries and DQ metrics. A bracket outside a layer writes
-    * both its rows through here.
+  /** Writes one audit row, with no run date, snapshot or entries, before
+    * it returns.
     */
   def event(layer: String, operation: String, component: String,
       sourceId: String, targetTable: String, status: String,
       rows: Long = 0L, error: String = "", seconds: Double = 0.0): Unit =
-    meta.append(Seq(row(AuditItem(layer, operation, component, sourceId,
-      targetTable), status, rows, error, seconds)))
+    meta.append(Seq(meta.row(clock, AuditItem(layer, operation, component,
+      sourceId, targetTable), status, runId, rows, error, seconds)))
 
-  /** One audit row, made (and stamped) now. */
-  private def row(item: AuditItem, status: String, rows: Long = 0L,
-      error: String = "", seconds: Double = 0.0): AuditEvent = {
-    val t = Option(AuditLogger.open.value).fold(AuditLogger.Bare)(_.terminal)
-    AuditEvent(clock.uuid(), clock.now(), item.layer, item.operation,
-      item.component, item.sourceId, item.targetTable, status, rows, error,
-      seconds, runId, spark.sparkContext.sparkUser, t.runDate, t.snapshot,
-      t.dictionary, t.dq)
-  }
-
-  /** Runs `make` with `open`'s terminal set for `item`: the run date and
-    * config snapshot, and on SUCCESS the entries and metrics handed to
-    * `open`.
+  /** `item`'s terminal row, made now: it carries the item's run date and
+    * config snapshot, and the entries and metrics a SUCCESS row is given.
     */
-  private def ending[T](item: AuditItem, open: Open, status: String)(make: => T): T = {
-    val ok = status == "SUCCESS"
-    open.terminal = Terminal(item.runDate,
-      Option(item.config).map(EtlConfig.snapshot).orNull,
-      if (ok) open.dictionary.toSeq else Nil, if (ok) open.dq.toSeq else Nil)
-    AuditLogger.open.withValue(open)(make)
-  }
+  private def terminal(item: AuditItem, status: String, rows: Long = 0L,
+      error: String = "", seconds: Double = 0.0,
+      dictionary: Seq[DictEntry] = Nil, dq: Seq[DqEntry] = Nil): AuditEvent =
+    meta.row(clock, item, status, runId, rows, error, seconds, item.runDate,
+      Option(item.config).map(EtlConfig.snapshot).orNull, dictionary, dq)
 
   /** STARTED/SUCCESS/ERROR bracketing around a unit of work (reference
-    * F4), returning the body's result. Only the SUCCESS row carries the
-    * dictionary entries and DQ metrics the body handed the manager.
-    * Inside [[runItem]] for this item, the layer already wrote the
-    * STARTED row and the terminal row goes to the layer's closing
-    * append; anywhere else the bracket is a layer of one and writes both
-    * rows itself, through [[event]].
+    * F4), returning the body's result or rethrowing what it threw. Only
+    * the SUCCESS row carries the dictionary entries and DQ metrics the
+    * body handed the manager. Inside a [[layer]]'s item the terminal row
+    * goes to the layer's closing append; anywhere else (a bracket in a
+    * bracket's body too) the bracket runs as a layer of one, so its
+    * item lands in two appends, and a failed append is thrown.
     */
-  def bracket[T](item: AuditItem)(body: => (T, Long)): T = {
-    val t0 = System.nanoTime()
-    val slot = Option(AuditLogger.slot.value)
-    def write(status: String, rows: Long = 0L, error: String = "",
-        seconds: Double = 0.0): Unit =
-      event(item.layer, item.operation, item.component, item.sourceId,
-        item.targetTable, status, rows, error, seconds)
-    if (slot.isEmpty) write("STARTED")
-    val open = new Open
-    def end(status: String, rows: Long, error: String): Unit =
-      ending(item, open, status) {
-        val seconds = (System.nanoTime() - t0) / 1e9
-        slot match {
-          case Some((l, j)) => l.ended(j) = row(item, status, rows, error, seconds)
-          case None => write(status, rows, error, seconds)
+  def bracket[T](item: AuditItem)(body: => (T, Long)): T =
+    AuditLogger.slot.value match {
+      case null =>
+        var result: Option[T] = None
+        layer(Seq(item), _ => result = Some(bracket(item)(body)))(_(0))
+          .head.foreach(e => throw e)
+        result.get
+      case (ledger, j) =>
+        val t0 = System.nanoTime()
+        val open = new Open
+        def end(status: String, rows: Long, error: String,
+            dictionary: Seq[DictEntry] = Nil, dq: Seq[DqEntry] = Nil): Unit =
+          ledger.ended(j) = terminal(item, status, rows, error,
+            (System.nanoTime() - t0) / 1e9, dictionary, dq)
+        AuditLogger.slot.withValue(null) {
+          AuditLogger.open.withValue(open) {
+            try {
+              val (result, rows) = body
+              end("SUCCESS", rows, "", open.dictionary.toSeq, open.dq.toSeq)
+              result
+            } catch {
+              case e: Throwable =>
+                ledger.failed(j) = e
+                end("ERROR", 0L, String.valueOf(e.getMessage))
+                throw e
+            }
+          }
         }
-      }
-    AuditLogger.slot.withValue(null) {
-      AuditLogger.open.withValue(open) {
-        try {
-          val (result, rows) = body
-          end("SUCCESS", rows, "")
-          result
-        } catch {
-          case e: Throwable =>
-            end("ERROR", 0L, String.valueOf(e.getMessage))
-            throw e
-        }
-      }
-    }
-  }
-
-  /** Opens a layer's items with one append of their STARTED rows, all
-    * made now, before any item starts.
-    */
-  def openLayer(items: Seq[AuditItem]): LayerLedger = {
-    meta.append(items.map(row(_, "STARTED")))
-    new LayerLedger(items.toIndexedSeq)
-  }
-
-  /** Runs item `j` of an open layer, keeping the error it throws: the
-    * item's [[bracket]] hands its terminal row to `ledger`.
-    */
-  def runItem(ledger: LayerLedger, j: Int)(work: => Unit): Unit =
-    AuditLogger.slot.withValue((ledger, j)) {
-      try work
-      catch { case e: Throwable => ledger.failed(j) = String.valueOf(e.getMessage) }
     }
 
-  /** Closes an open layer with one append of its items' terminal rows.
-    * An item whose bracket never ended gets an ERROR row made now, with
-    * the error its work threw.
+  /** Runs a layer's `items` between two ledger appends. Before any item
+    * starts, one append of every item's STARTED row, all made now; then
+    * `schedule` is handed the runner of item j's `work` (whose
+    * [[bracket]] hands its terminal row to the layer) and runs every
+    * item; then one append of the items' terminal rows. An item whose
+    * bracket never ended gets an ERROR row made at close, with the error
+    * its work threw.
     *
-    * @return each item's error (None: it succeeded). When the append
-    *         fails every item fails, with its own error or the append's.
+    * @return each item's error (None: it succeeded). When the opening
+    *         append fails no item runs and each fails with its error;
+    *         when the closing one fails each fails, with its own error or
+    *         the append's.
     */
-  def closeLayer(ledger: LayerLedger): IndexedSeq[Option[String]] = {
-    val rows = ledger.items.indices.map { j =>
-      val item = ledger.items(j)
-      Option(ledger.ended(j)).getOrElse(ending(item, new Open, "ERROR") {
-        row(item, "ERROR", error = Option(ledger.failed(j))
-          .getOrElse("ended without a terminal audit row"))
-      })
+  def layer(items: Seq[AuditItem], work: Int => Unit)(
+      schedule: (Int => Unit) => Unit): IndexedSeq[Option[Throwable]] =
+    scala.util.Try(meta.append(items.map(meta.row(clock, _, "STARTED",
+        runId)))) match {
+      case scala.util.Failure(e) => items.toIndexedSeq.map(_ => Some(e))
+      case _ =>
+        val ledger = new LayerLedger(items.toIndexedSeq)
+        schedule(j => AuditLogger.slot.withValue((ledger, j)) {
+          try work(j) catch { case e: Throwable => ledger.failed(j) = e }
+        })
+        val errors = ledger.failed.toIndexedSeq.zip(ledger.ended).map {
+          case (null, null) => Some(new IllegalStateException(
+            "ended without a terminal audit row"))
+          case (e, _) => Option(e)
+        }
+        val rows = ledger.items.indices.map(j => Option(ledger.ended(j))
+          .getOrElse(terminal(ledger.items(j), "ERROR",
+            error = String.valueOf(errors(j).get.getMessage))))
+        try { meta.append(rows); errors }
+        catch { case e: Throwable => errors.map(_.orElse(Some(e))) }
     }
-    val errors = rows.indices.map(j => Option(ledger.failed(j))
-      .orElse(Some(rows(j).error_message).filter(_ => rows(j).status != "SUCCESS")))
-    try { meta.append(rows); errors }
-    catch { case e: Throwable => errors.map(_.orElse(Some(String.valueOf(e.getMessage)))) }
-  }
 
   def recentEvents(n: Int = 100): DataFrame =
     spark.table(meta.auditTable)

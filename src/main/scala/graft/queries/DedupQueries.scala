@@ -254,16 +254,8 @@ object DedupQueries extends QuerySet {
     */
   def ds1DedupStore(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.ds1_dedup_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    // a FRESH session's in-memory catalog has no memory of a previous
-    // run's managed table, but the warehouse directory survives — and
-    // saveAsTable(ErrorIfExists) refuses the leftover location
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/ds1_dedup_store")
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)
@@ -289,13 +281,8 @@ object DedupQueries extends QuerySet {
     */
   def sp1StoreProbe(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.sp1_probe_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/sp1_probe_store")
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)
@@ -326,13 +313,8 @@ object DedupQueries extends QuerySet {
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"),
         TextFunctions.qualityScore(col("text")).as("quality"))
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.ds2_keeper_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/ds2_keeper_store")
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L,
@@ -375,13 +357,8 @@ object DedupQueries extends QuerySet {
   def sp4StoreProbeRecallText(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.load(s, dir, "documents").select("doc_id", "text")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.sp4_recall_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/sp4_recall_store")
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.DedupStore.maintain(s, table,
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       N, H, B, jaccardThreshold = 0.5, mode = Md5Hash, epochId = 1L)

@@ -488,14 +488,8 @@ object ExtendedQueries extends QuerySet {
     val variants = M.noisyVariants(
       media.filter(m => m.media_id % 6 == 0 && m.kind == "image"),
       everyN = 50, delta = 64)
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.mds1_media_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-        table.split('.')(1))
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
@@ -529,14 +523,8 @@ object ExtendedQueries extends QuerySet {
     val variants = M.noisyVariants(
       media.filter(m => m.media_id % 6 == 0 && m.kind == "image"),
       everyN = 50, delta = 64)
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.sp3_probe_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-        table.split('.')(1))
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
@@ -573,14 +561,8 @@ object ExtendedQueries extends QuerySet {
     val variants = M.noisyVariants(
       media.filter(m => m.media_id % 6 == 0 && m.kind == "image"),
       everyN = 50, delta = 64)
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.sp5_recall_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-        table.split('.')(1))
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     graft.io.MediaDedupStore.maintain(s, table,
       M.dHash(media.filter(_.media_id < 100)), "media_id", "dhash",
       bands = 4, maxHamming = 16L, maxBucketSize = Some(MdsBucketCap),
@@ -632,14 +614,8 @@ object ExtendedQueries extends QuerySet {
     val variants = M.noisyVariants(
       media.filter(m => m.media_id % 6 == 0 && m.kind == "image"),
       everyN = 50, delta = 64)
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.mds2_keeper_store"
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-        table.split('.')(1))
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    Tables.resetScratch(s, table)
     def withQ(df: DataFrame): DataFrame =
       df.withColumn("q", bit_count(col("dhash")).cast("long"))
     graft.io.MediaDedupStore.maintain(s, table,

@@ -392,18 +392,8 @@ object VectorQueries extends QuerySet {
     */
   def vds1VectorDedupStore(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select("vec_id", "embedding")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.vds1_vector_store"
-    Seq(table, s"${table}_model").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      // a fresh session's catalog has no memory of a previous run's
-      // managed table, but the warehouse dir survives (ds1 precedent)
-      val loc = new org.apache.hadoop.fs.Path(
-        s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-          t.split('.')(1))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Tables.resetScratch(s, table, s"${table}_model")
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
@@ -434,16 +424,8 @@ object VectorQueries extends QuerySet {
     */
   def vds2KeeperSemdedup(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select("vec_id", "embedding")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.vds2_vector_store"
-    Seq(table, s"${table}_model").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-          t.split('.')(1))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Tables.resetScratch(s, table, s"${table}_model")
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
@@ -474,16 +456,8 @@ object VectorQueries extends QuerySet {
     */
   def sp2StoreProbeVector(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select("vec_id", "embedding")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.sp2_probe_store"
-    Seq(table, s"${table}_model").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-          t.split('.')(1))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Tables.resetScratch(s, table, s"${table}_model")
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,
@@ -521,16 +495,8 @@ object VectorQueries extends QuerySet {
   def v17StoreProbeRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e = emb(s, dir).select("vec_id", "embedding")
-    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
     val table = "graft_tmp.v17_recall_store"
-    Seq(table, s"${table}_model").foreach { t =>
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/" +
-          t.split('.')(1))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    Tables.resetScratch(s, table, s"${table}_model")
     graft.io.VectorDedupStore.maintain(s, table,
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       MatchScore, NumCentroids, nprobe = 2, trainIters = KmIters,

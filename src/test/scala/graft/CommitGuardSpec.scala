@@ -26,6 +26,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * view folds are `Maintenance.foldKeyed`: a `"full_outer"` merge or a
   * staged `"batch"` under `graft/io`, or a `_last_epoch` stamp outside
   * `foldKeyed` and the join view's append, is a hand-copied fold.
+  * Every ledger row is built by `MetadataManager.row`: an
+  * `AuditEvent(…)` constructed anywhere else is a second row path. The
+  * store-lifecycle queries reset their `graft_tmp` scratch tables
+  * through `Tables.resetScratch`: a `DROP TABLE IF EXISTS` followed by
+  * a warehouse-directory delete anywhere else is a hand-copied reset.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
@@ -133,6 +138,68 @@ class CommitGuardSpec extends AnyFunSuite {
     tableWrite.findAllMatchIn(src).count(m => dqTarget.r.findFirstIn(m.group(1)).isDefined) +
       s"""(?i)INSERT\\s+(?:INTO|OVERWRITE)\\s+(?:TABLE\\s+)?\\S*(?:$dqTarget)""".r
         .findAllIn(src).size
+
+  /** The enclosing `def` of each `AuditEvent(…)` construction in one
+    * source text; the case class declaration does not count.
+    */
+  def auditEventBuilds(src: String): Seq[String] =
+    """(?<!class )\bAuditEvent\(""".r.findAllMatchIn(src)
+      .map(m => enclosingDef(src, m.start)).toSeq
+
+  /** The enclosing `def` of each scratch-table reset in one source text:
+    * a `DROP TABLE IF EXISTS` followed, before the next one, by a
+    * filesystem `delete(` of the table's leftover directory.
+    */
+  def scratchResets(src: String): Seq[String] =
+    """(?s)DROP TABLE IF EXISTS(?:(?!DROP TABLE IF EXISTS).){0,600}?\.delete\(""".r
+      .findAllMatchIn(src).map(m => enclosingDef(src, m.start)).toSeq
+
+  test("the detector flags a hand-built ledger row") {
+    val copy =
+      """  def updateControl(tableName: String, layer: String): Unit =
+        |    append(Seq(AuditEvent(clock.uuid(), clock.now(), layer, "control",
+        |      "MetadataManager", null, tableName, "SUCCESS", 0L, "", 0.0, null,
+        |      spark.sparkContext.sparkUser, runDate, "{}")))
+        |""".stripMargin
+    assert(auditEventBuilds(copy) == Seq("updateControl"))
+    assert(auditEventBuilds(
+      """final case class AuditEvent(log_id: String)
+        |  def append(rows: Seq[AuditEvent]): Unit = rows.toDS()
+        |  def schema = Encoders.product[AuditEvent].schema
+        |""".stripMargin).isEmpty)
+  }
+
+  test("AuditEvent is constructed in one place in src/main: MetadataManager.row") {
+    val builds = mainSources.flatMap { case (p, src) =>
+      auditEventBuilds(src).map(d => s"${mainRoot.relativize(p)}: $d") }
+    assert(builds == Seq("graft/meta/Metadata.scala: row"), builds.mkString("\n"))
+  }
+
+  test("the detector flags a hand-copied scratch-table reset") {
+    val copy =
+      """  def ds9Store(s: SparkSession, dir: String): DataFrame = {
+        |    s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
+        |    val table = "graft_tmp.ds9_store"
+        |    s.sql(s"DROP TABLE IF EXISTS $table")
+        |    // the warehouse directory survives a fresh session's catalog
+        |    val loc = new org.apache.hadoop.fs.Path(
+        |      s"${s.conf.get("spark.sql.warehouse.dir")}/graft_tmp.db/ds9_store")
+        |    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+        |    if (fs.exists(loc)) fs.delete(loc, true)
+        |""".stripMargin
+    assert(scratchResets(copy) == Seq("ds9Store"))
+    assert(scratchResets(
+      """  def ds9Store(s: SparkSession, dir: String): DataFrame = {
+        |    Tables.resetScratch(s, "graft_tmp.ds9_store")
+        |    spark.sql(s"DROP TABLE IF EXISTS ${modelTable(table)}")
+        |""".stripMargin).isEmpty)
+  }
+
+  test("the graft_tmp scratch reset is written once, in Tables.resetScratch; graft/queries holds none") {
+    val resets = mainSources.flatMap { case (p, src) =>
+      scratchResets(src).map(d => s"${mainRoot.relativize(p)}: $d") }
+    assert(resets == Seq("graft/Tables.scala: resetScratch"), resets.mkString("\n"))
+  }
 
   test("the detector flags metadata writes beside the ledger append") {
     val parentShape =

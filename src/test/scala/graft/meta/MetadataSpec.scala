@@ -68,6 +68,17 @@ class MetadataSpec extends SparkSpec {
     }
     val statuses = audit.recentEvents().collect().map(_.getAs[String]("status"))
     assert(statuses.contains("ERROR"))
+    // a dated item: the body's own instance, and an ERROR row with the date
+    val boom = new RuntimeException("dated boom")
+    val thrown = intercept[RuntimeException] {
+      audit.bracket(AuditItem("gold", "model", "Test", "m2", "gold.t", "2024-12-01")) {
+        throw boom; (("x", 0L))
+      }
+    }
+    assert(thrown eq boom)
+    assert(audit.recentEvents().filter("source_id = 'm2' AND status = 'ERROR'")
+      .select("run_date", "error_message").collect().map(r => r.getString(0) -> r.getString(1))
+      .toSeq == Seq("2024-12-01" -> "dated boom"))
   }
 
   test("failedEvents returns only this run's ERROR rows") {
@@ -314,6 +325,73 @@ class MetadataSpec extends SparkSpec {
     val before = dataFiles(m.auditTable)
     audit.bracket(AuditItem("gold", "model", "Test", "one", "gold.t", "2024-12-01"))(((), 1L))
     assert(dataFiles(m.auditTable) - before == 2L)
+  }
+
+  test("a bracket whose opening append fails runs no body and writes no row") {
+    val clock = new FixedClock(3100000000000L)
+    val m = new MetadataManager(spark, db = "metadata_single_open", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    var ran = false
+    MetadataManager.failAt = Some(m.auditTable -> "STARTED")
+    val e =
+      try intercept[Exception] {
+        audit.bracket(AuditItem("gold", "model", "Test", "one", "gold.t", "2024-12-01")) {
+          ran = true; ((), 1L)
+        }
+      } finally MetadataManager.failAt = None
+    assert(String.valueOf(e.getMessage).contains("injected failure"), e.getMessage)
+    assert(!ran)
+    assert(spark.table(m.auditTable).count() == 0L)
+  }
+
+  test("a bracket whose closing append fails throws and lands no terminal row") {
+    import spark.implicits._
+    val clock = new FixedClock(3200000000000L)
+    val m = new MetadataManager(spark, db = "metadata_single_close", clock = clock)
+    m.init()
+    val audit = new AuditLogger(spark, m, clock)
+    def one(date: String) =
+      audit.bracket(AuditItem("gold", "model", "Test", "one", "gold.t", date))(((), 1L))
+    one("2024-12-01")
+    MetadataManager.failAt = Some(m.auditTable -> "SUCCESS")
+    val e =
+      try intercept[Exception](one("2024-12-02"))
+      finally MetadataManager.failAt = None
+    assert(String.valueOf(e.getMessage).contains("injected failure"), e.getMessage)
+    // the second bracket's STARTED row landed; no terminal row did
+    assert(spark.table(m.auditTable).select("status", "run_date")
+      .as[(String, String)].collect().toSeq.sortBy(_.toString) == Seq(
+        ("STARTED", null), ("STARTED", null), ("SUCCESS", "2024-12-01")))
+    assert(m.lastRunDate("gold.t", "gold.one").contains("2024-12-01"))
+  }
+
+  test("a bracket nested in a layer item is its own layer of one") {
+    import spark.implicits._
+    val clock = new FixedClock(3300000000000L)
+    var audit: AuditLogger = null
+    // ok_a's DQ metrics are recorded inside its bracket's body
+    val m = new MetadataManager(spark, db = "metadata_nested", clock = clock) {
+      override def recordDqMetrics(rows: Seq[DqMetricRow]): Unit = {
+        if (rows.nonEmpty) audit.bracket(AuditItem("meta", "nested", "Test", "inner", "nested.t",
+          "2024-12-01"))(((), 5L))
+        super.recordDqMetrics(rows)
+      }
+    }
+    m.init()
+    audit = new AuditLogger(spark, m, clock)
+    val before = dataFiles(m.auditTable)
+    val report = new graft.layers.SilverLayer(spark, threeItems("ledger_nested"), m,
+      audit, "2024-12-01").run()
+    assert(dataFiles(m.auditTable) - before == 4L)
+    assert(report.succeeded == Seq("ok_a", "ok_c"))
+    val rows = spark.table(m.auditTable).select($"source_id", $"status", $"rows_processed",
+      size($"dq_metrics")).as[(String, String, Long, Int)].collect().toSet
+    assert(rows == Set(("ok_a", "STARTED", 0L, 0), ("bad", "STARTED", 0L, 0),
+      ("ok_c", "STARTED", 0L, 0), ("inner", "STARTED", 0L, 0),
+      ("inner", "SUCCESS", 5L, 0), ("ok_a", "SUCCESS", 1L, 1),
+      ("bad", "ERROR", 0L, 0), ("ok_c", "SUCCESS", 1L, 0)))
+    assert(m.lastRunDate("nested.t", "meta.inner").contains("2024-12-01"))
   }
 
   test("data_quality_metrics is a view of the metrics on SUCCESS audit rows") {
