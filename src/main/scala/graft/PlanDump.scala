@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named [[SparkEntry]] queries —
   * the plan evidence the optimization rounds commit under `plans/`
   * (guide §1: capture the plan shape — Exchange count, join strategy,
@@ -23,14 +21,8 @@ object PlanDump {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.build(Some(cpus), None, guards = false)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val txt = df.queryExecution.explainString(

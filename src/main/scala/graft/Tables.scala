@@ -58,10 +58,10 @@ object Tables {
     * instant — value-preserving ONLY under a UTC session timezone, so
     * the loader pins spark.sql.session.timeZone=UTC itself (the same
     * way loadEvents pins the nanos conf) instead of relying on every
-    * entry point remembering it: Bench/Verify/SparkSpec always set it,
-    * but Tables.load is public and a caller on a non-UTC machine would
-    * otherwise get every event timestamp silently shifted by the local
-    * offset (advice r9).
+    * entry point remembering it: every `graft.Session.build` session
+    * sets it, but Tables.load is public and a caller on a non-UTC
+    * machine would otherwise get every event timestamp silently shifted
+    * by the local offset (advice r9).
     */
   def normalizeTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {

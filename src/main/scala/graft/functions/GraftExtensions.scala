@@ -17,10 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * .yaml's expression strings) — gets the identical codegen'd
   * expressions by name.
   *
-  * Production path: `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` — the standard plugin hook, works with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` on a
-  * cluster with the library jar. [[GraftExtensions.install]] registers
+  * Production path: every session `graft.Session.build` makes
+  * installs it through `withExtensions` — the standard plugin hook,
+  * also reachable as `spark.sql.extensions=graft.functions.GraftExtensions`
+  * on a cluster with the library jar. [[GraftExtensions.install]] registers
   * the same (name, builder) list into an ALREADY-BUILT session for
   * harness/notebook use; both paths share one definition list, so
   * they cannot drift.
@@ -144,8 +144,8 @@ object GraftExtensions {
     })
 
   /** Register the same functions into an already-built session (the
-    * harness path — Verify/Bench build one plain session for every
-    * query). Idempotent: re-registration replaces the same builder.
+    * harness path, for a session built outside `graft.Session`).
+    * Idempotent: re-registration replaces the same builder.
     */
   def install(spark: SparkSession): Unit =
     functions.foreach { case (ident, info, builder) =>

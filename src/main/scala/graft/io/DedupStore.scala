@@ -333,10 +333,10 @@ object DedupStore {
     // every frame this fold persists (including the CC funnel's
     // checkpoints) drains when the fold's writes are done — the store
     // is a long-lived session's gold path, not a one-query session
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try foldImpl(spark, table, batch, idCol, valueCol, b, maxBucketSize,
-      storeBuckets, epochId, keeper, qualityCol)
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
+    graft.operators.FrameCaches.scoped(spark) {
+      foldImpl(spark, table, batch, idCol, valueCol, b, maxBucketSize,
+        storeBuckets, epochId, keeper, qualityCol)
+    }
   }
 
   private def foldImpl(spark: SparkSession, table: String,

@@ -179,10 +179,10 @@ object VectorDedupStore {
       s"keeper must be one of [${Keepers.mkString(", ")}], got '$keeper'")
     Commit.recover(spark, modelTable(table))
     Commit.recover(spark, table)
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try maintainImpl(spark, table, batch, idCol, vecCol, minScore,
-      numCentroids, nprobe, trainIters, maxCellSize, epochId, keeper)
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
+    graft.operators.FrameCaches.scoped(spark) {
+      maintainImpl(spark, table, batch, idCol, vecCol, minScore,
+        numCentroids, nprobe, trainIters, maxCellSize, epochId, keeper)
+    }
   }
 
   private def maintainImpl(spark: SparkSession, table: String,
@@ -477,9 +477,9 @@ object VectorDedupStore {
         return RetrainResult(spark.table(modelTable(table)).count(),
           s.rows, 0L)
     }
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try retrainImpl(spark, table, trainIters, numCentroids)
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
+    graft.operators.FrameCaches.scoped(spark) {
+      retrainImpl(spark, table, trainIters, numCentroids)
+    }
   }
 
   private def retrainImpl(spark: SparkSession, table: String,

@@ -113,10 +113,10 @@ object ZoneMaps {
     // scoped drain: manifestFor persists the zones frame (it feeds the
     // invariant check and the manifest join); the write below is its
     // last consumer
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    try buildManifest(spark, table, cols)
-      .write.mode(SaveMode.Overwrite).saveAsTable(mt)
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
+    graft.operators.FrameCaches.scoped(spark) {
+      buildManifest(spark, table, cols)
+        .write.mode(SaveMode.Overwrite).saveAsTable(mt)
+    }
     spark.catalog.refreshTable(mt)
     (mt, spark.table(mt).count())
   }
@@ -164,13 +164,13 @@ object ZoneMaps {
     val kept = old.join(
       broadcast(current.toSeq.toDF("file")), Seq("file"), "left_semi")
     val schema = spark.table(table).schema
-    val cacheMark = graft.operators.FrameCaches.mark(spark)
-    val fresh =
-      if (newFiles.isEmpty) None
-      else Some(manifestFor(spark,
-        spark.read.schema(schema).parquet(newFiles: _*), newFiles, cols))
-    try Commit.replace(spark, mt, fresh.fold(kept)(kept.unionByName(_)))
-    finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
+    graft.operators.FrameCaches.scoped(spark) {
+      val fresh =
+        if (newFiles.isEmpty) None
+        else Some(manifestFor(spark,
+          spark.read.schema(schema).parquet(newFiles: _*), newFiles, cols))
+      Commit.replace(spark, mt, fresh.fold(kept)(kept.unionByName(_)))
+    }
     (mt, newFiles.size.toLong, spark.table(mt).count())
   }
 

@@ -315,7 +315,7 @@ object DeclarativeSteps {
     // see it, counting distinct docs); the persist stops the tokenize+
     // explode+md5 scan from re-planning on the hot-count and both
     // aliased join sides (the Spans fix, measured ~2×). The layer
-    // drains it via FrameCaches.releaseSince after its write.
+    // drains it via FrameCaches.scoped after its write.
     val ch = FrameCaches.track(
       Chunking.slidingChunks(df, id, cfg.textColumn,
           cfg.chunkTokens, cfg.stride)

@@ -50,9 +50,9 @@ abstract class Layer(spark: SparkSession, meta: MetadataManager,
     * nothing else runs beside them:
     *   - maintenance `vacuum_staging` is gated on the failure of an
     *     EARLIER task in the run, so that task must have finished;
-    *   - `FrameCaches.releaseSince` (the silver verbs' cache drain)
-    *     frees every frame tracked since its mark, whichever thread
-    *     tracked it;
+    *   - `FrameCaches.scoped` (the silver verbs' and store folds'
+    *     cache drain) frees every frame tracked while its body ran,
+    *     whichever thread tracked it;
     *   - `Commit.withMaxRecordsPerFile` (compaction) bounds a write
     *     through the shared session conf.
     *
@@ -235,73 +235,69 @@ class SilverLayer(spark: SparkSession, config: EtlConfig,
 
   def transform(t: TransformConfig): Unit =
     audit.bracket(audited(t)) {
-      // snapshot BEFORE this step tracks anything: the drain below must
-      // free only frames THIS transform created — a blanket release
-      // would free localCheckpoint blocks owned by other in-flight
-      // callers of the shared session, which cannot recompute
-      val cacheMark = graft.operators.FrameCaches.mark(spark)
-      // transform_type dispatch (reference silver_layer.py:98-125 runs
-      // only SQL; the dedup/curation verbs expose the operator families
-      // through the same plane — same DQ, audit, and control rows)
-      val base = t.transformType match {
-        case "dedup" =>
-          DeclarativeSteps.dedupFrame(spark.table(t.sourceTable), t.dedup.get)
-        case "curation" =>
-          DeclarativeSteps.curationFrame(spark.table(t.sourceTable), t.curation.get)
-        case "chunk" =>
-          DeclarativeSteps.chunkFrame(spark.table(t.sourceTable), t.chunk.get)
-        case "quota" =>
-          DeclarativeSteps.quotaFrame(spark.table(t.sourceTable), t.quota.get)
-        case "mix" =>
-          DeclarativeSteps.mixFrame(spark.table(t.sourceTable), t.mix.get)
-        case "split" =>
-          DeclarativeSteps.splitFrame(spark.table(t.sourceTable), t.split.get)
-        case "decontaminate" =>
-          DeclarativeSteps.decontaminateFrame(spark.table(t.sourceTable),
-            spark.table(t.decontaminate.get.probeTable), t.decontaminate.get)
-        case "weighted_sample" =>
-          DeclarativeSteps.weightedSampleFrame(spark.table(t.sourceTable),
-            t.weightedSample.get)
-        case "relevance_filter" =>
-          DeclarativeSteps.relevanceFilterFrame(spark.table(t.sourceTable),
-            t.relevanceFilter.get)
-        case "asof" =>
-          // READ verb: snapshot the scd2 source as of the declared
-          // date (${PROCESSING_DATE} = this run's date)
-          val a = t.asof.get
-          DeclarativeSteps.asOfFrame(spark, t.sourceTable, a.copy(
-            asOf = EtlConfig.substitute(a.asOf,
-              Map("PROCESSING_DATE" -> runDate))))
-        case "store_probe" =>
-          // READ verb: flag rows against the accumulated standing
-          // store without folding (the store never advances)
-          DeclarativeSteps.storeProbeFrame(spark,
-            spark.table(t.sourceTable), t.storeProbe.get)
-        case "view_estimate" =>
-          // READ verb: materialize the estimates the gold plane's
-          // HLL/HDR sketch views maintain (the view never changes)
-          DeclarativeSteps.viewEstimateFrame(spark, t.sourceTable,
-            t.viewEstimate.get)
-        case _ =>
-          val sql = EtlConfig.substitute(t.sqlQuery, Map("PROCESSING_DATE" -> runDate))
-          spark.sql(sql)
+      // frees what this transform tracks: the near-dup funnel's
+      // persisted survivors feed two consumers, the write is the last
+      graft.operators.FrameCaches.scoped(spark) {
+        val dq = DqEngine(spark, baseFrame(t), t.dataQuality)
+        spark.sql(s"CREATE DATABASE IF NOT EXISTS ${t.targetTable.split('.').head}")
+        val rows =
+          try counted(dq.data) { d => Sinks.overwrite(d, t.targetTable, t.partitionBy); true }
+          finally dq.cleanup()
+        meta.recordDqMetrics(dq.metrics.map(m =>
+          graft.meta.DqMetricRow(t.targetTable, t.transformId, m.rule,
+            m.ruleType, m.action, m.validCount, m.invalidCount, runDate,
+            null))) // recorded_at: the carrying SUCCESS row's event time
+        ((), rows)
       }
-      val dq = DqEngine(spark, base, t.dataQuality)
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${t.targetTable.split('.').head}")
-      val rows =
-        try counted(dq.data) { d => Sinks.overwrite(d, t.targetTable, t.partitionBy); true }
-        finally {
-          dq.cleanup()
-          // the near-dup funnel persists its survivor frame (it feeds
-          // two consumers); the write above is the last of them
-          graft.operators.FrameCaches.releaseSince(spark, cacheMark)
-        }
-      meta.recordDqMetrics(dq.metrics.map(m =>
-        graft.meta.DqMetricRow(t.targetTable, t.transformId, m.rule,
-          m.ruleType, m.action, m.validCount, m.invalidCount, runDate,
-          null))) // recorded_at: the carrying SUCCESS row's event time
-      ((), rows)
     }
+
+  /** transform_type dispatch (reference silver_layer.py:98-125 runs
+    * only SQL; the dedup/curation verbs expose the operator families
+    * through the same plane — same DQ, audit, and control rows).
+    */
+  private def baseFrame(t: TransformConfig): DataFrame = t.transformType match {
+    case "dedup" =>
+      DeclarativeSteps.dedupFrame(spark.table(t.sourceTable), t.dedup.get)
+    case "curation" =>
+      DeclarativeSteps.curationFrame(spark.table(t.sourceTable), t.curation.get)
+    case "chunk" =>
+      DeclarativeSteps.chunkFrame(spark.table(t.sourceTable), t.chunk.get)
+    case "quota" =>
+      DeclarativeSteps.quotaFrame(spark.table(t.sourceTable), t.quota.get)
+    case "mix" =>
+      DeclarativeSteps.mixFrame(spark.table(t.sourceTable), t.mix.get)
+    case "split" =>
+      DeclarativeSteps.splitFrame(spark.table(t.sourceTable), t.split.get)
+    case "decontaminate" =>
+      DeclarativeSteps.decontaminateFrame(spark.table(t.sourceTable),
+        spark.table(t.decontaminate.get.probeTable), t.decontaminate.get)
+    case "weighted_sample" =>
+      DeclarativeSteps.weightedSampleFrame(spark.table(t.sourceTable),
+        t.weightedSample.get)
+    case "relevance_filter" =>
+      DeclarativeSteps.relevanceFilterFrame(spark.table(t.sourceTable),
+        t.relevanceFilter.get)
+    case "asof" =>
+      // READ verb: snapshot the scd2 source as of the declared
+      // date (${PROCESSING_DATE} = this run's date)
+      val a = t.asof.get
+      DeclarativeSteps.asOfFrame(spark, t.sourceTable, a.copy(
+        asOf = EtlConfig.substitute(a.asOf,
+          Map("PROCESSING_DATE" -> runDate))))
+    case "store_probe" =>
+      // READ verb: flag rows against the accumulated standing
+      // store without folding (the store never advances)
+      DeclarativeSteps.storeProbeFrame(spark,
+        spark.table(t.sourceTable), t.storeProbe.get)
+    case "view_estimate" =>
+      // READ verb: materialize the estimates the gold plane's
+      // HLL/HDR sketch views maintain (the view never changes)
+      DeclarativeSteps.viewEstimateFrame(spark, t.sourceTable,
+        t.viewEstimate.get)
+    case _ =>
+      val sql = EtlConfig.substitute(t.sqlQuery, Map("PROCESSING_DATE" -> runDate))
+      spark.sql(sql)
+  }
 }
 
 /** Gold: each model folds a batch into its target — the model query

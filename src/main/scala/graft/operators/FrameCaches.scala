@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Session-scoped registry of frames the operator pipelines cache
   * (persisted LSH/SimHash signature bases, checkpointed CC labels,
@@ -35,25 +36,28 @@ object FrameCaches {
       q.forEach(ds => org.apache.spark.sql.GraftColumnBridge.freeStorage(ds))
   }
 
-  /** Identity snapshot of the frames currently tracked — pair with
-    * [[releaseSince]] for a SCOPED drain: a framework step (the silver
-    * layer's per-transform cleanup) must free only the frames ITS work
-    * tracked, not reach into caches owned by other in-flight callers of
-    * the same session (whose localCheckpoint blocks cannot be
-    * recomputed once freed).
-    */
-  def mark(spark: SparkSession): java.util.Set[Dataset[_]] = {
-    val s = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Dataset[_], java.lang.Boolean]())
+  /** Read-only snapshot of the frames tracked in this session. */
+  def tracked(spark: SparkSession): Seq[Dataset[_]] = {
     val q = registry.get(spark)
-    if (q != null) q.forEach(d => { s.add(d); () })
-    s
+    if (q == null) Nil else q.asScala.toVector
   }
 
-  /** Free (and untrack) only the frames tracked AFTER `marked` was
-    * taken; everything in the snapshot stays live.
+  /** Runs `body`, then frees (and untracks) every frame tracked while it
+    * ran — a SCOPED drain: a framework step (a silver transform, a store
+    * fold) frees only the frames ITS work tracked, not caches owned by
+    * earlier callers of the same session (whose localCheckpoint blocks
+    * cannot be recomputed once freed). Frames tracked before the scope
+    * opened stay live.
     */
-  def releaseSince(spark: SparkSession, marked: java.util.Set[Dataset[_]]): Unit = {
+  def scoped[T](spark: SparkSession)(body: => T): T = {
+    val marked = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Dataset[_], java.lang.Boolean]())
+    tracked(spark).foreach(marked.add)
+    try body finally releaseSince(spark, marked)
+  }
+
+  private def releaseSince(spark: SparkSession,
+      marked: java.util.Set[Dataset[_]]): Unit = {
     val q = registry.get(spark)
     if (q != null) {
       val it = q.iterator()

@@ -28,11 +28,7 @@ object Demo {
           s"unknown argument: $other (expected --date/--out/--warehouse)")
       }
     }
-    val builder = SparkSession.builder().appName("graft-demo")
-      .config("spark.sql.warehouse.dir", warehouse)
-    if (sys.props.get("spark.master").isEmpty) builder.master("local[*]")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(cores = None, Some(warehouse), guards = true)
     val exit =
       try run(spark, date, out)
       finally spark.stop()

@@ -14,9 +14,9 @@ import graft.config.EtlConfig
   * Flags: `--date YYYY-MM-DD` (default: today), `--layers` (default all
   * three), `--config-dir` (default `configs`, expecting
   * `{bronze,silver,gold}_config.yaml`), `--warehouse` (default
-  * `spark-warehouse` under the CWD). The Spark master honours an
-  * externally-set `spark.master` (spark-submit) and defaults to
-  * `local[*]` for direct runs.
+  * `spark-warehouse` under the CWD). The session is
+  * [[graft.Session.build]]'s guarded CLI session: an externally-set
+  * `spark.master` (spark-submit) wins, else `local[*]`.
   */
 object Main {
 
@@ -56,18 +56,8 @@ object Main {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
-    // Production sessions run with the plan-hygiene guards installed:
-    // configs execute arbitrary SQL, and the two plans that take a
-    // shared cluster down — the accidental cartesian and the
-    // unpartitioned window — are refused at planning time. Deliberate
-    // uses opt out per session via spark.graft.guards.allowCartesian /
-    // allowGlobalWindow (the violation message names the key).
-    val builder = SparkSession.builder().appName("graft-etl")
-      .withExtensions(new graft.plans.GraftGuards)
-    if (sys.props.get("spark.master").isEmpty) builder.master("local[*]")
-    args.warehouse.foreach(w => builder.config("spark.sql.warehouse.dir", w))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // configs execute arbitrary SQL: the CLI session runs guarded
+    val spark = graft.Session.build(cores = None, args.warehouse, guards = true)
     val exit =
       try run(spark, args)
       finally spark.stop()

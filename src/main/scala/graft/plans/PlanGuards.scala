@@ -33,7 +33,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * `allowGlobalWindow`) unlock a console session that genuinely needs
   * a global window over a provably tiny funnel.
   *
-  * Wiring: `SparkSession.builder.withExtensions(new GraftGuards)` or
+  * Wiring: `graft.Session.build(…, guards = true)` installs them on
+  * the CLI session (`Main`, `Demo`); on a cluster,
   * `spark.sql.extensions=graft.plans.GraftGuards`. A violation throws
   * [[PlanGuards.GuardViolation]] naming the offending node.
   */

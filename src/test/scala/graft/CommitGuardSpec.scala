@@ -31,16 +31,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * store-lifecycle queries reset their `graft_tmp` scratch tables
   * through `Tables.resetScratch`: a `DROP TABLE IF EXISTS` followed by
   * a warehouse-directory delete anywhere else is a hand-copied reset.
+  * Every session, main and test alike, is built by `graft.Session`: a
+  * session builder chain in any other file under `src/` is a
+  * hand-written copy.
   */
 class CommitGuardSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get(TestSpark.repoRoot, "src/main/scala")
   private val commitModule = mainRoot.resolve("graft/io/Commit.scala")
 
-  private def mainSources: Seq[(Path, String)] =
-    Files.walk(mainRoot).iterator().asScala
+  private def sources(root: Path): Seq[(Path, String)] =
+    Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+
+  private def mainSources: Seq[(Path, String)] = sources(mainRoot)
 
   /** Chained calls split across lines are joined first, so a
     * `.write…` chain and its `.parquet(…)` land on one line.
@@ -153,6 +158,33 @@ class CommitGuardSpec extends AnyFunSuite {
   def scratchResets(src: String): Seq[String] =
     """(?s)DROP TABLE IF EXISTS(?:(?!DROP TABLE IF EXISTS).){0,600}?\.delete\(""".r
       .findAllMatchIn(src).map(m => enclosingDef(src, m.start)).toSeq
+
+  /** Session builder chains in one source text, split across lines or
+    * not.
+    */
+  def sessionBuilders(src: String): Int =
+    """SparkSession\s*\.\s*[Bb]uilder\b""".r.findAllIn(src).size
+
+  test("the detector flags a hand-written session builder chain") {
+    // the fixture's margin splits the chain in this file's own text
+    val chain =
+      """    val spark = SparkSession
+        |      .builder()
+        |      .master("local[4]")
+        |      .config("spark.sql.shuffle.partitions", "4")
+        |      .getOrCreate()
+        |""".stripMargin
+    assert(sessionBuilders(chain) == 1)
+    assert(sessionBuilders(
+      "val spark = Session.build(Some(4), None, guards = false)") == 0)
+  }
+
+  test("sessions are built in one file under src/: graft/Session.scala") {
+    val srcRoot = Paths.get(TestSpark.repoRoot, "src")
+    val files = sources(srcRoot).collect {
+      case (p, src) if sessionBuilders(src) > 0 => srcRoot.relativize(p).toString }
+    assert(files == Seq("main/scala/graft/Session.scala"), files.mkString("\n"))
+  }
 
   test("the detector flags a hand-built ledger row") {
     val copy =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materializes an sf1-equivalent dataset on DISK (round-16 verdict
@@ -24,11 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object MakeScaledData {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Some(32), None, guards = false)
     val mult = args.lift(0).map(_.toInt).getOrElse(10)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(2).getOrElse(s"${sys.props("user.dir")}/target/sf1x")

@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-10 plan audit (not part of the library API): formatted plans
   * of the round's new shapes, eyeballed for shuffle count, broadcast
   * placement, and pushdown before the closing bench.
   */
 object ProfileExplainsR10 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Some(4), None, guards = false)
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     for (name <- args.drop(1) match {
         case Array() => Seq("t20_lm_perplexity", "e12_unpivot",

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Round-20 gr4 diagnosis harness (verdict item 1): runs the gr3/gr4
   * triangle rows under a CONSTRAINED core count with a stage-metrics
@@ -14,15 +13,11 @@ import org.apache.spark.sql.SparkSession
   */
 object ProfileTriCores {
   def main(args: Array[String]): Unit = {
-    val cpus = args.lift(0).getOrElse("8")
+    val cpus = args.lift(0).map(_.toInt).getOrElse(8)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val query = args.lift(3).getOrElse("gr4_clustering_coeff")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Some(cpus), None, guards = false)
     val rt = Runtime.getRuntime
     println(s"[tri-cores] query=$query cpus=$cpus maxHeap=${rt.maxMemory() / (1 << 20)}MB")
     final case class St(id: Int, name: String, runMs: Long, memSpill: Long,

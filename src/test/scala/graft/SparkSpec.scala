@@ -9,22 +9,11 @@ object TestSpark {
     * checkout path (round-15 verdict item 8's defect class). */
   val repoRoot: String = sys.props("user.dir")
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"$repoRoot/target/test-warehouse-${System.nanoTime()}")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(Some(4),
+    Some(s"$repoRoot/target/test-warehouse-${System.nanoTime()}"), guards = false)
 
   /** Runs `f` with a session carrying the [[graft.plans.GraftGuards]]
-    * extensions — the session `Main.main` builds in production. Check
+    * extensions — the session the CLI (`Main`, `Demo`) runs on. Check
     * rules inject at session CREATION, so the guarded session is built
     * fresh: only the SparkContext is shared — the guarded session gets
     * a fresh SharedState, a fresh in-memory catalog, and its own
@@ -37,17 +26,12 @@ object TestSpark {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val guarded = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.plans.GraftGuards)
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        // fresh SharedState → fresh in-memory catalog; the warehouse
-        // must be fresh too, or CREATE TABLE collides with the shared
-        // session's managed-table locations it cannot see
-        .config("spark.sql.warehouse.dir",
-          s"$repoRoot/target/test-warehouse-guarded-${System.nanoTime()}")
-        .getOrCreate()
+      // fresh SharedState → fresh in-memory catalog; the warehouse
+      // must be fresh too, or CREATE TABLE collides with the shared
+      // session's managed-table locations it cannot see
+      val guarded = Session.build(Some(4),
+        Some(s"$repoRoot/target/test-warehouse-guarded-${System.nanoTime()}"),
+        guards = true)
       try f(guarded)
       finally {
         guarded.conf.unset(graft.plans.PlanGuards.AllowCartesianKey)

@@ -150,9 +150,9 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("builder-time extension wires the same list without throwing") {
-    // withExtensions applies at session CREATION, which a shared-session
-    // suite cannot exercise; the wiring itself (every injectFunction
-    // call) and the shared definition list are the contract.
+    // withExtensions applies at session CREATION (SessionSpec resolves
+    // a function on every graft.Session); the wiring itself (every
+    // injectFunction call) and the shared definition list are the contract.
     new GraftExtensions()(new SparkSessionExtensions)
   }
 }

@@ -265,19 +265,20 @@ class DedupStoreSpec extends BandedStoreSpec {
     ctx.updateLoggers()
     try {
       // the append path of a fold whose survivors read the store itself
-      val mark = graft.operators.FrameCaches.mark(spark)
-      DedupStore.appendSurvivors(spark, t,
-        spark.table(t).withColumn("doc_id", col("doc_id") + 1000L),
-        exists = true, buckets = 0, epochId = 2L, properties = Nil)
-      val ids = graft.operators.FrameCaches.mark(spark).toArray.toSeq
-        .filterNot(mark.contains)
-        .flatMap(_.asInstanceOf[org.apache.spark.sql.Dataset[_]]
-          .queryExecution.analyzed.collect {
+      val before = graft.operators.FrameCaches.tracked(spark)
+      def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      val ids = graft.operators.FrameCaches.scoped(spark) {
+        DedupStore.appendSurvivors(spark, t,
+          spark.table(t).withColumn("doc_id", col("doc_id") + 1000L),
+          exists = true, buckets = 0, epochId = 2L, properties = Nil)
+        val ids = graft.operators.FrameCaches.tracked(spark)
+          .filterNot(d => before.exists(_ eq d))
+          .flatMap(_.queryExecution.analyzed.collect {
             case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
           })
-      def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
-      assert(ids.nonEmpty && ids.forall(stored), s"checkpointed $ids")
-      graft.operators.FrameCaches.releaseSince(spark, mark)
+        assert(ids.nonEmpty && ids.forall(stored), s"checkpointed $ids")
+        ids
+      }
       assert(ids.forall(!stored(_)), s"blocks left for $ids")
     } finally {
       ctx.getConfiguration.getRootLogger.removeAppender("lineage-watch")

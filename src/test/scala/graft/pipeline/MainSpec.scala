@@ -248,9 +248,9 @@ class MainSpec extends SparkSpec {
   }
 
   test("checked-in configs run green under the production guard extensions") {
-    // Main.main installs GraftGuards on every CLI session; this drives
-    // the same checked-in configs through Main.run on a session built
-    // the way main() builds it, proving the production funnel's own
+    // Main.main builds its session guarded (graft.Session.build); this
+    // drives the same checked-in configs through Main.run on a guarded
+    // builder session, proving the production funnel's own
     // plans pass under the firewall (no allow-key set anywhere).
     sys.props("GRAFT_DATA_DIR") = "/root/testdata/sf0.001"
     try graft.TestSpark.withGuardedSession { guarded =>
@@ -260,5 +260,50 @@ class MainSpec extends SparkSpec {
       assert(exit == 0, "guarded production run must stay green")
       assert(guarded.table("gold.daily_orders").count() > 0)
     } finally sys.props.remove("GRAFT_DATA_DIR")
+  }
+
+  test("a silver sql transform calls a graft SQL function through Main.run") {
+    // every CLI session carries the graft functions, so YAML SQL can
+    // call them by name
+    val cfgDir = java.nio.file.Files.createTempDirectory("main-fn-cfg")
+    java.nio.file.Files.write(cfgDir.resolve("bronze_config.yaml"),
+      """sources:
+        |  - source_id: "nation_dim"
+        |    source_type: "file"
+        |    source_path: "/root/testdata/sf0.001/nation.parquet"
+        |    file_format: "parquet"
+        |    target_table: "bronze_fn.nation"
+        |""".stripMargin.getBytes)
+    java.nio.file.Files.write(cfgDir.resolve("silver_config.yaml"),
+      """transformations:
+        |  - transform_id: "nation_keyed"
+        |    source_table: "bronze_fn.nation"
+        |    target_table: "silver_fn.nation_keyed"
+        |    transformation_type: "sql"
+        |    sql_query: >
+        |      SELECT n_name, hex_slice_to_long(md5(n_name), 1, 8) AS name_key
+        |      FROM bronze_fn.nation
+        |""".stripMargin.getBytes)
+    graft.TestSpark.withGuardedSession { guarded =>
+      val exit = Main.run(guarded,
+        Main.Args("2031-09-09", Seq("bronze", "silver"), cfgDir.toString, None))
+      assert(exit == 0)
+      val keyed = guarded.table("silver_fn.nation_keyed")
+      assert(keyed.count() == 25L)
+      assert(keyed.filter(
+        "name_key <> CAST(conv(substr(md5(n_name), 1, 8), 16, 10) AS BIGINT)")
+        .count() == 0L)
+    }
+  }
+
+  test("Demo.run over configs/demo runs green under the guards") {
+    // the CLI's Demo session is guarded, like Main's
+    val out = java.nio.file.Files.createTempDirectory("demo-guarded-out").toString
+    graft.TestSpark.withGuardedSession { guarded =>
+      val exit = Demo.run(guarded, "2031-10-10", out,
+        s"${graft.TestSpark.repoRoot}/configs/demo")
+      assert(exit == 0)
+      assert(guarded.table("gold.customer_purchase_summary").count() > 0)
+    }
   }
 }

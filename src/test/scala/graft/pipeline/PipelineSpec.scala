@@ -1908,7 +1908,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("hostile cartesian config SQL is refused under the production guards") {
-    // Main.main installs GraftGuards on every production session;
+    // Main and Demo build their sessions guarded (graft.Session.build);
     // configs execute arbitrary SQL, so an accidental (or hostile)
     // comma-cartesian between two fact tables must be refused at
     // planning time, land as a per-model FAILURE (isolation intact),
